@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hquery_php_spark.batch import map_rows
 from hquery_php_spark.functions.text import (
     SQL as TSQL,
     fingerprint,
@@ -302,6 +303,19 @@ def _spread(df: DataFrame, spark: SparkSession, key: str = "doc_id") -> DataFram
     return salted_repartition(df, n, key_col=key)
 
 
+def _doc_payloads(
+    spark: SparkSession, sf_dir: str, gen: Callable[[int], object]
+) -> DataFrame:
+    """Synthesized media rows: ``gen(doc_id)`` yields that document's
+    (media_id, payload) pairs, built by an in-repo encoder per row."""
+    d = _spread(_docs(spark, sf_dir), spark).select(
+        F.col("doc_id").cast("long").alias("did")
+    )
+    return map_rows(
+        d, "media_id string, payload binary", lambda did: gen(int(did))
+    )
+
+
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -361,7 +375,6 @@ def q_selector_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selector algebra over per-word spans: tag/class/attr filters,
     descendant + child + sibling combinators, positional pseudos."""
     from hquery_php_spark.core.doc import HDoc
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -393,42 +406,41 @@ def q_selector_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in schema.fieldNames()}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                doc = HDoc(html.encode("utf-8"))
+    base = [
+        "span", "span.w0", "span[data-k=v1]",
+        "div span", "div > span", "span + span",
+    ]
+    ext = [
+        "span:nth-child(odd)", "span:not(.w0)",
+        "span[data-k^=v]", "span[class$=1]",
+    ]
 
-                def n(sel, **kw):
-                    r = doc.find(sel, **kw)
-                    return len(r) if r else 0
+    def row(doc_id, html):
+        doc = HDoc(html.encode("utf-8"))
 
-                rows["doc_id"].append(doc_id)
-                rows["n_span"].append(n("span"))
-                rows["n_w0"].append(n("span.w0"))
-                rows["n_v1"].append(n("span[data-k=v1]"))
-                rows["n_desc"].append(n("div span"))
-                rows["n_child"].append(n("div > span"))
-                rows["n_sib"].append(n("span + span"))
-                rows["n_nth_odd"].append(
-                    n("span:nth-child(odd)", extensions=True)
-                )
-                rows["n_not_w0"].append(n("span:not(.w0)", extensions=True))
-                rows["n_vpre"].append(n("span[data-k^=v]", extensions=True))
-                rows["n_cls1"].append(n("span[class$=1]", extensions=True))
-                f = doc.find("span:first")
-                t = doc.find("span:eq(2)")
-                rows["first_w"].append(f.first().text() if f else None)
-                rows["third_w"].append(t.first().text() if t else None)
-            yield pd.DataFrame(rows)
+        def n(sel, **kw):
+            r = doc.find(sel, **kw)
+            return len(r) if r else 0
 
-    return d.mapInPandas(run, schema)
+        counts = [n(sel) for sel in base]
+        ext_counts = [n(sel, extensions=True) for sel in ext]
+        f = doc.find("span:first")
+        t = doc.find("span:eq(2)")
+        return [(
+            doc_id,
+            *counts,
+            f.first().text() if f else None,
+            t.first().text() if t else None,
+            *ext_counts,
+        )]
+
+    return map_rows(d, schema, row)
 
 
 def q_media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """a[href] / img[src] found via the selector engine, URL-resolved."""
     from hquery_php_spark.core.doc import HDoc
-    import pandas as pd
+    from hquery_php_spark.operators.pagemeta import srcset_refs
     from pyspark.sql.types import StringType, StructField, StructType
 
     sid = F.col("doc_id").cast("string")
@@ -456,35 +468,25 @@ def q_media_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        from hquery_php_spark.operators.pagemeta import srcset_refs
+    def row(doc_id, html, url):
+        doc = HDoc(html.encode("utf-8"), url)
+        a = doc.find("a[href]")
+        img = doc.find("img[src]")
+        return [(
+            doc_id,
+            a.attr("href") if a else None,
+            a.attr("href", True) if a else None,
+            img.attr("src", True) if img else None,
+            a.outer_html() if a else None,
+            "|".join(f"{u} {ds}" for _, u, ds in srcset_refs(doc)) or None,
+        )]
 
-        for pdf in batches:
-            rows = {k: [] for k in schema.fieldNames()}
-            for doc_id, html, url in zip(pdf["doc_id"], pdf["html"], pdf["base_url"]):
-                doc = HDoc(html.encode("utf-8"), url)
-                a = doc.find("a[href]")
-                img = doc.find("img[src]")
-                rows["doc_id"].append(doc_id)
-                rows["href_raw"].append(a.attr("href") if a else None)
-                rows["href_abs"].append(a.attr("href", True) if a else None)
-                rows["src_abs"].append(img.attr("src", True) if img else None)
-                rows["a_outer"].append(a.outer_html() if a else None)
-                rows["srcset_all"].append(
-                    "|".join(
-                        f"{u} {ds}" for _, u, ds in srcset_refs(doc)
-                    )
-                    or None
-                )
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(run, schema)
+    return map_rows(d, schema, row)
 
 
 def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Charset sniffing (XML decl / meta) over a 3-charset template mix."""
     from hquery_php_spark.core.charset import detect_charset
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     label = F.element_at(
@@ -503,15 +505,11 @@ def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("doc_id", StringType()), StructField("charset", StringType())]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "charset": []}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                rows["doc_id"].append(doc_id)
-                rows["charset"].append(detect_charset(html.encode("utf-8")))
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(run, schema)
+    return map_rows(
+        d,
+        schema,
+        lambda doc_id, html: [(doc_id, detect_charset(html.encode("utf-8")))],
+    )
 
 
 # --------------------------------------------------------------------- #
@@ -1015,7 +1013,6 @@ def q_exclude_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 `exclude`: subtract nav+footer from body's content view."""
     from hquery_php_spark.core.doc import HDoc
     from hquery_php_spark.sources.html_synth import synth_boiler_html_col
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     d = _spread(_docs(spark, sf_dir), spark).select(
@@ -1026,25 +1023,19 @@ def q_exclude_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("doc_id", StringType()), StructField("main_text", StringType())]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "main_text": []}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                body = HDoc(html.encode("utf-8")).find("body").first()
-                body.exclude("nav")
-                body.exclude("footer")
-                rows["doc_id"].append(doc_id)
-                rows["main_text"].append(body.text().strip())
-            yield pd.DataFrame(rows)
+    def row(doc_id, html):
+        body = HDoc(html.encode("utf-8")).find("body").first()
+        body.exclude("nav")
+        body.exclude("footer")
+        return [(doc_id, body.text().strip())]
 
-    return d.mapInPandas(run, schema)
+    return map_rows(d, schema, row)
 
 
 def q_dl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E9 dl() + E10 text2dl(): structured key→value extraction."""
     from hquery_php_spark.core.doc import HDoc
     from hquery_php_spark.sources.html_synth import synth_dl_html_col
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     d = _spread(_docs(spark, sf_dir), spark).select(
@@ -1061,28 +1052,25 @@ def q_dl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in schema.fieldNames()}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                doc = HDoc(html.encode("utf-8"))
-                dl = doc.find("dl").first().dl("dt", "dd")
-                t2 = doc.find("pre").first().text2dl(":")
-                rows["doc_id"].append(doc_id)
-                rows["dl_source"].append(dl.get("source"))
-                rows["dl_lang"].append(dl.get("lang"))
-                rows["t2_source"].append(t2.get("source"))
-                rows["t2_lang"].append(t2.get("lang"))
-            yield pd.DataFrame(rows)
+    def row(doc_id, html):
+        doc = HDoc(html.encode("utf-8"))
+        dl = doc.find("dl").first().dl("dt", "dd")
+        t2 = doc.find("pre").first().text2dl(":")
+        return [(
+            doc_id,
+            dl.get("source"),
+            dl.get("lang"),
+            t2.get("source"),
+            t2.get("lang"),
+        )]
 
-    return d.mapInPandas(run, schema)
+    return map_rows(d, schema, row)
 
 
 def q_pseudo_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3/Q12-Q18 pseudos: :lt/:gt/:last, :next/:prev/:parent, `~`
     sibling, :children, OR comma groups — counts over per-word spans."""
     from hquery_php_spark.core.doc import HDoc
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -1094,39 +1082,29 @@ def q_pseudo_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         _wordwise_html().alias("html"),
     )
-    fields = [
-        "n_lt3", "n_gt3", "n_next", "n_prev",
-        "n_parent", "n_tilde", "n_children", "n_or",
-    ]
+    fields = {
+        "n_lt3": "span:lt(3)",
+        "n_gt3": "span:gt(3)",
+        "n_next": "span.w0:next",
+        "n_prev": "span.w1:prev",
+        "n_parent": "span:parent",
+        "n_tilde": "span ~ span",
+        "n_children": "div:children",
+        "n_or": "span.w0, span.w1",
+    }
     schema = StructType(
         [StructField("doc_id", StringType())]
         + [StructField(f, IntegerType()) for f in fields]
         + [StructField("last_w", StringType())]
     )
+    sels = list(fields.values())
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in schema.fieldNames()}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                doc = HDoc(html.encode("utf-8"))
+    def row(doc_id, html):
+        doc = HDoc(html.encode("utf-8"))
+        counts = [len(r) if r else 0 for r in map(doc.find, sels)]
+        return [(doc_id, *counts, doc.find("span:last").first().text())]
 
-                def n(sel):
-                    r = doc.find(sel)
-                    return len(r) if r else 0
-
-                rows["doc_id"].append(doc_id)
-                rows["n_lt3"].append(n("span:lt(3)"))
-                rows["n_gt3"].append(n("span:gt(3)"))
-                rows["n_next"].append(n("span.w0:next"))
-                rows["n_prev"].append(n("span.w1:prev"))
-                rows["n_parent"].append(n("span:parent"))
-                rows["n_tilde"].append(n("span ~ span"))
-                rows["n_children"].append(n("div:children"))
-                rows["n_or"].append(n("span.w0, span.w1"))
-                rows["last_w"].append(doc.find("span:last").first().text())
-            yield pd.DataFrame(rows)
-
-    return d.mapInPandas(run, schema)
+    return map_rows(d, schema, row)
 
 
 _CS_PRE = '<html><head><meta charset="ISO-8859-1"></head><body><p>café '
@@ -1287,61 +1265,34 @@ def _jpeg_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality _JPEG_Q, so the decoded level has the closed form of
     ``constant_gray_decoded_level`` (pure integer math, SQL twin)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.jpeg import encode_jpeg
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 8 * (1 + did % 8), 8 * (1 + did % 6)
+        c = did % 256
+        px = np.full((h, w, 3), c, dtype=np.uint8)
+        yield f"j{did}", encode_jpeg(px, quality=_JPEG_Q)
+        # entropy-stage twins: progressive huffman ('p'),
+        # sequential arithmetic ('a'), progressive arithmetic
+        # ('q') — each recodes the SAME coefficients →
+        # identical decoded pixels, sharing the 'j' rows'
+        # closed-form oracle
+        yield f"p{did}", encode_jpeg(px, quality=_JPEG_Q, progressive=True)
+        yield f"a{did}", encode_jpeg(px, quality=_JPEG_Q, arithmetic=True)
+        yield f"q{did}", encode_jpeg(
+            px, quality=_JPEG_Q, progressive=True, arithmetic=True
+        )
+        # 12-bit leg ('t'): grayscale constant in 0..4095,
+        # sequential arithmetic — its own closed form (level
+        # shift 2048); decode_image presents the >>4 view
+        c12 = (did * 16 + 7) % 4096
+        px12 = np.full((h, w), c12, dtype=np.uint16)
+        yield f"t{did}", encode_jpeg(
+            px12, quality=_JPEG_Q, arithmetic=True, precision=12
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 8 * (1 + did % 8), 8 * (1 + did % 6)
-                c = did % 256
-                px = np.full((h, w, 3), c, dtype=np.uint8)
-                out["media_id"].append(f"j{did}")
-                out["payload"].append(encode_jpeg(px, quality=_JPEG_Q))
-                # entropy-stage twins: progressive huffman ('p'),
-                # sequential arithmetic ('a'), progressive arithmetic
-                # ('q') — each recodes the SAME coefficients →
-                # identical decoded pixels, sharing the 'j' rows'
-                # closed-form oracle
-                out["media_id"].append(f"p{did}")
-                out["payload"].append(
-                    encode_jpeg(px, quality=_JPEG_Q, progressive=True)
-                )
-                out["media_id"].append(f"a{did}")
-                out["payload"].append(
-                    encode_jpeg(px, quality=_JPEG_Q, arithmetic=True)
-                )
-                out["media_id"].append(f"q{did}")
-                out["payload"].append(
-                    encode_jpeg(
-                        px, quality=_JPEG_Q, progressive=True, arithmetic=True
-                    )
-                )
-                # 12-bit leg ('t'): grayscale constant in 0..4095,
-                # sequential arithmetic — its own closed form (level
-                # shift 2048); decode_image presents the >>4 view
-                c12 = (did * 16 + 7) % 4096
-                px12 = np.full((h, w), c12, dtype=np.uint16)
-                out["media_id"].append(f"t{did}")
-                out["payload"].append(
-                    encode_jpeg(
-                        px12, quality=_JPEG_Q, arithmetic=True, precision=12
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _gif_w(did):
@@ -1379,30 +1330,15 @@ def _gif_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant gray c = doc_id % 256 — GIF is lossless, so the decoded
     pixel sums are exactly w·h·c (the SQL twin)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.gif import encode_gif
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 5 + did % 40, 5 + did % 30
+        g = np.full((h, w), did % 256, dtype=np.uint8)
+        yield f"g{did}", encode_gif(g)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 5 + did % 40, 5 + did % 30
-                g = np.full((h, w), did % 256, dtype=np.uint8)
-                out["media_id"].append(f"g{did}")
-                out["payload"].append(encode_gif(g))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _webp_w(did):
@@ -1443,34 +1379,17 @@ def _webp_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     backward-reference paths.  Lossless → decoded sums are exactly
     w·h·c (the SQL twin)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.webp import encode_webp_lossless
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 3 + did % 37, 3 + did % 23
+        px = np.full((h, w, 3), did % 256, dtype=np.uint8)
+        yield f"w{did}", encode_webp_lossless(
+            px, subtract_green=True, use_lz77=True, use_cache_bits=4
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 3 + did % 37, 3 + did % 23
-                px = np.full((h, w, 3), did % 256, dtype=np.uint8)
-                out["media_id"].append(f"w{did}")
-                out["payload"].append(
-                    encode_webp_lossless(
-                        px, subtract_green=True, use_lz77=True, use_cache_bits=4
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _vp8_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,38 +1401,22 @@ def _vp8_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     token decode, dequant, transforms, prediction) is value-checked in
     SQL.  Every payload also decodes bit-exact in libwebp (pinned by
     tests/test_vp8_conformance.py)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.vp8 import (
         MBSpec,
         encode_vp8_stream,
         wrap_webp,
     )
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 5 + did % 44, 4 + did % 37
+        lvl = 1 + did % 24
+        mbw, mbh = (w + 15) // 16, (h + 15) // 16
+        mbs = [MBSpec(y2_block=[lvl] + [0] * 15)] + [
+            MBSpec() for _ in range(mbw * mbh - 1)
+        ]
+        yield f"v{did}", wrap_webp(encode_vp8_stream(w, h, mbs, qi=100))
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 5 + did % 44, 4 + did % 37
-                lvl = 1 + did % 24
-                mbw, mbh = (w + 15) // 16, (h + 15) // 16
-                mbs = [MBSpec(y2_block=[lvl] + [0] * 15)] + [
-                    MBSpec() for _ in range(mbw * mbh - 1)
-                ]
-                out["media_id"].append(f"v{did}")
-                out["payload"].append(wrap_webp(encode_vp8_stream(w, h, mbs, qi=100)))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _tiff_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1521,32 +1424,15 @@ def _tiff_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     gray c = doc_id % 256, alternating II/MM byte order, 4-row strips
     (media_id = 't'<doc_id>).  Lossless → sums are exactly w·h·c."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.tiff import encode_tiff
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 6 + did % 21, 4 + did % 17
+        g = np.full((h, w), did % 256, dtype=np.uint8)
+        yield f"t{did}", encode_tiff(g, big_endian=bool(did % 2), rows_per_strip=4)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 6 + did % 21, 4 + did % 17
-                g = np.full((h, w), did % 256, dtype=np.uint8)
-                out["media_id"].append(f"t{did}")
-                out["payload"].append(
-                    encode_tiff(g, big_endian=bool(did % 2), rows_per_strip=4)
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1557,35 +1443,20 @@ def _wav_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fits all depths incl. 8-bit), making every decoded statistic a
     closed-form SQL sum (media_id = 'a'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.wav import encode_wav
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        bits = (8, 16, 24, 32)[did % 4]
+        ch = 1 + did % 2
+        rate = 8000 + (did % 4) * 4000
+        n = 16 + did % 49
+        i = np.arange(n)[:, None]
+        c = np.arange(ch)[None, :]
+        v = (did * 7 + i * 13 + c * 5) % 251 - 125
+        yield f"a{did}", encode_wav(v, rate, bits)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                bits = (8, 16, 24, 32)[did % 4]
-                ch = 1 + did % 2
-                rate = 8000 + (did % 4) * 4000
-                n = 16 + did % 49
-                i = np.arange(n)[:, None]
-                c = np.arange(ch)[None, :]
-                v = (did * 7 + i * 13 + c * 5) % 251 - 125
-                out["media_id"].append(f"a{did}")
-                out["payload"].append(encode_wav(v, rate, bits))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _flac_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1594,34 +1465,19 @@ def _flac_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the WAV rows — FLAC is lossless, so both codec families share
     one closed-form twin (media_id = 'f'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.flac import encode_flac
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        ch = 1 + did % 2
+        rate = 8000 + (did % 4) * 4000
+        n = 16 + did % 49
+        i = np.arange(n)[:, None]
+        c = np.arange(ch)[None, :]
+        v = (did * 7 + i * 13 + c * 5) % 251 - 125
+        yield f"f{did}", encode_flac(v, rate, bits=16)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                ch = 1 + did % 2
-                rate = 8000 + (did % 4) * 4000
-                n = 16 + did % 49
-                i = np.arange(n)[:, None]
-                c = np.arange(ch)[None, :]
-                v = (did * 7 + i * 13 + c * 5) % 251 - 125
-                out["media_id"].append(f"f{did}")
-                out["payload"].append(encode_flac(v, rate, bits=16))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _g711_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1633,35 +1489,19 @@ def _g711_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     written directly in SQL by the twin (media_id = 'u'<doc_id> µ-law,
     'l'<doc_id> A-law)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.wav import encode_wav_g711
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        ch = 1 + did % 2
+        n = 20 + did % 41
+        i = np.arange(n)[:, None]
+        c = np.arange(ch)[None, :]
+        codes = ((did * 3 + i * 7 + c * 11) % 256).astype(np.uint8)
+        yield f"u{did}", encode_wav_g711(codes, 8000, "u")
+        yield f"l{did}", encode_wav_g711(codes, 8000, "a")
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                ch = 1 + did % 2
-                n = 20 + did % 41
-                i = np.arange(n)[:, None]
-                c = np.arange(ch)[None, :]
-                codes = ((did * 3 + i * 7 + c * 11) % 256).astype(np.uint8)
-                out["media_id"].append(f"u{did}")
-                out["payload"].append(encode_wav_g711(codes, 8000, "u"))
-                out["media_id"].append(f"l{did}")
-                out["payload"].append(encode_wav_g711(codes, 8000, "a"))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 # IMA-ADPCM oracle constants: with the fixed 64-nibble pattern below and
@@ -1683,31 +1523,13 @@ def _adpcm_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred0 = 3000 + (doc_id·37) % 1500, chosen clamp-free so every
     decoded sample is pred0 + P_j and the statistics are closed-form
     (media_id = 'd'<doc_id>; constants pinned in tests/test_wav.py)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.wav import build_adpcm_wav
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        pred0 = 3000 + (did * 37) % 1500
+        yield f"d{did}", build_adpcm_wav(_ADPCM_NIBBLES, pred0, 30, 11025)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                pred0 = 3000 + (did * 37) % 1500
-                out["media_id"].append(f"d{did}")
-                out["payload"].append(
-                    build_adpcm_wav(_ADPCM_NIBBLES, pred0, 30, 11025)
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _avi_audio_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1717,40 +1539,23 @@ def _avi_audio_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples reuse the WAV rows' affine-mod formula, so the twin shares
     the same closed-form aggregate (media_id = 'b'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.avi import encode_avi
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        ch = 1 + did % 2
+        rate = 8000 + (did % 4) * 4000
+        n = 16 + did % 49
+        i = np.arange(n)[:, None]
+        c = np.arange(ch)[None, :]
+        v = (did * 7 + i * 13 + c * 5) % 251 - 125
+        frames = [
+            np.full((3, 4, 3), (did + f * 31) % 256, np.uint8)
+            for f in range(2)
+        ]
+        yield f"b{did}", encode_avi(frames, audio=v, audio_rate=rate)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                ch = 1 + did % 2
-                rate = 8000 + (did % 4) * 4000
-                n = 16 + did % 49
-                i = np.arange(n)[:, None]
-                c = np.arange(ch)[None, :]
-                v = (did * 7 + i * 13 + c * 5) % 251 - 125
-                frames = [
-                    np.full((3, 4, 3), (did + f * 31) % 256, np.uint8)
-                    for f in range(2)
-                ]
-                out["media_id"].append(f"b{did}")
-                out["payload"].append(
-                    encode_avi(frames, audio=v, audio_rate=rate)
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1778,36 +1583,19 @@ def _gif_anim_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id·11 + f·17) % 256, so every composited frame's pixel sums
     are closed-form (media_id = 'v'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.gif import encode_gif_animation
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 4 + did % 9, 3 + did % 7
+        nf = 2 + did % 5
+        frames = [
+            np.full((h, w), (did * 11 + f * 17) % 256, np.uint8)
+            for f in range(nf)
+        ]
+        yield f"v{did}", encode_gif_animation(frames, delays_cs=range(1, nf + 1))
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 4 + did % 9, 3 + did % 7
-                nf = 2 + did % 5
-                frames = [
-                    np.full((h, w), (did * 11 + f * 17) % 256, np.uint8)
-                    for f in range(nf)
-                ]
-                out["media_id"].append(f"v{did}")
-                out["payload"].append(
-                    encode_gif_animation(frames, delays_cs=range(1, nf + 1))
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _webp_anim_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1816,36 +1604,21 @@ def _webp_anim_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id·13 + f·19) % 256, so every composited frame's pixel sums
     are closed-form (media_id = 'y'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.webp import encode_webp_anim
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 3 + did % 8, 2 + did % 6
+        nf = 2 + did % 4
+        frames = [
+            (0, 0,
+             np.full((h, w, 3), (did * 13 + f * 19) % 256, np.uint8),
+             10 * (f + 1), 1, 0)
+            for f in range(nf)
+        ]
+        yield f"y{did}", encode_webp_anim(w, h, frames)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 3 + did % 8, 2 + did % 6
-                nf = 2 + did % 4
-                frames = [
-                    (0, 0,
-                     np.full((h, w, 3), (did * 13 + f * 19) % 256, np.uint8),
-                     10 * (f + 1), 1, 0)
-                    for f in range(nf)
-                ]
-                out["media_id"].append(f"y{did}")
-                out["payload"].append(encode_webp_anim(w, h, frames))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _avi_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1855,44 +1628,29 @@ def _avi_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     % 256, so sampled-frame sums are closed-form (media_id =
     'x'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.avi import encode_avi
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 4 + did % 6, 2 + did % 5
+        nf = 1 + did % 4
+        frames = [
+            np.broadcast_to(
+                np.array(
+                    [
+                        (did * 3 + f * 5) % 256,
+                        (did * 5 + f * 7) % 256,
+                        (did * 9 + f * 11) % 256,
+                    ],
+                    np.uint8,
+                ),
+                (h, w, 3),
+            )
+            for f in range(nf)
+        ]
+        yield f"x{did}", encode_avi(frames)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 4 + did % 6, 2 + did % 5
-                nf = 1 + did % 4
-                frames = [
-                    np.broadcast_to(
-                        np.array(
-                            [
-                                (did * 3 + f * 5) % 256,
-                                (did * 5 + f * 7) % 256,
-                                (did * 9 + f * 11) % 256,
-                            ],
-                            np.uint8,
-                        ),
-                        (h, w, 3),
-                    )
-                    for f in range(nf)
-                ]
-                out["media_id"].append(f"x{did}")
-                out["payload"].append(encode_avi(frames))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _webm_vp8_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1904,39 +1662,23 @@ def _webm_vp8_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same closed form the lossy-WebP oracle pins, now exercised
     through the WebM demux + keyframe-sampler path (media_id =
     'z'<doc_id>)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.mediameta import encode_webm_vp8
     from hquery_php_spark.operators.vp8 import MBSpec, encode_vp8_stream
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 5 + did % 28, 4 + did % 21
+        nf = 2 + did % 3
+        mbw, mbh = (w + 15) // 16, (h + 15) // 16
+        streams = []
+        for f in range(nf):
+            lvl = 1 + (did * 5 + f * 9) % 24
+            mbs = [MBSpec(y2_block=[lvl] + [0] * 15)] + [
+                MBSpec() for _ in range(mbw * mbh - 1)
+            ]
+            streams.append(encode_vp8_stream(w, h, mbs, qi=100))
+        yield f"z{did}", encode_webm_vp8(w, h, streams)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 5 + did % 28, 4 + did % 21
-                nf = 2 + did % 3
-                mbw, mbh = (w + 15) // 16, (h + 15) // 16
-                streams = []
-                for f in range(nf):
-                    lvl = 1 + (did * 5 + f * 9) % 24
-                    mbs = [MBSpec(y2_block=[lvl] + [0] * 15)] + [
-                        MBSpec() for _ in range(mbw * mbh - 1)
-                    ]
-                    streams.append(encode_vp8_stream(w, h, mbs, qi=100))
-                out["media_id"].append(f"z{did}")
-                out["payload"].append(encode_webm_vp8(w, h, streams))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _avi_mjpeg_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1949,38 +1691,21 @@ def _avi_mjpeg_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the Annex-K default-Huffman injection path (media_id =
     'mj'<doc_id>)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.avi import encode_avi_mjpeg
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 8 * (1 + did % 6), 8 * (1 + did % 4)
+        nf = 1 + did % 3
+        frames = [
+            np.full((h, w, 3), (did * 7 + f * 3) % 256, np.uint8)
+            for f in range(nf)
+        ]
+        yield f"mj{did}", encode_avi_mjpeg(
+            frames, quality=_JPEG_Q, omit_dht=bool(did % 2)
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 8 * (1 + did % 6), 8 * (1 + did % 4)
-                nf = 1 + did % 3
-                frames = [
-                    np.full((h, w, 3), (did * 7 + f * 3) % 256, np.uint8)
-                    for f in range(nf)
-                ]
-                out["media_id"].append(f"mj{did}")
-                out["payload"].append(
-                    encode_avi_mjpeg(
-                        frames, quality=_JPEG_Q, omit_dht=bool(did % 2)
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2027,118 +1752,94 @@ def _container_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     mvhd/tkhd) and WebM (EBML) containers with deterministic metadata —
     media_id 'm'<doc_id> / 'k'<doc_id>.  Frame data is out of scope by
     design: container-walk metadata is the pre-decode filter operator."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.mediameta import (
         encode_mp4_stub,
         encode_webm_stub,
     )
     from hquery_php_spark.operators.mpegts import encode_ts_stub
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        # video codec family cycles with did%4; profile/level/
+        # depth parameters derive from did//4 so they vary
+        # independently of the family parity.  Audio exists iff
+        # n_tracks == 2 (odd did): mp4a under hev1, Opus under
+        # vp09.  The codec_tags twin inverts this closed-form.
+        vfam = did % 4
+        sel = did // 4
+        if vfam == 0:
+            vc, vp = "avc1", {
+                "profile": (66, 77, 100)[did % 3],
+                "level": 10 + did % 42,
+            }
+        elif vfam == 1:
+            p = 1 + sel % 2
+            vc, vp = "hev1", {
+                "profile": p, "level": 93 if p == 1 else 120,
+            }
+        elif vfam == 2:
+            vc, vp = "av01", {
+                "level": sel % 14, "high_bitdepth": bool(sel % 2),
+            }
+        else:
+            vc, vp = "vp09", {
+                "profile": sel % 4,
+                "level": (10, 20, 30, 41)[sel % 4],
+                "bit_depth": 10 if sel % 2 else 8,
+            }
+        yield f"m{did}", encode_mp4_stub(
+            1000 + did % 9000,
+            16 * (1 + did % 40),
+            16 * (1 + did % 30),
+            n_tracks=1 + did % 2,
+            version1=(did % 3 == 0),
+            video_codec=vc,
+            video_params=vp,
+            audio_codec="mp4a" if vfam == 1 else "Opus",
+        )
+        # WebM video codec cycles did%3 (V_VP8 bare / V_VP9
+        # feature-list CodecPrivate / V_AV1 av1C CodecPrivate
+        # whose sequence header carries the coded dims);
+        # audio tracks are A_OPUS with a real OpusHead
+        wfam = did % 3
+        wsel = did // 3
+        if wfam == 1:
+            wc, wp = b"V_VP9", {
+                "profile": wsel % 4,
+                "level": (10, 20, 30, 41)[wsel % 4],
+                "bit_depth": 10 if wsel % 2 else 8,
+            }
+        elif wfam == 2:
+            wc, wp = b"V_AV1", {
+                "level": wsel % 14,
+                "high_bitdepth": bool(wsel % 2),
+            }
+        else:
+            wc, wp = b"V_VP8", None
+        yield f"k{did}", encode_webm_stub(
+            100000 * (1 + did % 10),
+            2 + did % 1919,
+            2 + did % 1079,
+            n_tracks=1 + did % 3,
+            video_codec=wc,
+            video_params=wp,
+        )
+        # HLS media segment ('s'): MPEG-2 transport stream —
+        # PAT/PMT (CRC-verified), H.264 PES whose SPS carries
+        # the coded dims, ADTS-AAC / MP3 / video-only audio
+        # cycle, PCR span pinning the duration exactly
+        yield f"s{did}", encode_ts_stub(
+            1000 + did % 9000,
+            2 * (1 + did % 959),
+            2 * (1 + did % 539),
+            avc_profile=(66, 77, 100)[did % 3],
+            avc_level=10 + did % 42,
+            audio=("aac", "mp3", None)[did % 3],
+            aac_rate=(44100, 48000, 32000, 24000, 16000,
+                      8000)[did % 6],
+            aac_channels=1 + did % 2,
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                out["media_id"].append(f"m{did}")
-                # video codec family cycles with did%4; profile/level/
-                # depth parameters derive from did//4 so they vary
-                # independently of the family parity.  Audio exists iff
-                # n_tracks == 2 (odd did): mp4a under hev1, Opus under
-                # vp09.  The codec_tags twin inverts this closed-form.
-                vfam = did % 4
-                sel = did // 4
-                if vfam == 0:
-                    vc, vp = "avc1", {
-                        "profile": (66, 77, 100)[did % 3],
-                        "level": 10 + did % 42,
-                    }
-                elif vfam == 1:
-                    p = 1 + sel % 2
-                    vc, vp = "hev1", {
-                        "profile": p, "level": 93 if p == 1 else 120,
-                    }
-                elif vfam == 2:
-                    vc, vp = "av01", {
-                        "level": sel % 14, "high_bitdepth": bool(sel % 2),
-                    }
-                else:
-                    vc, vp = "vp09", {
-                        "profile": sel % 4,
-                        "level": (10, 20, 30, 41)[sel % 4],
-                        "bit_depth": 10 if sel % 2 else 8,
-                    }
-                out["payload"].append(
-                    encode_mp4_stub(
-                        1000 + did % 9000,
-                        16 * (1 + did % 40),
-                        16 * (1 + did % 30),
-                        n_tracks=1 + did % 2,
-                        version1=(did % 3 == 0),
-                        video_codec=vc,
-                        video_params=vp,
-                        audio_codec="mp4a" if vfam == 1 else "Opus",
-                    )
-                )
-                out["media_id"].append(f"k{did}")
-                # WebM video codec cycles did%3 (V_VP8 bare / V_VP9
-                # feature-list CodecPrivate / V_AV1 av1C CodecPrivate
-                # whose sequence header carries the coded dims);
-                # audio tracks are A_OPUS with a real OpusHead
-                wfam = did % 3
-                wsel = did // 3
-                if wfam == 1:
-                    wc, wp = b"V_VP9", {
-                        "profile": wsel % 4,
-                        "level": (10, 20, 30, 41)[wsel % 4],
-                        "bit_depth": 10 if wsel % 2 else 8,
-                    }
-                elif wfam == 2:
-                    wc, wp = b"V_AV1", {
-                        "level": wsel % 14,
-                        "high_bitdepth": bool(wsel % 2),
-                    }
-                else:
-                    wc, wp = b"V_VP8", None
-                out["payload"].append(
-                    encode_webm_stub(
-                        100000 * (1 + did % 10),
-                        2 + did % 1919,
-                        2 + did % 1079,
-                        n_tracks=1 + did % 3,
-                        video_codec=wc,
-                        video_params=wp,
-                    )
-                )
-                # HLS media segment ('s'): MPEG-2 transport stream —
-                # PAT/PMT (CRC-verified), H.264 PES whose SPS carries
-                # the coded dims, ADTS-AAC / MP3 / video-only audio
-                # cycle, PCR span pinning the duration exactly
-                out["media_id"].append(f"s{did}")
-                out["payload"].append(
-                    encode_ts_stub(
-                        1000 + did % 9000,
-                        2 * (1 + did % 959),
-                        2 * (1 + did % 539),
-                        avc_profile=(66, 77, 100)[did % 3],
-                        avc_level=10 + did % 42,
-                        audio=("aac", "mp3", None)[did % 3],
-                        aac_rate=(44100, 48000, 32000, 24000, 16000,
-                                  8000)[did % 6],
-                        aac_channels=1 + did % 2,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2176,42 +1877,21 @@ def _ogg_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimal valid Ogg streams with CRC-correct pages: an Opus one
     ('oa'<doc_id>) and a Vorbis one ('ob'<doc_id>) per doc, each
     carrying deterministic channel/rate/page/granule metadata."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.mediameta import encode_ogg_stub
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        yield f"oa{did}", encode_ogg_stub(
+            "opus", 1 + did % 2, 8000 * (1 + did % 6),
+            n_pages=1 + did % 3,
+            last_granule=960 * (1 + did % 50),
+        )
+        yield f"ob{did}", encode_ogg_stub(
+            "vorbis", 1 + did % 8, 11025 * (1 + did % 4),
+            n_pages=2 + did % 2,
+            last_granule=1024 * (1 + did % 30),
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                out["media_id"].append(f"oa{did}")
-                out["payload"].append(
-                    encode_ogg_stub(
-                        "opus", 1 + did % 2, 8000 * (1 + did % 6),
-                        n_pages=1 + did % 3,
-                        last_granule=960 * (1 + did % 50),
-                    )
-                )
-                out["media_id"].append(f"ob{did}")
-                out["payload"].append(
-                    encode_ogg_stub(
-                        "vorbis", 1 + did % 8, 11025 * (1 + did % 4),
-                        n_pages=2 + did % 2,
-                        last_granule=1024 * (1 + did % 30),
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def _mp3_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2219,58 +1899,35 @@ def _mp3_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitrate/channel/frame-count parameters all derive from doc_id, with
     an ID3v2 prefix every 3rd doc and a Xing tag every 4th, so the
     frame-header walk's metadata inverts to closed-form SQL."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.mediameta import encode_mp3_stub
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
     rates = (44100, 48000, 32000, 22050, 24000, 16000)
     br_v1 = (64, 128, 192, 320)
     br_v2 = (32, 64, 96, 160)
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                rate = rates[did % 6]
-                br = (br_v1 if did % 6 < 3 else br_v2)[did % 4]
-                out["media_id"].append(f"p3{did}")
-                out["payload"].append(
-                    encode_mp3_stub(
-                        1 + did % 5, br, rate, 1 + did % 2,
-                        id3v2_tag_size=(16 + did % 40) if did % 3 == 0 else None,
-                        xing=did % 4 == 0,
-                    )
-                )
-                # 'pv': Xing-declared VBR duration on a short/truncated
-                # stream — the walked count covers only the fetched
-                # frames, the Xing frames field is the duration signal
-                out["media_id"].append(f"pv{did}")
-                out["payload"].append(
-                    encode_mp3_stub(
-                        1 + did % 4, 128, rates[did % 3], 1 + did % 2,
-                        xing=True, declared_frames=20 + did % 30,
-                    )
-                )
-                # 'pw': Fraunhofer VBRI header (MPEG-2 rates, spf 576)
-                out["media_id"].append(f"pw{did}")
-                out["payload"].append(
-                    encode_mp3_stub(
-                        2 + did % 3, 96, rates[3 + did % 3],
-                        1 + (did + 1) % 2, vbri=True,
-                        declared_frames=50 + did % 20,
-                    )
-                )
-            yield pd.DataFrame(out)
+    def gen(did):
+        rate = rates[did % 6]
+        br = (br_v1 if did % 6 < 3 else br_v2)[did % 4]
+        yield f"p3{did}", encode_mp3_stub(
+            1 + did % 5, br, rate, 1 + did % 2,
+            id3v2_tag_size=(16 + did % 40) if did % 3 == 0 else None,
+            xing=did % 4 == 0,
+        )
+        # 'pv': Xing-declared VBR duration on a short/truncated
+        # stream — the walked count covers only the fetched
+        # frames, the Xing frames field is the duration signal
+        yield f"pv{did}", encode_mp3_stub(
+            1 + did % 4, 128, rates[did % 3], 1 + did % 2,
+            xing=True, declared_frames=20 + did % 30,
+        )
+        # 'pw': Fraunhofer VBRI header (MPEG-2 rates, spf 576)
+        yield f"pw{did}", encode_mp3_stub(
+            2 + did % 3, 96, rates[3 + did % 3],
+            1 + (did + 1) % 2, vbri=True,
+            declared_frames=50 + did % 20,
+        )
 
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2293,7 +1950,6 @@ def _pagemeta_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     block, RSS feed link), run operators/pagemeta.page_meta_rows —
     the hquery engine end to end — and emit (media_id, ord, kind,
     key, value) rows whose twin is pure string arithmetic."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType, StringType, StructField, StructType,
     )
@@ -2313,61 +1969,55 @@ def _pagemeta_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for did in pdf["did"]:
-                did = int(did)
-                jsonld = (
-                    '<script type="application/ld+json">{broken'
-                    "</script>"
-                    if did % 4 == 3
-                    else '<script type="application/ld+json">'
-                    '{"@type": "%s"}</script>'
-                    % ("Article", "Product", "NewsArticle")[did % 3]
-                )
-                html = (
-                    '<html><head><meta charset="utf-8">'
-                    f"<title>Doc {did} Meta</title>"
-                    f'<link rel="canonical" href="/c/{did}">'
-                    + (
-                        f'<meta name="description" content="Desc {did}.">'
-                        if did % 2 == 0
-                        else ""
-                    )
-                    + f'<meta property="og:title" content="OG {did}">'
-                    + (
-                        '<meta property="og:image" content='
-                        f'"https://cdn.example.com/i/{did}.png">'
-                        if did % 3 != 0
-                        else ""
-                    )
-                    + '<meta name="twitter:card" content='
-                    + (
-                        '"summary">' if did % 2 == 0
-                        else '"summary_large_image">'
-                    )
-                    + (
-                        '<link rel="alternate" type="application/rss+xml"'
-                        ' href="/feed.xml">'
-                        if did % 5 == 0
-                        else ""
-                    )
-                    + jsonld
-                    + f"</head><body><p>Doc {did}</p></body></html>"
-                )
-                rows = page_meta_rows(
-                    html, f"https://ex{did % 7}.com/page/{did}"
-                )
-                for i, r in enumerate(rows):
-                    out["media_id"].append(f"p{did}")
-                    out["ord"].append(i)
-                    out["kind"].append(r["kind"])
-                    out["key"].append(r["key"])
-                    out["value"].append(r["value"])
-            yield pd.DataFrame(out)
+    def gen(did):
+        did = int(did)
+        jsonld = (
+            '<script type="application/ld+json">{broken'
+            "</script>"
+            if did % 4 == 3
+            else '<script type="application/ld+json">'
+            '{"@type": "%s"}</script>'
+            % ("Article", "Product", "NewsArticle")[did % 3]
+        )
+        html = (
+            '<html><head><meta charset="utf-8">'
+            f"<title>Doc {did} Meta</title>"
+            f'<link rel="canonical" href="/c/{did}">'
+            + (
+                f'<meta name="description" content="Desc {did}.">'
+                if did % 2 == 0
+                else ""
+            )
+            + f'<meta property="og:title" content="OG {did}">'
+            + (
+                '<meta property="og:image" content='
+                f'"https://cdn.example.com/i/{did}.png">'
+                if did % 3 != 0
+                else ""
+            )
+            + '<meta name="twitter:card" content='
+            + (
+                '"summary">' if did % 2 == 0
+                else '"summary_large_image">'
+            )
+            + (
+                '<link rel="alternate" type="application/rss+xml"'
+                ' href="/feed.xml">'
+                if did % 5 == 0
+                else ""
+            )
+            + jsonld
+            + f"</head><body><p>Doc {did}</p></body></html>"
+        )
+        rows = page_meta_rows(
+            html, f"https://ex{did % 7}.com/page/{did}"
+        )
+        return [
+            (f"p{did}", i, r["kind"], r["key"], r["value"])
+            for i, r in enumerate(rows)
+        ]
 
-    return d.mapInPandas(gen, schema)
+    return map_rows(d, schema, gen)
 
 
 def q_media_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2434,37 +2084,19 @@ def _heif_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic size) — two of three are AVIF/av01, every third is
     HEIC/hvc1 (media_id = 'h'<doc_id>).  The meta walk is conformance-
     pinned against real libavif output in tests/test_heif.py."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
-
     from hquery_php_spark.operators.heif import encode_heif_stub
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        heic = did % 3 == 0
+        yield f"h{did}", encode_heif_stub(
+            8 + did % 53,
+            6 + did % 41,
+            brand=b"heic" if heic else b"avif",
+            codec=b"hvc1" if heic else b"av01",
+            total_bytes=220 + did % 37,
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                heic = did % 3 == 0
-                out["media_id"].append(f"h{did}")
-                out["payload"].append(
-                    encode_heif_stub(
-                        8 + did % 53,
-                        6 + did % 41,
-                        brand=b"heic" if heic else b"avif",
-                        codec=b"hvc1" if heic else b"av01",
-                        total_bytes=220 + did % 37,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2499,47 +2131,30 @@ def _png_full_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_id via the _PX_* template; the scanline filter cycles
     0,1,2,3,4 by row so decoding exercises every unfilter path."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     from hquery_php_spark.operators.multimodal import encode_png
 
-    d = _spread(_docs(spark, sf_dir), spark).select(
-        F.col("doc_id").cast("long").alias("did")
-    )
-    schema = StructType(
-        [StructField("media_id", StringType()), StructField("payload", BinaryType())]
-    )
+    def gen(did):
+        w, h = 16 + did % 64, 16 + did % 48
+        y, x = np.mgrid[0:h, 0:w]
+        px = np.stack(
+            [
+                (3 * x + 5 * y + did) % 256,
+                (7 * x + 11 * y + 2 * did) % 256,
+                (13 * x + 17 * y + 3 * did) % 256,
+                np.full((h, w), 255),
+            ],
+            axis=-1,
+        ).astype(np.uint8)
+        # every 7th payload is Adam7-interlaced: same pixels,
+        # same oracle — the seven-pass decode path gets
+        # driver-checked for free
+        yield str(did), encode_png(
+            px, row_filter=lambda yy: yy % 5,
+            interlace=did % 7 == 0,
+        )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"media_id": [], "payload": []}
-            for did in pdf["did"]:
-                did = int(did)
-                w, h = 16 + did % 64, 16 + did % 48
-                y, x = np.mgrid[0:h, 0:w]
-                px = np.stack(
-                    [
-                        (3 * x + 5 * y + did) % 256,
-                        (7 * x + 11 * y + 2 * did) % 256,
-                        (13 * x + 17 * y + 3 * did) % 256,
-                        np.full((h, w), 255),
-                    ],
-                    axis=-1,
-                ).astype(np.uint8)
-                out["media_id"].append(str(did))
-                # every 7th payload is Adam7-interlaced: same pixels,
-                # same oracle — the seven-pass decode path gets
-                # driver-checked for free
-                out["payload"].append(
-                    encode_png(
-                        px, row_filter=lambda yy: yy % 5,
-                        interlace=did % 7 == 0,
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(gen, schema)
+    return _doc_payloads(spark, sf_dir, gen)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3238,7 +2853,6 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     xref-stream/AES families)."""
     from hquery_php_spark.operators.pdf import build_pdf, pdf_extract_df
     from hquery_php_spark.operators.pdfwrite import PDF_FAMILIES
-    import pandas as pd
     from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
     fams = sorted(PDF_FAMILIES)  # 19 families, index = doc_id % 19
@@ -3250,24 +2864,19 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("doc_id", StringType()), StructField("payload", BinaryType())]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, norm in zip(pdf["doc_id"], pdf["norm"]):
-                pages = [
-                    [
-                        (50.0, 750.0, f"Doc {doc_id}"),
-                        (50.0, 700.0, norm),
-                        (50.0, 50.0, "page footer"),
-                    ],
-                    [(72.0, 720.0, f"p2 {doc_id}")],
-                ]
-                fam = fams[int(doc_id) % len(fams)]
-                out["doc_id"].append(doc_id)
-                out["payload"].append(build_pdf(pages, **PDF_FAMILIES[fam]))
-            yield pd.DataFrame(out)
+    def gen(doc_id, norm):
+        pages = [
+            [
+                (50.0, 750.0, f"Doc {doc_id}"),
+                (50.0, 700.0, norm),
+                (50.0, 50.0, "page footer"),
+            ],
+            [(72.0, 720.0, f"p2 {doc_id}")],
+        ]
+        fam = fams[int(doc_id) % len(fams)]
+        return [(doc_id, build_pdf(pages, **PDF_FAMILIES[fam]))]
 
-    pdfs = d.mapInPandas(gen, gen_schema)
+    pdfs = map_rows(d, gen_schema, gen)
     # one corpus-wide password: opens the pwrc4 family; every other
     # family falls back to the empty user password transparently
     return pdf_extract_df(pdfs, password=b"s3cret")
@@ -3651,7 +3260,6 @@ def q_warc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form in doc_id + documents.text, so the DuckDB twin checks
     record framing, dechunking, header folding, and the charset
     handoff value-exactly."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
@@ -3680,64 +3288,60 @@ def q_warc_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for doc_id, norm in zip(pdf["doc_id"], pdf["norm"]):
-                fam = int(doc_id) % 6
-                base = f"W{doc_id} {norm}"
-                url = f"https://warc.example/{doc_id}"
-                opts: dict = {}
-                gz = zs = False
-                if fam == 2:
-                    ctype = "text/plain; charset=utf-8"
-                    body = base.encode("utf-8")
-                    opts = {"chunked": True}
-                elif fam == 3:
-                    ctype = "text/html; charset=ISO-8859-1"
-                    body = ("é " + base).encode("iso-8859-1")
-                    opts = {"obs_fold": True}
-                elif fam == 4:
-                    html = (
-                        '<html><head><meta charset="windows-1251"></head>'
-                        f"<body>Ж {base}</body></html>"
-                    )
-                    ctype = "text/html"
-                    body = html.encode("cp1251")
-                else:
-                    ctype = "text/html; charset=UTF-8"
-                    body = base.encode("utf-8")
-                    gz = fam == 1
-                    zs = fam == 5
-                archive = make_warc(
-                    [(url, 200, ctype, body, opts)],
-                    gzip_members=gz,
-                    zstd_frames=zs,
-                )
-                rec = [
-                    r for r in parse_warc(archive) if r.warc_type == "response"
-                ][0]
-                hdrs = (
-                    {"content-type": rec.http_content_type}
-                    if rec.http_content_type
-                    else None
-                )
-                cs = detect_charset(rec.payload, hdrs)
-                codec = _codec_for(cs) if cs else None
-                rows["doc_id"].append(doc_id)
-                rows["fam"].append(fam)
-                rows["url"].append(rec.target_uri)
-                rows["warc_date"].append(rec.warc_date)
-                rows["status"].append(rec.http_status)
-                rows["content_type"].append(rec.http_content_type)
-                rows["charset"].append(cs)
-                rows["text"].append(
-                    rec.payload.decode(codec or "utf-8", "replace")
-                )
-                rows["n_bytes"].append(len(rec.payload))
-            yield pd.DataFrame(rows)
+    def row(doc_id, norm):
+        fam = int(doc_id) % 6
+        base = f"W{doc_id} {norm}"
+        url = f"https://warc.example/{doc_id}"
+        opts: dict = {}
+        gz = zs = False
+        if fam == 2:
+            ctype = "text/plain; charset=utf-8"
+            body = base.encode("utf-8")
+            opts = {"chunked": True}
+        elif fam == 3:
+            ctype = "text/html; charset=ISO-8859-1"
+            body = ("é " + base).encode("iso-8859-1")
+            opts = {"obs_fold": True}
+        elif fam == 4:
+            html = (
+                '<html><head><meta charset="windows-1251"></head>'
+                f"<body>Ж {base}</body></html>"
+            )
+            ctype = "text/html"
+            body = html.encode("cp1251")
+        else:
+            ctype = "text/html; charset=UTF-8"
+            body = base.encode("utf-8")
+            gz = fam == 1
+            zs = fam == 5
+        archive = make_warc(
+            [(url, 200, ctype, body, opts)],
+            gzip_members=gz,
+            zstd_frames=zs,
+        )
+        rec = [
+            r for r in parse_warc(archive) if r.warc_type == "response"
+        ][0]
+        hdrs = (
+            {"content-type": rec.http_content_type}
+            if rec.http_content_type
+            else None
+        )
+        cs = detect_charset(rec.payload, hdrs)
+        codec = _codec_for(cs) if cs else None
+        return [(
+            doc_id,
+            fam,
+            rec.target_uri,
+            rec.warc_date,
+            rec.http_status,
+            rec.http_content_type,
+            cs,
+            rec.payload.decode(codec or "utf-8", "replace"),
+            len(rec.payload),
+        )]
 
-    return d.mapInPandas(run, schema)
+    return map_rows(d, schema, row)
 
 
 def q_charset_suite(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,7 @@ documents on a multi-executor Spark cluster.
 
 Layout:
   core/       per-document engine (tokenizer, index, selectors, spans)
+  batch.py    map_rows: the one Arrow-batch loop behind per-row operators
   operators/  Spark operators (extraction pipeline, dedup, similarity, skew)
   sources/    table readers + deterministic corpus synthesis
   functions/  pyspark column-function library (text stats, lang-id, URLs)

@@ -404,13 +404,14 @@ def _ext_pseudo(doc: DocIndex, rb: IdMap, op: str, arg) -> IdMap:
     post-filters over the current candidate set."""
     if op == "not":
         # simple compound argument: tag / #id / .class / [attr] — the
-        # first step of the first OR group; combinators are not
-        # supported inside :not (documented extension subset)
+        # first step of the first OR group; a pseudo-class or combinator
+        # inside :not is outside the documented extension subset, so it
+        # falls back to a no-op like an unparseable argument
         try:
             g = parse_selector(str(arg or ""), extensions=True)
         except Exception:
             return rb
-        if not g or not g[0]:
+        if not g or len(g[0]) != 1 or "p" in g[0][0]:
             return rb
         st = g[0][0]
         at = dict(st.get("a") or {})

@@ -1,29 +1,1 @@
 """Spark operators: extraction pipeline, dedup, similarity, skew handling."""
-
-from .dedup import (  # noqa: F401
-    char_shingles,
-    cosine_sim,
-    dedup_exact,
-    embedding_near_dup,
-    minhash_lsh_candidates,
-    minhash_signatures,
-    ngram_jaccard_verify,
-    simhash64,
-)
-from .pipeline import (  # noqa: F401
-    SPAN_STRUCT,
-    SPANS_SCHEMA,
-    byte_balanced_repartition,
-    explode_spans,
-    extract_spans_df,
-    partition_metrics,
-    resume_filter,
-    salted_repartition,
-)
-from .events import sessionize, tumbling_counts  # noqa: F401
-from .multimodal import (  # noqa: F401
-    image_features_df,
-    image_meta_df,
-    sniff_media_type,
-)
-from .similarity import brute_force_topk, bucket_of, ivf_topk  # noqa: F401

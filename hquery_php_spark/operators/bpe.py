@@ -308,6 +308,8 @@ def bpe_encode_map(
 
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
+    from ..batch import map_rows
+
     pairs = [(m[1], m[2]) for m in merges]
     ws = re.compile(r"[ \t\n\x0B\f\r]+")
     out_schema = StructType(
@@ -338,24 +340,18 @@ def bpe_encode_map(
         cache[word] = syms
         return syms
 
-    def gen(batches):
-        import pandas as pd
+    cache: dict = {}
 
-        cache: dict = {}
-        for pdf in batches:
-            ids, toks = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                text = ws.sub(" ", (text or "")).strip(" ").lower()
-                text = text.replace(SEP1, "").replace(SEP2, "")
-                row: List[str] = []
-                for word in text.split(" "):
-                    if word:
-                        row.extend(encode_word(word, cache))
-                ids.append(str(did))
-                toks.append(row)
-            yield pd.DataFrame({"id": ids, "tokens": toks})
+    def row(did, text):
+        text = ws.sub(" ", (text or "")).strip(" ").lower()
+        text = text.replace(SEP1, "").replace(SEP2, "")
+        toks: List[str] = []
+        for word in text.split(" "):
+            if word:
+                toks.extend(encode_word(word, cache))
+        return [(str(did), toks)]
 
-    return df.select(id_col, text_col).mapInPandas(gen, out_schema)
+    return map_rows(df.select(id_col, text_col), out_schema, row)
 
 
 def _pairs_cte(src: str) -> str:

@@ -79,7 +79,6 @@ def extract_all_df(
     """(id, html[, url]) -> one row per doc with every surface:
     (id, spans array<struct>, main_text, markdown, n_sections,
     sec1_path, n_cells, title, canonical, n_meta)."""
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -88,18 +87,13 @@ def extract_all_df(
         StructType,
     )
 
-    span_t = StructType(
-        [
-            StructField("kind", StringType()),
-            StructField("text", StringType()),
-            StructField("media_ref", StringType()),
-            StructField("offset", IntegerType()),
-        ]
-    )
+    from ..batch import map_rows
+    from .pipeline import SPAN_STRUCT
+
     schema = StructType(
         [
             StructField(id_col, df.schema[id_col].dataType),
-            StructField("spans", ArrayType(span_t)),
+            StructField("spans", ArrayType(SPAN_STRUCT)),
             StructField("main_text", StringType()),
             StructField("markdown", StringType()),
             StructField("n_sections", IntegerType()),
@@ -110,35 +104,14 @@ def extract_all_df(
             StructField("n_meta", IntegerType()),
         ]
     )
-    has_url = url_col is not None
+    surfaces = schema.fieldNames()[2:]
 
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            ids = pdf[id_col].tolist()
-            htmls = pdf[html_col].tolist()
-            urls = pdf[url_col].tolist() if has_url else [None] * len(ids)
-            for i, h, u in zip(ids, htmls, urls):
-                r = extract_all(h, u, link_style)
-                rows[id_col].append(i)
-                if r is None:  # NULL html: empty row, like every sibling op
-                    rows["spans"].append([])
-                    for k, empty in (
-                        ("main_text", None), ("markdown", None),
-                        ("n_sections", 0), ("sec1_path", None),
-                        ("n_cells", 0), ("title", None),
-                        ("canonical", None), ("n_meta", 0),
-                    ):
-                        rows[k].append(empty)
-                    continue
-                rows["spans"].append(
-                    [tuple(s) for s in r["spans"]]
-                )
-                for k in ("main_text", "markdown", "n_sections",
-                          "sec1_path", "n_cells", "title", "canonical",
-                          "n_meta"):
-                    rows[k].append(r[k])
-            yield pd.DataFrame(rows)
+    def row(i, h, u=None):
+        r = extract_all(h, u, link_style)
+        if r is None:  # NULL html: empty row, like every sibling op
+            return [(i, [], None, None, 0, None, 0, None, None, 0)]
+        spans = [tuple(s) for s in r["spans"]]
+        return [(i, spans, *(r[k] for k in surfaces))]
 
-    cols = [id_col, html_col] + ([url_col] if has_url else [])
-    return df.select(*cols).mapInPandas(run, schema)
+    cols = [id_col, html_col] + ([url_col] if url_col is not None else [])
+    return map_rows(df.select(*cols), schema, row)

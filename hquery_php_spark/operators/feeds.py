@@ -147,13 +147,14 @@ def parse_sitemap(xml):
 
 
 def _rows_df(df, id_col, xml_col, fn, fields, kinded):
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     schema = StructType(
         [StructField(id_col, df.schema[id_col].dataType)]
@@ -163,26 +164,15 @@ def _rows_df(df, id_col, xml_col, fn, fields, kinded):
         + [StructField(f, StringType()) for f in fields]
     )
 
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for i, x in zip(pdf[id_col].tolist(), pdf[xml_col].tolist()):
-                res = fn(x)
-                if kinded:
-                    kind, title, entries = res
-                else:
-                    kind, entries = res
-                for e in entries:
-                    rows[id_col].append(i)
-                    rows["kind"].append(kind)
-                    if kinded:
-                        rows["feed_title"].append(title)
-                    rows["ord"].append(e.ord)
-                    for f, v in zip(fields, e[1:]):
-                        rows[f].append(v)
-            yield pd.DataFrame(rows)
+    def row(i, x):
+        res = fn(x)
+        if kinded:
+            kind, title, entries = res
+            return [(i, kind, title, *e) for e in entries]
+        kind, entries = res
+        return [(i, kind, *e) for e in entries]
 
-    return df.select(id_col, xml_col).mapInPandas(run, schema)
+    return map_rows(df.select(id_col, xml_col), schema, row)
 
 
 def feed_entries_df(df, xml_col: str = "xml", id_col: str = "doc_id"):
@@ -277,13 +267,14 @@ def sitemap_media_df(df, xml_col: str = "xml", id_col: str = "doc_id"):
     """One row per declared media resource: (id, ord, kind, loc,
     title) — Arrow-batched mapInPandas, parse cost ∝ sitemap documents,
     zero shuffles."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     schema = StructType(
         [
@@ -294,17 +285,8 @@ def sitemap_media_df(df, xml_col: str = "xml", id_col: str = "doc_id"):
             StructField("title", StringType()),
         ]
     )
-
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for i, x in zip(pdf[id_col].tolist(), pdf[xml_col].tolist()):
-                for m in parse_sitemap_media(x):
-                    rows[id_col].append(i)
-                    rows["ord"].append(m.ord)
-                    rows["kind"].append(m.kind)
-                    rows["loc"].append(m.loc)
-                    rows["title"].append(m.title)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, xml_col).mapInPandas(run, schema)
+    return map_rows(
+        df.select(id_col, xml_col),
+        schema,
+        lambda i, x: [(i, *m) for m in parse_sitemap_media(x)],
+    )

@@ -425,13 +425,14 @@ def markdown_df(
 ):
     """(id, html[, url]) -> (id, markdown, n_blocks, n_chars) via one
     Arrow-batched ``mapInPandas`` — per-document work, zero shuffles."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     schema = StructType(
         [
@@ -441,22 +442,10 @@ def markdown_df(
             StructField("n_chars", IntegerType()),
         ]
     )
-    has_url = url_col is not None
 
-    def run(batches):
-        for pdf in batches:
-            ids = pdf[id_col].tolist()
-            htmls = pdf[html_col].tolist()
-            urls = pdf[url_col].tolist() if has_url else [None] * len(ids)
-            mds, nb, nc = [], [], []
-            for h, u in zip(htmls, urls):
-                md = render_markdown(h, u, link_style)
-                mds.append(md)
-                nb.append(md.count("\n\n") + 1 if md else 0)
-                nc.append(len(md))
-            yield pd.DataFrame(
-                {id_col: ids, "markdown": mds, "n_blocks": nb, "n_chars": nc}
-            )
+    def row(i, h, u=None):
+        md = render_markdown(h, u, link_style)
+        return [(i, md, md.count("\n\n") + 1 if md else 0, len(md))]
 
-    cols = [id_col, html_col] + ([url_col] if has_url else [])
-    return df.select(*cols).mapInPandas(run, schema)
+    cols = [id_col, html_col] + ([url_col] if url_col is not None else [])
+    return map_rows(df.select(*cols), schema, row)

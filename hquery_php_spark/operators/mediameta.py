@@ -1164,6 +1164,8 @@ def encode_mp3_stub(
         # the only honest duration signal
         pos = audio_start
         for _ in range(truncate_frames):
+            if pos + 4 > len(out):  # asked for more frames than exist
+                break
             b1, b2 = out[pos + 1], out[pos + 2]
             vb = (b1 >> 3) & 0x03
             table = _MP3_BITRATES_V1L3 if vb == 3 else _MP3_BITRATES_V2L3

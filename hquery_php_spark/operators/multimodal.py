@@ -29,9 +29,8 @@ from __future__ import annotations
 
 import hashlib
 import struct as _struct
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -43,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..batch import map_rows
 
 __all__ = [
     "MEDIA_SCHEMA",
@@ -490,56 +491,54 @@ def image_meta_df(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else None
-                mime = sniff_media_type(payload)
-                orient = None
-                if payload and mime == "image/png":
-                    dims = _png_dims(payload)
-                elif payload and mime == "image/jpeg":
-                    from hquery_php_spark.operators.jpeg import (
-                        jpeg_dims,
-                        jpeg_exif_orientation,
-                    )
+    def row(mid, p):
+        payload = bytes(p) if p is not None else None
+        mime = sniff_media_type(payload)
+        orient = None
+        if payload and mime == "image/png":
+            dims = _png_dims(payload)
+        elif payload and mime == "image/jpeg":
+            from hquery_php_spark.operators.jpeg import (
+                jpeg_dims,
+                jpeg_exif_orientation,
+            )
 
-                    dims = jpeg_dims(payload)
-                    orient = jpeg_exif_orientation(payload)
-                elif payload and mime == "image/gif":
-                    from hquery_php_spark.operators.gif import gif_dims
+            dims = jpeg_dims(payload)
+            orient = jpeg_exif_orientation(payload)
+        elif payload and mime == "image/gif":
+            from hquery_php_spark.operators.gif import gif_dims
 
-                    dims = gif_dims(payload)
-                elif payload and mime == "image/webp":
-                    from hquery_php_spark.operators.webp import webp_dims
+            dims = gif_dims(payload)
+        elif payload and mime == "image/webp":
+            from hquery_php_spark.operators.webp import webp_dims
 
-                    dims = webp_dims(payload)
-                elif payload and mime == "image/tiff":
-                    from hquery_php_spark.operators.tiff import tiff_dims
+            dims = webp_dims(payload)
+        elif payload and mime == "image/tiff":
+            from hquery_php_spark.operators.tiff import tiff_dims
 
-                    dims = tiff_dims(payload)
-                elif payload and mime in ("image/avif", "image/heif"):
-                    from hquery_php_spark.operators.heif import heif_meta
+            dims = tiff_dims(payload)
+        elif payload and mime in ("image/avif", "image/heif"):
+            from hquery_php_spark.operators.heif import heif_meta
 
-                    hm = heif_meta(payload)
-                    dims = (hm["width"], hm["height"]) if hm else None
-                elif payload and mime == "image/bmp" and len(payload) >= 26:
-                    import struct as _s
+            hm = heif_meta(payload)
+            dims = (hm["width"], hm["height"]) if hm else None
+        elif payload and mime == "image/bmp" and len(payload) >= 26:
+            import struct as _s
 
-                    bw, bh = _s.unpack_from("<ii", payload, 18)
-                    dims = (bw, abs(bh)) if bw > 0 and bh else None
-                else:
-                    dims = None
-                out["media_id"].append(mid)
-                out["mime"].append(mime)
-                out["width"].append(dims[0] if dims else None)
-                out["height"].append(dims[1] if dims else None)
-                out["n_bytes"].append(len(payload) if payload else 0)
-                out["orientation"].append(orient)
-            yield pd.DataFrame(out)
+            bw, bh = _s.unpack_from("<ii", payload, 18)
+            dims = (bw, abs(bh)) if bw > 0 and bh else None
+        else:
+            dims = None
+        return [(
+            mid,
+            mime,
+            dims[0] if dims else None,
+            dims[1] if dims else None,
+            len(payload) if payload else 0,
+            orient,
+        )]
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)
 
 
 def image_pixel_stats_df(
@@ -579,49 +578,36 @@ def image_pixel_stats_df(
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else None
-                dec = decode_image(payload)
-                out["media_id"].append(mid)
-                if dec is None:
-                    if not allow_stub:
-                        raise NotImplementedError(
-                            f"no codec for payload of media_id={mid} "
-                            f"(mime {sniff_media_type(payload)}); only PNG, "
-                            "baseline JPEG, and GIF decode without an "
-                            "image library"
-                        )
-                    for k in schema.fieldNames()[1:]:
-                        out[k].append(None)
-                    continue
-                w, h, ch, px = dec
-                px = px.astype(np.int64)
-                if ch == 1:
-                    r = g = b = px[:, :, 0]
-                    a = None
-                elif ch == 2:
-                    r = g = b = px[:, :, 0]
-                    a = px[:, :, 1]
-                elif ch == 3:
-                    r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
-                    a = None
-                else:
-                    r, g, b, a = (px[:, :, i] for i in range(4))
-                n_px = w * h
-                sa = int(a.sum()) if a is not None else 255 * n_px
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px"].append(n_px)
-                out["sum_r"].append(int(r.sum()))
-                out["sum_g"].append(int(g.sum()))
-                out["sum_b"].append(int(b.sum()))
-                out["sum_a"].append(sa)
-            yield pd.DataFrame(out)
+    def row(mid, p):
+        payload = bytes(p) if p is not None else None
+        dec = decode_image(payload)
+        if dec is None:
+            if not allow_stub:
+                raise NotImplementedError(
+                    f"no codec for payload of media_id={mid} "
+                    f"(mime {sniff_media_type(payload)}); only PNG, "
+                    "baseline JPEG, and GIF decode without an "
+                    "image library"
+                )
+            return [(mid,) + (None,) * 7]
+        w, h, ch, px = dec
+        px = px.astype(np.int64)
+        if ch == 1:
+            r = g = b = px[:, :, 0]
+            a = None
+        elif ch == 2:
+            r = g = b = px[:, :, 0]
+            a = px[:, :, 1]
+        elif ch == 3:
+            r, g, b = px[:, :, 0], px[:, :, 1], px[:, :, 2]
+            a = None
+        else:
+            r, g, b, a = (px[:, :, i] for i in range(4))
+        n_px = w * h
+        sa = int(a.sum()) if a is not None else 255 * n_px
+        return [(mid, w, h, n_px, int(r.sum()), int(g.sum()), int(b.sum()), sa)]
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)
 
 
 def _fake_features(payload: bytes, dim: int) -> list:
@@ -665,16 +651,13 @@ def image_features_df(
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "embedding": []}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else b""
-                out["media_id"].append(mid)
-                out["embedding"].append(_fake_features(payload, dim))
-            yield pd.DataFrame(out)
-
-    return narrow.mapInPandas(run, schema)
+    return map_rows(
+        narrow,
+        schema,
+        lambda mid, p: [
+            (mid, _fake_features(bytes(p) if p is not None else b"", dim))
+        ],
+    )
 
 
 def _nearest_resample(px, ow: int, oh: int):
@@ -740,63 +723,47 @@ def image_resize_df(
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else b""
-                dec = decode_image(payload)
-                out["media_id"].append(mid)
-                if dec is not None:
-                    w, h, ch, px = dec
-                    if sniff_media_type(payload) == "image/jpeg":
-                        from hquery_php_spark.operators.jpeg import (
-                            jpeg_exif_orientation,
-                        )
-
-                        o = jpeg_exif_orientation(payload)
-                        if o and o != 1:
-                            import numpy as np
-
-                            px = np.ascontiguousarray(
-                                apply_exif_orientation(px, o)
-                            )
-                            h, w = px.shape[0], px.shape[1]
-                    scale = min(target / w, target / h, 1.0)
-                    ow = max(1, int(round(w * scale)))
-                    oh = max(1, int(round(h * scale)))
-                    small = px if (ow, oh) == (w, h) else _nearest_resample(
-                        px, ow, oh
-                    )
-                    out["out_w"].append(ow)
-                    out["out_h"].append(oh)
-                    out["payload"].append(
-                        encode_png(small[:, :, 0] if ch == 1 else small)
-                    )
-                    continue
-                if not allow_stub:
-                    raise NotImplementedError(
-                        f"no codec for payload of media_id={mid} "
-                        f"(mime {sniff_media_type(payload)}); only PNG, baseline "
-                        "JPEG, and GIF decode without an image library"
-                    )
-                dims = (
-                    _png_dims(payload)
-                    if sniff_media_type(payload) == "image/png"
-                    else None
+    def row(mid, p):
+        payload = bytes(p) if p is not None else b""
+        dec = decode_image(payload)
+        if dec is not None:
+            w, h, ch, px = dec
+            if sniff_media_type(payload) == "image/jpeg":
+                from hquery_php_spark.operators.jpeg import (
+                    jpeg_exif_orientation,
                 )
-                if dims:
-                    w, h = dims
-                    scale = min(target / w, target / h, 1.0)
-                    ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
-                else:
-                    ow = oh = 0
-                out["out_w"].append(ow)
-                out["out_h"].append(oh)
-                out["payload"].append(payload)  # undecodable: passthrough
-            yield pd.DataFrame(out)
 
-    return narrow.mapInPandas(run, schema)
+                o = jpeg_exif_orientation(payload)
+                if o and o != 1:
+                    import numpy as np
+
+                    px = np.ascontiguousarray(apply_exif_orientation(px, o))
+                    h, w = px.shape[0], px.shape[1]
+            scale = min(target / w, target / h, 1.0)
+            ow = max(1, int(round(w * scale)))
+            oh = max(1, int(round(h * scale)))
+            small = px if (ow, oh) == (w, h) else _nearest_resample(px, ow, oh)
+            return [(mid, ow, oh, encode_png(small[:, :, 0] if ch == 1 else small))]
+        if not allow_stub:
+            raise NotImplementedError(
+                f"no codec for payload of media_id={mid} "
+                f"(mime {sniff_media_type(payload)}); only PNG, baseline "
+                "JPEG, and GIF decode without an image library"
+            )
+        dims = (
+            _png_dims(payload)
+            if sniff_media_type(payload) == "image/png"
+            else None
+        )
+        if dims:
+            w, h = dims
+            scale = min(target / w, target / h, 1.0)
+            ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
+        else:
+            ow = oh = 0
+        return [(mid, ow, oh, payload)]  # undecodable: passthrough
+
+    return map_rows(narrow, schema, row)
 
 
 def audio_pcm_stats_df(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -840,40 +807,31 @@ def audio_pcm_stats_df(df: DataFrame, payload_col: str = "payload") -> DataFrame
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else None
-                mime = sniff_media_type(payload)
-                dec = decode_wav(payload)
-                if dec is None:
-                    dec = decode_flac(payload)
-                if dec is None:
-                    dec = decode_avi_audio(payload)
-                out["media_id"].append(mid)
-                out["mime"].append(mime)
-                if dec is None:
-                    for k in (
-                        "sample_rate", "n_channels", "n_samples",
-                        "sum_val", "sum_abs", "sum_sq", "peak",
-                    ):
-                        out[k].append(None)
-                    continue
-                rate, samples = dec
-                s64 = samples.astype(np.int64)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(samples.shape[1])
-                out["n_samples"].append(samples.shape[0])
-                out["sum_val"].append(int(s64.sum()))
-                out["sum_abs"].append(int(np.abs(s64).sum()))
-                out["sum_sq"].append(int((s64 * s64).sum()))
-                out["peak"].append(
-                    int(np.abs(s64).max()) if s64.size else 0
-                )
-            yield pd.DataFrame(out)
+    def row(mid, p):
+        payload = bytes(p) if p is not None else None
+        mime = sniff_media_type(payload)
+        dec = decode_wav(payload)
+        if dec is None:
+            dec = decode_flac(payload)
+        if dec is None:
+            dec = decode_avi_audio(payload)
+        if dec is None:
+            return [(mid, mime) + (None,) * 7]
+        rate, samples = dec
+        s64 = samples.astype(np.int64)
+        return [(
+            mid,
+            mime,
+            rate,
+            samples.shape[1],
+            samples.shape[0],
+            int(s64.sum()),
+            int(np.abs(s64).sum()),
+            int((s64 * s64).sum()),
+            int(np.abs(s64).max()) if s64.size else 0,
+        )]
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)
 
 
 def audio_container_meta_df(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -903,48 +861,39 @@ def audio_container_meta_df(df: DataFrame, payload_col: str = "payload") -> Data
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else None
-                mime = sniff_media_type(payload)
-                if mime == "audio/ogg":
-                    m = ogg_meta(payload)
-                elif mime == "audio/mpeg":
-                    w = mp3_meta(payload)
-                    m = (
-                        {
-                            "codec": "mp3",
-                            "channels": w["channels"],
-                            "sample_rate": w["sample_rate"],
-                            "n_pages": w["n_frames"],
-                            "n_streams": 1,
-                            # VBR duration: a Xing/VBRI frames field is
-                            # authoritative (truncated/head-only fetches
-                            # walk fewer frames than the stream holds)
-                            "last_granule": (
-                                w["declared_total_samples"]
-                                if w.get("declared_total_samples") is not None
-                                else w["total_samples"]
-                            ),
-                        }
-                        if w
-                        else None
-                    )
-                else:
-                    m = None
-                out["media_id"].append(mid)
-                out["mime"].append(mime)
-                out["codec"].append(m["codec"] if m else None)
-                out["channels"].append(m["channels"] if m else None)
-                out["sample_rate"].append(m["sample_rate"] if m else None)
-                out["n_pages"].append(m["n_pages"] if m else None)
-                out["n_streams"].append(m["n_streams"] if m else None)
-                out["last_granule"].append(m["last_granule"] if m else None)
-            yield pd.DataFrame(out)
+    fields = schema.fieldNames()[2:]
 
-    return narrow.mapInPandas(run, schema)
+    def row(mid, p):
+        payload = bytes(p) if p is not None else None
+        mime = sniff_media_type(payload)
+        if mime == "audio/ogg":
+            m = ogg_meta(payload)
+        elif mime == "audio/mpeg":
+            w = mp3_meta(payload)
+            m = (
+                {
+                    "codec": "mp3",
+                    "channels": w["channels"],
+                    "sample_rate": w["sample_rate"],
+                    "n_pages": w["n_frames"],
+                    "n_streams": 1,
+                    # VBR duration: a Xing/VBRI frames field is
+                    # authoritative (truncated/head-only fetches
+                    # walk fewer frames than the stream holds)
+                    "last_granule": (
+                        w["declared_total_samples"]
+                        if w.get("declared_total_samples") is not None
+                        else w["total_samples"]
+                    ),
+                }
+                if w
+                else None
+            )
+        else:
+            m = None
+        return [(mid, mime, *(m[k] if m else None for k in fields))]
+
+    return map_rows(narrow, schema, row)
 
 
 def video_meta_df(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -978,68 +927,52 @@ def video_meta_df(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else None
-                mime = sniff_media_type(payload)
-                w = h = tracks = dur = ts = codecs = None
-                tags = cw = chh = None
-                if mime in ("video/mp4", "video/quicktime", "audio/mp4"):
-                    m = mp4_meta(payload)
-                    if m:
-                        w, h = m["width"], m["height"]
-                        tracks, dur, ts = (
-                            m["n_tracks"], m["duration_ms"], m["timescale"],
-                        )
-                        codecs = m["codecs"]
-                        # RFC 6381 strings + SPS/seq-header coded dims
-                        tags = m["codec_tags"]
-                        cw, chh = m["coded_width"], m["coded_height"]
-                elif mime in ("video/webm", "video/x-matroska"):
-                    m = webm_meta(payload)
-                    if m:
-                        w, h, tracks = m["width"], m["height"], m["n_tracks"]
-                        ts = m["timestamp_scale"]
-                        codecs = m["codecs"]
-                        tags = m["codec_tags"]
-                        cw, chh = m["coded_width"], m["coded_height"]
-                elif mime == "video/x-msvideo":
-                    d = avi_dims(payload)
-                    if d:
-                        w, h, nf, uspf = d
-                        dur = nf * uspf // 1000
-                        codecs = avi_codecs(payload)
-                        tracks = 1 + (codecs or "").count(",")
-                elif mime == "video/mp2t":
-                    m = ts_meta(payload)
-                    if m:
-                        # TS carries no container-level dims; the SPS
-                        # coded dims are authoritative for both
-                        w, h = m["width"], m["height"]
-                        cw, chh = m["width"], m["height"]
-                        codecs = m["streams"]
-                        tags = m["codec_tags"]
-                        dur = m["duration_ms"]
-                        ts = 90000  # the TS system clock
-                        tracks = (
-                            1 + codecs.count(",") if codecs else None
-                        )
-                out["media_id"].append(mid)
-                out["mime"].append(mime)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_tracks"].append(tracks)
-                out["duration_ms"].append(dur)
-                out["timescale"].append(ts)
-                out["codecs"].append(codecs)
-                out["codec_tags"].append(tags)
-                out["coded_width"].append(cw)
-                out["coded_height"].append(chh)
-            yield pd.DataFrame(out)
+    def row(mid, p):
+        payload = bytes(p) if p is not None else None
+        mime = sniff_media_type(payload)
+        w = h = tracks = dur = ts = codecs = None
+        tags = cw = chh = None
+        if mime in ("video/mp4", "video/quicktime", "audio/mp4"):
+            m = mp4_meta(payload)
+            if m:
+                w, h = m["width"], m["height"]
+                tracks, dur, ts = (
+                    m["n_tracks"], m["duration_ms"], m["timescale"],
+                )
+                codecs = m["codecs"]
+                # RFC 6381 strings + SPS/seq-header coded dims
+                tags = m["codec_tags"]
+                cw, chh = m["coded_width"], m["coded_height"]
+        elif mime in ("video/webm", "video/x-matroska"):
+            m = webm_meta(payload)
+            if m:
+                w, h, tracks = m["width"], m["height"], m["n_tracks"]
+                ts = m["timestamp_scale"]
+                codecs = m["codecs"]
+                tags = m["codec_tags"]
+                cw, chh = m["coded_width"], m["coded_height"]
+        elif mime == "video/x-msvideo":
+            d = avi_dims(payload)
+            if d:
+                w, h, nf, uspf = d
+                dur = nf * uspf // 1000
+                codecs = avi_codecs(payload)
+                tracks = 1 + (codecs or "").count(",")
+        elif mime == "video/mp2t":
+            m = ts_meta(payload)
+            if m:
+                # TS carries no container-level dims; the SPS
+                # coded dims are authoritative for both
+                w, h = m["width"], m["height"]
+                cw, chh = m["width"], m["height"]
+                codecs = m["streams"]
+                tags = m["codec_tags"]
+                dur = m["duration_ms"]
+                ts = 90000  # the TS system clock
+                tracks = 1 + codecs.count(",") if codecs else None
+        return [(mid, mime, w, h, tracks, dur, ts, codecs, tags, cw, chh)]
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)
 
 
 def video_frame_sample_df(
@@ -1074,66 +1007,57 @@ def video_frame_sample_df(
     )
     narrow = df.select(F.col("media_id").cast("string"), F.col(payload_col).alias("p"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    src_cap = (max_frames - 1) * every_n + 1
+
+    def row(mid, p):
         from hquery_php_spark.operators.avi import decode_avi_frames
         from hquery_php_spark.operators.gif import decode_gif_frames
         from hquery_php_spark.operators.mediameta import decode_webm_frames
         from hquery_php_spark.operators.webp import decode_webp_frames
 
-        src_cap = (max_frames - 1) * every_n + 1
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for mid, p in zip(pdf["media_id"], pdf["p"]):
-                payload = bytes(p) if p is not None else b""
-                mime = sniff_media_type(payload)
-                real = None
-                if mime == "image/gif":
-                    real = [
-                        (fno, px)
-                        for fno, _delay, px in decode_gif_frames(
-                            payload, max_frames=src_cap
-                        ) or []
-                    ]
-                elif mime == "video/x-msvideo":
-                    # independent frames: push the stride into the demux
-                    # so dropped frames are never decoded
-                    real = decode_avi_frames(
-                        payload, max_frames=max_frames, every_n=every_n
-                    )
-                elif mime in ("video/webm", "video/x-matroska"):
-                    real = decode_webm_frames(
-                        payload, max_frames=max_frames, every_n=every_n
-                    )
-                elif (
-                    mime == "image/webp"
-                    and len(payload) > 20
-                    and payload[12:16] == b"VP8X"
-                    and payload[20] & 0x02  # VP8X animation flag
-                ):
-                    real = [
-                        (fno, px)
-                        for fno, _dur, px in decode_webp_frames(
-                            payload, max_frames=src_cap
-                        ) or []
-                    ]
-                if real:
-                    for fno, px in real:
-                        if fno % every_n:
-                            continue
-                        out["media_id"].append(mid)
-                        out["frame_no"].append(fno)
-                        out["mime"].append(mime)
-                        out["frame"].append(encode_png(px))
-                    continue
-                stride = frame_bytes * every_n
-                for fno in range(max_frames):
-                    start = fno * stride
-                    if start >= len(payload):
-                        break
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(fno)
-                    out["mime"].append(mime)
-                    out["frame"].append(payload[start : start + frame_bytes])
-            yield pd.DataFrame(out)
+        payload = bytes(p) if p is not None else b""
+        mime = sniff_media_type(payload)
+        real = None
+        if mime == "image/gif":
+            real = [
+                (fno, px)
+                for fno, _delay, px in decode_gif_frames(
+                    payload, max_frames=src_cap
+                ) or []
+            ]
+        elif mime == "video/x-msvideo":
+            # independent frames: push the stride into the demux
+            # so dropped frames are never decoded
+            real = decode_avi_frames(
+                payload, max_frames=max_frames, every_n=every_n
+            )
+        elif mime in ("video/webm", "video/x-matroska"):
+            real = decode_webm_frames(
+                payload, max_frames=max_frames, every_n=every_n
+            )
+        elif (
+            mime == "image/webp"
+            and len(payload) > 20
+            and payload[12:16] == b"VP8X"
+            and payload[20] & 0x02  # VP8X animation flag
+        ):
+            real = [
+                (fno, px)
+                for fno, _dur, px in decode_webp_frames(
+                    payload, max_frames=src_cap
+                ) or []
+            ]
+        if real:
+            return [
+                (mid, fno, mime, encode_png(px))
+                for fno, px in real
+                if not fno % every_n
+            ]
+        stride = frame_bytes * every_n
+        return [
+            (mid, fno, mime, payload[fno * stride : fno * stride + frame_bytes])
+            for fno in range(max_frames)
+            if fno * stride < len(payload)
+        ]
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)

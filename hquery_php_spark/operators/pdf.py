@@ -23,9 +23,8 @@ skip the document — nothing raises on byte soup.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -36,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..batch import map_rows
 from .pdfparse import PdfDocument, PdfError, extract_text_spans
 from .pdfwrite import build_pdf
 
@@ -135,26 +135,15 @@ def pdf_extract_df(
         F.col(payload_col).alias("p"),
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in PDF_SPANS_SCHEMA.fieldNames()}
-            for doc_id, p in zip(pdf["doc_id"], pdf["p"]):
-                data = bytes(p) if p is not None else b""
-                ver, pages = parse_pdf_pages(data, password)
-                if ver is None:
-                    continue  # fault tolerance: not a PDF, skip
-                i = 0
-                for pg, page in enumerate(pages):
-                    for x, y, txt in sorted(page, key=lambda t: (-t[1], t[0])):
-                        out["doc_id"].append(doc_id)
-                        out["version"].append(ver)
-                        out["n_pages"].append(len(pages))
-                        out["page"].append(pg)
-                        out["ord"].append(i)
-                        out["x"].append(x)
-                        out["y"].append(y)
-                        out["text"].append(txt)
-                        i += 1
-            yield pd.DataFrame(out)
+    def row(doc_id, p):
+        data = bytes(p) if p is not None else b""
+        ver, pages = parse_pdf_pages(data, password)
+        if ver is None:
+            return  # fault tolerance: not a PDF, skip
+        i = 0
+        for pg, page in enumerate(pages):
+            for x, y, txt in sorted(page, key=lambda t: (-t[1], t[0])):
+                yield (doc_id, ver, len(pages), pg, i, x, y, txt)
+                i += 1
 
-    return narrow.mapInPandas(run, PDF_SPANS_SCHEMA)
+    return map_rows(narrow, PDF_SPANS_SCHEMA, row)

@@ -8,10 +8,10 @@ Spark-first design (BASELINE.json north rule):
 * the *per-document* computation (tokenize → index → select → emit spans)
   is a single Arrow-batched ``mapInPandas`` stage — one Python↔JVM round
   trip per batch, no per-row Python at the boundary;
-* skew from mega-documents is handled explicitly: ``byte_balanced_
-  repartition`` round-robins documents by size rank so every partition
-  carries ~equal *bytes*, not equal row counts — at 10^12 docs a handful
-  of 20MB outliers per 100KB-average batch otherwise serializes the stage;
+* skew from mega-documents is handled explicitly: ``split_tail_
+  repartition`` gives every document above a size threshold its own
+  partition and hash-salts the body — at 10^12 docs a handful of 20MB
+  outliers per 100KB-average batch otherwise serializes the stage;
 * per-doc metrics (tag count, span counts, error) ride along as columns →
   aggregating them per partition gives the lineage/metrics table and
   enables idempotent resume (``resume_filter``).
@@ -20,9 +20,8 @@ Spark-first design (BASELINE.json north rule):
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -35,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.doc import HDoc
+from ..batch import map_rows
 from ..core.extract import DEFAULT_OPTIONS, ExtractOptions, extract_spans
 
 __all__ = [
@@ -42,7 +42,6 @@ __all__ = [
     "SPANS_SCHEMA",
     "extract_spans_df",
     "explode_spans",
-    "byte_balanced_repartition",
     "salted_repartition",
     "split_tail_repartition",
     "partition_metrics",
@@ -87,9 +86,9 @@ def extract_spans_df(
     """documents(doc_id, html[, base_url]) → (doc_id, spans, …metrics).
 
     The projection keeps only the needed columns (column pruning reaches
-    the scan); the per-batch loop runs the engine per document — the
-    parse itself is inherently per-document, but all batch transfer is
-    Arrow and all scanning inside uses C-speed byte primitives.
+    the scan); ``map_rows`` runs the engine per document — the parse
+    itself is inherently per-document, but all batch transfer is Arrow
+    and all scanning inside uses C-speed byte primitives.
 
     ``headers_col``: optional per-row HTTP response headers (string, e.g.
     "Content-Type: text/html; charset=ISO-8859-2") fed to the engine's
@@ -102,61 +101,39 @@ def extract_spans_df(
         cols.append(F.col(base_url_col).alias("__url"))
     if headers_col is not None:
         cols.append(F.col(headers_col).alias("__headers"))
-    narrow = df.select(*cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in SPANS_SCHEMA.fieldNames()}
-            # one bulk tolist() per column per batch: pandas .iat is a
-            # per-call indexer (~µs each), measurable against a ~100µs
-            # per-doc parse at 10k-row Arrow batches
-            ids_l = pdf["doc_id"].tolist()
-            html_l = pdf["__html"].tolist()
-            urls = pdf["__url"].tolist() if "__url" in pdf.columns else None
-            hdrs_s = pdf["__headers"].tolist() if "__headers" in pdf.columns else None
-            for i in range(len(ids_l)):
-                doc_id = ids_l[i]
-                raw = html_l[i]
-                url = urls[i] if urls is not None else None
-                hdrs = hdrs_s[i] if hdrs_s is not None else None
-                t0 = time.perf_counter_ns()
-                err = None
-                spans = []
-                n_tags = 0
-                charset = None
-                size = 0
-                try:
-                    if raw is None:
-                        raise ValueError("null html payload")
-                    data = raw if isinstance(raw, (bytes, bytearray)) else str(raw).encode(encoding)
-                    size = len(data)
-                    doc = HDoc(data, url, headers=hdrs)
-                    charset = doc.charset
-                    n_tags = len(doc)
-                    spans = extract_spans(doc, opts)
-                    if doc.html_errors:
-                        err = ";".join(f"{k}:{v}" for k, v in doc.html_errors.items())
-                except Exception as ex:  # fault tolerance: record, never abort
-                    err = f"{type(ex).__name__}: {ex}"
-                el = (time.perf_counter_ns() - t0) // 1000
-                out["doc_id"].append(doc_id)
-                n_text = 0
-                tuples = []
-                for s in spans:
-                    if s.kind == "text":
-                        n_text += 1
-                    tuples.append((s.kind, s.text, s.media_ref, s.offset))
-                out["spans"].append(tuples)
-                out["n_tags"].append(n_tags)
-                out["n_text"].append(n_text)
-                out["n_media"].append(len(spans) - n_text)
-                out["size_bytes"].append(size)
-                out["charset"].append(charset)
-                out["error"].append(err)
-                out["elapsed_us"].append(el)
-            yield pd.DataFrame(out)
+    def row(doc_id, raw, *rest):
+        url = rest[0] if has_url else None
+        hdrs = rest[-1] if headers_col is not None else None
+        t0 = time.perf_counter_ns()
+        err = None
+        spans = []
+        n_tags = 0
+        charset = None
+        size = 0
+        try:
+            if raw is None:
+                raise ValueError("null html payload")
+            data = raw if isinstance(raw, (bytes, bytearray)) else str(raw).encode(encoding)
+            size = len(data)
+            doc = HDoc(data, url, headers=hdrs)
+            charset = doc.charset
+            n_tags = len(doc)
+            spans = extract_spans(doc, opts)
+            if doc.html_errors:
+                err = ";".join(f"{k}:{v}" for k, v in doc.html_errors.items())
+        except Exception as ex:  # fault tolerance: record, never abort
+            err = f"{type(ex).__name__}: {ex}"
+        el = (time.perf_counter_ns() - t0) // 1000
+        n_text = 0
+        tuples = []
+        for s in spans:
+            if s.kind == "text":
+                n_text += 1
+            tuples.append((s.kind, s.text, s.media_ref, s.offset))
+        return [(doc_id, tuples, n_tags, n_text, len(spans) - n_text, size, charset, err, el)]
 
-    return narrow.mapInPandas(run, SPANS_SCHEMA)
+    return map_rows(df.select(*cols), SPANS_SCHEMA, row)
 
 
 def explode_spans(spans_df: DataFrame) -> DataFrame:
@@ -171,37 +148,6 @@ def explode_spans(spans_df: DataFrame) -> DataFrame:
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
         F.col("span.offset").alias("offset"),
-    )
-
-
-def byte_balanced_repartition(
-    df: DataFrame, num_partitions: int, size_col: str = "size_bytes"
-) -> DataFrame:
-    """Round-robin documents by size rank → ~equal bytes per partition.
-
-    CAUTION — uses a global (un-partitioned) window rank, i.e. a
-    single-task sort: correct and worth it for moderate batches with
-    extreme outliers, but NOT the 10^12-doc path.  At full scale use
-    ``salted_repartition`` (below): hash-spread is shuffle-parallel and
-    the law of large numbers balances bytes once partitions hold many
-    docs; mega-docs are additionally spread by the size-bucket salt.
-    """
-    w = Window.orderBy(F.col(size_col).desc(), F.monotonically_increasing_id())
-    # Snake (boustrophedon) assignment over the size-desc rank approximates
-    # greedy bin packing: the partition that received a mega-doc receives
-    # the *smallest* doc of the next block, not another large one.
-    # repartitionByRange puts each slot value in its own partition; plain
-    # repartition() would HASH the slot and collide residues.
-    r = F.row_number().over(w) - F.lit(1)
-    block = (r / num_partitions).cast("long")
-    pos = F.pmod(r, F.lit(num_partitions))
-    slot = F.when(
-        F.pmod(block, F.lit(2)) == 0, pos
-    ).otherwise(F.lit(num_partitions - 1) - pos)
-    return (
-        df.withColumn("__slot", slot)
-        .repartitionByRange(num_partitions, "__slot")
-        .drop("__slot")
     )
 
 
@@ -236,9 +182,9 @@ def split_tail_repartition(
     single-doc round-robin partitions; the body is hash-salted as usual.
 
     This is the scale-correct skew strategy when the tail is extreme
-    (a 20MB doc among 100KB batches): no global sort (unlike
-    ``byte_balanced_repartition``), no birthday-collision risk (unlike a
-    pure hash salt) — each tail doc occupies its own partition, so the
+    (a 20MB doc among 100KB batches): no global sort, no
+    birthday-collision risk (unlike a pure hash salt) — each tail doc
+    occupies its own partition, so the
     stage's critical path is max(one mega doc, one body partition).
     The union keeps both sides' partitioning (no extra shuffle on top).
 

@@ -187,7 +187,6 @@ def robots_rules_df(df, host_col: str = "host", txt_col: str = "robots_txt",
     """(host, robots_txt) -> (host, rules array<struct<allow boolean,
     pattern string, rx string, plen int>>, crawl_delay double) — one
     row per host, rules pre-resolved for ``agent``."""
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         BooleanType,
@@ -197,6 +196,8 @@ def robots_rules_df(df, host_col: str = "host", txt_col: str = "robots_txt",
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     rule_t = StructType(
         [
@@ -217,32 +218,20 @@ def robots_rules_df(df, host_col: str = "host", txt_col: str = "robots_txt",
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            hosts, rule_rows, delays, smaps = [], [], [], []
-            for h, t in zip(pdf[host_col].tolist(), pdf[txt_col].tolist()):
-                rb = parse_robots(t)
-                rules = rb.rules_for(agent)
-                hosts.append(h)
-                rule_rows.append(
-                    [
-                        {
-                            "allow": r.allow,
-                            "pattern": r.pattern,
-                            "rx": _pattern_rx(r.pattern),
-                            "plen": len(r.pattern),
-                        }
-                        for r in rules
-                    ]
-                )
-                delays.append(rb.delay_for(agent))
-                smaps.append(list(rb.sitemaps))
-            yield pd.DataFrame(
-                {host_col: hosts, "rules": rule_rows,
-                 "crawl_delay": delays, "sitemaps": smaps}
-            )
+    def row(h, t):
+        rb = parse_robots(t)
+        rules = [
+            {
+                "allow": r.allow,
+                "pattern": r.pattern,
+                "rx": _pattern_rx(r.pattern),
+                "plen": len(r.pattern),
+            }
+            for r in rb.rules_for(agent)
+        ]
+        return [(h, rules, rb.delay_for(agent), list(rb.sitemaps))]
 
-    return df.select(host_col, txt_col).mapInPandas(run, schema)
+    return map_rows(df.select(host_col, txt_col), schema, row)
 
 
 def filter_allowed(urls_df, rules_df, url_col: str = "url",

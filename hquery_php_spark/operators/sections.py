@@ -124,13 +124,14 @@ def section_rows(html, url: Optional[str] = None) -> List[Section]:
 
 def section_rows_df(df, html_col: str = "html", id_col: str = "doc_id"):
     """(id, html) -> one row per section."""
-    import pandas as pd
     from pyspark.sql.types import (
         IntegerType,
         StringType,
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     schema = StructType(
         [
@@ -143,22 +144,11 @@ def section_rows_df(df, html_col: str = "html", id_col: str = "doc_id"):
             StructField("offset", IntegerType()),
         ]
     )
-
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for i, h in zip(pdf[id_col].tolist(), pdf[html_col].tolist()):
-                for s in section_rows(h):
-                    rows[id_col].append(i)
-                    rows["section_no"].append(s.section_no)
-                    rows["level"].append(s.level)
-                    rows["title"].append(s.title)
-                    rows["path"].append(s.path)
-                    rows["text"].append(s.text)
-                    rows["offset"].append(s.offset)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, html_col).mapInPandas(run, schema)
+    return map_rows(
+        df.select(id_col, html_col),
+        schema,
+        lambda i, h: [(i, *s) for s in section_rows(h)],
+    )
 
 
 def chunk_sections_df(

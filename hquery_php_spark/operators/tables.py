@@ -165,7 +165,6 @@ def html_tables(html, url: Optional[str] = None) -> List[TableCell]:
 def html_tables_df(df, html_col: str = "html", id_col: str = "doc_id"):
     """(id, html) -> one row per table cell:
     (id, table_no, row_no, col_no, rowspan, colspan, is_header, text)."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType,
         IntegerType,
@@ -173,6 +172,8 @@ def html_tables_df(df, html_col: str = "html", id_col: str = "doc_id"):
         StructField,
         StructType,
     )
+
+    from ..batch import map_rows
 
     schema = StructType(
         [
@@ -186,20 +187,8 @@ def html_tables_df(df, html_col: str = "html", id_col: str = "doc_id"):
             StructField("text", StringType()),
         ]
     )
-
-    def run(batches):
-        for pdf in batches:
-            rows = {f.name: [] for f in schema.fields}
-            for i, h in zip(pdf[id_col].tolist(), pdf[html_col].tolist()):
-                for c in html_tables(h):
-                    rows[id_col].append(i)
-                    rows["table_no"].append(c.table_no)
-                    rows["row_no"].append(c.row_no)
-                    rows["col_no"].append(c.col_no)
-                    rows["rowspan"].append(c.rowspan)
-                    rows["colspan"].append(c.colspan)
-                    rows["is_header"].append(c.is_header)
-                    rows["text"].append(c.text)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, html_col).mapInPandas(run, schema)
+    return map_rows(
+        df.select(id_col, html_col),
+        schema,
+        lambda i, h: [(i, *c) for c in html_tables(h)],
+    )

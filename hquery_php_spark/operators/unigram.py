@@ -278,28 +278,23 @@ def unigram_encode_df(
     """(id, text) -> (id, pieces array<string>, n_pieces) under the
     trained table — Viterbi per word, Arrow-batched, zero shuffle.
     Same pre-tokenization as training (lower + whitespace split)."""
-    import pandas as pd
+    from ..batch import map_rows
 
-    def run(batches):
-        cache: Dict[str, List[str]] = {}
-        for pdf in batches:
-            ids, pieces, nums = [], [], []
-            for i, t in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                out: List[str] = []
-                for w in (t or "").lower().split():
-                    seg = cache.get(w)
-                    if seg is None:
-                        seg = viterbi_segment(w, scores, max_piece_len)
-                        cache[w] = seg
-                    out.extend(seg)
-                ids.append(i)
-                pieces.append(out)
-                nums.append(len(out))
-            yield pd.DataFrame(
-                {id_col: ids, "pieces": pieces, "n_pieces": nums}
-            )
+    cache: Dict[str, List[str]] = {}
+
+    def row(i, t):
+        out: List[str] = []
+        for w in (t or "").lower().split():
+            seg = cache.get(w)
+            if seg is None:
+                seg = viterbi_segment(w, scores, max_piece_len)
+                cache[w] = seg
+            out.extend(seg)
+        return [(i, out, len(out))]
 
     id_t = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_t}, pieces array<string>, n_pieces int"
+    return map_rows(
+        df.select(id_col, text_col),
+        f"{id_col} {id_t}, pieces array<string>, n_pieces int",
+        row,
     )

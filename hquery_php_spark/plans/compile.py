@@ -10,13 +10,13 @@ every selector against every document.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+from typing import List, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from ..batch import map_rows
 from ..core.selector import parse_selector
 
 __all__ = ["CompiledSelector", "compile_selector", "find_count_df"]
@@ -65,20 +65,15 @@ def find_count_df(
         F.col(html_col).alias("__html"),
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    sels = [c.source for c in compiled]
+
+    def row(doc_id, raw):
         from ..core.doc import HDoc
 
-        sels = [c.source for c in compiled]
-        for pdf in batches:
-            out = {"doc_id": [], "selector": [], "n_matches": []}
-            for doc_id, raw in zip(pdf["doc_id"], pdf["__html"]):
-                data = raw if isinstance(raw, (bytes, bytearray)) else str(raw).encode(encoding)
-                doc = HDoc(data)
-                for s in sels:
-                    r = doc.find(s)
-                    out["doc_id"].append(doc_id)
-                    out["selector"].append(s)
-                    out["n_matches"].append(len(r) if r else 0)
-            yield pd.DataFrame(out)
+        data = raw if isinstance(raw, (bytes, bytearray)) else str(raw).encode(encoding)
+        doc = HDoc(data)
+        for s in sels:
+            r = doc.find(s)
+            yield (doc_id, s, len(r) if r else 0)
 
-    return narrow.mapInPandas(run, schema)
+    return map_rows(narrow, schema, row)

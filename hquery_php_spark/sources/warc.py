@@ -498,7 +498,7 @@ def index_warc_slices(path: str, target_slice_bytes: int = 4 << 20) -> List[Tupl
     return slices
 
 
-def _response_rows(path: str, data: bytes, out: dict, detect_charset) -> None:
+def _response_rows(path: str, data: bytes, detect_charset):
     """Shared record→row conversion for both WARC readers."""
     for r in parse_warc(data):
         if r.warc_type != "response":
@@ -506,13 +506,15 @@ def _response_rows(path: str, data: bytes, out: dict, detect_charset) -> None:
         headers = (
             {"content-type": r.http_content_type} if r.http_content_type else None
         )
-        out["archive"].append(path)
-        out["url"].append(r.target_uri)
-        out["warc_date"].append(r.warc_date)
-        out["http_status"].append(r.http_status)
-        out["content_type"].append(r.http_content_type)
-        out["payload"].append(r.payload)
-        out["charset"].append(detect_charset(r.payload, headers))
+        yield (
+            path,
+            r.target_uri,
+            r.warc_date,
+            r.http_status,
+            r.http_content_type,
+            r.payload,
+            detect_charset(r.payload, headers),
+        )
 
 
 def _record_schema():
@@ -555,8 +557,6 @@ def read_warc_files_split(
     """
     import glob as _glob
 
-    import pandas as pd
-    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -565,6 +565,7 @@ def read_warc_files_split(
         StructType,
     )
 
+    from ..batch import map_rows
     from ..core.charset import detect_charset
 
     if isinstance(paths, str):
@@ -580,37 +581,20 @@ def read_warc_files_split(
         ]
     )
 
-    def index(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in idx_schema.fieldNames()}
-            for p in pdf["path"]:
-                for off, ln, n in index_warc_slices(p, target_slice_bytes):
-                    out["archive"].append(p)
-                    out["offset"].append(off)
-                    out["length"].append(ln)
-                    out["n_members"].append(n)
-            yield pd.DataFrame(out)
-
     n_parts = spark.sparkContext.defaultParallelism
-    slices = (
-        pdf_paths.repartition(min(n_parts, max(1, len(paths))))
-        .mapInPandas(index, idx_schema)
-        .repartition(n_parts)
-    )
+    slices = map_rows(
+        pdf_paths.repartition(min(n_parts, max(1, len(paths)))),
+        idx_schema,
+        lambda p: [(p, *s) for s in index_warc_slices(p, target_slice_bytes)],
+    ).repartition(n_parts)
 
-    schema = _record_schema()
+    def fetch(p, off, ln, _n_members):
+        with open(_local_path(p), "rb") as f:
+            f.seek(int(off))
+            data = f.read(int(ln))
+        return _response_rows(p, data, detect_charset)
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for p, off, ln in zip(pdf["archive"], pdf["offset"], pdf["length"]):
-                with open(_local_path(p), "rb") as f:
-                    f.seek(int(off))
-                    data = f.read(int(ln))
-                _response_rows(p, data, out, detect_charset)
-            yield pd.DataFrame(out)
-
-    return slices.mapInPandas(fetch, schema)
+    return map_rows(slices, _record_schema(), fetch)
 
 
 def read_warc_files(spark, glob_path: str):
@@ -623,26 +607,21 @@ def read_warc_files(spark, glob_path: str):
     Parallelizes per archive file (whole-file tasks); for archives big
     enough that one file = one straggler, use ``read_warc_files_split``,
     which range-splits at record/member boundaries."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
+    from ..batch import map_rows
     from ..core.charset import detect_charset
 
-    schema = _record_schema()
     raw = (
         spark.read.format("binaryFile")
         .load(glob_path)
         .select(F.col("path").alias("archive"), F.col("content"))
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for path, content in zip(pdf["archive"], pdf["content"]):
-                _response_rows(path, bytes(content), out, detect_charset)
-            yield pd.DataFrame(out)
-
-    return raw.mapInPandas(run, schema)
+    return map_rows(
+        raw,
+        _record_schema(),
+        lambda path, content: _response_rows(path, bytes(content), detect_charset),
+    )
 
 
 # ------------------------------------------------------------------ #

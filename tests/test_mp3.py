@@ -238,6 +238,13 @@ def test_xing_vbr_duration_on_truncated_stream():
     assert m["duration_ms"] == 3 * 1152 * 1000 // 44100  # walked stays honest
 
 
+def test_truncate_beyond_stream_keeps_whole_stream():
+    from hquery_php_spark.operators.mediameta import encode_mp3_stub
+
+    whole = encode_mp3_stub(5, 128, 44100)
+    assert encode_mp3_stub(5, 128, 44100, truncate_frames=6) == whole
+
+
 def test_vbri_header_parsed():
     from hquery_php_spark.operators.mediameta import encode_mp3_stub, mp3_meta
 

@@ -50,6 +50,11 @@ def test_not_simple_compound():
     ]
     # unparseable / empty argument: no-op, not an error
     assert len(d.find("p:not()", extensions=True) or []) == 3
+    # a pseudo-class or combinator inside :not is outside the simple-
+    # compound subset: the candidates come back unchanged
+    e = HDoc(b"<div><p>a</p><p></p></div>")
+    assert len(e.find("p:not(:empty)", extensions=True) or []) == 2
+    assert len(e.find("div:not(div span)", extensions=True) or []) == 1
 
 
 def test_empty_pseudo():

@@ -16,7 +16,6 @@ from hquery_php_spark.operators.dedup import (
     simhash64,
 )
 from hquery_php_spark.operators.pipeline import (
-    byte_balanced_repartition,
     explode_spans,
     extract_spans_df,
     partition_metrics,
@@ -75,23 +74,6 @@ def test_explode_spans_order(spark, corpus_df):
     pdf = out.orderBy("ord").toPandas()
     assert list(pdf["ord"]) == list(range(len(pdf)))
     assert list(pdf["offset"]) == sorted(pdf["offset"])
-
-
-def test_byte_balanced_repartition(spark, corpus_df):
-    df = byte_balanced_repartition(corpus_df, 4)
-    sizes = (
-        df.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.sum("size_bytes").alias("b"))
-        .toPandas()
-    )
-    assert len(sizes) == 4
-    # equal-bytes balance: no partition exceeds the unavoidable lower bound
-    # (a single mega-doc cannot be split) by more than 40%
-    total = sizes.b.sum()
-    largest_doc = corpus_df.agg(F.max("size_bytes")).collect()[0][0]
-    bound = max(largest_doc, total / 4)
-    assert sizes.b.max() <= bound * 1.4, sizes
 
 
 def test_partition_metrics_and_resume(spark, corpus_df):
@@ -216,6 +198,9 @@ def test_split_tail_repartition_isolates_megas(spark):
     assert p["megas"].max() <= 1, p.to_string()
     assert int(p["megas"].sum()) == 6
     assert int(p["n"].sum()) == 206
+    # longest-task-first: Spark launches tasks in partition-id order, so
+    # every mega must sit below every body row
+    assert p[p.megas > 0].pid.max() < p[p.n > p.megas].pid.min(), p.to_string()
 
 
 def test_minhash_recall_vs_exact(spark):
