@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import html as _htmlmod
 import re
+from bisect import bisect_right
 from typing import Dict, Iterator, List, Mapping, Optional, Tuple, Union
 
 from .attrs import attr2str, parse_attr_str, parse_css_str
@@ -426,27 +427,15 @@ def _ext_pseudo(doc: DocIndex, rb: IdMap, op: str, arg) -> IdMap:
         # other markup-only content allowed; whitespace text is text)
         pb = doc.parent_begin()
         has_kids = set(pb.values())
-        ext = sorted(doc.extents)
+        mask, starts = doc.markup_mask()
         out: IdMap = {}
         for b, e in rb.items():
             if b in has_kids:
                 continue
-            if e <= b + 1:  # zero-length content (incl. self-closing)
-                out[b] = e
-                continue
-            pos, empty = b + 1, True
-            for s, t in ext:
-                if t <= pos:
-                    continue
-                if s >= e:
-                    break
-                if s > pos:
-                    empty = False
-                    break
-                pos = max(pos, t)
-            if empty and pos < e:
-                empty = False
-            if empty:
+            # zero-length content (incl. self-closing), or content that
+            # one merged markup range covers whole
+            i = bisect_right(starts, b + 1) - 1
+            if e <= b + 1 or (i >= 0 and mask[i][1] >= e):
                 out[b] = e
         return out
     # op == "nth-child"
@@ -457,13 +446,12 @@ def _ext_pseudo(doc: DocIndex, rb: IdMap, op: str, arg) -> IdMap:
     kids: Dict[Optional[int], List[int]] = {}
     for cb in doc.ids:
         kids.setdefault(pb.get(cb), []).append(cb)
+    nth: Dict[int, int] = {}  # begin -> 1-based position among siblings
     for v in kids.values():
         v.sort()
-    return {
-        b: e
-        for b, e in rb.items()
-        if _nth_matches(ab[0], ab[1], kids[pb.get(b)].index(b) + 1)
-    }
+        for k, cb in enumerate(v, 1):
+            nth[cb] = k
+    return {b: e for b, e in rb.items() if _nth_matches(ab[0], ab[1], nth[b])}
 
 
 def text_parse_dl(text: str, sep: str = ":", key=None):

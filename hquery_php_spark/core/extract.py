@@ -34,9 +34,10 @@ from __future__ import annotations
 
 import html as _htmlmod
 from bisect import bisect_right
-from typing import Dict, List, NamedTuple, Optional, Tuple
+from typing import List, NamedTuple, Optional, Sequence, Tuple
 
 from .doc import HDoc
+from .index import merge_ranges
 
 __all__ = ["Span", "extract_spans", "ExtractOptions", "DEFAULT_OPTIONS"]
 
@@ -59,17 +60,6 @@ class ExtractOptions(NamedTuple):
 DEFAULT_OPTIONS = ExtractOptions()
 
 
-def _merge_ranges(ranges: List[Tuple[int, int]]) -> List[Tuple[int, int]]:
-    out: List[Tuple[int, int]] = []
-    for s, e in sorted(r for r in ranges if r[0] < r[1]):
-        if out and s <= out[-1][1]:
-            if e > out[-1][1]:
-                out[-1] = (out[-1][0], e)
-        else:
-            out.append((s, e))
-    return out
-
-
 def _covering_ranges(doc, names: Tuple[str, ...]) -> List[Tuple[int, int]]:
     """[begin, end) content ranges of all elements with the given names."""
     out = []
@@ -85,15 +75,16 @@ def extract_spans(doc: HDoc, opts: ExtractOptions = DEFAULT_OPTIONS) -> List[Spa
     html = idx.html
     n = len(html)
 
-    # -- masked ranges: markup + skip containers ------------------------ #
-    masked = list(idx.extents)
+    # -- masked ranges: markup (+ skip containers) ---------------------- #
     if opts.skip_inside:
-        masked.extend(_covering_ranges(idx, opts.skip_inside))
-    masked = _merge_ranges(masked)
+        masked = merge_ranges(idx.extents + _covering_ranges(idx, opts.skip_inside))
+        mask_starts = [r[0] for r in masked]
+    else:
+        masked, mask_starts = idx.markup_mask()
 
     # -- link ranges (for link-density suppression of text runs) -------- #
     link_ranges = (
-        _merge_ranges(_covering_ranges(idx, ("a",)))
+        merge_ranges(_covering_ranges(idx, ("a",)))
         if not opts.include_link_text_spans
         else []
     )
@@ -126,7 +117,6 @@ def extract_spans(doc: HDoc, opts: ExtractOptions = DEFAULT_OPTIONS) -> List[Spa
         _emit_text_run(spans, html, pos, n, opts, in_link, depth_at)
 
     # -- media spans ----------------------------------------------------- #
-    mask_starts = [r[0] for r in masked]
     for tag, attr_name in opts.media_tags:
         attr_map = idx.idx_attr.get(attr_name)
         tag_map = idx.tag_idx.get(tag)
@@ -162,37 +152,30 @@ def _strip_markup_text(
     html: bytes,
     b: int,
     e: int,
-    masked: List[Tuple[int, int]],
-    mask_starts: Optional[List[int]] = None,
+    masked: Sequence[Tuple[int, int]],
+    mask_starts: Sequence[int],
 ) -> str:
     """Text content of interval (b, e): concatenation of unmasked runs.
 
-    ``mask_starts`` (the sorted starts of ``masked``) lets us bisect to
-    the first relevant range instead of scanning the whole mask list per
-    element — O(log m + hits), not O(m)."""
+    ``masked`` is sorted and disjoint with touching ranges fused (a
+    ``merge_ranges`` result); ``mask_starts`` (its starts) lets us
+    bisect to the first relevant range instead of scanning the whole
+    mask list per element — O(log m + hits), not O(m)."""
     if b >= e:
         return ""
-    out = []
     pos = b + 1
-    if mask_starts is not None:
-        i = bisect_right(mask_starts, pos) - 1
-        if i < 0:
-            i = 0
-    else:
-        i = 0
+    i = bisect_right(mask_starts, pos)  # first range starting after pos
+    if i and masked[i - 1][1] > pos:
+        pos = masked[i - 1][1]  # pos sits inside a masked range
+    # from here every range starts past pos, so each one that starts
+    # before e cuts an unmasked run [pos, start) that is never empty
+    out = []
     nm = len(masked)
-    while i < nm:  # index walk — slicing masked[i:] would copy the tail
+    while i < nm and mask_starts[i] < e:
         ms, me = masked[i]
+        out.append(html[pos:ms])
+        pos = me
         i += 1
-        if me <= pos:
-            continue
-        if ms >= e:
-            break
-        if pos < ms:
-            out.append(html[pos : min(ms, e)])
-        pos = max(pos, me)
-        if pos >= e:
-            break
     if pos < e:
         out.append(html[pos:e])
     return b"".join(out).decode("utf-8", "replace")

@@ -20,14 +20,14 @@ set operations over these posting lists (see ``query.py``).
 from __future__ import annotations
 
 import re
-from typing import Dict, List, Mapping, Optional, Tuple, Union
+from typing import Dict, List, Mapping, Optional, Sequence, Tuple, Union
 
 from .attrs import attr2str, parse_attr_str
 from .charset import convert_to_utf8
 from .parser import ParseResult, parse_html
 from .urlutil import abs_url, get_url_base
 
-__all__ = ["DocIndex", "INDEX_ATTRIBS"]
+__all__ = ["DocIndex", "INDEX_ATTRIBS", "merge_ranges"]
 
 INDEX_ATTRIBS = ("href", "src")  # URL attrs with a dedicated index
 URL_ATTRIBS = ("href", "src")
@@ -44,6 +44,20 @@ _RAW_ATTR_CACHE: Dict[bytes, tuple] = {}
 _RAW_ATTR_CACHE_MAX = 100_000
 
 IdMap = Dict[int, int]
+Ranges = List[Tuple[int, int]]
+
+
+def merge_ranges(ranges) -> Ranges:
+    """Sorted, disjoint, non-empty union of half-open ``(start, stop)``
+    ranges; touching ranges fuse, empty ones are dropped."""
+    out: Ranges = []
+    for s, e in sorted(r for r in ranges if r[0] < r[1]):
+        if out and s <= out[-1][1]:
+            if e > out[-1][1]:
+                out[-1] = (out[-1][0], e)
+        else:
+            out.append((s, e))
+    return out
 
 
 class DocIndex:
@@ -69,6 +83,7 @@ class DocIndex:
         "_begins",
         "_ends",
         "_parent_begin",
+        "_mask",
     )
 
     def __init__(
@@ -107,6 +122,7 @@ class DocIndex:
         self._begins: Optional[List[int]] = None
         self._ends: Optional[List[int]] = None
         self._parent_begin: Optional[Dict[int, int]] = None
+        self._mask: Optional[tuple] = None
 
         self._index_tags()
         self._index_attribs(res.attr)
@@ -266,6 +282,17 @@ class DocIndex:
             self._begins = list(self.ids.keys())
             self._ends = [self.ids[b] for b in self._begins]
         return self._begins, self._ends  # type: ignore[return-value]
+
+    def markup_mask(self) -> Tuple[Sequence[Tuple[int, int]], Sequence[int]]:
+        """``(merged, starts)``: the markup extents merged into sorted,
+        disjoint, non-empty ranges, plus their start offsets for bisect.
+
+        The document's text is the complement of ``merged``.  Built once
+        per document and shared by every surface walk, hence tuples."""
+        if self._mask is None:
+            merged = tuple(merge_ranges(self.extents))
+            self._mask = (merged, tuple(s for s, _ in merged))
+        return self._mask
 
     def parent_begin(self) -> Dict[int, int]:
         """{begin -> parent begin} for every element; absent = top-level.

@@ -18,14 +18,17 @@ from the same index — the production-shaped "extract everything" stage:
 * ``title`` / ``canonical`` / ``n_meta`` — head metadata
                    (operators/pagemeta.py)
 
-Cost: the index build is shared; each additional surface pays only
-its walk.  Measured on bench-sized docs: all six surfaces cost ~3.3x
-a spans-only pass (the walks are real work, Markdown the priciest),
-while running the five operators separately costs a further ~1.45x on
-top — the shared parse saves ~30% of the whole stage, and the saving
-grows with document size (index build is superlinear in practice on
-mega-docs).  One Arrow ``mapInPandas``, zero shuffles, same
-salted/spread partitioning contract as every extract leg.
+Cost: the index build is shared, and so is the merged markup mask
+(``DocIndex.markup_mask()``, the sorted ranges whose complement is the
+text): it is built once per document and every walk bisects into it.
+Each additional surface pays only its own walk, near-linear in the
+document (``tests/test_complexity.py``).  Measured on bench-sized docs:
+all six surfaces cost ~3.3x a spans-only pass (the walks are real
+work, Markdown the priciest), while running the five operators
+separately costs a further ~1.45x on top — the shared parse and mask
+save ~30% of the whole stage.  One Arrow ``mapInPandas``, zero
+shuffles, same salted/spread partitioning contract as every extract
+leg.
 """
 
 from __future__ import annotations

@@ -51,10 +51,10 @@ no driver state.
 from __future__ import annotations
 
 import html as _htmlmod
-from bisect import bisect_right
 from typing import Dict, List, Optional, Tuple
 
 from ..core.doc import HDoc
+from ..core.extract import _strip_markup_text
 
 __all__ = ["render_markdown", "markdown_df"]
 
@@ -101,20 +101,11 @@ class _Renderer:
         self.ids: Dict[int, int] = idx.ids
         self.tags: Dict[int, str] = idx.tags
         # merged markup mask (tags + comments + specials + script bodies)
-        ext = sorted(idx.extents)
-        merged: List[Tuple[int, int]] = []
-        for s, e in ext:
-            if merged and s <= merged[-1][1]:
-                if e > merged[-1][1]:
-                    merged[-1] = (merged[-1][0], e)
-            else:
-                merged.append((s, e))
-        self.masked = merged
-        self.mask_starts = [m[0] for m in merged]
+        self.masked, self.mask_starts = idx.markup_mask()
         # footprints: open-tag extent ends at b+1; close-tag extent starts
         # at the content end e (position of '<' of the close tag)
-        self.ext_by_stop = {e: s for s, e in ext}
-        self.ext_by_start = {s: e for s, e in ext}
+        self.ext_by_stop = {e: s for s, e in idx.extents}
+        self.ext_by_start = {s: e for s, e in idx.extents}
         # children in document order (parent_begin handles mis-nesting the
         # same way the reference's merge sweep does)
         pb = idx.parent_begin()
@@ -124,30 +115,8 @@ class _Renderer:
         self.kids = kids
 
     # -- primitive: text content of [lo, hi) excluding ALL markup ------ #
-    def _text(self, lo: int, hi: int, collapse: bool = True) -> str:
-        if lo >= hi:
-            return ""
-        out = []
-        pos = lo
-        i = bisect_right(self.mask_starts, pos) - 1
-        if i < 0:
-            i = 0
-        nm = len(self.masked)
-        while i < nm:
-            ms, me = self.masked[i]
-            i += 1
-            if me <= pos:
-                continue
-            if ms >= hi:
-                break
-            if pos < ms:
-                out.append(self.html[pos:ms])
-            pos = max(pos, me)
-            if pos >= hi:
-                break
-        if pos < hi:
-            out.append(self.html[pos:hi])
-        txt = b"".join(out).decode("utf-8", "replace")
+    def _text(self, lo: int, hi: int) -> str:
+        txt = _strip_markup_text(self.html, lo - 1, hi, self.masked, self.mask_starts)
         if "&" in txt:
             txt = _htmlmod.unescape(txt)
         return txt
@@ -323,9 +292,9 @@ class _Renderer:
                 k == "el" or not self._text(*v).strip() for k, v in parts
             )
         ):
-            body = self._text(els[0] + 1, max(self.ids[els[0]], els[0] + 1), False)
+            body = self._text(els[0] + 1, max(self.ids[els[0]], els[0] + 1))
         else:
-            body = self._text(b + 1, max(self.ids[b], b + 1), False)
+            body = self._text(b + 1, max(self.ids[b], b + 1))
         body = body.strip("\n")
         return f"```\n{body}\n```"
 

@@ -37,11 +37,13 @@ from typing import List, NamedTuple, Optional
 
 from ..core.doc import HDoc
 from ..core.extract import _strip_markup_text
+from ..core.index import merge_ranges
 
 __all__ = ["Section", "section_rows", "section_rows_df", "chunk_sections_df"]
 
 _HEADINGS = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
-_SKIP = ("head", "script", "style", "template", "noscript")
+# elements whose whole content is masked out of section bodies
+_BODY_SKIP = frozenset(("head", "script", "style", "template", "noscript", *_HEADINGS))
 
 
 class Section(NamedTuple):
@@ -72,24 +74,12 @@ def section_rows(html, url: Optional[str] = None) -> List[Section]:
     ids, tags = idx.ids, idx.tags
     n = len(idx.html)
 
-    # masked = markup + skip containers + ALL heading extents (heading
+    # body mask = markup + skip containers + ALL heading extents (heading
     # text belongs to the title, not the section body)
-    masked = list(idx.extents)
-    for b, e in ids.items():
-        t = tags.get(b)
-        if t in _SKIP and e > b:
-            # cover the whole element footprint
-            masked.append((b, max(e, b)))
-        if t in _HEADINGS and e > b:
-            masked.append((b, e))
-    masked.sort()
-    merged: List[tuple] = []
-    for s, e in masked:
-        if merged and s <= merged[-1][1]:
-            if e > merged[-1][1]:
-                merged[-1] = (merged[-1][0], e)
-        else:
-            merged.append((s, e))
+    mask, starts = idx.markup_mask()
+    merged = merge_ranges(
+        [*mask, *((b, e) for b, e in ids.items() if tags.get(b) in _BODY_SKIP)]
+    )
     mask_starts = [m[0] for m in merged]
 
     heads = sorted(
@@ -110,7 +100,7 @@ def section_rows(html, url: Optional[str] = None) -> List[Section]:
     for i, hb in enumerate(heads):
         lvl = _HEADINGS[tags[hb]]
         title = _clean(
-            _strip_markup_text(idx.html, hb, max(ids[hb], hb), sorted(idx.extents), None)
+            _strip_markup_text(idx.html, hb, max(ids[hb], hb), mask, starts)
         )
         while stack and stack[-1][0] >= lvl:
             stack.pop()

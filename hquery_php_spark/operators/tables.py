@@ -31,7 +31,8 @@ Arrow-batched ``mapInPandas``, zero shuffles.
 from __future__ import annotations
 
 import html as _htmlmod
-from typing import Dict, List, NamedTuple, Optional
+from bisect import bisect_right
+from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from ..core.doc import HDoc
 from ..core.extract import _strip_markup_text  # shared primitive
@@ -49,8 +50,18 @@ class TableCell(NamedTuple):
     text: str
 
 
-def _span(idx, b: int, name: str) -> int:
-    v = idx.get_attr_by_id(b, name)
+def _spans(idx, b: int) -> Tuple[int, int]:
+    """(rowspan, colspan) of cell ``b`` from one attribute-map lookup."""
+    aid = idx.attrs.get(b)
+    if aid is None:
+        return 1, 1
+    a = idx.attribs[aid]
+    return _span(a.get("rowspan")), _span(a.get("colspan"))
+
+
+def _span(v) -> int:
+    if v is None:  # absent: skip the int("None") failure below
+        return 1
     try:
         n = int(str(v).strip())
     except (TypeError, ValueError):
@@ -116,21 +127,11 @@ def html_tables(html, url: Optional[str] = None) -> List[TableCell]:
         (tr/td/th/nested-table) of the table, else the table's end."""
         if ids[cb] > cb:
             return ids[cb]
-        from bisect import bisect_right as _br
-
         bl = bounds_of.get(tb, ())
-        i = _br(bl, cb)
+        i = bisect_right(bl, cb)
         return bl[i] if i < len(bl) else max(ids[tb], cb)
 
-    masked_list = sorted(idx.extents)
-    merged: List[tuple] = []
-    for s, e in masked_list:
-        if merged and s <= merged[-1][1]:
-            if e > merged[-1][1]:
-                merged[-1] = (merged[-1][0], e)
-        else:
-            merged.append((s, e))
-    mask_starts = [m[0] for m in merged]
+    merged, mask_starts = idx.markup_mask()
 
     def cell_text(tb: int, b: int) -> str:
         t = _strip_markup_text(idx.html, b, max(eff_end(tb, b), b), merged, mask_starts)
@@ -148,13 +149,15 @@ def html_tables(html, url: Optional[str] = None) -> List[TableCell]:
             for cb in cells_of.get(rb, ()):
                 while occ.get(col):
                     col += 1
-                rs, cs = _span(idx, cb, "rowspan"), _span(idx, cb, "colspan")
+                rs, cs = _spans(idx, cb)
                 out.append(
                     TableCell(
                         tno, rno, col, rs, cs, tags[cb] == "th", cell_text(tb, cb)
                     )
                 )
-                for dr in range(rs):
+                # mark the rows below only: this row's cursor never
+                # moves back over the columns the cell covers
+                for dr in range(1, rs):
                     tr_occ = occupied.setdefault(rno + dr, {})
                     for dc in range(cs):
                         tr_occ[col + dc] = True

@@ -1,0 +1,76 @@
+"""Doubling tests: every surface walk runs in near-linear time.
+
+Each walk runs on a synthetic page at size n and at size 4n.  A linear
+walk takes ~4x as long on the bigger page, a quadratic one ~16x; the
+bound of 8 sits between them with room for timer noise.  Every timing is
+the best of a few repeats, each on a freshly parsed document, so cached
+per-document state (the merged markup mask) is rebuilt inside the
+timing, not amortised away."""
+
+import gc
+import time
+
+import pytest
+
+from hquery_php_spark.core.doc import HDoc
+from hquery_php_spark.operators.markdown import render_markdown
+from hquery_php_spark.operators.sections import section_rows
+from hquery_php_spark.operators.tables import html_tables
+
+N = 400
+RATIO_MAX = 8.0
+REPEATS = 3
+
+
+def _page(n: int) -> bytes:
+    """n outline sections (heading, paragraph, empty elements), one
+    table of 4n rows and one list of n items, so both the heading count
+    and the sibling-list lengths grow with n."""
+    parts = ["<html><head><title>t</title></head><body>"]
+    for i in range(n):
+        parts.append(
+            f"<h{2 + i % 4}>Head <i>{i}</i></h{2 + i % 4}>"
+            f"<p>Some <b>bold</b> text &amp; more {i}<span></span></p>"
+            "<div><!-- note --></div><p> </p>"
+        )
+    parts.append("<table><tbody>")
+    for i in range(4 * n):
+        parts.append(f'<tr><td colspan="1">r{i}</td><td></td></tr>')
+    parts.append("</tbody></table><ul>")
+    for i in range(n):
+        parts.append(f"<li>item {i}</li>")
+    parts.append("</ul></body></html>")
+    return "".join(parts).encode()
+
+
+def _best(html: bytes, fn) -> float:
+    best = float("inf")
+    for _ in range(REPEATS):
+        doc = HDoc(html, "https://example.com/")
+        gc.collect()
+        gc.disable()  # a collector pause is not the walk's cost
+        try:
+            t = time.perf_counter()
+            fn(doc)
+            best = min(best, time.perf_counter() - t)
+        finally:
+            gc.enable()
+    return best
+
+
+WALKS = {
+    "section_rows": section_rows,
+    "html_tables": html_tables,
+    "render_markdown": render_markdown,
+    ":empty": lambda d: d.find(":empty", extensions=True),
+    "tr:nth-child(2n)": lambda d: d.find("tr:nth-child(2n)", extensions=True),
+}
+
+
+@pytest.mark.parametrize("name", list(WALKS))
+def test_walk_is_near_linear(name):
+    fn = WALKS[name]
+    small, big = _page(N), _page(4 * N)
+    assert fn(HDoc(big, "https://example.com/"))  # the walk has work to do
+    ratio = _best(big, fn) / _best(small, fn)
+    assert ratio <= RATIO_MAX, f"{name}: 4x input took {ratio:.1f}x the time"
