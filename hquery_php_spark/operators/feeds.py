@@ -25,6 +25,8 @@ raising.
 from __future__ import annotations
 
 import html as _htmlmod
+from bisect import bisect_left, bisect_right
+from itertools import accumulate
 from typing import List, NamedTuple, Optional
 
 from ..core.doc import HDoc
@@ -208,6 +210,32 @@ _MEDIA_TAGS = {
 }
 
 
+def _first_inside(posting: dict):
+    """``lookup(lo, hi)`` → the first ``(begin, end)`` item of a tag_idx
+    posting list, in dict order, with ``lo < begin < hi`` and ``begin <
+    end``, or None.  Two bisects by begin, then a sparse-table range
+    minimum over dict positions (case-merged lists are sorted by end)."""
+    items = list(posting.items())
+    cand = sorted((b, k) for k, (b, e) in enumerate(items) if b < e)
+    starts = [b for b, _ in cand]
+    table = [[k for _, k in cand]]
+    w = 1
+    while 2 * w <= len(cand):
+        prev = table[-1]
+        table.append([min(prev[i], prev[i + w]) for i in range(len(prev) - w)])
+        w *= 2
+
+    def lookup(lo: int, hi: int):
+        i, j = bisect_right(starts, lo), bisect_left(starts, hi)
+        if i >= j:
+            return None
+        lvl = (j - i).bit_length() - 1
+        row = table[lvl]
+        return items[min(row[i], row[j - (1 << lvl)])]
+
+    return lookup
+
+
 def parse_sitemap_media(xml) -> List[SitemapMedia]:
     """Google image/video sitemap extensions: [SitemapMedia(ord, kind,
     loc, title)] per ``<url>`` entry of a urlset — the discovery channel
@@ -219,6 +247,9 @@ def parse_sitemap_media(xml) -> List[SitemapMedia]:
     grammar (``:`` starts a pseudo), so this walk reads ``tag_idx``
     directly and associates media containers to their owning <url> by
     interval containment — the same positional model as everything else.
+    The owner is the first ``<url>`` in begin order that contains the
+    container; loc/title is the first tag of that name, in tag_idx
+    order, inside it.  Both are bisects, so the walk is O(n log n).
     Fault-tolerant: non-sitemap input returns []."""
     doc = _doc(xml)
     if doc is None or not doc.find("urlset"):
@@ -228,37 +259,32 @@ def parse_sitemap_media(xml) -> List[SitemapMedia]:
         return []
     idx = doc.index
     url_iv = sorted(urls.ids.items())  # [(b, e)] per entry, doc order
+    url_starts = [b for b, _ in url_iv]
+    # max end of entries 0..i: its first value > b is the first entry
+    # whose end passes b
+    reach = list(accumulate((e for _, e in url_iv), max))
 
-    def _tag_text(lo: int, hi: int, name: str) -> Optional[str]:
-        for cb, ce in (idx.tag_idx.get(name) or {}).items():
-            if lo < cb < hi and cb < ce:
-                t = idx.html[cb + 1 : ce].decode("utf-8", "replace")
-                if "&" in t:
-                    t = _htmlmod.unescape(t)
-                t = " ".join(t.split())
-                return t or None
-        return None
+    def _text(hit) -> Optional[str]:
+        if hit is None:
+            return None
+        t = idx.html[hit[0] + 1 : hit[1]].decode("utf-8", "replace")
+        if "&" in t:
+            t = _htmlmod.unescape(t)
+        t = " ".join(t.split())
+        return t or None
 
     out: List[SitemapMedia] = []
     for kind, (container, loc_tag, title_tag) in _MEDIA_TAGS.items():
+        loc_in = _first_inside(idx.tag_idx.get(loc_tag) or {})
+        title_in = _first_inside(idx.tag_idx.get(title_tag) or {})
         for b, e in (idx.tag_idx.get(container) or {}).items():
             if b >= e:
                 continue
-            ordi = None
-            for i, (ub, ue) in enumerate(url_iv):
-                if ub < b < ue:
-                    ordi = i
-                    break
-            if ordi is None:
-                continue
-            out.append(
-                SitemapMedia(
-                    ordi,
-                    kind,
-                    _tag_text(b, e, loc_tag),
-                    _tag_text(b, e, title_tag),
-                )
-            )
+            ordi = bisect_right(reach, b)
+            if ordi >= bisect_left(url_starts, b):
+                continue  # no entry both starts before and ends after b
+            loc, title = _text(loc_in(b, e)), _text(title_in(b, e))
+            out.append(SitemapMedia(ordi, kind, loc, title))
     out.sort(key=lambda m: (m.ord, m.kind, m.loc or ""))
     return out
 

@@ -13,8 +13,9 @@ Spark-first design (BASELINE.json north rule):
   partition and hash-salts the body — at 10^12 docs a handful of 20MB
   outliers per 100KB-average batch otherwise serializes the stage;
 * per-doc metrics (tag count, span counts, error) ride along as columns →
-  aggregating them per partition gives the lineage/metrics table and
-  enables idempotent resume (``resume_filter``).
+  aggregating them per partition gives the lineage/metrics table;
+  ``resume_filter`` drops the ids of a committed ledger (the curate and
+  pack jobs' idempotent resume).
 """
 
 from __future__ import annotations

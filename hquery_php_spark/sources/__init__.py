@@ -4,7 +4,6 @@ from .reader import (  # noqa: F401
     read_documents,
     read_done_ids,
     read_html_files,
-    write_spans,
 )
 from .snaptable import SnapTable  # noqa: F401
 from .ingest import batched_extract, plan_file_batches  # noqa: F401

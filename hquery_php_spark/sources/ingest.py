@@ -1,13 +1,15 @@
-"""Batched, manifest-resumable extraction ingest (north-rule resume path).
+"""Batched, manifest-resumable extraction ingest: the one sink and
+resume path of ``jobs/extract_job.py``.
 
 ``batched_extract`` runs the documents→spans pipeline over an input
-parquet table in B deterministic file-group batches, committing each
-batch to a :class:`~.snaptable.SnapTable` snapshot.  Resume after a
-kill is a set difference over batch ids read from ONE manifest JSON —
-O(B), independent of committed row count — versus the row-level
-anti-join resume (reader.read_done_ids) whose cost grows with the
-corpus.  At 10^12 docs / 1000 executors the anti-join resume re-shuffles
-10^12 committed doc_ids every re-submit; this path reads a few KB.
+parquet table or a set of WARC archives in B deterministic file-group
+batches, committing each batch to a :class:`~.snaptable.SnapTable`
+snapshot.  Resume after a kill is a set difference over batch ids read
+from ONE manifest JSON — O(B), independent of committed row count; a
+row-level anti-join would re-shuffle every committed doc_id on every
+re-submit (10^12 at the target scale), while this path reads a few KB.
+From WARC archives only 200 ``text/html`` responses become documents,
+and their HTTP ``Content-Type`` feeds the engine's charset detection.
 
 Batch plan: the sorted input file list is dealt round-robin into B
 groups (even byte sizes under the usual many-similar-files layout), so
@@ -32,8 +34,8 @@ no-op.
 
 Per-batch lineage lands in the snapshot manifest (rows, files, wall
 seconds); per-partition extraction metrics go to the optional metrics
-sidecar with the batch id attached, AFTER the batch's data commit —
-same data-first/metrics-last ordering as reader.write_spans.
+sidecar with the batch id attached, AFTER the batch's data commit:
+a metrics row present ⇒ its batch's data is committed.
 
 Executor-memory note: raw-HTML corpora have multi-MB string cells, and
 the vectorized parquet reader buffers columnarReaderBatchSize rows per
@@ -82,6 +84,8 @@ class _Extractor:
         doc_id_col: str,
         html_col: str,
         base_url_col: str,
+        input_format: str = "parquet",
+        warc_slice_bytes: int = 0,
     ):
         from ..operators.pipeline import (
             extract_spans_df,
@@ -97,6 +101,8 @@ class _Extractor:
         self.doc_id_col = doc_id_col
         self.html_col = html_col
         self.base_url_col = base_url_col
+        self.input_format = input_format
+        self.warc_slice_bytes = warc_slice_bytes
         self._extract = extract_spans_df
         self._metrics = partition_metrics
         self._split_tail = split_tail_repartition
@@ -118,8 +124,32 @@ class _Extractor:
             return self.dp * 3  # non-posix FS — fall back to cluster width
         return max(self.dp, -(-sz // (32 << 20)))
 
+    def read(self, group: List[str]):
+        """The group's documents, and the HTTP headers column (WARC
+        only) that feeds charset detection."""
+        if self.input_format == "parquet":
+            return self.spark.read.parquet(*group), None
+        from .warc import read_warc_files, read_warc_files_split
+
+        if self.warc_slice_bytes > 0:
+            recs = read_warc_files_split(
+                self.spark, group, target_slice_bytes=self.warc_slice_bytes
+            )
+        else:
+            recs = read_warc_files(self.spark, group)
+        docs = recs.where(
+            (F.col("http_status") == 200)
+            & F.col("content_type").startswith("text/html")
+        ).select(
+            F.col("url").alias(self.doc_id_col),
+            F.col("payload").alias(self.html_col),
+            F.col("url").alias(self.base_url_col),
+            F.concat(F.lit("Content-Type: "), F.col("content_type")).alias("__headers"),
+        )
+        return docs, "__headers"
+
     def run(self, group: List[str], bid: str, lineage: dict) -> None:
-        docs = self.spark.read.parquet(*group)
+        docs, headers_col = self.read(group)
         docs = docs.withColumn(
             "__size", F.length(F.col(self.html_col)).cast("long")
         )
@@ -137,6 +167,7 @@ class _Extractor:
             base_url_col=self.base_url_col
             if self.base_url_col in docs.columns
             else None,
+            headers_col=headers_col,
         )
         if self.metrics_path:
             spans = spans.persist()  # one extraction feeds commit + metrics
@@ -161,6 +192,8 @@ def batched_extract(
     html_col: str = "html",
     base_url_col: str = "base_url",
     partition_spec: Optional[list] = None,
+    input_format: str = "parquet",
+    warc_slice_bytes: int = 0,
 ) -> dict:
     """Extract spans batch-by-batch into a snapshot table; resume = skip
     committed batch ids.  Returns {"ran": k, "skipped": s, "total": B}.
@@ -168,9 +201,16 @@ def batched_extract(
     ``partition_spec`` (e.g. ``[("doc_id", "bucket", 64)]``) creates the
     output as a hidden-partitioned snaptable: per-doc point lookups and
     at-rest deletes (``delete_where``) then plan only the key's bucket
-    files instead of the whole table."""
+    files instead of the whole table.
+
+    ``input_format="warc"``: ``input_path`` names WARC archives (a glob
+    or directory); ``warc_slice_bytes`` > 0 range-splits each archive
+    into slices of about that many compressed bytes."""
     tbl = SnapTable(output_table, partition_spec=partition_spec)
-    files = spark.read.parquet(input_path).inputFiles()
+    if input_format == "parquet":
+        files = spark.read.parquet(input_path).inputFiles()
+    else:  # lists the archives without reading their content
+        files = spark.read.format("binaryFile").load(input_path).inputFiles()
     groups = plan_file_batches(files, batches)
     b_total = len(groups)
 
@@ -193,7 +233,7 @@ def batched_extract(
             )
     ex = _Extractor(
         spark, tbl, partitions, tail_bytes, metrics_path,
-        doc_id_col, html_col, base_url_col,
+        doc_id_col, html_col, base_url_col, input_format, warc_slice_bytes,
     )
 
     ran = skipped = 0

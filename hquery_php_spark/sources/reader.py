@@ -1,4 +1,4 @@
-"""Documents-table readers and the spans sink.
+"""Documents-table readers and the committed-id ledger reader.
 
 The engine's canonical input is an Iceberg/Parquet table
 ``documents(doc_id, html|text, base_url?, size_bytes?)``; output is
@@ -10,9 +10,10 @@ The engine's canonical input is an Iceberg/Parquet table
 * ``read_html_files`` — whole-file ingestion (the reference's
   ``fromFile``, hQuery.php:112-125): ``binaryFile`` source keeps raw
   bytes so charset detection sees the original encoding.
-* ``write_spans`` — partitioned append of the span table plus a metrics
-  sidecar; the (output, metrics) pair is what makes re-runs idempotent
-  via ``resume_filter``.
+* ``read_done_ids`` — the doc_ids of a committed id ledger (the curate
+  and pack jobs' consumed-id ledgers), for ``resume_filter``.  Span
+  extraction commits through ``sources.ingest.batched_extract`` and
+  resumes from its snapshot manifest instead.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["read_documents", "read_html_files", "write_spans", "read_done_ids"]
+__all__ = ["read_documents", "read_html_files", "read_done_ids"]
 
 
 def read_documents(
@@ -55,37 +56,19 @@ def read_html_files(spark: SparkSession, glob_path: str) -> DataFrame:
     )
 
 
-def write_spans(
-    spans_df: DataFrame,
-    out_path: str,
-    metrics_path: Optional[str] = None,
-    partition_cols: Sequence[str] = (),
-    mode: str = "append",
-) -> None:
-    """Append the span table (+ metrics sidecar when requested).
-
-    Write the data FIRST, metrics LAST: a metrics row present ⇒ its
-    partition's data committed, so ``resume_filter`` against the output
-    (or the metrics doc-id ranges) never skips uncommitted work.
-    """
-    if metrics_path:
-        spans_df = spans_df.persist()  # one extraction pass feeds both writes
-    w = spans_df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(out_path)
-    if metrics_path:
-        from ..operators.pipeline import partition_metrics
-
-        partition_metrics(spans_df).withColumn(
-            "committed_at", F.current_timestamp()
-        ).write.mode("append").parquet(metrics_path)
-        spans_df.unpersist()
-
-
 def read_done_ids(spark: SparkSession, out_path: str) -> Optional[DataFrame]:
-    """doc_ids already committed to the output (None when no output yet)."""
+    """doc_ids already committed to ``out_path``.
+
+    None only when nothing was committed yet: the directory is missing,
+    or holds no data file (a write killed before its first commit leaves
+    just ``_temporary``).  Any other read error — a corrupt file, say —
+    is raised: treating it as "nothing committed" would re-process and
+    re-append the whole input."""
+    from pyspark.errors import AnalysisException
+
     try:
         return spark.read.parquet(out_path).select("doc_id")
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise

@@ -1,12 +1,13 @@
 """Snapshot-manifest table: Iceberg-semantics commits over parquet.
 
 The north rule reads "per-partition lineage/metrics checkpointed to
-Iceberg so the job resumes idempotently".  The engine's original resume
-path (``read_done_ids`` + row-level anti-join, reader.py:86) is correct
-but O(corpus): at 10^12 committed documents the anti-join re-shuffles
-every committed doc_id on every resume.  This module supplies the
-mechanism Iceberg actually uses — an atomic **snapshot manifest** — so
-resume cost is O(#batches), independent of row count:
+Iceberg so the job resumes idempotently".  A row-level anti-join
+against the committed doc_ids is correct but O(corpus): at 10^12
+committed documents it re-shuffles every committed doc_id on every
+resume.  This module supplies the mechanism Iceberg actually uses — an
+atomic **snapshot manifest** — so resume cost is O(#batches),
+independent of row count (``sources.ingest.batched_extract`` commits
+every extraction batch through it):
 
 * data files are staged under unique, commit-scoped directories; a
   reader never lists the data directory, it reads exactly the files

@@ -57,16 +57,15 @@ def main() -> None:
     spark = SparkSession.builder.appName("hquery-curate").getOrCreate()
 
     from hquery_php_spark.operators.curate import CurateOptions, curate_corpus
+    from hquery_php_spark.operators.pipeline import resume_filter
     from hquery_php_spark.sources.reader import read_done_ids
 
     ledger_path = args.output.rstrip("/") + "_ledger"
     docs = spark.read.parquet(args.input)
     consumed = read_done_ids(spark, ledger_path)
     if consumed is not None:
-        docs = docs.join(
-            consumed.withColumnRenamed("doc_id", "__done").distinct(),
-            docs[args.id_col] == F.col("__done"),
-            "left_anti",
+        docs = resume_filter(
+            docs, consumed.withColumnRenamed("doc_id", args.id_col), args.id_col
         )
 
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
@@ -88,11 +87,7 @@ def main() -> None:
     # write died before recording them) must not be appended twice
     done_out = read_done_ids(spark, args.output)
     if done_out is not None:
-        out = out.join(
-            done_out.withColumnRenamed("doc_id", "__done").distinct(),
-            out["doc_id"] == F.col("__done"),
-            "left_anti",
-        )
+        out = resume_filter(out, done_out)
     out.write.mode("append").parquet(args.output)
     for cached in reg:
         cached.unpersist()

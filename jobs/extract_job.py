@@ -9,15 +9,21 @@ Submit (north rule: spark-submit --py-files on a multi-executor cluster):
         --input  /path/docs.parquet  \
         --output /path/spans_out     \
         --metrics /path/spans_metrics \
-        [--partitions 4096] [--tail-bytes 4194304] [--html-col html]
+        [--input-format warc] [--batches 8] [--partitions 4096] \
+        [--tail-bytes 4194304] [--html-col html]
 
-Behavior:
+Behavior (``sources.ingest.batched_extract``):
+* the input files (parquet files or WARC archives) are dealt into
+  --batches deterministic file groups, each committed as one snapshot
+  of the snapshot-manifest table at --output;
 * salted size-bucket repartition with mega-doc tail isolation
-  (``split_tail_repartition``);
-* idempotent resume: doc_ids already present in --output are skipped
-  (anti-join), so re-running after a failure completes the remainder;
-* per-partition lineage/metrics appended to --metrics AFTER the data
-  commit (metrics row present ⇒ partition data committed).
+  (``split_tail_repartition``) inside every batch;
+* manifest resume: a re-submit skips the batch ids the manifest already
+  holds (a set difference over O(#batches) ids, no row scan), so
+  re-running after a kill completes exactly the remainder; a batch
+  killed mid-write was never committed and runs again;
+* per-partition lineage/metrics appended to --metrics AFTER each
+  batch's data commit (metrics row present ⇒ batch data committed).
 """
 
 import argparse
@@ -45,19 +51,11 @@ def main() -> None:
         "single .warc.gz then fans out instead of serializing to one task",
     )
     ap.add_argument(
-        "--table-format",
-        choices=("parquet", "snaptable"),
-        default="parquet",
-        help="snaptable: output is a snapshot-manifest table — atomic "
-        "batch commits, resume by O(#batches) manifest set-difference "
-        "instead of the row-level anti-join (the 10^12-doc resume path)",
-    )
-    ap.add_argument(
         "--batches",
         type=int,
         default=8,
-        help="with --table-format snaptable: number of input file-group "
-        "batches, each committed as one snapshot",
+        help="number of input file-group batches, each committed as one "
+        "snapshot",
     )
     ap.add_argument(
         "--max-batches",
@@ -74,97 +72,30 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("hquery-extract").getOrCreate()
 
-    from hquery_php_spark.operators.pipeline import (
-        extract_spans_df,
-        split_tail_repartition,
-    )
-    from hquery_php_spark.sources.reader import read_done_ids, write_spans
+    from hquery_php_spark.sources.ingest import batched_extract
 
-    if args.table_format == "snaptable":
-        if args.input_format != "parquet":
-            raise SystemExit("--table-format snaptable requires parquet input")
-        from hquery_php_spark.sources.ingest import batched_extract
-
-        stats = batched_extract(
-            spark,
-            args.input,
-            args.output,
-            batches=args.batches,
-            max_batches=args.max_batches,
-            partitions=args.partitions,
-            tail_bytes=args.tail_bytes,
-            metrics_path=args.metrics,
-            doc_id_col=args.doc_id_col,
-            html_col=args.html_col,
-            base_url_col=args.base_url_col,
-        )
-        print(
-            "snaptable ingest: ran %(ran)d, skipped %(skipped)d committed, "
-            "of %(total)d batches" % stats
-        )
-        spark.stop()
-        return
-
-    headers_col = None
-    if args.input_format == "warc":
-        from hquery_php_spark.sources.warc import (
-            read_warc_files,
-            read_warc_files_split,
-        )
-
-        if args.warc_slice_bytes > 0:
-            recs = read_warc_files_split(
-                spark, args.input, target_slice_bytes=args.warc_slice_bytes
-            )
-        else:
-            recs = read_warc_files(spark, args.input)
-        docs = (
-            recs
-            .where(
-                (F.col("http_status") == 200)
-                & F.col("content_type").startswith("text/html")
-            )
-            .select(
-                F.col("url").alias(args.doc_id_col),
-                F.col("payload").alias(args.html_col),
-                F.col("url").alias(args.base_url_col),
-                F.concat(F.lit("Content-Type: "), F.col("content_type")).alias(
-                    "__headers"
-                ),
-            )
-        )
-        headers_col = "__headers"
-    else:
-        docs = spark.read.parquet(args.input)
-    n_parts = args.partitions or spark.sparkContext.defaultParallelism * 3
-
-    done = read_done_ids(spark, args.output)
-    if done is not None:
-        docs = docs.join(
-            done.withColumnRenamed("doc_id", "__done").distinct(),
-            docs[args.doc_id_col] == F.col("__done"),
-            "left_anti",
-        )
-
-    docs = docs.withColumn(
-        "__size", F.length(F.col(args.html_col)).cast("long")
-    )
-    docs = split_tail_repartition(
-        docs, n_parts, size_col="__size", tail_bytes=args.tail_bytes,
-        key_col=args.doc_id_col,
-    )
-    spans = extract_spans_df(
-        docs,
+    stats = batched_extract(
+        spark,
+        args.input,
+        args.output,
+        batches=args.batches,
+        max_batches=args.max_batches,
+        partitions=args.partitions,
+        tail_bytes=args.tail_bytes,
+        metrics_path=args.metrics,
         doc_id_col=args.doc_id_col,
         html_col=args.html_col,
-        base_url_col=args.base_url_col if args.base_url_col in docs.columns else None,
-        headers_col=headers_col,
+        base_url_col=args.base_url_col,
+        input_format=args.input_format,
+        warc_slice_bytes=args.warc_slice_bytes,
     )
-    write_spans(spans, args.output, metrics_path=args.metrics)
+    print(
+        "snaptable ingest: ran %(ran)d, skipped %(skipped)d committed, "
+        "of %(total)d batches" % stats
+    )
     spark.stop()
 
 

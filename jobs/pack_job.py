@@ -25,7 +25,7 @@ or incremental run APPENDS new packs instead of colliding with committed
 ones; packs never mix documents from different runs (a sequence is built
 from one run's cohort either way).  The crash window between data and
 ledger commits is closed by the committed-output anti-join, the
-extract/curate job discipline.
+curate job discipline.
 """
 
 import argparse
@@ -48,17 +48,15 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("hquery-pack").getOrCreate()
 
-    from hquery_php_spark.operators.pipeline import pack_interleaved
+    from hquery_php_spark.operators.pipeline import pack_interleaved, resume_filter
     from hquery_php_spark.sources.reader import read_done_ids
 
     ledger_path = args.output.rstrip("/") + "_ledger"
     docs = spark.read.parquet(args.input)
     consumed = read_done_ids(spark, ledger_path)
     if consumed is not None:
-        docs = docs.join(
-            consumed.withColumnRenamed("doc_id", "__done").distinct(),
-            docs[args.id_col] == F.col("__done"),
-            "left_anti",
+        docs = resume_filter(
+            docs, consumed.withColumnRenamed("doc_id", args.id_col), args.id_col
         )
 
     out = pack_interleaved(
@@ -92,11 +90,7 @@ def main() -> None:
             )
             .drop("__off")
         )
-        out = out.join(
-            done.withColumnRenamed("doc_id", "__done").distinct(),
-            out["doc_id"] == F.col("__done"),
-            "left_anti",
-        )
+        out = resume_filter(out, done)
     # localCheckpoint (not persist): both frames' lineage reads the
     # output dir, and a lazy or evicted-and-recomputed frame would
     # re-list the directory AFTER this run's own append and see our new

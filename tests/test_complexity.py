@@ -74,3 +74,42 @@ def test_walk_is_near_linear(name):
     assert fn(HDoc(big, "https://example.com/"))  # the walk has work to do
     ratio = _best(big, fn) / _best(small, fn)
     assert ratio <= RATIO_MAX, f"{name}: 4x input took {ratio:.1f}x the time"
+
+
+def _sitemap(n: int) -> bytes:
+    """A urlset of n entries, each with an image and a video."""
+    parts = ['<?xml version="1.0"?><urlset>']
+    for i in range(n):
+        parts.append(
+            f"<url><loc>https://example.com/p{i}</loc>"
+            f"<image:image><image:loc>https://example.com/i{i}.jpg</image:loc>"
+            f"<image:title>Image &amp; {i}</image:title></image:image>"
+            f"<video:video><video:content_loc>https://example.com/v{i}.mp4"
+            f"</video:content_loc><video:title>V{i}</video:title></video:video>"
+            "</url>"
+        )
+    parts.append("</urlset>")
+    return "".join(parts).encode()
+
+
+def test_parse_sitemap_media_is_near_linear():
+    """The timing includes the parse, which is linear on its own."""
+    from hquery_php_spark.operators.feeds import parse_sitemap_media
+
+    def best(xml: bytes) -> float:
+        t_best = float("inf")
+        for _ in range(REPEATS):
+            gc.collect()
+            gc.disable()
+            try:
+                t = time.perf_counter()
+                parse_sitemap_media(xml)
+                t_best = min(t_best, time.perf_counter() - t)
+            finally:
+                gc.enable()
+        return t_best
+
+    small, big = _sitemap(N), _sitemap(4 * N)
+    assert len(parse_sitemap_media(big)) == 2 * 4 * N
+    ratio = best(big) / best(small)
+    assert ratio <= RATIO_MAX, f"4x input took {ratio:.1f}x the time"

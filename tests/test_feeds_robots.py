@@ -293,3 +293,118 @@ def test_parse_sitemap_media_extensions():
     assert parse_sitemap_media("<p>nope</p>") == []
     assert parse_sitemap_media(None) == []
     assert parse_sitemap_media("<urlset><url><image:image>") == []
+
+
+def _sitemap_media_oracle(xml):
+    """The original quadratic walk of parse_sitemap_media: a linear scan
+    of the <url> intervals per container and of the tag's whole posting
+    list per loc/title lookup.  Kept as the value oracle."""
+    import html as _htmlmod
+
+    from hquery_php_spark.core.doc import HDoc
+    from hquery_php_spark.operators.feeds import _MEDIA_TAGS, SitemapMedia
+
+    doc = HDoc(xml.encode())
+    if not doc.find("urlset"):
+        return []
+    urls = doc.find("url")
+    if not urls:
+        return []
+    idx = doc.index
+    url_iv = sorted(urls.ids.items())
+
+    def _tag_text(lo, hi, name):
+        for cb, ce in (idx.tag_idx.get(name) or {}).items():
+            if lo < cb < hi and cb < ce:
+                t = idx.html[cb + 1 : ce].decode("utf-8", "replace")
+                if "&" in t:
+                    t = _htmlmod.unescape(t)
+                t = " ".join(t.split())
+                return t or None
+        return None
+
+    out = []
+    for kind, (container, loc_tag, title_tag) in _MEDIA_TAGS.items():
+        for b, e in (idx.tag_idx.get(container) or {}).items():
+            if b >= e:
+                continue
+            ordi = None
+            for i, (ub, ue) in enumerate(url_iv):
+                if ub < b < ue:
+                    ordi = i
+                    break
+            if ordi is None:
+                continue
+            out.append(SitemapMedia(ordi, kind, _tag_text(b, e, loc_tag),
+                                    _tag_text(b, e, title_tag)))
+    out.sort(key=lambda m: (m.ord, m.kind, m.loc or ""))
+    return out
+
+
+def _fuzz_sitemap(rng):
+    """Random urlset soup: nested and unclosed <url>, mixed-case and
+    nested media tags, empty and entity-laden text, media outside any
+    entry."""
+    def case(name):
+        if rng.random() < 0.6:
+            return name
+        return "".join(c.upper() if rng.random() < 0.5 else c for c in name)
+
+    def text():
+        return rng.choice(["", " ", "a &amp; b", "x", "  y  z "]) + str(rng.randrange(50))
+
+    def media(depth):
+        kind = rng.choice(["image", "video"])
+        cont = f"{kind}:{kind}"
+        loc = "image:loc" if kind == "image" else "video:content_loc"
+        parts = [f"<{case(cont)}>"]
+        for _ in range(rng.randrange(4)):
+            tag = rng.choice([loc, f"{kind}:title", loc])
+            if rng.random() < 0.25:  # nested chain: merged cases sort by end
+                names = [tag] + [case(tag) for _ in range(rng.randrange(1, 4))]
+                parts.append("".join(f"<{t}>{text()}" for t in names))
+                parts.append("".join(f"</{t}>" for t in reversed(names)))
+                continue
+            parts.append(f"<{case(tag)}>{text()}")
+            if rng.random() < 0.85:
+                parts.append(f"</{case(tag)}>")
+        if depth < 2 and rng.random() < 0.2:
+            parts.append(media(depth + 1))
+        if rng.random() < 0.9:
+            parts.append(f"</{case(cont)}>")
+        return "".join(parts)
+
+    def entry(depth):
+        parts = [f"<{case('url')}><loc>https://ex.com/{rng.randrange(99)}</loc>"]
+        for _ in range(rng.randrange(4)):
+            r = rng.random()
+            if r < 0.6:
+                parts.append(media(0))
+            elif r < 0.75 and depth < 2:
+                parts.append(entry(depth + 1))
+            else:
+                parts.append(f"<p>{text()}</p>")
+        if rng.random() < 0.85:
+            parts.append(f"</{case('url')}>")
+        return "".join(parts)
+
+    body = []
+    for _ in range(rng.randrange(1, 8)):
+        body.append(entry(0) if rng.random() < 0.85 else media(0))
+    tail = "</urlset>" if rng.random() < 0.8 else ""
+    return '<?xml version="1.0"?><urlset>' + "".join(body) + tail
+
+
+def test_parse_sitemap_media_matches_linear_scan_oracle():
+    import random
+
+    from hquery_php_spark.operators.feeds import parse_sitemap_media
+
+    rng = random.Random(7)
+    n_media = 0
+    for _ in range(400):
+        x = _fuzz_sitemap(rng)
+        want = _sitemap_media_oracle(x)
+        assert parse_sitemap_media(x) == want, x
+        n_media += len(want)
+    assert n_media > 400  # the fuzz really exercises the media walk

@@ -1,11 +1,13 @@
-"""spark-submit-level resume test for jobs/extract_job.py: the packaged
-job (north rule: ``spark-submit --py-files``) is SIGKILLed mid-write and
-re-submitted; the final output must equal one clean run — every doc
-exactly once, zero duplicates — and a third submit must be a no-op.
+"""spark-submit-level tests of the packaged jobs in jobs/: each job is
+submitted (north rule: ``spark-submit --py-files``), killed or stopped
+part-way, and re-submitted; the final output must equal one clean run —
+every doc exactly once, zero duplicates — and a further submit must be
+a no-op.
 
-The in-process resume cycle is covered in test_spark.py; this exercises
-the real process boundary: leftover _temporary dirs, read_done_ids on a
-half-written output, and the --py-files packaging path.
+The in-process resume cycle is covered in test_spark.py and
+test_snaptable.py; these exercise the real process boundary: leftover
+staging dirs, manifest and ledger resume after a SIGKILL, and the
+--py-files packaging path.
 """
 
 import os
@@ -17,92 +19,6 @@ import duckdb
 import pandas as pd
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-N_DOCS = 4000
-
-
-def _spark_submit_cmd(zipf, inp, out, metrics):
-    return [
-        "spark-submit",
-        "--master",
-        "local[4]",
-        "--py-files",
-        zipf,
-        os.path.join(REPO, "jobs", "extract_job.py"),
-        "--input",
-        inp,
-        "--output",
-        out,
-        "--metrics",
-        metrics,
-        "--partitions",
-        "8",
-    ]
-
-
-def test_spark_submit_kill_resume(tmp_path):
-    docs = pd.DataFrame(
-        {
-            "doc_id": [f"d{i:05d}" for i in range(N_DOCS)],
-            "html": [
-                f'<html><body><div id="x{i}">'
-                + " ".join(f"<span class=\"w{j % 3}\">w{j}</span>" for j in range(60))
-                + f'<a href="/p/{i}">link</a></div></body></html>'
-                for i in range(N_DOCS)
-            ],
-        }
-    )
-    inp = str(tmp_path / "docs.parquet")
-    docs.to_parquet(inp)
-    out = str(tmp_path / "out")
-    metrics = str(tmp_path / "metrics")
-    zipf = shutil.make_archive(str(tmp_path / "pkg"), "zip", REPO, "hquery_php_spark")
-    cmd = _spark_submit_cmd(zipf, inp, out, metrics)
-    log = open(tmp_path / "submit.log", "wb")
-
-    # run 1: SIGKILL as soon as the output write starts (_temporary dir
-    # appears at write-job setup, before any task commits)
-    p = subprocess.Popen(cmd, cwd=REPO, stdout=log, stderr=log)
-    deadline = time.time() + 240
-    while (
-        time.time() < deadline
-        and p.poll() is None
-        and not os.path.exists(os.path.join(out, "_temporary"))
-    ):
-        time.sleep(0.1)
-    killed_midway = p.poll() is None
-    if killed_midway:
-        p.kill()  # SIGKILL — no cleanup, no committer shutdown
-        p.wait()
-
-    # run 2: resume to completion
-    r = subprocess.run(cmd, cwd=REPO, capture_output=True, timeout=600)
-    assert r.returncode == 0, r.stderr[-3000:]
-
-    con = duckdb.connect()
-    tot, dist = con.execute(
-        f"SELECT count(*), count(DISTINCT doc_id) FROM '{out}/*.parquet'"
-    ).fetchone()
-    assert tot == N_DOCS and dist == N_DOCS, (tot, dist, killed_midway)
-
-    # every doc's span payload made it (60 text words + 1 link per doc)
-    (n_bad,) = con.execute(
-        f"SELECT count(*) FROM '{out}/*.parquet' WHERE n_tags < 60"
-    ).fetchone()
-    assert n_bad == 0
-
-    # run 3: idempotence — a re-submit on a complete output adds nothing
-    r3 = subprocess.run(cmd, cwd=REPO, capture_output=True, timeout=600)
-    assert r3.returncode == 0, r3.stderr[-3000:]
-    tot3, dist3 = con.execute(
-        f"SELECT count(*), count(DISTINCT doc_id) FROM '{out}/*.parquet'"
-    ).fetchone()
-    assert (tot3, dist3) == (N_DOCS, N_DOCS)
-
-    # metrics sidecar accounts for committed docs exactly once
-    (m_docs,) = con.execute(
-        f"SELECT sum(n_docs) FROM '{metrics}/*.parquet'"
-    ).fetchone()
-    assert m_docs == N_DOCS
 
 
 def test_curate_job_submit_and_resume(tmp_path):
@@ -242,7 +158,7 @@ def test_pack_job_submit_resume_and_increment(tmp_path):
 
 
 def test_extract_job_snaptable_submit_resume(tmp_path):
-    """Packaged extract job, --table-format snaptable: a partial run
+    """Packaged extract job: a partial run
     (--max-batches 1 of 3) commits one snapshot; the re-submit completes
     the remaining batches by manifest set-difference (O(#batches), no
     row anti-join); a third submit commits nothing."""
@@ -272,7 +188,7 @@ def test_extract_job_snaptable_submit_resume(tmp_path):
             "spark-submit", "--master", "local[4]", "--py-files", zipf,
             os.path.join(REPO, "jobs", "extract_job.py"),
             "--input", inp, "--output", out, "--partitions", "4",
-            "--table-format", "snaptable", "--batches", "3",
+            "--batches", "3",
         ] + extra
 
     r1 = subprocess.run(
@@ -383,8 +299,10 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
     """SIGKILL the snaptable ingest while a batch is STAGING (its b-* dir
     exists but no snapshot for it yet): the orphan staging stays
     invisible to readers, the re-submit re-runs the killed batch under a
-    fresh staging dir, and the final corpus is exact.  The graceful
-    --max-batches variant above can't see this window."""
+    fresh staging dir, and the final corpus is exact — every doc once,
+    with its whole span payload, and metered once by the --metrics
+    sidecar.  The graceful --max-batches variant above can't see this
+    window."""
     import glob
     import json
 
@@ -393,9 +311,9 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
         {
             "doc_id": [f"d{i:04d}" for i in range(n)],
             "html": [
-                f'<html><body><p id="p{i}">'
-                + " ".join(f"<b>w{j}</b>" for j in range(40))
-                + "</p></body></html>"
+                f'<html><body><div id="x{i}">'
+                + " ".join(f"<span class=\"w{j % 3}\">w{j}</span>" for j in range(60))
+                + f'<a href="/p/{i}">link</a></div></body></html>'
                 for i in range(n)
             ],
         }
@@ -405,12 +323,13 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
     for k in range(6):
         docs.iloc[k::6].to_parquet(os.path.join(inp, f"part-{k}.parquet"))
     out = str(tmp_path / "tbl")
+    metrics = str(tmp_path / "metrics")
     zipf = shutil.make_archive(str(tmp_path / "pkg"), "zip", REPO, "hquery_php_spark")
     cmd = [
         "spark-submit", "--master", "local[2]", "--py-files", zipf,
         os.path.join(REPO, "jobs", "extract_job.py"),
-        "--input", inp, "--output", out, "--partitions", "2",
-        "--table-format", "snaptable", "--batches", "3",
+        "--input", inp, "--output", out, "--metrics", metrics,
+        "--partitions", "2", "--batches", "3",
     ]
     log = open(tmp_path / "kill.log", "wb")
     p = subprocess.Popen(cmd, cwd=REPO, stdout=log, stderr=log)
@@ -440,6 +359,17 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
         params={"f": files},
     ).df()
     assert (got["c"][0], got["d"][0]) == (n, n), killed_midway
+    # every doc's span payload made it (60 text words + 1 link per doc)
+    (n_bad,) = duckdb.sql(
+        "SELECT count(*) FROM read_parquet($f) WHERE n_tags < 60",
+        params={"f": files},
+    ).fetchone()
+    assert n_bad == 0
+    # metrics sidecar accounts for committed docs exactly once
+    (m_docs,) = duckdb.sql(
+        f"SELECT sum(n_docs) FROM '{metrics}/*.parquet'"
+    ).fetchone()
+    assert m_docs == n
     # nothing dangles into the manifest without a snapshot: every listed
     # file's staging dir encodes a batch id that IS committed (the killed
     # run's orphan staging, if any, therefore cannot appear)

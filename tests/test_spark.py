@@ -165,6 +165,28 @@ def test_resume_cycle_end_to_end(spark, corpus_df, tmp_path):
     assert resume_filter(docs, spark.read.parquet(out_dir).select("doc_id")).count() == 0
 
 
+def test_read_done_ids_none_only_when_nothing_committed(spark, tmp_path):
+    """A missing ledger, or one holding only a killed write's
+    ``_temporary``, means "nothing committed yet"; an unreadable file
+    must raise — swallowing it would re-process the whole input."""
+    import os
+
+    from hquery_php_spark.sources.reader import read_done_ids
+
+    assert read_done_ids(spark, str(tmp_path / "missing")) is None
+
+    killed = tmp_path / "killed" / "_temporary" / "0"
+    os.makedirs(killed)
+    (killed / "part-0.parquet").write_bytes(b"half-written")
+    assert read_done_ids(spark, str(tmp_path / "killed")) is None
+
+    corrupt = tmp_path / "corrupt"
+    os.makedirs(corrupt)
+    (corrupt / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        read_done_ids(spark, str(corrupt))
+
+
 def test_partition_metrics_lineage_roundtrip(spark, corpus_df, tmp_path):
     """Metrics rows are writable/readable as the lineage table and
     account for every input document exactly once."""
@@ -348,25 +370,6 @@ def test_streaming_span_metrics(spark, tmp_path):
         assert sum(r.n_media for r in got) == 1
     finally:
         q.stop()
-
-
-def test_write_spans_partitioned_layout(spark, corpus_df, tmp_path):
-    """write_spans with partition columns produces a pruned-readable
-    layout and the metrics sidecar accounts for every row."""
-    import os
-
-    from hquery_php_spark.sources.reader import write_spans
-
-    out = str(tmp_path / "p_out")
-    met = str(tmp_path / "p_met")
-    spans = extract_spans_df(corpus_df)
-    write_spans(spans, out, metrics_path=met, partition_cols=("charset",))
-    subdirs = [d for d in os.listdir(out) if d.startswith("charset=")]
-    assert subdirs, os.listdir(out)
-    back = spark.read.parquet(out)
-    assert back.count() == corpus_df.count()
-    m = spark.read.parquet(met)
-    assert m.agg(F.sum("n_docs")).collect()[0][0] == corpus_df.count()
 
 
 def test_null_html_recorded_as_error(spark):
