@@ -12,8 +12,9 @@ Spark-first design (BASELINE.json north rule):
   repartition`` gives every document above a size threshold its own
   partition and hash-salts the body — at 10^12 docs a handful of 20MB
   outliers per 100KB-average batch otherwise serializes the stage;
-* per-doc metrics (tag count, span counts, error) ride along as columns →
-  aggregating them per partition gives the lineage/metrics table;
+* per-doc metrics (tag count, span counts, error) ride along as columns,
+  and an optional ``meter`` accumulator totals them per partition inside
+  the same task (``sources.ingest``'s metrics sidecar, no second pass);
   ``resume_filter`` drops the ids of a committed ledger (the curate and
   pack jobs' idempotent resume).
 """
@@ -21,8 +22,10 @@ Spark-first design (BASELINE.json north rule):
 from __future__ import annotations
 
 import time
-from typing import Optional
+from typing import Dict, Optional, Tuple
 
+from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,7 +48,6 @@ __all__ = [
     "explode_spans",
     "salted_repartition",
     "split_tail_repartition",
-    "partition_metrics",
     "resume_filter",
     "pack_interleaved",
     "pack_interleaved_oracle_sql",
@@ -83,6 +85,7 @@ def extract_spans_df(
     encoding: str = "utf-8",
     opts: ExtractOptions = DEFAULT_OPTIONS,
     headers_col: Optional[str] = None,
+    meter=None,
 ) -> DataFrame:
     """documents(doc_id, html[, base_url]) → (doc_id, spans, …metrics).
 
@@ -95,7 +98,12 @@ def extract_spans_df(
     "Content-Type: text/html; charset=ISO-8859-2") fed to the engine's
     charset detection — the crawl-archive (WARC) envelope handoff,
     mirroring the reference's HTTP-client → hQuery path
-    (hQuery.php:190-205)."""
+    (hQuery.php:190-205).
+
+    ``meter``: optional ``PartitionMeter`` accumulator (internal;
+    ``sources.ingest`` makes it) to which every document adds its
+    share of its partition's totals, returned with the task's result
+    instead of by a second pass over the output."""
     cols = [F.col(doc_id_col).cast("string").alias("doc_id"), F.col(html_col).alias("__html")]
     has_url = base_url_col is not None and base_url_col in df.columns
     if has_url:
@@ -132,9 +140,57 @@ def extract_spans_df(
             if s.kind == "text":
                 n_text += 1
             tuples.append((s.kind, s.text, s.media_ref, s.offset))
+        if meter is not None:
+            tc = TaskContext.get()
+            meter.add({(tc.partitionId(), tc.taskAttemptId()): [
+                1, n_tags, n_text, len(spans) - n_text, size,
+                int(err is not None), el, doc_id, doc_id,
+            ]})  # PartitionMeter.COLS order
         return [(doc_id, tuples, n_tags, n_text, len(spans) - n_text, size, charset, err, el)]
 
     return map_rows(df.select(*cols), SPANS_SCHEMA, row)
+
+
+class PartitionMeter(AccumulatorParam):
+    """Accumulator of per-task extraction totals, ``{(partition id, task
+    attempt id): [values in COLS order]}``: the sums, then the min and
+    max doc_id.  These are the columns (and meanings) of a
+    ``groupBy(spark_partition_id())`` over the spans.  The task attempt
+    id is unique across task and stage attempts, so a re-run task
+    reports under its own key instead of adding into another attempt's
+    totals."""
+
+    COLS = ("n_docs", "n_tags", "n_text", "n_media", "bytes", "n_errors",
+            "elapsed_us", "min_doc_id", "max_doc_id")
+    N_SUMS = 7
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, more):
+        for key, m in more.items():
+            t = acc.get(key)
+            if t is None:
+                acc[key] = list(m)
+                continue
+            for i in range(self.N_SUMS):
+                t[i] += m[i]
+            lo, hi = m[-2], m[-1]
+            if lo is not None and (t[-2] is None or lo < t[-2]):
+                t[-2] = lo
+            if hi is not None and (t[-1] is None or hi > t[-1]):
+                t[-1] = hi
+        return acc
+
+    @staticmethod
+    def partitions(reports: Dict[Tuple[int, int], list]) -> Dict[int, list]:
+        """One report per partition id, from its earliest task attempt:
+        a partition whose task ran twice (a retried shuffle-map task) is
+        counted once."""
+        out: Dict[int, list] = {}
+        for (pid, _attempt), m in sorted(reports.items()):
+            out.setdefault(pid, m)
+        return out
 
 
 def explode_spans(spans_df: DataFrame) -> DataFrame:
@@ -197,32 +253,13 @@ def split_tail_repartition(
     the BENCH mega_skew row (8 x ~3 s megas + 1.3 s body at
     local[32])."""
     big = df.where(F.col(size_col) >= tail_bytes)
-    small = df.where(F.col(size_col) < tail_bytes)
+    # a null size (null payload) joins the body: dropped by both filters,
+    # the document would vanish instead of reaching the engine's error row
+    small = df.where(F.col(size_col).isNull() | (F.col(size_col) < tail_bytes))
     body = salted_repartition(small, num_partitions, key_col=key_col)
     # round-robin gives each tail doc its own partition deterministically
     tail = big.repartition(num_partitions)
     return tail.unionByName(body)
-
-
-def partition_metrics(spans_df: DataFrame) -> DataFrame:
-    """Per-partition lineage/metrics rows — append these to a metrics
-    table next to the output for monitoring + idempotent resume."""
-    return (
-        spans_df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tags").alias("n_tags"),
-            F.sum("n_text").alias("n_text"),
-            F.sum("n_media").alias("n_media"),
-            F.sum("size_bytes").alias("bytes"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_errors"),
-            F.sum("elapsed_us").alias("elapsed_us"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-        )
-        .withColumnRenamed("__pid", "partition_id")
-    )
 
 
 def resume_filter(

@@ -31,7 +31,7 @@ Arrow-batched ``mapInPandas``, zero shuffles.
 from __future__ import annotations
 
 import html as _htmlmod
-from bisect import bisect_right
+from bisect import bisect_left, bisect_right
 from typing import Dict, List, NamedTuple, Optional, Tuple
 
 from ..core.doc import HDoc
@@ -142,27 +142,43 @@ def html_tables(html, url: Optional[str] = None) -> List[TableCell]:
     out: List[TableCell] = []
     for tb in tables:
         tno = table_no[tb]
-        occupied: Dict[int, Dict[int, bool]] = {}  # row -> {col: True}
-        for rno, rb in enumerate(rows_of[tb]):
+        rows = rows_of[tb]
+        # per row: occupied columns as disjoint, non-touching [start, end)
+        # intervals (parallel sorted lists), so a span costs one interval
+        # per existing row it covers, whatever its rowspan × colspan
+        occupied = [([], []) for _ in rows]
+        for rno, rb in enumerate(rows):
             col = 0
-            occ = occupied.setdefault(rno, {})
+            starts, ends = occupied[rno]
             for cb in cells_of.get(rb, ()):
-                while occ.get(col):
-                    col += 1
+                k = bisect_right(starts, col) - 1
+                if k >= 0 and ends[k] > col:
+                    col = ends[k]  # merged intervals: the end is free
                 rs, cs = _spans(idx, cb)
                 out.append(
                     TableCell(
                         tno, rno, col, rs, cs, tags[cb] == "th", cell_text(tb, cb)
                     )
                 )
-                # mark the rows below only: this row's cursor never
-                # moves back over the columns the cell covers
-                for dr in range(1, rs):
-                    tr_occ = occupied.setdefault(rno + dr, {})
-                    for dc in range(cs):
-                        tr_occ[col + dc] = True
+                # mark the rows below only (this row's cursor never moves
+                # back over the columns the cell covers), and only rows
+                # that exist — nothing reads past the table's last row
+                for r in range(rno + 1, min(rno + rs, len(rows))):
+                    _occupy(*occupied[r], col, col + cs)
                 col += cs
     return out
+
+
+def _occupy(starts: List[int], ends: List[int], a: int, b: int) -> None:
+    """Add [a, b) to the disjoint, non-touching sorted intervals
+    (starts, ends), merging every interval it overlaps or touches."""
+    i = bisect_left(ends, a)  # first interval ending at or after a
+    j = bisect_right(starts, b)  # past the last one starting at or before b
+    if i < j:
+        a = min(a, starts[i])
+        b = max(b, ends[j - 1])
+    starts[i:j] = [a]
+    ends[i:j] = [b]
 
 
 def html_tables_df(df, html_col: str = "html", id_col: str = "doc_id"):

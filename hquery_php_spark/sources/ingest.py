@@ -33,9 +33,16 @@ still-missing files.  Batch ids are content-addressed
 no-op.
 
 Per-batch lineage lands in the snapshot manifest (rows, files, wall
-seconds); per-partition extraction metrics go to the optional metrics
-sidecar with the batch id attached, AFTER the batch's data commit:
-a metrics row present ⇒ its batch's data is committed.
+seconds).  Per-partition extraction metrics go to the optional metrics
+sidecar: each batch is ONE Spark write job, its tasks total their
+documents on an accumulator (``extract_spans_df(meter=…)``) that comes
+back with the task results, and the driver writes the batch's
+O(#partitions) rows as one parquet file with the batch id attached —
+no cache, no second pass over the spans.  The file is written only
+after THIS run committed the batch (a metrics row present ⇒ its batch's
+data is committed, and a batch another writer committed is never
+metered twice), under a hidden temp name renamed into place, so Spark
+and ``*.parquet`` readers never see a partial file.
 
 Executor-memory note: raw-HTML corpora have multi-MB string cells, and
 the vectorized parquet reader buffers columnarReaderBatchSize rows per
@@ -49,11 +56,18 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
+import uuid
 from typing import List, Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pipeline import (
+    PartitionMeter,
+    extract_spans_df,
+    split_tail_repartition,
+)
 from .snaptable import SnapTable
 
 __all__ = ["batched_extract", "incremental_extract", "plan_file_batches"]
@@ -70,9 +84,40 @@ def _group_sha(group: List[str]) -> str:
     return hashlib.sha256("\n".join(group).encode()).hexdigest()[:16]
 
 
+def _write_sidecar(path: str, batch_id: str, reports: dict) -> str:
+    """Write a batch's ``PartitionMeter`` reports as one parquet file of
+    per-partition metrics rows under ``path`` (hidden temp name, then an
+    atomic rename) and return its path.  ``committed_at`` is INT96, as
+    Spark writes timestamps, so files of both writers read together
+    under one schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    per_part = PartitionMeter.partitions(reports)
+    pids = sorted(per_part)
+    rows = [per_part[p] for p in pids]
+    cols = {"partition_id": pa.array(pids, pa.int32())}
+    for i, name in enumerate(PartitionMeter.COLS):
+        kind = pa.int64() if i < PartitionMeter.N_SUMS else pa.string()
+        cols[name] = pa.array([r[i] for r in rows], kind)
+    cols["batch_id"] = pa.array([batch_id] * len(rows), pa.string())
+    now_us = time.time_ns() // 1000
+    cols["committed_at"] = pa.array([now_us] * len(rows), pa.timestamp("us"))
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, ".tmp-%s" % uuid.uuid4().hex)
+    final = os.path.join(path, "part-%s-%s.parquet" % (batch_id, uuid.uuid4().hex))
+    pq.write_table(
+        pa.table(cols), tmp, compression="snappy",
+        use_deprecated_int96_timestamps=True, store_schema=False,
+    )
+    os.rename(tmp, final)
+    return final
+
+
 class _Extractor:
     """Shared per-batch runner: split-tail repartition → span extraction
-    → snapshot commit → (optional) metrics sidecar."""
+    → snapshot commit → (optional) metrics sidecar, in one Spark write
+    job per batch."""
 
     def __init__(
         self,
@@ -87,12 +132,6 @@ class _Extractor:
         input_format: str = "parquet",
         warc_slice_bytes: int = 0,
     ):
-        from ..operators.pipeline import (
-            extract_spans_df,
-            partition_metrics,
-            split_tail_repartition,
-        )
-
         self.spark = spark
         self.tbl = tbl
         self.partitions = partitions
@@ -103,9 +142,6 @@ class _Extractor:
         self.base_url_col = base_url_col
         self.input_format = input_format
         self.warc_slice_bytes = warc_slice_bytes
-        self._extract = extract_spans_df
-        self._metrics = partition_metrics
-        self._split_tail = split_tail_repartition
         self.dp = spark.sparkContext.defaultParallelism
 
     def batch_parts(self, group: List[str]) -> int:
@@ -149,18 +185,25 @@ class _Extractor:
         return docs, "__headers"
 
     def run(self, group: List[str], bid: str, lineage: dict) -> None:
+        meter = on_commit = None
+        if self.metrics_path:
+            meter = self.spark.sparkContext.accumulator({}, PartitionMeter())
+
+            def on_commit(_snap):  # the tasks' reports are all in by now
+                _write_sidecar(self.metrics_path, bid, meter.value)
+
         docs, headers_col = self.read(group)
         docs = docs.withColumn(
             "__size", F.length(F.col(self.html_col)).cast("long")
         )
-        docs = self._split_tail(
+        docs = split_tail_repartition(
             docs,
             self.batch_parts(group),
             size_col="__size",
             tail_bytes=self.tail_bytes,
             key_col=self.doc_id_col,
         )
-        spans = self._extract(
+        spans = extract_spans_df(
             docs,
             doc_id_col=self.doc_id_col,
             html_col=self.html_col,
@@ -168,15 +211,11 @@ class _Extractor:
             if self.base_url_col in docs.columns
             else None,
             headers_col=headers_col,
+            meter=meter,
         )
-        if self.metrics_path:
-            spans = spans.persist()  # one extraction feeds commit + metrics
-        self.tbl.append(spans, bid, lineage=lineage)
-        if self.metrics_path:  # after the data commit — metrics row ⇒ committed
-            self._metrics(spans).withColumn("batch_id", F.lit(bid)).withColumn(
-                "committed_at", F.current_timestamp()
-            ).write.mode("append").parquet(self.metrics_path)
-            spans.unpersist()
+        self.tbl.append(spans, bid, lineage=lineage, on_commit=on_commit)
+        if meter is not None:
+            meter.value = {}  # the context keeps every accumulator it made
 
 
 def batched_extract(

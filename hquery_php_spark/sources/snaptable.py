@@ -63,7 +63,7 @@ import json
 import os
 import time
 import uuid
-from typing import Dict, List, Optional, Set
+from typing import Callable, Dict, List, Optional, Set
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -220,6 +220,7 @@ class SnapTable:
         batch_id: str,
         lineage: Optional[dict] = None,
         allow_evolution: bool = False,
+        on_commit: Optional[Callable[[dict], None]] = None,
     ) -> dict:
         """Stage ``df`` as parquet, then atomically commit a snapshot.
 
@@ -228,6 +229,12 @@ class SnapTable:
         returned unchanged (the caller's retry/resume loop needs no
         special-casing).  Raises ``ValueError`` on a schema mismatch
         with the table's recorded schema (names+types, order-blind).
+
+        ``on_commit(snapshot)`` runs right after THIS call's commit and
+        never on a no-op (the batch already present, or a concurrent
+        duplicate winning the race), so a caller can attach per-batch
+        side output that must exist once per committed batch
+        (``sources.ingest``'s metrics sidecar).
 
         ``allow_evolution=True`` permits ADDITIVE evolution (Iceberg
         add-column): extra top-level fields in ``df`` widen the table
@@ -310,6 +317,8 @@ class SnapTable:
                     spec, t0, _resolve_schema, lineage,
                 )
                 if committed is not None:
+                    if on_commit is not None:
+                        on_commit(committed)
                     return committed
                 continue  # lost the CAS — re-read and retry
             # legacy inline-snapshot table (pre-sharding): fall through
@@ -380,6 +389,8 @@ class SnapTable:
                 # seq) is unaffected by them
                 new["equality_deletes"] = snap["equality_deletes"]
             if self._try_commit(seq, new):
+                if on_commit is not None:
+                    on_commit(new)
                 return new
 
     def _append_fast(

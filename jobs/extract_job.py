@@ -22,8 +22,12 @@ Behavior (``sources.ingest.batched_extract``):
   holds (a set difference over O(#batches) ids, no row scan), so
   re-running after a kill completes exactly the remainder; a batch
   killed mid-write was never committed and runs again;
-* per-partition lineage/metrics appended to --metrics AFTER each
-  batch's data commit (metrics row present ⇒ batch data committed).
+* per-partition metrics in the --metrics sidecar: each batch is one
+  Spark write job whose tasks total their documents on an accumulator,
+  and the driver writes the batch's rows as one parquet file only after
+  THIS run committed the batch (metrics row present ⇒ batch data
+  committed; a batch already committed is never metered twice; a
+  half-written file keeps a hidden temp name that readers skip).
 """
 
 import argparse

@@ -113,3 +113,23 @@ def test_parse_sitemap_media_is_near_linear():
     assert len(parse_sitemap_media(big)) == 2 * 4 * N
     ratio = best(big) / best(small)
     assert ratio <= RATIO_MAX, f"4x input took {ratio:.1f}x the time"
+
+
+def _claimed_spans(n: int) -> bytes:
+    """Eight table rows whose first cell claims rowspan and colspan n:
+    the occupancy work must follow the rows that exist, not the claimed
+    n × n area."""
+    rows = "".join(
+        f'<tr><td rowspan="{n}" colspan="{n}">r{i}</td><td>a</td><td>b</td></tr>'
+        for i in range(8)
+    )
+    return f"<html><body><table>{rows}</table></body></html>".encode()
+
+
+def test_html_tables_ignores_claimed_span_area():
+    small, big = _claimed_spans(N), _claimed_spans(4 * N)
+    cells = html_tables(HDoc(big, "https://example.com/"))
+    # each row's wide cell lands right of the ones claimed above it
+    assert [c.col_no for c in cells[-3:]] == [7 * 4 * N, 8 * 4 * N, 8 * 4 * N + 1]
+    ratio = _best(big, html_tables) / _best(small, html_tables)
+    assert ratio <= RATIO_MAX, f"4x span values took {ratio:.1f}x the time"

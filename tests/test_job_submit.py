@@ -344,6 +344,10 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
         p.kill()
         p.wait()
     orphans_before = set(glob.glob(os.path.join(out, "data", "b-*")))
+    # a sidecar write torn by a kill leaves only its hidden temp name
+    os.makedirs(metrics, exist_ok=True)
+    with open(os.path.join(metrics, ".tmp-killed"), "wb") as f:
+        f.write(b"PAR1 torn")
 
     r = subprocess.run(cmd, cwd=REPO, capture_output=True, timeout=600)
     assert r.returncode == 0, r.stderr[-3000:]
@@ -365,11 +369,16 @@ def test_extract_job_snaptable_sigkill_resume(tmp_path):
         params={"f": files},
     ).fetchone()
     assert n_bad == 0
-    # metrics sidecar accounts for committed docs exactly once
+    # metrics sidecar accounts for committed docs exactly once, one file
+    # per batch, and neither reader counts the torn temp file
     (m_docs,) = duckdb.sql(
         f"SELECT sum(n_docs) FROM '{metrics}/*.parquet'"
     ).fetchone()
     assert m_docs == n
+    import pyarrow.parquet as pq
+
+    assert sum(pq.read_table(metrics).column("n_docs").to_pylist()) == n
+    assert len(glob.glob(os.path.join(metrics, "*.parquet"))) == 3
     # nothing dangles into the manifest without a snapshot: every listed
     # file's staging dir encodes a batch id that IS committed (the killed
     # run's orphan staging, if any, therefore cannot appear)

@@ -16,9 +16,9 @@ from hquery_php_spark.operators.dedup import (
     simhash64,
 )
 from hquery_php_spark.operators.pipeline import (
+    PartitionMeter,
     explode_spans,
     extract_spans_df,
-    partition_metrics,
     resume_filter,
 )
 from hquery_php_spark.operators.similarity import brute_force_topk
@@ -76,10 +76,16 @@ def test_explode_spans_order(spark, corpus_df):
     assert list(pdf["offset"]) == sorted(pdf["offset"])
 
 
-def test_partition_metrics_and_resume(spark, corpus_df):
-    spans = extract_spans_df(corpus_df, encoding="latin-1")
-    m = partition_metrics(spans).toPandas()
-    assert m.n_docs.sum() == 40
+def _metered_spans(spark, corpus_df, **kw):
+    """Spans plus the accumulator their extraction tasks report to."""
+    meter = spark.sparkContext.accumulator({}, PartitionMeter())
+    return extract_spans_df(corpus_df, meter=meter, **kw), meter
+
+
+def test_extract_meter_and_resume(spark, corpus_df):
+    spans, meter = _metered_spans(spark, corpus_df, encoding="latin-1")
+    assert spans.count() == 40
+    assert sum(m[0] for m in meter.value.values()) == 40
     done = spans.limit(10).select("doc_id")
     remaining = resume_filter(corpus_df, done)
     assert remaining.count() == 30
@@ -187,12 +193,15 @@ def test_read_done_ids_none_only_when_nothing_committed(spark, tmp_path):
         read_done_ids(spark, str(corrupt))
 
 
-def test_partition_metrics_lineage_roundtrip(spark, corpus_df, tmp_path):
+def test_metrics_sidecar_lineage_roundtrip(spark, corpus_df, tmp_path):
     """Metrics rows are writable/readable as the lineage table and
     account for every input document exactly once."""
+    from hquery_php_spark.sources.ingest import _write_sidecar
+
     mdir = str(tmp_path / "metrics")
-    spans = extract_spans_df(corpus_df)
-    partition_metrics(spans).write.mode("overwrite").parquet(mdir)
+    spans, meter = _metered_spans(spark, corpus_df)
+    spans.write.parquet(str(tmp_path / "spans"))
+    _write_sidecar(mdir, "b0", meter.value)
     m = spark.read.parquet(mdir).toPandas()
     assert m["n_docs"].sum() == corpus_df.count()
     assert (m["n_errors"] >= 0).all()
