@@ -2665,12 +2665,12 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _materialize_release(spark, out, reg)
 
 
-def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The COMPOSED curation pipeline end-to-end in one value-checked
-    query: Gopher+repetition gates → exact dedup → portable MinHash/LSH
-    near-dup clusters (keep cluster min) → benchmark decontamination →
-    PII redaction → per-domain cap → deterministic global order.  Twin:
-    curate_oracle_sql (each stage reuses its already-pinned oracle)."""
+def _curate_df(
+    spark: SparkSession, sf_dir: str, registry: list | None, portable: bool
+) -> DataFrame:
+    """The LAZY composed curation program behind q_curate/q_curate_fast
+    (and tools/dump_plans.py's PLANS.md exhibit).  Every DataFrame it
+    persists is appended to ``registry`` (None: nothing is persisted)."""
     from hquery_php_spark.operators.curate import CurateOptions, curate_corpus
 
     d = _spread(_docs(spark, sf_dir), spark).select("doc_id", "text", "source")
@@ -2684,13 +2684,22 @@ def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_bands=2,
         rows_per_band=8,
         jaccard_threshold=0.6,
-        portable_hashes=True,
+        portable_hashes=portable,
         decontaminate_n=8,
         cap_per_domain=20,
         n_ranges=16,
     )
+    return curate_corpus(train, benchmark=bench, opts=opts, persist_registry=registry)
+
+
+def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The COMPOSED curation pipeline end-to-end in one value-checked
+    query: Gopher+repetition gates → exact dedup → portable MinHash/LSH
+    near-dup clusters (keep cluster min) → benchmark decontamination →
+    PII redaction → per-domain cap → deterministic global order.  Twin:
+    curate_oracle_sql (each stage reuses its already-pinned oracle)."""
     reg: list = []
-    out = curate_corpus(train, benchmark=bench, opts=opts, persist_registry=reg)
+    out = _curate_df(spark, sf_dir, reg, portable=True)
     return _materialize_release(spark, out, reg)
 
 
@@ -2703,26 +2712,8 @@ def q_curate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameters).  This row exists so the headline bench cost reflects
     the production hash, not the twin-checkable polynomial folds
     (VERDICT r3: the portable path dominated the bench at 32s)."""
-    from hquery_php_spark.operators.curate import CurateOptions, curate_corpus
-
-    d = _spread(_docs(spark, sf_dir), spark).select("doc_id", "text", "source")
-    bench = d.where(F.pmod(F.col("doc_id"), F.lit(10)) == 0)
-    train = d.where(F.pmod(F.col("doc_id"), F.lit(10)) != 0)
-    opts = CurateOptions(
-        min_words=10,
-        gopher_kwargs=dict(min_stop_hits=1),
-        num_perm=16,
-        shingle_k=8,
-        lsh_bands=2,
-        rows_per_band=8,
-        jaccard_threshold=0.6,
-        portable_hashes=False,
-        decontaminate_n=8,
-        cap_per_domain=20,
-        n_ranges=16,
-    )
     reg: list = []
-    out = curate_corpus(train, benchmark=bench, opts=opts, persist_registry=reg)
+    out = _curate_df(spark, sf_dir, reg, portable=False)
     return _materialize_release(spark, out, reg)
 
 

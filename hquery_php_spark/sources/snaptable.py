@@ -108,32 +108,44 @@ class SnapTable:
     # snapshot JSON holds only the O(#batches) light state (batch ids,
     # lineage, schema, partition spec) plus a list of immutable manifest
     # file names (``mf-*.json``), each carrying the file list + footer
-    # stats + partition values of one commit's worth of files.  An
-    # append therefore writes ONE new manifest for its own files and a
-    # light snapshot re-pointing at the parent's untouched manifests —
-    # commit I/O is O(batch), never O(table).  Inline heavy keys from
-    # older snapshots still load (inflate is a no-op for them).  The
-    # in-memory view after ``current_snapshot()`` is always the full
-    # inflated dict — the driver holds O(files) entries, exactly like
-    # the InMemoryFileIndex a plain ``spark.read.parquet`` builds.
+    # stats + partition values + data sequence numbers of one commit's
+    # worth of files.  ``_commit`` is the one writer of that metadata:
+    # an append writes ONE new manifest for its own files and a light
+    # snapshot re-pointing at the parent's untouched manifests, so
+    # commit I/O is O(batch), never O(table).  The in-memory view after
+    # ``current_snapshot()`` is the full inflated dict — the driver
+    # holds O(files) entries, exactly like the InMemoryFileIndex a plain
+    # ``spark.read.parquet`` builds.
 
     def _raw_snapshot(self, snapshot_id: int) -> Optional[dict]:
+        """The snapshot JSON as committed (manifest refs, no file view),
+        or None when ``snapshot_id`` does not exist.  Every snapshot
+        read goes through here."""
         p = os.path.join(self.snap_dir, _SNAP_FMT % snapshot_id)
         if not os.path.exists(p):
             return None
         with open(p) as f:
-            return json.load(f)
+            snap = json.load(f)
+        if "manifests" not in snap:
+            raise ValueError(
+                "snapshot %d of %s has no manifest list; only "
+                "manifest-sharded snapshots are readable"
+                % (snapshot_id, self.path)
+            )
+        return snap
+
+    def _snapshot_ids(self) -> List[int]:
+        if not os.path.isdir(self.snap_dir):
+            return []
+        return sorted(
+            int(name[5:-5])
+            for name in os.listdir(self.snap_dir)
+            if name.startswith("snap-") and name.endswith(".json")
+        )
 
     def _raw_current(self) -> Optional[dict]:
-        if not os.path.isdir(self.snap_dir):
-            return None
-        best = None
-        for name in os.listdir(self.snap_dir):
-            if name.startswith("snap-") and name.endswith(".json"):
-                n = int(name[5:-5])
-                if best is None or n > best:
-                    best = n
-        return None if best is None else self._raw_snapshot(best)
+        ids = self._snapshot_ids()
+        return self._raw_snapshot(ids[-1]) if ids else None
 
     def _load_manifest(self, ref: str) -> dict:
         m = self._manifest_cache.get(ref)
@@ -144,10 +156,9 @@ class SnapTable:
         return m
 
     def _inflate(self, snap: Optional[dict]) -> Optional[dict]:
-        """Materialize the full file view from the manifest refs (no-op
-        for legacy inline snapshots)."""
-        if snap is None or "manifests" not in snap:
-            return snap
+        """Materialize the full file view from the manifest refs."""
+        if snap is None:
+            return None
         files: List[str] = []
         stats: Dict[str, dict] = {}
         parts: Dict[str, dict] = {}
@@ -167,14 +178,7 @@ class SnapTable:
 
     def snapshots(self) -> List[dict]:
         """All committed snapshots, oldest first (inflated)."""
-        if not os.path.isdir(self.snap_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(self.snap_dir)):
-            if name.startswith("snap-") and name.endswith(".json"):
-                with open(os.path.join(self.snap_dir, name)) as f:
-                    out.append(self._inflate(json.load(f)))
-        return out
+        return [self._inflate(self._raw_snapshot(i)) for i in self._snapshot_ids()]
 
     def current_snapshot(self) -> Optional[dict]:
         return self._inflate(self._raw_current())
@@ -305,25 +309,6 @@ class SnapTable:
             snap = self._raw_current()
             if snap and batch_id in snap["batch_ids"]:
                 return snap  # concurrent duplicate won the race — no-op
-            if snap is None or "manifests" in snap:
-                if self._effective_spec(snap, df) != spec:
-                    raise ValueError(
-                        "partition spec of %s changed under this append "
-                        "(concurrent table creation); re-run the append"
-                        % self.path
-                    )
-                committed = self._append_fast(
-                    snap, df, batch_id, files, n_rows, stats, parts,
-                    spec, t0, _resolve_schema, lineage,
-                )
-                if committed is not None:
-                    if on_commit is not None:
-                        on_commit(committed)
-                    return committed
-                continue  # lost the CAS — re-read and retry
-            # legacy inline-snapshot table (pre-sharding): fall through
-            # to the inflate-and-deflate path below
-            snap = self.current_snapshot()
             if self._effective_spec(snap, df) != spec:
                 # lost a CAS to a creator with a different partition spec:
                 # the data is already staged with the WRONG layout — it
@@ -333,34 +318,19 @@ class SnapTable:
                     "(concurrent table creation); re-run the append"
                     % self.path
                 )
-            seq = (snap["snapshot_id"] + 1) if snap else 1
-            new = {
-                "snapshot_id": seq,
-                "parent": snap["snapshot_id"] if snap else None,
+            fields = {
                 # Iceberg snapshot summary operation: incremental reads
                 # walk the chain and accept only "append" links
                 "operation": "append",
                 # re-validated per attempt against the FRESH snapshot — a
                 # lost CAS may mean the schema evolved under us
                 "schema": _resolve_schema(snap),
-                # compaction rewrites the per-batch dir layout for good;
-                # later appends must keep saying so (fsck switches its
-                # row-attribution strategy on this)
-                "layout": snap.get("layout", "batch") if snap else "batch",
-                # cumulative: resume reads ONLY the latest manifest
-                "files": (snap["files"] if snap else []) + files,
-                # per-file min/max from parquet footers (free — no data
-                # read): lets read() skip whole files driver-side, the
-                # Iceberg manifest-stats file-pruning mechanism
-                "file_stats": {
-                    **(snap.get("file_stats", {}) if snap else {}),
-                    **stats,
-                },
-                "batch_ids": sorted(set(snap["batch_ids"]) | {batch_id})
-                if snap
-                else [batch_id],
+                # cumulative: resume reads ONLY the latest snapshot
+                "batch_ids": sorted(
+                    set(snap["batch_ids"] if snap else ()) | {batch_id}
+                ),
                 "lineage": {
-                    **(snap.get("lineage", {}) if snap else {}),
+                    **(snap or {}).get("lineage", {}),
                     batch_id: {
                         **(lineage or {}),
                         "n_rows": n_rows,
@@ -368,112 +338,25 @@ class SnapTable:
                         "wall_s": round(time.time() - t0, 3),
                     },
                 },
-                "committed_at": time.time(),
+                # an append rewrites nothing: the parent's rewrite
+                # markers stop here (layout, sort order and pending
+                # equality deletes carry forward — the deletes apply
+                # only to files with a smaller data sequence, so this
+                # batch is unaffected by them)
+                "compaction_of": None,
+                "delete_of": None,
             }
-            if spec:
-                new["partition_spec"] = spec
-                # per-file partition values (Iceberg manifest partition
-                # tuples): the read-side pruning source
-                new["file_partitions"] = {
-                    **(snap.get("file_partitions", {}) if snap else {}),
-                    **parts,
-                }
-            if snap and "sort_order" in snap:
-                # declared table sort order survives appends so the next
-                # maintenance compact() re-clusters with it
-                new["sort_order"] = snap["sort_order"]
-            if snap and snap.get("equality_deletes"):
-                # pending merge-on-read deletes carry forward; they apply
-                # only to files with a strictly smaller data sequence, so
-                # the batch appended here (seq > every pending delete's
-                # seq) is unaffected by them
-                new["equality_deletes"] = snap["equality_deletes"]
-            if self._try_commit(seq, new):
+            if snap is None:
+                fields["layout"] = "batch"
+                if spec:
+                    fields["partition_spec"] = spec
+            committed = self._commit(
+                snap, fields, added=files, stats=stats, parts=parts
+            )
+            if committed is not None:
                 if on_commit is not None:
-                    on_commit(new)
-                return new
-
-    def _append_fast(
-        self,
-        snap: Optional[dict],
-        df: DataFrame,
-        batch_id: str,
-        files: List[str],
-        n_rows: int,
-        stats: dict,
-        parts: dict,
-        spec: list,
-        t0: float,
-        _resolve_schema,
-        lineage: Optional[dict] = None,
-    ) -> Optional[dict]:
-        """One CAS attempt of the O(1)-metadata append: appends only ADD
-        files, so every parent manifest is reused by reference without
-        being read — the commit writes exactly one new manifest (the
-        staged batch) plus one snapshot JSON, and carries the parent's
-        manifest refs and summaries verbatim.  Commit metadata I/O is
-        therefore independent of table size: at 10^12 rows / thousands
-        of shards an append still reads one snapshot JSON and writes two
-        small files.  Returns the committed snapshot (raw manifest form
-        — ``read``/``current_snapshot`` materialize the file view), or
-        None on a lost CAS (caller re-reads and retries; this attempt's
-        manifest becomes an orphan reclaimed by ``remove_orphans``,
-        exactly like ``_deflate``'s lost-CAS manifests)."""
-        seq = (snap["snapshot_id"] + 1) if snap else 1
-        m = {
-            "files": files,
-            "file_stats": stats,
-            # data sequence (Iceberg v2): staged by THIS commit
-            "file_seq": {f: seq for f in files},
-        }
-        if parts:
-            m["file_partitions"] = parts
-        ref = "mf-%08d-%s.json" % (seq, uuid.uuid4().hex)
-        os.makedirs(self.snap_dir, exist_ok=True)
-        with open(os.path.join(self.snap_dir, ref), "w") as f:
-            json.dump(m, f)
-            f.flush()
-            os.fsync(f.fileno())
-        self._manifest_cache[ref] = m
-        parent_refs = list(snap.get("manifests", [])) if snap else []
-        parent_sums = snap.get("manifest_summaries", {}) if snap else {}
-        new = {
-            "snapshot_id": seq,
-            "parent": snap["snapshot_id"] if snap else None,
-            "operation": "append",
-            # re-validated per attempt against the FRESH snapshot — a
-            # lost CAS may mean the schema evolved under us
-            "schema": _resolve_schema(snap),
-            "layout": snap.get("layout", "batch") if snap else "batch",
-            "manifests": parent_refs + [ref],
-            "manifest_summaries": {
-                **{r: parent_sums[r] for r in parent_refs if r in parent_sums},
-                ref: _manifest_summary(m),
-            },
-            "batch_ids": sorted(set(snap["batch_ids"]) | {batch_id})
-            if snap
-            else [batch_id],
-            "lineage": {
-                **(snap.get("lineage", {}) if snap else {}),
-                batch_id: {
-                    **(lineage or {}),
-                    "n_rows": n_rows,
-                    "n_files": len(files),
-                    "wall_s": round(time.time() - t0, 3),
-                },
-            },
-            "committed_at": time.time(),
-        }
-        if spec:
-            new["partition_spec"] = spec
-        if snap and "sort_order" in snap:
-            new["sort_order"] = snap["sort_order"]
-        if snap and snap.get("equality_deletes"):
-            # pending merge-on-read deletes carry forward; they apply
-            # only to files with a strictly smaller data sequence, so
-            # this batch (seq > every pending delete's seq) is unaffected
-            new["equality_deletes"] = snap["equality_deletes"]
-        return new if self._try_commit(seq, new) else None
+                    on_commit(committed)
+                return committed
 
     # ------------------------------------------------------------------
     # partitioned staging
@@ -515,8 +398,6 @@ class SnapTable:
         write itself."""
         stage_abs = os.path.join(self.path, stage_rel)
         if spec:
-            from pyspark.sql import functions as F  # noqa: F401
-
             w = df
             for p in spec:
                 w = w.withColumn(p["name"], _transform_col(p, dict(df.dtypes)))
@@ -532,13 +413,7 @@ class SnapTable:
             )
         else:
             df.write.mode("error").parquet(stage_abs)
-        files = []
-        for root, _dirs, names in os.walk(stage_abs):
-            rel_root = os.path.relpath(root, self.path)
-            for f in names:
-                if f.endswith(".parquet"):
-                    files.append(os.path.join(rel_root, f))
-        files.sort()
+        files = self._staged_files(stage_abs)
         n_rows = sum(
             _footer_rows(os.path.join(self.path, f)) for f in files
         )
@@ -548,45 +423,81 @@ class SnapTable:
         )
         return files, n_rows, stats, parts
 
-    def _deflate(self, seq: int, snap: dict) -> dict:
-        """Shard the snapshot's heavy file state into manifest files.
+    def _staged_files(self, stage_abs: str) -> List[str]:
+        """Table-relative paths of the parquet files a write left under
+        ``stage_abs`` (hive partition dirs included), sorted."""
+        files = []
+        for root, _dirs, names in os.walk(stage_abs):
+            rel_root = os.path.relpath(root, self.path)
+            files.extend(
+                os.path.join(rel_root, f) for f in names if f.endswith(".parquet")
+            )
+        return sorted(files)
 
-        Manifest reuse is what bounds commit I/O: every parent manifest
-        whose files all survive into this snapshot is re-pointed as-is
-        (appends reuse ALL of them), and only the files not covered by a
-        reused manifest — the new batch, or the survivors of a partial
-        rewrite — land in one freshly written manifest.  Manifests are
-        never mutated after a snapshot references them, so the reuse
-        check is a set comparison, and a lost CAS leaves at worst an
-        unreferenced manifest file (reclaimed by expire/orphan GC, same
-        as staged data)."""
-        files = snap.get("files", [])
-        stats = snap.get("file_stats", {})
-        parts = snap.get("file_partitions", {})
-        fileset = set(files)
-        parent = (
-            self._raw_snapshot(snap["parent"]) if snap.get("parent") else None
-        )
+    def _commit(
+        self,
+        parent: Optional[dict],
+        fields: dict,
+        added: List[str] = (),
+        stats: Optional[dict] = None,
+        parts: Optional[dict] = None,
+        dropped: Set[str] = frozenset(),
+    ) -> Optional[dict]:
+        """One CAS attempt of the snapshot after ``parent`` — the only
+        writer of commit metadata.
+
+        ``parent`` is the current snapshot (raw or inflated; None creates
+        the table).  The new snapshot carries the parent's light keys,
+        then ``fields`` — what the operation sets; a field given as None
+        is removed.  Its manifest list re-points, by reference, every
+        parent manifest that holds no ``dropped`` file: an append drops
+        nothing, so it loads no parent manifest and commit I/O is
+        O(batch) at any table size.  The ``added`` files (with their
+        footer ``stats`` and partition values ``parts``) and the
+        survivors of touched manifests land in ONE new manifest;
+        survivors keep their data sequence, added files get the new
+        snapshot's (Iceberg v2: equality deletes apply only to
+        strictly-older files).  Manifests are never mutated after a
+        snapshot references them, and their summaries are carried
+        verbatim, so scan planning can skip whole shards without
+        loading them.
+
+        Returns the committed snapshot in raw form, or None on a lost
+        CAS (the caller re-reads and retries; the manifest written here
+        becomes an orphan that ``remove_orphans`` reclaims)."""
+        os.makedirs(self.snap_dir, exist_ok=True)
+        seq = parent["snapshot_id"] + 1 if parent else 1
         refs: List[str] = []
-        covered: Set[str] = set()
-        for ref in (parent or {}).get("manifests", []):
-            mset = set(self._load_manifest(ref)["files"])
-            if mset and mset <= fileset and not (mset & covered):
+        sums: Dict[str, dict] = {}
+        parent_sums = parent.get("manifest_summaries", {}) if parent else {}
+        files: List[str] = []
+        fstats: Dict[str, dict] = {}
+        fparts: Dict[str, dict] = {}
+        fseq: Dict[str, int] = {}
+        for ref in parent["manifests"] if parent else ():
+            old = self._load_manifest(ref) if dropped else None
+            if old is None or dropped.isdisjoint(old["files"]):
                 refs.append(ref)
-                covered |= mset
-        rest = [f for f in files if f not in covered]
-        if rest or not refs:
-            fseq = snap.get("file_seq", {})
+                if ref in parent_sums:
+                    sums[ref] = parent_sums[ref]
+                continue
+            for f in old["files"]:
+                if f not in dropped:
+                    files.append(f)
+                    fseq[f] = old["file_seq"][f]
+            fstats.update(old["file_stats"])
+            fparts.update(old.get("file_partitions", {}))
+        files.extend(added)
+        fseq.update(dict.fromkeys(added, seq))
+        fstats.update(stats or {})
+        fparts.update(parts or {})
+        if files:
             m = {
-                "files": rest,
-                "file_stats": {f: stats[f] for f in rest if f in stats},
-                # data sequence numbers (Iceberg v2): a file carried from
-                # the parent keeps its original commit seq; a file staged
-                # by THIS commit gets the committing snapshot's seq.
-                # Equality deletes apply only to strictly-older files.
-                "file_seq": {f: fseq.get(f, seq) for f in rest},
+                "files": files,
+                "file_stats": _keep_keys(fstats, files),
+                "file_seq": fseq,
             }
-            mparts = {f: parts[f] for f in rest if f in parts}
+            mparts = _keep_keys(fparts, files)
             if mparts:
                 m["file_partitions"] = mparts
             ref = "mf-%08d-%s.json" % (seq, uuid.uuid4().hex)
@@ -596,49 +507,35 @@ class SnapTable:
                 os.fsync(f.fileno())
             self._manifest_cache[ref] = m
             refs.append(ref)
-        out = {
+            sums[ref] = _manifest_summary(m)
+        new = {
             k: v
-            for k, v in snap.items()
-            if k
-            not in (
-                "files",
-                "file_stats",
-                "file_partitions",
-                "file_seq",
-                "manifest_summaries",
-            )
+            for k, v in (parent or {}).items()
+            if k not in ("files", "file_stats", "file_partitions", "file_seq")
         }
-        out["manifests"] = refs
-        # manifest-list summaries (Iceberg manifest_file partition
-        # summaries): carried verbatim for reused refs, computed from the
-        # in-hand manifest otherwise — scan planning uses them to skip
-        # whole shards without loading them
-        parent_sums = (parent or {}).get("manifest_summaries", {})
-        out["manifest_summaries"] = {
-            ref: parent_sums.get(ref) or _manifest_summary(self._load_manifest(ref))
-            for ref in refs
-        }
-        return out
+        new["snapshot_id"] = seq
+        new["parent"] = parent["snapshot_id"] if parent else None
+        for k, v in fields.items():
+            if v is None:
+                new.pop(k, None)
+            else:
+                new[k] = v
+        new["manifests"] = refs
+        new["manifest_summaries"] = sums
+        new["committed_at"] = time.time()
+        return new if self._try_commit(seq, new) else None
 
     def _try_commit(self, seq: int, snap: dict) -> bool:
-        os.makedirs(self.snap_dir, exist_ok=True)
-        # _append_fast hands in a snapshot already in manifest form (its
-        # one new manifest is written, parent refs carried) — committing
-        # it verbatim is what keeps appends O(1) metadata I/O; every
-        # other path carries the inflated file view and gets sharded here
-        already_sharded = "manifests" in snap and "files" not in snap
-        deflated = snap if already_sharded else self._deflate(seq, snap)
+        """Create snapshot ``seq`` atomically (the CAS); False when the
+        sequence number is already taken."""
         tmp = os.path.join(self.snap_dir, ".tmp-%s" % uuid.uuid4().hex)
         final = os.path.join(self.snap_dir, _SNAP_FMT % seq)
         with open(tmp, "w") as f:
-            json.dump(deflated, f)
+            json.dump(snap, f)
             f.flush()
             os.fsync(f.fileno())
         try:
             os.link(tmp, final)  # atomic create-if-absent (CAS)
-            # the caller keeps (and returns) its inflated dict — point it
-            # at the refs actually committed, not a stale spread-copy
-            snap["manifests"] = deflated["manifests"]
             return True
         except FileExistsError:
             return False  # lost the race — caller re-reads and retries
@@ -702,35 +599,26 @@ class SnapTable:
                     % (self.path, batch_id)
                 )
             old = {f for f in snap["files"] if _batch_of(f) == batch_id}
-            new_files = [f for f in snap["files"] if f not in old] + files
-            seq = snap["snapshot_id"] + 1
-            new = {
-                **snap,
-                "snapshot_id": seq,
-                "parent": snap["snapshot_id"],
-                "operation": "overwrite",
-                "files": new_files,
-                "file_stats": _keep_keys(
-                    {**snap.get("file_stats", {}), **stats}, new_files
-                ),
-                "lineage": {
-                    **snap.get("lineage", {}),
-                    batch_id: {
-                        **(lineage or {}),
-                        "n_rows": n_rows,
-                        "n_files": len(files),
-                        "wall_s": round(time.time() - t0, 3),
-                        "replaced_in": seq,
-                    },
+            lin = {
+                **snap["lineage"],
+                batch_id: {
+                    **(lineage or {}),
+                    "n_rows": n_rows,
+                    "n_files": len(files),
+                    "wall_s": round(time.time() - t0, 3),
+                    "replaced_in": snap["snapshot_id"] + 1,
                 },
-                "committed_at": time.time(),
             }
-            if spec:
-                new["file_partitions"] = _keep_keys(
-                    {**snap.get("file_partitions", {}), **parts}, new_files
-                )
-            if self._try_commit(seq, new):
-                return new
+            new = self._commit(
+                snap,
+                {"operation": "overwrite", "lineage": lin},
+                added=files,
+                stats=stats,
+                parts=parts,
+                dropped=old,
+            )
+            if new is not None:
+                return self._inflate(new)
 
     def delete_keys(
         self,
@@ -818,26 +706,25 @@ class SnapTable:
                 for d in cur.get("equality_deletes", [])
             ):
                 return cur  # lost the race to our own replay
-            seq = cur["snapshot_id"] + 1
             entry = {
                 "files": files,
                 "key_cols": key_cols,
                 "n_keys": n_keys,
                 # applies to data files with file_seq strictly below this
-                "seq": seq,
+                "seq": cur["snapshot_id"] + 1,
             }
             if delete_id is not None:
                 entry["delete_id"] = delete_id
-            new = {
-                **cur,
-                "snapshot_id": seq,
-                "parent": cur["snapshot_id"],
-                "operation": "delete-mor",
-                "equality_deletes": cur.get("equality_deletes", []) + [entry],
-                "committed_at": time.time(),
-            }
-            if self._try_commit(seq, new):
-                return new
+            # no data file changes: every manifest is re-pointed as-is
+            new = self._commit(
+                cur,
+                {
+                    "operation": "delete-mor",
+                    "equality_deletes": cur.get("equality_deletes", []) + [entry],
+                },
+            )
+            if new is not None:
+                return self._inflate(new)
 
     def pending_deletes(self) -> List[dict]:
         """The equality-delete entries ``read()`` is currently merging
@@ -928,55 +815,47 @@ class SnapTable:
                 "delete rewrite row mismatch in %s: %d survivors != %d - %d"
                 % (self.path, n_rows, old_rows, rows_deleted)
             )
-        while True:
-            cur = self.current_snapshot()
-            if cur["snapshot_id"] != snap["snapshot_id"]:
-                return None  # plan is stale vs a concurrent commit — re-run
-            hit_set = set(hit_files)
-            new_files = [f for f in cur["files"] if f not in hit_set] + files
-            # lineage correction: attribute deleted rows to their batches
-            # while the layout still allows it, else record one negative
-            # correction entry — row_count() stays exact either way
-            lin = {k: dict(v) for k, v in cur.get("lineage", {}).items()}
-            unattributed = 0
-            for f, n in hit_rows.items():
-                b = _batch_of(f)
-                if b is not None and b in lin and cur.get("layout", "batch") == "batch":
-                    lin[b]["n_rows"] = lin[b].get("n_rows", 0) - n
-                else:
-                    unattributed += n
-            seq = cur["snapshot_id"] + 1
-            if unattributed:
-                lin["__delete_snap%08d__" % seq] = {
-                    "n_rows": -unattributed,
-                    "n_files": 0,
-                    "predicate": predicate,
-                }
-            new = {
-                **cur,
-                "snapshot_id": seq,
-                "parent": cur["snapshot_id"],
+        cur = self.current_snapshot()
+        if cur["snapshot_id"] != snap["snapshot_id"]:
+            return None  # plan is stale vs a concurrent commit — re-run
+        # lineage correction: attribute deleted rows to their batches
+        # while the layout still allows it, else record one negative
+        # correction entry — row_count() stays exact either way
+        lin = {k: dict(v) for k, v in cur.get("lineage", {}).items()}
+        unattributed = 0
+        for f, n in hit_rows.items():
+            b = _batch_of(f)
+            if b is not None and b in lin and cur.get("layout", "batch") == "batch":
+                lin[b]["n_rows"] = lin[b].get("n_rows", 0) - n
+            else:
+                unattributed += n
+        if unattributed:
+            lin["__delete_snap%08d__" % (cur["snapshot_id"] + 1)] = {
+                "n_rows": -unattributed,
+                "n_files": 0,
+                "predicate": predicate,
+            }
+        new = self._commit(
+            cur,
+            {
                 "operation": "delete",
-                "files": new_files,
-                "file_stats": _keep_keys(
-                    {**cur.get("file_stats", {}), **new_stats}, new_files
-                ),
                 "lineage": lin,
                 # survivors live outside their batch dirs now: per-batch
                 # fsck attribution is over for this table
                 "layout": "compacted",
                 "delete_of": cur["snapshot_id"],
-                "committed_at": time.time(),
-            }
-            if spec:
-                new["file_partitions"] = _keep_keys(
-                    {**cur.get("file_partitions", {}), **parts}, new_files
-                )
-            if self._try_commit(seq, new):
-                report["rows_deleted"] = rows_deleted
-                report["files_rewritten"] = len(hit_files)
-                report["snapshot"] = new
-                return report
+            },
+            added=files,
+            stats=new_stats,
+            parts=parts,
+            dropped=set(hit_files),
+        )
+        if new is None:
+            return None  # lost the CAS to a concurrent commit — re-run
+        report["rows_deleted"] = rows_deleted
+        report["files_rewritten"] = len(hit_files)
+        report["snapshot"] = self._inflate(new)
+        return report
 
     # ------------------------------------------------------------------
     # maintenance: compaction + expiry (the small-file problem)
@@ -1066,56 +945,44 @@ class SnapTable:
         stage_rel = os.path.join("data", "compact-%s" % uuid.uuid4().hex)
         stage_abs = os.path.join(self.path, stage_rel)
         writer.parquet(stage_abs)
-        files = []
-        for root, _dirs, names in os.walk(stage_abs):
-            rel_root = os.path.relpath(root, self.path)
-            files.extend(
-                os.path.join(rel_root, f) for f in names if f.endswith(".parquet")
+        files = self._staged_files(stage_abs)
+        stats = _file_stats(self.path, files)
+        parts = {f: _parse_partition_values(f, spec) for f in files} if spec else None
+        cur = self.current_snapshot()
+        if cur["snapshot_id"] != snap["snapshot_id"]:
+            return None  # concurrent commit — drop this rewrite, retry later
+        fields = {
+            "operation": "compact",
+            "compaction_of": cur["snapshot_id"],
+            "layout": "compacted",  # sticky: appends carry it forward
+        }
+        if pending:
+            # the rewrite read through read(), which merged the pending
+            # equality deletes — they are materialized now.  Reconcile
+            # lineage with ONE negative correction entry so
+            # row_count()/fsck stay exact (the per-key overlap was
+            # unknowable until this scan).
+            fields["equality_deletes"] = None
+            staged_rows = sum(
+                _footer_rows(os.path.join(self.path, f)) for f in files
             )
-        files.sort()
-        while True:
-            cur = self.current_snapshot()
-            if cur["snapshot_id"] != snap["snapshot_id"]:
-                return None  # concurrent commit — drop this rewrite, retry later
-            seq = cur["snapshot_id"] + 1
-            new = {
-                **cur,
-                "snapshot_id": seq,
-                "parent": cur["snapshot_id"],
-                "operation": "compact",
-                "files": files,
-                "file_stats": _file_stats(self.path, files),
-                "compaction_of": cur["snapshot_id"],
-                "layout": "compacted",  # sticky: appends carry it forward
-                "committed_at": time.time(),
-            }
-            if pending:
-                # the rewrite read through read(), which merged the
-                # pending equality deletes — they are materialized now.
-                # Reconcile lineage with ONE negative correction entry so
-                # row_count()/fsck stay exact (the per-key overlap was
-                # unknowable until this scan).
-                new.pop("equality_deletes", None)
-                staged_rows = sum(
-                    _footer_rows(os.path.join(self.path, f)) for f in files
-                )
-                lin = dict(cur.get("lineage", {}))
-                expected = sum(l.get("n_rows", 0) for l in lin.values())
-                if staged_rows != expected:
-                    lin["__eqdelete_snap%08d__" % seq] = {
-                        "n_rows": staged_rows - expected,
-                        "n_files": 0,
-                        "applied_deletes": len(cur.get("equality_deletes", [])),
-                    }
-                new["lineage"] = lin
-            if sort_by:
-                new["sort_order"] = sort_by  # sticky table sort order
-            if spec:
-                new["file_partitions"] = {
-                    f: _parse_partition_values(f, spec) for f in files
+            lin = dict(cur["lineage"])
+            expected = sum(l.get("n_rows", 0) for l in lin.values())
+            if staged_rows != expected:
+                lin["__eqdelete_snap%08d__" % (cur["snapshot_id"] + 1)] = {
+                    "n_rows": staged_rows - expected,
+                    "n_files": 0,
+                    "applied_deletes": len(cur["equality_deletes"]),
                 }
-            if self._try_commit(seq, new):
-                return new
+            fields["lineage"] = lin
+        if sort_by:
+            fields["sort_order"] = sort_by  # sticky table sort order
+        new = self._commit(
+            cur, fields, added=files, stats=stats, parts=parts,
+            dropped=set(cur["files"]),
+        )
+        # a lost CAS means a concurrent commit: drop this rewrite
+        return None if new is None else self._inflate(new)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Drop all but the newest ``keep_last`` snapshots and delete
@@ -1145,9 +1012,9 @@ class SnapTable:
         # listed snapshots whose loads/scans explode on deleted paths
         for s in dropped:
             os.unlink(os.path.join(self.snap_dir, _SNAP_FMT % s["snapshot_id"]))
-        kept_refs = {r for s in kept for r in s.get("manifests", [])}
+        kept_refs = {r for s in kept for r in s["manifests"]}
         for r in sorted(
-            {r for s in dropped for r in s.get("manifests", [])} - kept_refs
+            {r for s in dropped for r in s["manifests"]} - kept_refs
         ):
             p = os.path.join(self.snap_dir, r)
             if os.path.exists(p):
@@ -1179,7 +1046,7 @@ class SnapTable:
         Also reclaims manifest files of lost-CAS commit attempts (written
         before the snapshot CAS, referenced by nothing)."""
         snaps = self.snapshots()
-        live_refs = {r for s in snaps for r in s.get("manifests", [])}
+        live_refs = {r for s in snaps for r in s["manifests"]}
         n_mf = 0
         now = time.time()
         if os.path.isdir(self.snap_dir):
@@ -1338,16 +1205,7 @@ class SnapTable:
             # later-added columns, and the column order is stable; the
             # helper merges any pending equality deletes into the scan
             df = self._scan_with_deletes(spark, snap, files, schema)
-        from pyspark.sql import functions as F
-
-        for kind, args in residual:
-            if kind == "eq":
-                df = df.where(F.col(args[0]) == F.lit(args[1]))
-            else:  # "between"
-                df = df.where(
-                    F.col(args[0]).between(F.lit(args[1]), F.lit(args[2]))
-                )
-        return df
+        return _apply_residual(df, residual)
 
     def _scan_with_deletes(
         self, spark: SparkSession, snap: dict, files: List[str], schema
@@ -1464,7 +1322,7 @@ class SnapTable:
         files_total/files_kept``.  Results are identical to inflating
         everything and running ``_plan_files`` — summaries only ever
         skip shards that provably contain no match, and shards without
-        a summary (legacy commits) are always loaded."""
+        a summary are always loaded."""
         if snapshot_id is None:
             raw = self._raw_current()
         else:
@@ -1475,22 +1333,6 @@ class SnapTable:
                 )
         if raw is None:
             return None
-        if "manifests" not in raw:  # legacy inline snapshot — one doc
-            snap = self._inflate(raw)
-            files, residual = self._plan_files(
-                snap, between, partition_where, eq
-            )
-            fseq = snap.get("file_seq", {})
-            return {
-                "snap": snap,
-                "files": files,
-                "residual": residual,
-                "file_seq": {f: fseq.get(f, 0) for f in files},
-                "manifests_total": 0,
-                "manifests_loaded": 0,
-                "files_total": len(snap["files"]),
-                "files_kept": len(files),
-            }
         spec = raw.get("partition_spec") or []
         want, ranges, residual = _scan_predicates(
             spec, between, partition_where, eq
@@ -1594,19 +1436,13 @@ class SnapTable:
         sound — a batch appended and then partially deleted inside the
         range leaves the endpoints consistent while rows-added is
         ill-defined — so every intermediate manifest must still exist
-        (expired intermediates fail loudly rather than guess).  Legacy
-        snapshots without the field are derived from the parent's file
-        set: appends only add names (staging dirs are uuid-fresh, names
-        never reused), every other operation drops at least one.
+        (expired intermediates fail loudly rather than guess).
 
-        Metadata I/O is O(delta) on sharded tables: an append never
-        drops a manifest ref, so the added files are exactly the files
-        of the manifest refs present in ``to`` but not in ``after`` —
-        only those delta shards are loaded.  (A consumer of a
-        10^12-row table pays metadata proportional to what it consumes,
-        not to the table.)  Endpoints that predate sharding, or a ref
-        set that is not a clean superset, fall back to inflating both
-        endpoints and diffing file sets."""
+        Metadata I/O is O(delta): an append never drops a manifest ref,
+        so the added files are exactly the files of the manifest refs
+        present in ``to`` but not in ``after`` — only those delta shards
+        are loaded.  (A consumer of a 10^12-row table pays metadata
+        proportional to what it consumes, not to the table.)"""
         if to_snapshot_id is None:
             to_raw = self._raw_current()
         else:
@@ -1626,65 +1462,38 @@ class SnapTable:
                 )
         # intermediates are read RAW — the walk needs only each link's
         # operation record, not its inflated file view
-        chain = {to_raw["snapshot_id"]: to_raw}
-        for sid in range(after_snapshot_id + 1, to_raw["snapshot_id"]):
-            raw = self._raw_snapshot(sid)
-            if raw is None:
-                raise ValueError(
-                    "no snapshot %d in %s" % (sid, self.path)
-                )
-            chain[sid] = raw
-        for sid in range(after_snapshot_id + 1, to_raw["snapshot_id"] + 1):
-            snap = chain[sid]
-            op = snap.get("operation")
-            if op is None:  # legacy manifest: derive from the parent
-                parent = (
-                    self._inflate(after_raw)
-                    if sid == after_snapshot_id + 1
-                    else self._inflate(chain[sid - 1])
-                )
-                parent_files = set(parent["files"]) if parent else set()
-                op = (
-                    "append"
-                    if parent_files <= set(self._inflate(snap)["files"])
-                    else "non-append"
-                )
-            if op != "append":
+        sids = range(after_snapshot_id + 1, to_raw["snapshot_id"] + 1)
+        chain = [
+            to_raw if sid == to_raw["snapshot_id"] else self._raw_snapshot(sid)
+            for sid in sids
+        ]
+        for sid, snap in zip(sids, chain):
+            if snap is None:
+                raise ValueError("no snapshot %d in %s" % (sid, self.path))
+        for sid, snap in zip(sids, chain):
+            if snap["operation"] != "append":
                 raise ValueError(
                     "snapshot %d of %s is a non-append change (%s) — "
                     "incremental rows-added is undefined over %d..%d; "
                     "re-read the table in full"
-                    % (sid, self.path, op, after_snapshot_id,
+                    % (sid, self.path, snap["operation"], after_snapshot_id,
                        to_raw["snapshot_id"])
                 )
-        # fast arm: both endpoints sharded and the ref set grew cleanly —
-        # load ONLY the delta shards
-        if "manifests" in to_raw and (
-            after_raw is None or "manifests" in after_raw
-        ):
-            prior_refs = set(after_raw["manifests"]) if after_raw else set()
-            if prior_refs <= set(to_raw["manifests"]):
-                added: List[str] = []
-                stats: Dict[str, dict] = {}
-                parts: Dict[str, dict] = {}
-                for ref in to_raw["manifests"]:
-                    if ref in prior_refs:
-                        continue
-                    m = self._load_manifest(ref)
-                    added.extend(m["files"])
-                    stats.update(m.get("file_stats", {}))
-                    parts.update(m.get("file_partitions", {}))
-                view = {**to_raw, "files": added, "file_stats": stats}
-                if parts:
-                    view["file_partitions"] = parts
-                return added, view
-        # fallback: endpoint diff over full file views (legacy inline
-        # snapshots, or a ref set reshaped by an interleaved maintenance
-        # commit — the append walk above already proved row semantics)
-        to = self._inflate(to_raw)
-        after = self._inflate(after_raw)
-        prior = set(after["files"]) if after else set()
-        return [f for f in to["files"] if f not in prior], to
+        prior_refs = set(after_raw["manifests"]) if after_raw else set()
+        added: List[str] = []
+        stats: Dict[str, dict] = {}
+        parts: Dict[str, dict] = {}
+        for ref in to_raw["manifests"]:
+            if ref in prior_refs:
+                continue
+            m = self._load_manifest(ref)
+            added.extend(m["files"])
+            stats.update(m.get("file_stats", {}))
+            parts.update(m.get("file_partitions", {}))
+        view = {**to_raw, "files": added, "file_stats": stats}
+        if parts:
+            view["file_partitions"] = parts
+        return added, view
 
     def read_incremental(
         self,
@@ -1727,16 +1536,7 @@ class SnapTable:
             df = spark.read.schema(schema).parquet(
                 *[os.path.join(self.path, f) for f in files]
             )
-        from pyspark.sql import functions as F
-
-        for kind, args in residual:
-            if kind == "eq":
-                df = df.where(F.col(args[0]) == F.lit(args[1]))
-            else:
-                df = df.where(
-                    F.col(args[0]).between(F.lit(args[1]), F.lit(args[2]))
-                )
-        return df
+        return _apply_residual(df, residual)
 
     def incremental_batches(
         self, after_snapshot_id: int, to_snapshot_id: Optional[int] = None
@@ -1889,6 +1689,19 @@ def _footer_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def _apply_residual(df: DataFrame, residual: list) -> DataFrame:
+    """The exact row predicates file pruning leaves to the scan (the
+    ``residual`` of ``_scan_predicates``): ``eq`` and ``between``."""
+    from pyspark.sql import functions as F
+
+    for kind, args in residual:
+        if kind == "eq":
+            df = df.where(F.col(args[0]) == F.lit(args[1]))
+        else:  # "between"
+            df = df.where(F.col(args[0]).between(F.lit(args[1]), F.lit(args[2])))
+    return df
 
 
 def _keep_keys(d: dict, keys) -> dict:

@@ -8,7 +8,7 @@ OBU in the coded bitstream)."""
 import pytest
 
 from hquery_php_spark.operators import codecconfig as cc
-from hquery_php_spark.operators._refcodecs import load_libavif
+from _refcodecs import load_libavif
 from hquery_php_spark.operators.mediameta import encode_mp4_stub, mp4_meta
 
 LIBAVIF = load_libavif()

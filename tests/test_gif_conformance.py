@@ -10,7 +10,7 @@ Skips when giflib is absent."""
 import numpy as np
 import pytest
 
-from hquery_php_spark.operators._refcodecs import load_libgif
+from _refcodecs import load_libgif
 from hquery_php_spark.operators.gif import encode_gif, encode_gif_animation
 
 LIBGIF = load_libgif()

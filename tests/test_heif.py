@@ -16,7 +16,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hquery_php_spark.operators._refcodecs import load_libavif
+from _refcodecs import load_libavif
 from hquery_php_spark.operators.heif import encode_heif_stub, heif_meta
 from hquery_php_spark.operators.multimodal import sniff_media_type
 

@@ -9,7 +9,7 @@ absent."""
 import numpy as np
 import pytest
 
-from hquery_php_spark.operators._refcodecs import load_libpng
+from _refcodecs import load_libpng
 from hquery_php_spark.operators.multimodal import decode_png, encode_png
 
 LIBPNG = load_libpng()

@@ -1027,3 +1027,136 @@ def test_sharded_manifests_commit_cost_is_per_batch(spark, tmp_path):
     assert tbl.remove_orphans(older_than_s=60) >= 1
     assert not os.path.exists(stray)
     assert tbl.fsck()["ok"]
+
+
+# ----------------------------------------------------------------------
+# one snapshot format, one commit path
+
+
+_SNAP_KEYS = {
+    "snapshot_id", "parent", "operation", "schema", "layout", "manifests",
+    "manifest_summaries", "batch_ids", "lineage", "committed_at",
+    "partition_spec",
+}
+_MANIFEST_KEYS = {"files", "file_stats", "file_seq", "file_partitions"}
+
+
+def _raw(tbl, sid):
+    return json.load(open(os.path.join(tbl.snap_dir, "snap-%08d.json" % sid)))
+
+
+def _new_manifests(tbl, sid):
+    """Manifests snapshot ``sid`` references that its parent did not."""
+    prior = set(_raw(tbl, sid - 1)["manifests"]) if sid > 1 else set()
+    return [
+        json.load(open(os.path.join(tbl.snap_dir, r)))
+        for r in _raw(tbl, sid)["manifests"]
+        if r not in prior
+    ]
+
+
+def test_commit_kinds_write_pinned_snapshot_and_manifest_keys(spark, tmp_path):
+    """Every commit kind writes the same manifest-sharded format: a
+    light snapshot JSON (no per-file maps) with exactly these keys, and
+    at most one new manifest with exactly these keys.  Survivors of a
+    touched manifest keep their data sequence."""
+    tbl = SnapTable(str(tmp_path / "t"), partition_spec=[("id", "bucket", 4)])
+    wide = "id int, v string, score double"
+
+    tbl.append(_df(spark, range(10)), "b0")  # 1: append creating a spec
+    tbl.append(  # 2: append with additive evolution
+        spark.createDataFrame([(i, "w", 1.0) for i in range(10, 20)], wide),
+        "b1",
+        allow_evolution=True,
+    )
+    tbl.replace_batch(  # 3
+        spark.createDataFrame([(i, "r", 2.0) for i in range(100, 104)], wide),
+        "b0",
+    )
+    tbl.delete_keys(spark.createDataFrame([(12,)], "id int"))  # 4
+    tbl.compact(spark, min_files=1, sort_by=["id"])  # 5
+    tbl.delete_where(spark, "id = 101")  # 6
+    tbl.append(  # 7
+        spark.createDataFrame([(i, "z", 3.0) for i in range(30, 34)], wide), "b2"
+    )
+    want = {
+        1: ("append", _SNAP_KEYS, 1),
+        2: ("append", _SNAP_KEYS, 1),
+        3: ("overwrite", _SNAP_KEYS, 1),
+        4: ("delete-mor", _SNAP_KEYS | {"equality_deletes"}, 0),
+        5: ("compact", _SNAP_KEYS | {"compaction_of", "sort_order"}, 1),
+        6: ("delete", _SNAP_KEYS | {"compaction_of", "sort_order", "delete_of"}, 1),
+        7: ("append", _SNAP_KEYS | {"sort_order"}, 1),
+    }
+    for sid, (op, keys, n_new) in want.items():
+        raw = _raw(tbl, sid)
+        assert raw["operation"] == op, sid
+        assert set(raw) == keys, (sid, sorted(set(raw) ^ keys))
+        assert set(raw["manifest_summaries"]) == set(raw["manifests"]), sid
+        new = _new_manifests(tbl, sid)
+        assert len(new) == n_new, sid
+        for m in new:
+            assert set(m) == _MANIFEST_KEYS, (sid, sorted(m))
+            assert set(m["file_seq"]) == set(m["files"]) == set(m["file_partitions"])
+    # appends and delete_keys re-point every parent manifest verbatim
+    for sid in (2, 4, 7):
+        prev = _raw(tbl, sid - 1)
+        assert _raw(tbl, sid)["manifests"][: len(prev["manifests"])] == prev["manifests"]
+        assert all(
+            _raw(tbl, sid)["manifest_summaries"][r] == prev["manifest_summaries"][r]
+            for r in prev["manifests"]
+        )
+    # the delete rewrote one compacted file: the survivors keep seq 5
+    (m6,) = _new_manifests(tbl, 6)
+    assert sorted(set(m6["file_seq"].values())) == [5, 6]
+    assert tbl.read(spark).count() == 4 + 10 - 1 - 1 + 4
+    assert tbl.fsck()["ok"]
+
+
+def test_snapshot_without_manifests_is_rejected(spark, tmp_path):
+    """A snapshot JSON that lists its files inline (no manifest list) is
+    not a format this table reads: every entry point fails loudly."""
+    tbl = SnapTable(str(tmp_path / "t"))
+    tbl.append(_df(spark, range(3)), "b0")
+    inline = {
+        **_raw(tbl, 1),
+        "snapshot_id": 2,
+        "parent": 1,
+        "files": tbl.current_snapshot()["files"],
+    }
+    del inline["manifests"]
+    json.dump(inline, open(os.path.join(tbl.snap_dir, "snap-%08d.json" % 2), "w"))
+    cold = SnapTable(tbl.path)
+    for call in (
+        cold.current_snapshot,
+        cold.committed_batches,
+        cold.snapshots,
+        lambda: cold.read(spark),
+        lambda: cold.read_incremental(spark, 1),
+        lambda: cold.append(_df(spark, range(3, 5)), "b1"),
+    ):
+        with pytest.raises(ValueError, match="no manifest list"):
+            call()
+    # earlier snapshots stay readable by id
+    assert cold.read(spark, snapshot_id=1).count() == 3
+
+
+def test_try_commit_has_one_caller():
+    """Commit metadata has one writer: the snapshot CAS is reached from
+    exactly one function."""
+    import ast
+
+    import hquery_php_spark.sources.snaptable as mod
+
+    tree = ast.parse(open(mod.__file__).read())
+    callers = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "_try_commit"
+                ):
+                    callers.add(fn.name)
+    assert callers == {"_commit"}

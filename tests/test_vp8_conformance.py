@@ -22,7 +22,7 @@ import struct
 import numpy as np
 import pytest
 
-from hquery_php_spark.operators._refcodecs import load_libwebp
+from _refcodecs import load_libwebp
 from hquery_php_spark.operators.vp8 import (
     MBSpec,
     decode_vp8_rgba,

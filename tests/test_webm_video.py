@@ -206,7 +206,7 @@ def test_conformance_vs_libwebp_encoded_vp8():
     'VP8 ' chunk out of the RIFF container, mux it into WebM, and the
     WebM path must decode pixel-identically to the WebP path (which is
     itself pinned bit-exact against libwebp's decoder)."""
-    from hquery_php_spark.operators._refcodecs import load_libwebp
+    from _refcodecs import load_libwebp
     from hquery_php_spark.operators.webp import decode_webp
 
     lw = load_libwebp()

@@ -1,7 +1,7 @@
 """Conformance of the pure-Python WebP codec vs the system libwebp.
 
 The container happens to ship libwebp; these tests dlopen it through
-the struct-free simple API (operators/_refcodecs.py) and check
+the struct-free simple API (tests/_refcodecs.py) and check
 
 * our VP8L encoder's output is decoded bit-exact by libwebp, and
 * our VP8L decoder is bit-exact with libwebp's decoder on streams
@@ -20,7 +20,7 @@ be wrong for transparent pixels.
 import numpy as np
 import pytest
 
-from hquery_php_spark.operators._refcodecs import load_libwebp
+from _refcodecs import load_libwebp
 from hquery_php_spark.operators.webp import decode_webp, encode_webp_lossless
 
 LIBWEBP = load_libwebp()

@@ -81,6 +81,8 @@ def main():
         # that actually runs at scale)
         if name == "dedup_minhash":
             df = E._dedup_minhash_verify_df(spark, sf, [])
+        elif name == "curate":
+            df = E._curate_df(spark, sf, None, portable=True)
         elif name == "tfidf_top":
             from hquery_php_spark.functions.text import tfidf_top_terms
             df = tfidf_top_terms(E._spread(E._docs(spark, sf), spark), top_k=3)
