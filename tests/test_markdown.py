@@ -197,11 +197,15 @@ def test_markdown_df_mega_doc_among_small(tmp_path):
     the Arrow batch path (the mega-doc skew case the extract leg
     isolates with split-tail repartition)."""
     import gzip
+    import os
 
     import pytest
 
     pytest.importorskip("pyspark")
     from pyspark.sql import SparkSession
+    from test_stress_parity import GRANITO
+
+    from hquery_php_spark.sources import big_synthetic
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -211,9 +215,13 @@ def test_markdown_df_mega_doc_among_small(tmp_path):
     )
     from hquery_php_spark.operators.markdown import markdown_df
 
-    mega = gzip.open(
-        "/root/reference/tests/data/big_granito_1.html.gz", "rb"
-    ).read().decode("windows-1251", "replace")
+    # the reference's real 3.1MB page where it is present, else the
+    # in-repo port of its big_synthetic.html.sh generator (2.7MB)
+    if os.path.exists(GRANITO):
+        mega = gzip.open(GRANITO, "rb").read().decode("windows-1251", "replace")
+    else:
+        mega = big_synthetic()
+    assert len(mega) > 2_000_000  # the case stays multi-MB
     rows = [(0, mega)] + [(i, f"<h1>d{i}</h1><p>body {i}</p>") for i in range(1, 30)]
     df = spark.createDataFrame(rows, "doc_id long, html string")
     got = {r["doc_id"]: r for r in markdown_df(df).collect()}

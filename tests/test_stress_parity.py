@@ -7,6 +7,7 @@ the committed benchmark-log golden counts (tests/README.md:21-33).
 """
 
 import gzip
+import os
 import time
 
 import pytest
@@ -14,6 +15,13 @@ import pytest
 import hquery_php_spark as hq
 
 GRANITO = "/root/reference/tests/data/big_granito_1.html.gz"
+ATTR_HTML = os.path.join(os.path.dirname(GRANITO), "attr.html.gz")
+
+# the page is the reference's own fixture, not held in this repo: the
+# tests that read it run wherever it is present and skip elsewhere
+needs_granito = pytest.mark.skipif(
+    not os.path.exists(GRANITO), reason=f"reference stress page {GRANITO} absent"
+)
 
 # the reference's stress sweep list (tests/hQueryStress.Test.php:102-130)
 SELECTORS = [
@@ -46,6 +54,7 @@ def doc():
     return d
 
 
+@needs_granito
 def test_context_invariance(doc):
     body = doc.find("body")
     assert body
@@ -55,12 +64,14 @@ def test_context_invariance(doc):
         assert n_doc == n_body, (sel, n_doc, n_body)
 
 
+@needs_granito
 def test_golden_counts(doc):
     for sel, want in GOLDEN.items():
         got = len(doc.find(sel) or [])
         assert got == want, (sel, got, want)
 
 
+@needs_granito
 def test_extract_spans_runs(doc):
     spans = hq.extract_spans(doc)
     assert len(spans) > 10000
@@ -69,6 +80,7 @@ def test_extract_spans_runs(doc):
     assert offs == sorted(offs)
 
 
+@needs_granito
 def test_vs_stdlib_htmlparser(doc):
     """Layer-4 analogue of the reference's DOMCrawler comparison
     (tests/DOMCrawlerStress.Test.php): an independent parser must agree
@@ -104,10 +116,16 @@ def test_vs_stdlib_htmlparser(doc):
     assert t_ours < t_std * 1.2, (t_ours, t_std)
 
 
+@pytest.mark.skipif(
+    not os.path.exists(ATTR_HTML),
+    reason=f"reference fixture {ATTR_HTML} absent; the same seven assertions "
+    "run on its in-repo copy ATTR_QUOTES_HTML in "
+    "tests/test_find.py::test_attr_quotes",
+)
 def test_real_attr_html_fixture():
     """Exact assertions from hQueryCore.Test.php:341-362 on the actual
     reference fixture file (quoted attribute NAMES, misplaced quotes)."""
-    ff = hq.HDoc.from_file("/root/reference/tests/data/attr.html.gz")
+    ff = hq.HDoc.from_file(ATTR_HTML)
     assert len(ff.find("a.aa")) == 3
     assert len(ff.find("input")) == 3
     inp = ff.find("input[name=title]")
