@@ -28,7 +28,6 @@ from hquery_php_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
     ngram_jaccard_verify,
-    simhash64,
 )
 from hquery_php_spark.operators.pipeline import (
     explode_spans,
@@ -82,7 +81,7 @@ from hquery_php_spark.operators.similarity import (  # noqa: E402
 
 # augmented set (original + perturbed every-10th copy) → portable sign-LSH
 # buckets → exact cosine within equal buckets: the SQL twin of
-# q_embed_near_dup_lsh (embedding_near_dup with portable=True, 8 planes)
+# q_embed_near_dup_lsh (embedding_near_dup, 8 planes)
 _NEAR_DUP_LSH_SQL = f"""
 WITH e AS (
   SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -837,11 +836,10 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # single input split, and write_ivf_index's own repartition("bucket")
         # only kicks in AFTER the buckets are computed
         write_ivf_index(
-            _spread(embs, spark, key="vec_id"), idx, n_planes=6, portable=True
+            _spread(embs, spark, key="vec_id"), idx, n_planes=6
         )
     return ivf_topk_indexed(
-        spark, idx, qvec, k=10, n_planes=6, hamming_radius=2,
-        portable=True, exclude_id=0,
+        spark, idx, qvec, k=10, n_planes=6, hamming_radius=2, exclude_id=0,
     ).select("id", F.round("cos", 4).alias("cos_r"))
 
 
@@ -855,13 +853,11 @@ def _dedup_minhash_verify_df(
     d = _spread(_docs(spark, sf_dir), spark)
     # signatures are tiny (id + 16 longs/doc): persist so the LSH self-
     # join's two sides share one computation instead of re-shingling.
-    sigs = minhash_signatures(d, num_perm=16, shingle_k=8, portable=True).persist()
+    sigs = minhash_signatures(d, num_perm=16, shingle_k=8).persist()
     # candidates feed the verify stage twice (the candidate-id semi-join
     # prune and the pair join) — persist and materialize the small pair
     # table eagerly so sigs can be released before the verify runs.
-    cands = minhash_lsh_candidates(
-        sigs, bands=2, rows_per_band=8, exact_buckets=True
-    ).persist()
+    cands = minhash_lsh_candidates(sigs, bands=2, rows_per_band=8).persist()
     registry.append(cands)
     cands.count()
     sigs.unpersist()
@@ -876,7 +872,7 @@ def _dedup_minhash_verify_df(
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidates verified by exact n-gram Jaccard — the
-    portable polynomial/affine hash family with injective band keys, so
+    polynomial/affine hash family with injective band keys, so
     the whole probe→verify pipeline has an exact DuckDB value oracle
     (minhash_verify_oracle_sql)."""
     reg: list = []
@@ -946,8 +942,7 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit set-SimHash per doc over the portable char-8-gram family —
-    exact DuckDB value oracle (simhash_oracle_sql); the xxhash64 fast
-    path stays available as operators.dedup.simhash64."""
+    exact DuckDB value oracle (simhash_oracle_sql)."""
     from hquery_php_spark.operators.dedup import simhash64_portable_df
 
     return simhash64_portable_df(
@@ -2665,11 +2660,8 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _materialize_release(spark, out, reg)
 
 
-def _curate_df(
-    spark: SparkSession, sf_dir: str, registry: list | None, portable: bool
-) -> DataFrame:
-    """The LAZY composed curation program behind q_curate/q_curate_fast
-    (and tools/dump_plans.py's PLANS.md exhibit).  Every DataFrame it
+def _curate_df(spark: SparkSession, sf_dir: str, registry: list | None) -> DataFrame:
+    """The LAZY composed curation program behind q_curate (and tools/dump_plans.py's PLANS.md exhibit).  Every DataFrame it
     persists is appended to ``registry`` (None: nothing is persisted)."""
     from hquery_php_spark.operators.curate import CurateOptions, curate_corpus
 
@@ -2684,7 +2676,6 @@ def _curate_df(
         lsh_bands=2,
         rows_per_band=8,
         jaccard_threshold=0.6,
-        portable_hashes=portable,
         decontaminate_n=8,
         cap_per_domain=20,
         n_ranges=16,
@@ -2694,26 +2685,12 @@ def _curate_df(
 
 def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED curation pipeline end-to-end in one value-checked
-    query: Gopher+repetition gates → exact dedup → portable MinHash/LSH
+    query: Gopher+repetition gates → exact dedup → MinHash/LSH
     near-dup clusters (keep cluster min) → benchmark decontamination →
     PII redaction → per-domain cap → deterministic global order.  Twin:
     curate_oracle_sql (each stage reuses its already-pinned oracle)."""
     reg: list = []
-    out = _curate_df(spark, sf_dir, reg, portable=True)
-    return _materialize_release(spark, out, reg)
-
-
-def q_curate_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME composed curation pipeline on the PRODUCTION hash path
-    (xxhash64 JVM-side, portable_hashes=False) — the configuration a
-    real cluster job runs.  ROWS-ONLY by design: xxhash64 is not
-    reproducible in DuckDB, so there is no value twin; the pipeline's
-    VALUES are pinned by q_curate (portable twin, identical stages and
-    parameters).  This row exists so the headline bench cost reflects
-    the production hash, not the twin-checkable polynomial folds
-    (VERDICT r3: the portable path dominated the bench at 32s)."""
-    reg: list = []
-    out = _curate_df(spark, sf_dir, reg, portable=False)
+    out = _curate_df(spark, sf_dir, reg)
     return _materialize_release(spark, out, reg)
 
 
@@ -3152,7 +3129,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _augmented_embeddings(spark, sf_dir)
     pairs = embedding_near_dup(
-        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98, portable=True
+        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98
     )
     return connected_components(pairs)
 
@@ -3165,7 +3142,7 @@ def q_embed_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _augmented_embeddings(spark, sf_dir)
     return embedding_near_dup(
-        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98, portable=True
+        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98
     ).select("id_a", "id_b", F.round("cos", 4).alias("cos_r"))
 
 
@@ -3458,7 +3435,7 @@ def q_embed_near_dup_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _augmented_embeddings(spark, sf_dir)
     lsh_pairs = embedding_near_dup(
-        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98, portable=True
+        e, vec_col="v", id_col="id", n_planes=8, threshold=0.98
     ).persist()
     ex_pairs = q_embed_near_dup_exact(spark, sf_dir).persist()
     clusters = connected_components(lsh_pairs)
@@ -4111,10 +4088,6 @@ def q_docquality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Which original per-operator queries each consolidated registry entry
 # covers — the judge-readable mapping (also pinned by the contract test).
 SUITE_COVERS = {
-    # not a suite, but the registered portable-twin `curate` pins the
-    # values of the production-hash `curate_fast` (identical stages
-    # and parameters; only the hash family differs)
-    "curate": ["curate_fast"],
     "charset_suite": ["charset_detect", "charset_extract", "warc_envelope"],
     "text_profile": ["token_count", "lang_id", "lang_id_multi", "occurrence",
                      "fingerprint", "text_quality"],
@@ -4130,7 +4103,7 @@ SUITE_COVERS = {
     "logprob_suite": ["unigram_logprob", "bigram_logprob"],
     # unigram_train_real = the same trainer at real-corpus parameters;
     # its values are pinned by the driver-corpus twin + the
-    # distributed==reference pytest equality (curate_fast precedent)
+    # distributed==reference pytest equality
     "vocab_suite": ["vocab_top", "bpe_train", "bpe_encode",
                     "unigram_train", "unigram_encode",
                     "unigram_train_real"],
@@ -4211,7 +4184,6 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "domain_cap": q_domain_cap,
         "corpus_shuffle": q_corpus_shuffle,
         "curate": q_curate,
-        "curate_fast": q_curate_fast,  # rows-only: production xxhash path
         "tfidf_top": q_tfidf_top,
         "corpus_stats": q_corpus_stats,
         "bm25_search": q_bm25_search,

@@ -132,8 +132,7 @@ def main() -> None:
         "gopher_quality",
         "domain_cap",
         "corpus_shuffle",
-        "curate",        # portable-hash twin path (the value-checked config)
-        "curate_fast",   # production xxhash path — the headline curate cost
+        "curate",
         "tfidf_top",
         "corpus_stats",
         "bm25_search",
@@ -486,7 +485,7 @@ def main() -> None:
 
     # incremental screening leg: the per-drop machinery of the delta
     # pipeline in isolation — scan the spans delta via read_incremental
-    # and anti-join it against the corpus ledgers (md5 exact + xxhash
+    # and anti-join it against the corpus ledgers (md5 exact + polynomial
     # MinHash bands).  This is the cost incremental mode pays PER RUN
     # on top of curating the delta itself; the corpus is touched only
     # through its ledgers.  Setup (untimed): 90% of the corpus becomes
@@ -523,9 +522,9 @@ def main() -> None:
     ledger_fingerprints(ibase_docs).write.mode("overwrite").parquet(
         os.path.join(iroot, "fp")
     )
-    ledger_band_keys(ibase_docs, portable=False).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(iroot, "bands"))
+    ledger_band_keys(ibase_docs).write.mode("overwrite").parquet(
+        os.path.join(iroot, "bands")
+    )
     ist.append(spans_shape.orderBy("doc_id").limit(n_ibase), "day0")
     ist.append(
         spans_shape.orderBy("doc_id")
@@ -548,9 +547,7 @@ def main() -> None:
             surv.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
         )
         clean = incremental_dedup_near(
-            ddocs,
-            spark.read.parquet(os.path.join(iroot, "bands")),
-            portable=False,
+            ddocs, spark.read.parquet(os.path.join(iroot, "bands"))
         )
         incr_survivors = clean.count()
         dt = time.perf_counter() - t0
@@ -658,7 +655,7 @@ def main() -> None:
             "survivors": incr_survivors,
             "docs_per_sec": round(n_idelta / incr_best, 2),
             "note": "per-drop cost of incremental mode: read_incremental "
-            "delta scan + md5-fp anti-join + xxhash MinHash band anti-join "
+            "delta scan + md5-fp anti-join + MinHash band anti-join "
             "against the corpus ledgers — the corpus is touched only "
             "through its ledgers",
         },

@@ -563,9 +563,12 @@ def _repetition_fields_sql(col: str) -> dict:
     bg = _word_ngrams_sql(col, 2)
     n_bg = f"len({bg})"
     n_dbg = f"len(list_distinct({bg}))"
+    # the largest bigram multiplicity from one histogram: a per-distinct-
+    # bigram list_filter re-derives the bigram list inside the lambda
+    # (no CSE there), cubic per document
     top = (
-        f"CASE WHEN {n_bg} > 0 THEN list_max([len(list_filter({bg}, x -> x = g)) "
-        f"for g in list_distinct({bg})]) ELSE 0 END"
+        f"CASE WHEN {n_bg} > 0 THEN CAST(list_max(map_values(list_histogram({bg})))"
+        f" AS BIGINT) ELSE 0 END"
     )
 
     def ratio(a: str, b: str) -> str:

@@ -69,9 +69,6 @@ class CurateOptions:
     lsh_bands: int = 8
     rows_per_band: Optional[int] = None
     jaccard_threshold: float = 0.8
-    # portable polynomial hash family + injective band keys: slower than
-    # xxhash but bit-identical to the ANSI-SQL twin (curate_oracle_sql)
-    portable_hashes: bool = False
     checkpoint_dir: Optional[str] = None
     # decontamination
     decontaminate_n: int = 8
@@ -201,11 +198,10 @@ def _curate_corpus_impl(
     if o.near_dup:
         sigs = minhash_signatures(
             d, text_col=txt, id_col=idc, num_perm=o.num_perm,
-            shingle_k=o.shingle_k, portable=o.portable_hashes,
+            shingle_k=o.shingle_k,
         )
         cands = minhash_lsh_candidates(
-            sigs, bands=o.lsh_bands, rows_per_band=o.rows_per_band,
-            exact_buckets=o.portable_hashes,
+            sigs, bands=o.lsh_bands, rows_per_band=o.rows_per_band
         )
         if persist_registry is not None:
             # candidate pairs feed the verify join twice (ids_needed
@@ -277,13 +273,16 @@ def curate_oracle_sql(
     cap_per_domain: Optional[int] = None,
     domain_col: str = "source",
 ) -> str:
-    """ANSI-SQL twin of the WHOLE ``curate_corpus`` chain (with
-    ``portable_hashes=True`` and the same parameters): quality gates →
-    exact dedup → portable MinHash/LSH/verify pairs → recursive-CTE
-    components (keep cluster min) → benchmark decontamination → PII
-    redaction → per-domain cap → global order.  Every stage reuses the
-    already-pinned single-stage twin, so a value mismatch localizes to
-    the composition, not the primitives."""
+    """ANSI-SQL twin of the WHOLE ``curate_corpus`` chain (with the same
+    parameters): quality gates → exact dedup → MinHash/LSH/verify pairs →
+    recursive-CTE components (keep cluster min) → benchmark
+    decontamination → PII redaction → per-domain cap → global order.
+    Every stage reuses the already-pinned single-stage twin, so a value
+    mismatch localizes to the composition, not the primitives.
+
+    The stages that later ones read more than once are MATERIALIZED:
+    DuckDB otherwise inlines a CTE per reference and re-runs the gates
+    and the MinHash chain for each."""
     from ..functions.text import SQL as TSQL, portable_row_hash_sql
     from .dedup import (
         connected_components_oracle_sql,
@@ -314,12 +313,12 @@ def curate_oracle_sql(
     return f"""
 WITH train AS (SELECT doc_id, text, {dom} FROM {table} WHERE NOT ({bench_pred})),
 q AS (SELECT * FROM train WHERE ({passes}) = 1 AND ({topbg}) <= {max_top_bigram_frac}),
-e AS (SELECT doc_id, text, {dom} FROM (
+e AS MATERIALIZED (SELECT doc_id, text, {dom} FROM (
         SELECT *, row_number() OVER (PARTITION BY {fp} ORDER BY doc_id) AS __rn
         FROM q)
       WHERE __rn = 1),
-mh_pairs AS (SELECT id_a, id_b FROM ({mh})),
-labels AS (SELECT * FROM ({cc})),
+mh_pairs AS MATERIALIZED (SELECT id_a, id_b FROM ({mh})),
+labels AS MATERIALIZED (SELECT * FROM ({cc})),
 surv AS (SELECT * FROM e
          WHERE doc_id NOT IN (SELECT id FROM labels WHERE cluster_id <> id)),
 bgrams AS (SELECT DISTINCT unnest({grams}) AS gram FROM {table} WHERE {bench_pred}),

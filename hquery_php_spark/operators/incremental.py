@@ -31,6 +31,7 @@ from .dedup import (
     _affine_consts,
     _norm_grams_sql,
     _poly_hash_list_sql,
+    band_keys,
     minhash_signatures,
 )
 
@@ -125,19 +126,16 @@ def ledger_band_keys(
     num_perm: int = 16,
     shingle_k: int = 8,
     bands: int = 2,
-    portable: bool = True,
 ) -> DataFrame:
     """(band, bucket) near-dup ledger rows: the serialized band slices
     of each document's MinHash signature — the same injective band keys
-    as ``minhash_lsh_candidates(exact_buckets=True)``.
+    as ``minhash_lsh_candidates``, reproducible on any engine (and by
+    the SQL twin).
 
-    ``portable=True`` (default) uses the polynomial hash family whose
-    band keys are reproducible on any engine (and by the SQL twin);
-    ``portable=False`` is the production xxhash64 path (JVM-side, ~10×
-    cheaper per byte).  A ledger and its probes MUST share the family
-    and (num_perm, shingle_k, bands) — otherwise every probe silently
-    misses; curate_increment records the parameters in the ledger batch
-    lineage and refuses a mismatched probe."""
+    A ledger and its probes MUST share (num_perm, shingle_k, bands) —
+    otherwise every probe silently misses; curate_increment records the
+    parameters in the ledger batch lineage and refuses a mismatched
+    probe."""
     rows_per_band = max(1, num_perm // bands)
     sigs = minhash_signatures(
         df,
@@ -145,19 +143,8 @@ def ledger_band_keys(
         id_col=id_col,
         num_perm=num_perm,
         shingle_k=shingle_k,
-        portable=portable,
     )
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                F.slice("sig", b * rows_per_band + 1, rows_per_band).cast(
-                    "array<string>"
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
+    keys = band_keys(bands, rows_per_band)
     return (
         sigs.select(F.posexplode(keys).alias("band", "bucket"))
         .distinct()
@@ -172,13 +159,12 @@ def incremental_dedup_near(
     num_perm: int = 16,
     shingle_k: int = 8,
     bands: int = 2,
-    portable: bool = True,
 ) -> DataFrame:
     """Batch ids that are NOT near-duplicates of the ledgered corpus at
     LSH screening level: a document drops when ANY of its signature's
     band slices already appears in the (band, bucket) ledger.
-    ``portable`` must match the family the ledger was built with
-    (``ledger_band_keys``) — mismatched families silently never match.
+    (num_perm, shingle_k, bands) must match the ledger's
+    (``ledger_band_keys``) — mismatched parameters silently never match.
 
     This is the conservative screening contract (what the band collision
     *candidates* mean in ``minhash_lsh_candidates``): collisions at the
@@ -197,19 +183,8 @@ def incremental_dedup_near(
         id_col=id_col,
         num_perm=num_perm,
         shingle_k=shingle_k,
-        portable=portable,
     )
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                F.slice("sig", b * rows_per_band + 1, rows_per_band).cast(
-                    "array<string>"
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
+    keys = band_keys(bands, rows_per_band)
     exploded = sigs.select("id", F.posexplode(keys).alias("band", "bucket"))
     clean = exploded.join(
         band_ledger.select("band", "bucket"), ["band", "bucket"], "left_anti"

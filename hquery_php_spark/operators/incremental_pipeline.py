@@ -43,9 +43,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import gopher_quality, repetition_stats
 from ..sources.snaptable import SnapTable
-from .curate import CurateOptions, curate_corpus
+from .curate import CurateOptions, curate_corpus, quality_gate
 from .incremental import (
     incremental_dedup_exact,
     incremental_dedup_near,
@@ -103,24 +102,6 @@ def _delta_docs(delta: DataFrame, o: CurateOptions) -> DataFrame:
     )
 
 
-def _quality_gate(docs: DataFrame, o: CurateOptions) -> DataFrame:
-    """The same Gopher + repetition gate curate_corpus applies first —
-    run here BEFORE the ledger probes so the delta's MinHash signature
-    cost is paid only for docs that can survive at all.  curate_corpus
-    re-evaluates it downstream on the (much smaller) survivor set; the
-    gate is a pure expression, so the double evaluation is cheap and
-    cannot disagree.  Same Project-side guard conjunct as
-    curate.py (see _curate_corpus_impl step 1 for the measured why)."""
-    g = gopher_quality(F.col(o.text_col), min_words=o.min_words, **o.gopher_kwargs)
-    r = repetition_stats(F.col(o.text_col))
-    keep = (
-        (g["passes"] == 1)
-        & (r["top_bigram_frac"] <= o.max_top_bigram_frac)
-        & (F.monotonically_increasing_id() >= F.lit(-1))
-    )
-    return docs.withColumn("__keep", keep).where(F.col("__keep")).drop("__keep")
-
-
 def _repair_ledgers(spark: SparkSession, t: PipelineTables, o: CurateOptions) -> int:
     """Re-derive missing ledger batches from committed curated batches.
 
@@ -159,12 +140,15 @@ def _band_params(o: CurateOptions) -> dict:
     """The MinHash operating point a band ledger is built with.  Ledger
     and probe must agree bit-for-bit or every probe silently misses, so
     the params are stamped into each ledger batch's lineage and checked
-    before any probe."""
+    before any probe.  ``portable`` names the hash family (the
+    polynomial/affine one, the only family there is); it stays in the
+    stamp so a ledger built by an older engine-specific family is
+    refused instead of probed."""
     return {
         "num_perm": o.num_perm,
         "shingle_k": o.shingle_k,
         "bands": o.lsh_bands,
-        "portable": bool(o.portable_hashes),
+        "portable": True,
     }
 
 
@@ -199,7 +183,6 @@ def _append_ledgers(
             num_perm=o.num_perm,
             shingle_k=o.shingle_k,
             bands=o.lsh_bands,
-            portable=o.portable_hashes,
         ),
         batch_id,
         lineage={"band_params": _band_params(o)},
@@ -237,7 +220,10 @@ def curate_increment(
         return {"from": frm, "upto": to, "kept": 0, "skipped": True}
 
     delta = t.spans.read_incremental(spark, frm, to)
-    docs = _quality_gate(_delta_docs(delta, opts), opts)
+    # gate BEFORE the ledger probes, so the delta's MinHash signature cost
+    # is paid only for docs that can survive at all; curate_corpus
+    # re-applies the same pure gate downstream on the smaller survivor set
+    docs = quality_gate(_delta_docs(delta, opts), opts)
     # cross-run dedup: probe the ledgers of everything kept so far.
     # Anti-joins, never broadcast-forced: the ledgers are corpus-
     # proportional (AQE still broadcasts them while they are small).
@@ -263,7 +249,6 @@ def curate_increment(
                 num_perm=opts.num_perm,
                 shingle_k=opts.shingle_k,
                 bands=opts.lsh_bands,
-                portable=opts.portable_hashes,
             )
             docs = docs.join(
                 near_ok.withColumnRenamed("id", opts.id_col),

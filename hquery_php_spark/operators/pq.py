@@ -330,7 +330,7 @@ def write_ivf_pq_index(
         out = qdf.select(
             "id",
             pq_encode_expr(F.col("q"), books).alias("codes"),
-            bucket_of(F.col("v"), n_planes, portable=True).alias("bucket"),
+            bucket_of(F.col("v"), n_planes).alias("bucket"),
         )
         out.write.mode("overwrite").partitionBy("bucket").parquet(path)
     finally:
@@ -377,7 +377,6 @@ def ivf_pq_topk(
             bucket_of(
                 F.array(*[F.lit(float(v)) for v in query_vec]),
                 side["n_planes"],
-                portable=True,
             ).alias("b")
         )
         .collect()[0]["b"]

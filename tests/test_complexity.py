@@ -13,6 +13,7 @@ import time
 import pytest
 
 from hquery_php_spark.core.doc import HDoc
+from hquery_php_spark.core.extract import extract_spans
 from hquery_php_spark.operators.markdown import render_markdown
 from hquery_php_spark.operators.sections import section_rows
 from hquery_php_spark.operators.tables import html_tables
@@ -20,6 +21,7 @@ from hquery_php_spark.operators.tables import html_tables
 N = 400
 RATIO_MAX = 8.0
 REPEATS = 3
+URL = "https://example.com/"
 
 
 def _page(n: int) -> bytes:
@@ -43,25 +45,26 @@ def _page(n: int) -> bytes:
     return "".join(parts).encode()
 
 
+def _timed(fn, *args) -> float:
+    gc.collect()
+    gc.disable()  # a collector pause is not the walk's cost
+    try:
+        t = time.perf_counter()
+        fn(*args)
+        return time.perf_counter() - t
+    finally:
+        gc.enable()
+
+
 def _best(html: bytes, fn) -> float:
-    best = float("inf")
-    for _ in range(REPEATS):
-        doc = HDoc(html, "https://example.com/")
-        gc.collect()
-        gc.disable()  # a collector pause is not the walk's cost
-        try:
-            t = time.perf_counter()
-            fn(doc)
-            best = min(best, time.perf_counter() - t)
-        finally:
-            gc.enable()
-    return best
+    return min(_timed(fn, HDoc(html, URL)) for _ in range(REPEATS))
 
 
 WALKS = {
     "section_rows": section_rows,
     "html_tables": html_tables,
     "render_markdown": render_markdown,
+    "extract_spans": extract_spans,
     ":empty": lambda d: d.find(":empty", extensions=True),
     "tr:nth-child(2n)": lambda d: d.find("tr:nth-child(2n)", extensions=True),
 }
@@ -71,9 +74,21 @@ WALKS = {
 def test_walk_is_near_linear(name):
     fn = WALKS[name]
     small, big = _page(N), _page(4 * N)
-    assert fn(HDoc(big, "https://example.com/"))  # the walk has work to do
+    assert fn(HDoc(big, URL))  # the walk has work to do
     ratio = _best(big, fn) / _best(small, fn)
     assert ratio <= RATIO_MAX, f"{name}: 4x input took {ratio:.1f}x the time"
+
+
+def test_tokenize_and_index_is_near_linear():
+    """HDoc construction: charset sniff, tokenizer and tag index."""
+    small, big = _page(N), _page(4 * N)
+    assert len(HDoc(big, URL)) > 3 * len(HDoc(small, URL))
+
+    def best(html: bytes) -> float:
+        return min(_timed(HDoc, html, URL) for _ in range(REPEATS))
+
+    ratio = best(big) / best(small)
+    assert ratio <= RATIO_MAX, f"4x input took {ratio:.1f}x the time"
 
 
 def _sitemap(n: int) -> bytes:
@@ -97,17 +112,7 @@ def test_parse_sitemap_media_is_near_linear():
     from hquery_php_spark.operators.feeds import parse_sitemap_media
 
     def best(xml: bytes) -> float:
-        t_best = float("inf")
-        for _ in range(REPEATS):
-            gc.collect()
-            gc.disable()
-            try:
-                t = time.perf_counter()
-                parse_sitemap_media(xml)
-                t_best = min(t_best, time.perf_counter() - t)
-            finally:
-                gc.enable()
-        return t_best
+        return min(_timed(parse_sitemap_media, xml) for _ in range(REPEATS))
 
     small, big = _sitemap(N), _sitemap(4 * N)
     assert len(parse_sitemap_media(big)) == 2 * 4 * N
@@ -128,7 +133,7 @@ def _claimed_spans(n: int) -> bytes:
 
 def test_html_tables_ignores_claimed_span_area():
     small, big = _claimed_spans(N), _claimed_spans(4 * N)
-    cells = html_tables(HDoc(big, "https://example.com/"))
+    cells = html_tables(HDoc(big, URL))
     # each row's wide cell lands right of the ones claimed above it
     assert [c.col_no for c in cells[-3:]] == [7 * 4 * N, 8 * 4 * N, 8 * 4 * N + 1]
     ratio = _best(big, html_tables) / _best(small, html_tables)

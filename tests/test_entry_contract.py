@@ -49,9 +49,6 @@ def test_suites_cover_every_per_operator_query():
 # twin is impossible — growth here needs the same scrutiny as a new
 # operator without an oracle.
 ROWS_ONLY_WAIVERS = {
-    # xxhash64 has no DuckDB implementation; values are pinned by the
-    # parameter-identical portable twin `curate`
-    "curate_fast",
     # hard-EM over an open vocabulary has no closed-form SQL; values
     # pinned by the closed-form driver-corpus twin (`unigram_train`)
     # plus distributed==single-process equality in tests/test_unigram.py

@@ -215,6 +215,40 @@ def test_mode_mixing_refused(spark, tmp_path):
         pack_increment(spark, t2)
 
 
+@pytest.mark.parametrize(
+    "stamp",
+    [
+        # what a ledger built with the engine-specific hash family records
+        {"num_perm": 32, "shingle_k": 5, "bands": 8, "portable": False},
+        # same family, different MinHash operating point
+        {"num_perm": 16, "shingle_k": 5, "bands": 8, "portable": True},
+    ],
+    ids=["other-family", "other-num_perm"],
+)
+def test_band_ledger_with_other_params_refused(spark, tmp_path, stamp):
+    """A band ledger stamped with another hash family or operating point
+    would silently never match this run's probes: curate_increment
+    refuses it before probing."""
+    from hquery_php_spark.operators.incremental import (
+        ledger_band_keys,
+        ledger_fingerprints,
+    )
+
+    t = PipelineTables(str(tmp_path))
+    kept = spark.createDataFrame(
+        [("a1", _TEXT["alpha"])], "doc_id string, main_text string"
+    )
+    t.ledger_fp.append(ledger_fingerprints(kept, text_col="main_text"), "upto-0")
+    t.ledger_bands.append(
+        ledger_band_keys(kept, text_col="main_text"),
+        "upto-0",
+        lineage={"band_params": stamp},
+    )
+    t.spans.append(_spans_df(spark, [("b1", _TEXT["beta"])]), "s0")
+    with pytest.raises(ValueError, match="band ledger"):
+        curate_increment(spark, t, opts=_opts())
+
+
 def test_incremental_extract_growing_input(spark, tmp_path):
     """New parquet files landing under the same input path are ingested
     exactly once per run; old files are never re-read; vanished files

@@ -13,7 +13,7 @@ from hquery_php_spark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signatures,
     ngram_jaccard_verify,
-    simhash64,
+    simhash64_portable_df,
 )
 from hquery_php_spark.operators.pipeline import (
     PartitionMeter,
@@ -122,10 +122,7 @@ def test_simhash_similarity(spark):
         (3, "spark catalyst optimizer rewrites logical plans"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r["sh"]
-        for r in df.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()
-    }
+    out = {r.id: r.simhash for r in simhash64_portable_df(df).collect()}
     def ham(a, b):
         return bin((a ^ b) & ((1 << 64) - 1)).count("1")
     assert ham(out[1], out[2]) < ham(out[1], out[3])
@@ -445,11 +442,8 @@ def test_minhash_permutations_distinct(spark):
         [(1, "the quick brown fox jumps over the lazy dog " * 3)],
         ["doc_id", "text"],
     )
-    for portable in (False, True):
-        sig = minhash_signatures(
-            df, num_perm=16, shingle_k=5, portable=portable
-        ).collect()[0]["sig"]
-        assert len(set(sig)) > 8, (portable, sig)
+    sig = minhash_signatures(df, num_perm=16, shingle_k=5).collect()[0]["sig"]
+    assert len(set(sig)) > 8, sig
 
 
 def test_portable_minhash_simhash_match_duckdb(spark):
@@ -483,8 +477,8 @@ def test_portable_minhash_simhash_match_duckdb(spark):
     }
     assert s_sim == o_sim
 
-    sigs = minhash_signatures(df, num_perm=16, shingle_k=8, portable=True)
-    cands = minhash_lsh_candidates(sigs, bands=2, rows_per_band=8, exact_buckets=True)
+    sigs = minhash_signatures(df, num_perm=16, shingle_k=8)
+    cands = minhash_lsh_candidates(sigs, bands=2, rows_per_band=8)
     got = {
         (r.id_a, r.id_b, r.jaccard)
         for r in ngram_jaccard_verify(df, cands, k=8, threshold=0.3).collect()
@@ -514,7 +508,7 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     embs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     qvec = embs.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     idx = str(tmp_path / "ivf")
-    write_ivf_index(embs, idx, n_planes=6, portable=True)
+    write_ivf_index(embs, idx, n_planes=6)
 
     # count the files ACTUALLY read (inputFiles() lists pre-pruning):
     def files_read(df):
@@ -523,14 +517,13 @@ def test_ivf_index_partition_pruning(spark, tmp_path):
     total_files = files_read(spark.read.parquet(idx))
     qb = spark.read.parquet(idx)  # same reader the indexed path uses
     got = ivf_topk_indexed(
-        spark, idx, qvec, k=10, n_planes=6, hamming_radius=2,
-        portable=True, exclude_id=0,
+        spark, idx, qvec, k=10, n_planes=6, hamming_radius=2, exclude_id=0,
     )
     from hquery_php_spark.operators.similarity import bucket_of
 
     qbucket = (
         spark.range(1)
-        .select(bucket_of(F.array(*[F.lit(float(x)) for x in qvec]), 6, portable=True).alias("b"))
+        .select(bucket_of(F.array(*[F.lit(float(x)) for x in qvec]), 6).alias("b"))
         .collect()[0]["b"]
     )
     pruned_files = files_read(qb.where(F.col("bucket").isin(*hamming_ball(qbucket, 6, 2))))

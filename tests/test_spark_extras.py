@@ -726,6 +726,57 @@ def test_curate_corpus_end_to_end(spark):
     assert out[1].n_tokens > 0
 
 
+def test_curate_corpus_at_job_operating_point_matches_duckdb(spark):
+    """curate_corpus at the near-dup operating point the curate and
+    pipeline jobs run (the CurateOptions() defaults: num_perm 32,
+    shingle_k 5, 8 bands of 4 rows, Jaccard 0.8) equals
+    curate_oracle_sql on sf0.001 (test_curate_plan.SF_DIR), row for row
+    and value for value.  The
+    gate relaxes one knob (min_stop_hits=1): at the default no sf0.001
+    document passes it."""
+    from dataclasses import replace
+
+    import duckdb
+
+    from hquery_php_spark.operators.curate import (
+        CurateOptions,
+        curate_corpus,
+        curate_oracle_sql,
+    )
+    from test_curate_plan import SF_DIR as sf
+
+    o = CurateOptions(gopher_kwargs=dict(min_stop_hits=1))
+    docs = spark.read.parquet(f"{sf}/documents.parquet").select(
+        "doc_id", "text", "source"
+    )
+    bench = docs.where(F.pmod("doc_id", F.lit(10)) == 0)
+    train = docs.where(F.pmod("doc_id", F.lit(10)) != 0)
+    got = curate_corpus(train, benchmark=bench, opts=o).toPandas()
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    want = con.execute(
+        curate_oracle_sql(
+            min_words=o.min_words,
+            gopher_kwargs=o.gopher_kwargs,
+            max_top_bigram_frac=o.max_top_bigram_frac,
+            num_perm=o.num_perm,
+            shingle_k=o.shingle_k,
+            bands=o.lsh_bands,
+            rows_per_band=o.num_perm // o.lsh_bands,
+            threshold=o.jaccard_threshold,
+            decontaminate_n=o.decontaminate_n,
+        )
+    ).fetchdf()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) > 0
+    rows = lambda df: df[sorted(df.columns)].sort_values("pos").values.tolist()  # noqa: E731
+    assert rows(got) == rows(want)
+    # the near-dup stage removes documents at this operating point
+    no_near = curate_corpus(train, benchmark=bench, opts=replace(o, near_dup=False))
+    assert no_near.count() > len(got)
+
+
 def test_tfidf_top_terms_exact(spark):
     """Hand-computed TF-IDF on a 3-doc corpus: idf = ln(N/df) over the
     tf-derived document frequencies, rank by rounded score with the term
@@ -1768,10 +1819,10 @@ def test_minhash_lsh_hot_bucket_cap(spark):
     hot = [(i, "boilerplate template page body") for i in range(50)]
     cold = [(1000 + i, f"distinct page {i} with words {i*7} {i*13}") for i in range(6)]
     df = spark.createDataFrame(hot + cold, "doc_id long, text string")
-    sigs = minhash_signatures(df, num_perm=16, shingle_k=8, portable=True)
+    sigs = minhash_signatures(df, num_perm=16, shingle_k=8)
     reg: list = []
     capped = minhash_lsh_candidates(
-        sigs, bands=2, rows_per_band=8, exact_buckets=True,
+        sigs, bands=2, rows_per_band=8,
         max_bucket_size=10, dropped_registry=reg,
     )
     capped_pairs = {(r.id_a, r.id_b) for r in capped.collect()}
@@ -1783,8 +1834,7 @@ def test_minhash_lsh_hot_bucket_cap(spark):
     uncapped = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_candidates(
-            sigs, bands=2, rows_per_band=8, exact_buckets=True,
-            max_bucket_size=None,
+            sigs, bands=2, rows_per_band=8, max_bucket_size=None,
         ).collect()
     }
     hot_pairs = {(a, b) for a in range(50) for b in range(50) if a < b}

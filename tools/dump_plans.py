@@ -82,7 +82,7 @@ def main():
         if name == "dedup_minhash":
             df = E._dedup_minhash_verify_df(spark, sf, [])
         elif name == "curate":
-            df = E._curate_df(spark, sf, None, portable=True)
+            df = E._curate_df(spark, sf, None)
         elif name == "tfidf_top":
             from hquery_php_spark.functions.text import tfidf_top_terms
             df = tfidf_top_terms(E._spread(E._docs(spark, sf), spark), top_k=3)
