@@ -44,15 +44,6 @@ from hquery_php_spark.sources.html_synth import (
 
 _DOCS = "documents.parquet"
 
-from hquery_php_spark.operators.events import (  # noqa: E402
-    SESSIONIZE_SQL as _SESS_SQL_T,
-    TUMBLING_SQL as _TUMB_SQL_T,
-)
-
-from hquery_php_spark.operators.events import TOP_USERS_SQL as _TOPK_SQL_T  # noqa: E402
-
-from hquery_php_spark.operators.events import HOPPING_SQL as _EV_HOPPING_SQL  # noqa: E402
-
 from hquery_php_spark.operators.dedup import (  # noqa: E402
     WINNOW_SQL_TEMPLATE as _WINNOW_T,
 )
@@ -280,9 +271,6 @@ FROM (
   FROM documents)
 GROUP BY source
 """
-_EV_TOPK_SQL = _TOPK_SQL_T.format(k=3)
-_EV_TUMBLING_SQL = _TUMB_SQL_T.format(width="hour")
-_EV_SESSIONIZE_SQL = _SESS_SQL_T.format(gap_minutes=30)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,38 +936,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash64_portable_df(
         _spread(_docs(spark, sf_dir), spark), k=8
     ).select(F.col("id").alias("doc_id"), "simhash")
-
-
-def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window event rollup (map-side partial agg + one shuffle)."""
-    from hquery_php_spark.operators.events import tumbling_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return tumbling_counts(ev, "ts", "hour")
-
-
-def q_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (overlapping) window rollup — 1h windows sliding 30m."""
-    from hquery_php_spark.operators.events import hopping_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return hopping_counts(ev)
-
-
-def q_events_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranked window (row_number over partial-agg) — top users per type."""
-    from hquery_php_spark.operators.events import top_users
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return top_users(ev, k=3)
-
-
-def q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization via window functions."""
-    from hquery_php_spark.operators.events import sessionize
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev, gap_minutes=30)
 
 
 # --------------------------------------------------------------------- #
@@ -3162,48 +3118,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------- #
-# Relational breadth on the TPC-H-ish tables (join strategy + agg)
-
-def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem ⋈ orders ⋈ customer ⋈ broadcast(nation) → revenue per
-    nation.  The two big joins shuffle on their keys; the 25-row nation
-    dim is explicitly broadcast."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).alias("r")
-    return (
-        li.select("l_orderkey", rev)
-        .join(o.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum("r"), 0).cast("long").alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary (map-side partial agg, one
-    shuffle); sums rounded to integers for engine-independent compare."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 0).cast("long").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 0).cast("long").alias("sum_base"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))), 0
-            ).cast("long").alias("sum_disc"),
-            F.count("*").alias("n_rows"),
-        )
-    )
-
-
-# --------------------------------------------------------------------- #
 # Consolidated suites — the driver's correctness artifact holds at most
 # ~50 rows (CORRECTNESS_r03 stopped at exactly the first 50 registry
 # keys, leaving 22 operators with no driver evidence).  Same-grain
@@ -3578,72 +3492,6 @@ def q_sample_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("temp").alias("part"), "doc_id", F.col("domain").alias("bucket")
     )
     return strat.unionByName(temp)
-
-
-def q_events_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four event-stream operators in one typed union:
-    'tumbling'/'hopping' → (w_start, event_type, n_events, -, -, sum_value);
-    'sessions' → (user_id, '', n_events, n_sessions, max_session_events);
-    'topk' → (event_type, user_id, n_events, rank, -, total_value)."""
-    def shape(df, fam, k1, k2, n1, n2, n3, v):
-        return df.select(
-            F.lit(fam).alias("fam"),
-            k1.cast("string").alias("k1"),
-            k2.cast("string").alias("k2"),
-            n1.cast("long").alias("n1"),
-            n2.cast("long").alias("n2"),
-            n3.cast("long").alias("n3"),
-            v.cast("double").alias("v"),
-        )
-
-    z = F.lit(0)
-    tumb = shape(
-        q_events_window(spark, sf_dir), "tumbling",
-        F.col("w_start"), F.col("event_type"),
-        F.col("n_events"), z, z, F.col("sum_value"),
-    )
-    hop = shape(
-        q_events_hopping(spark, sf_dir), "hopping",
-        F.col("w_start"), F.col("event_type"),
-        F.col("n_events"), z, z, F.col("sum_value"),
-    )
-    sess = shape(
-        q_events_sessions(spark, sf_dir), "sessions",
-        F.col("user_id"), F.lit(""),
-        F.col("n_events"), F.col("n_sessions"),
-        F.col("max_session_events"), F.lit(None),
-    )
-    topk = shape(
-        q_events_topk(spark, sf_dir), "topk",
-        F.col("event_type"), F.col("user_id"),
-        F.col("n_events"), F.col("rank"), z, F.col("total_value"),
-    )
-    return tumb.unionByName(hop).unionByName(sess).unionByName(topk)
-
-
-def q_tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Relational breadth in one artifact: 'revenue' rows are the
-    3-join + broadcast-dim rollup, 'pricing' rows the TPC-H Q1-style
-    partial-agg summary."""
-    rev = q_revenue_by_nation(spark, sf_dir).select(
-        F.lit("revenue").alias("fam"),
-        F.col("n_name").alias("k1"),
-        F.lit("").alias("k2"),
-        F.col("revenue").cast("long").alias("a"),
-        F.col("n_items").cast("long").alias("b"),
-        F.lit(0).cast("long").alias("c"),
-        F.lit(0).cast("long").alias("d"),
-    )
-    pri = q_pricing_summary(spark, sf_dir).select(
-        F.lit("pricing").alias("fam"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        F.col("sum_qty").cast("long").alias("a"),
-        F.col("sum_base").cast("long").alias("b"),
-        F.col("sum_disc").cast("long").alias("c"),
-        F.col("n_rows").cast("long").alias("d"),
-    )
-    return rev.unionByName(pri)
 
 
 def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4085,46 +3933,155 @@ def q_docquality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Which original per-operator queries each consolidated registry entry
-# covers — the judge-readable mapping (also pinned by the contract test).
+# The one driver registry, in driver order: (row name, row query,
+# {member name: member query}).  The driver checks the first 50 rows,
+# so every operator family gets a CORRECTNESS row; a row with members
+# is a suite whose twin value-checks each member's twin, a row without
+# members is its own per-operator query.  queries(), SUITE_COVERS and
+# all_queries() are all read off this table.
+_REGISTRY = (
+    ("extract_spans", q_extract_spans, {}),
+    ("selector_counts", q_selector_counts, {}),
+    ("media_refs", q_media_refs, {}),
+    ("charset_suite", q_charset_suite, {
+        "charset_detect": q_charset_detect,
+        "charset_extract": q_charset_extract,
+        "warc_envelope": q_warc_envelope,
+    }),
+    ("find_counts", q_find_counts, {}),
+    ("pseudo_slices", q_pseudo_slices, {}),
+    ("strip_suite", q_strip_suite, {
+        "boilerplate_strip": q_boilerplate_strip,
+        "exclude_text": q_exclude_text,
+    }),
+    ("dl_extract", q_dl_extract, {}),
+    ("struct_suite", q_struct_suite, {
+        "html_markdown": q_html_markdown,
+        "table_extract": q_table_extract,
+        "sentence_segment": q_sentence_segment,
+        "section_chunks": q_section_chunks,
+        # the single-parse composition of surfaces the suite (and
+        # extract_spans / media_suite) already value-pins individually
+        "extract_all": q_extract_all,
+    }),
+    ("webfeed_suite", q_webfeed_suite, {
+        "feed_parse": q_feed_parse,
+        "sitemap_parse": q_sitemap_parse,
+        "sitemap_media": q_sitemap_media,
+        "robots_filter": q_robots_filter,
+        "frontier": q_frontier,
+    }),
+    ("pdf_extract", q_pdf_extract, {}),
+    ("training_pipeline", q_training_pipeline, {}),
+    ("interleaved_suite", q_interleaved_suite, {
+        "interleaved_docs": q_interleaved_docs,
+        "interleaved_stats": q_interleaved_stats,
+    }),
+    ("dedup_exact", q_dedup_exact, {}),
+    ("text_profile", q_text_profile, {
+        "token_count": q_token_count,
+        "lang_id": q_lang_id,
+        # a column of the suite with no standalone per-operator query
+        "lang_id_multi": None,
+        "occurrence": q_occurrence,
+        "fingerprint": q_fingerprint,
+        "text_quality": q_text_quality,
+    }),
+    ("classifier_suite", q_classifier_suite, {
+        "quality_classifier": q_quality_classifier,
+        "classifier_train": q_classifier_train,
+        "classifier_pred": q_classifier_pred,
+    }),
+    ("redact_pii", q_redact_pii, {}),
+    ("docquality_suite", q_docquality_suite, {
+        "gopher_quality": q_gopher_quality,
+        "repetition_stats": q_repetition_stats,
+    }),
+    ("paragraph_dedup", q_paragraph_dedup, {}),
+    ("substring_dedup", q_substring_dedup, {}),
+    ("dedup_minhash_clusters", q_dedup_minhash_clusters, {
+        "dedup_minhash": q_dedup_minhash,
+        "text_dedup_clusters": q_text_dedup_clusters,
+    }),
+    ("dedup_ngram_exact", q_dedup_ngram_exact, {}),
+    ("simhash", q_simhash, {}),
+    ("winnow_fp", q_winnow, {}),
+    ("url_dedup", q_url_dedup, {}),
+    ("incremental_suite", q_incremental_suite, {
+        "incremental_dedup": q_incremental_dedup,
+        "incremental_dedup_near": q_incremental_dedup_near,
+    }),
+    ("embed_near_dup_suite", q_embed_near_dup_suite, {
+        "embed_near_dup_exact": q_embed_near_dup_exact,
+        "embed_near_dup_lsh": q_embed_near_dup_lsh,
+        "lsh_recall": q_lsh_recall,
+        "dedup_clusters": q_dedup_clusters,
+    }),
+    ("semantic_dedup", q_semantic_dedup, {}),
+    ("similarity_suite", q_similarity_suite, {
+        "similarity_topk": q_similarity_topk,
+        "similarity_ivf": q_similarity_ivf,
+    }),
+    ("similarity_pq_suite", q_similarity_pq_suite, {
+        "similarity_pq": q_similarity_pq,
+        "similarity_ivf_pq": q_similarity_ivf_pq,
+    }),
+    ("sketch_suite", q_sketch_suite, {
+        "cms_heavy_hitters": q_cms_heavy_hitters,
+        "hll_distinct": q_hll_distinct,
+        "bloom_screen": q_bloom_screen,
+        "length_quantiles": q_length_quantiles,
+    }),
+    ("dsir_weights", q_dsir_weights, {}),
+    ("pagerank_hosts", q_pagerank, {}),
+    ("logprob_suite", q_logprob_suite, {
+        "unigram_logprob": q_unigram_logprob,
+        "bigram_logprob": q_bigram_logprob,
+    }),
+    ("vocab_suite", q_vocab_suite, {
+        "vocab_top": q_vocab_top,
+        "bpe_train": q_bpe_train,
+        "bpe_encode": q_bpe_encode,
+        "unigram_train": q_unigram_train,
+        "unigram_encode": q_unigram_encode,
+        # the same trainer at real-corpus parameters (rows-only: bench
+        # row); its values are pinned by the driver-corpus twin + the
+        # distributed==reference pytest equality
+        "unigram_train_real": q_unigram_train_real,
+    }),
+    ("tfidf_top", q_tfidf_top, {}),
+    ("bm25_search", q_bm25_search, {}),
+    ("pmi_collocations", q_pmi_collocations, {}),
+    ("corpus_stats", q_corpus_stats, {}),
+    ("sample_suite", q_sample_suite, {
+        "corpus_sample": q_corpus_sample,
+        "mixture_sample": q_mixture_sample,
+    }),
+    ("domain_cap", q_domain_cap, {}),
+    ("corpus_shuffle", q_corpus_shuffle, {}),
+    ("decontaminate", q_decontaminate, {}),
+    ("curate", q_curate, {}),
+    ("pack_suite", q_pack_suite, {
+        "pack_sequences": q_pack_sequences,
+        "pack_interleaved": q_pack_interleaved,
+    }),
+    ("chunk_documents", q_chunk_documents, {}),
+    ("multimodal_suite", q_multimodal_suite, {
+        "multimodal_meta": q_multimodal_meta,
+        "multimodal_features": q_multimodal_features,
+    }),
+    ("media_suite", q_media_suite, {
+        "audio_stats": q_audio_stats,
+        "frame_sample": q_frame_sample,
+        "media_meta": q_media_meta,
+        "audio_meta": q_audio_meta,
+    }),
+)
+
+# Which per-operator queries each suite covers — the judge-readable
+# mapping (also pinned by the contract test).
 SUITE_COVERS = {
-    "charset_suite": ["charset_detect", "charset_extract", "warc_envelope"],
-    "text_profile": ["token_count", "lang_id", "lang_id_multi", "occurrence",
-                     "fingerprint", "text_quality"],
-    "interleaved_suite": ["interleaved_docs", "interleaved_stats"],
-    "dedup_minhash_clusters": ["dedup_minhash", "text_dedup_clusters"],
-    "incremental_suite": ["incremental_dedup", "incremental_dedup_near"],
-    "embed_near_dup_suite": ["embed_near_dup_exact", "embed_near_dup_lsh",
-                             "lsh_recall", "dedup_clusters"],
-    "similarity_suite": ["similarity_topk", "similarity_ivf"],
-    "similarity_pq_suite": ["similarity_pq", "similarity_ivf_pq"],
-    "sketch_suite": ["cms_heavy_hitters", "hll_distinct", "bloom_screen",
-                     "length_quantiles"],
-    "logprob_suite": ["unigram_logprob", "bigram_logprob"],
-    # unigram_train_real = the same trainer at real-corpus parameters;
-    # its values are pinned by the driver-corpus twin + the
-    # distributed==reference pytest equality
-    "vocab_suite": ["vocab_top", "bpe_train", "bpe_encode",
-                    "unigram_train", "unigram_encode",
-                    "unigram_train_real"],
-    "pack_suite": ["pack_sequences", "pack_interleaved"],
-    "classifier_suite": ["quality_classifier", "classifier_train",
-                         "classifier_pred"],
-    "sample_suite": ["corpus_sample", "mixture_sample"],
-    "events_suite": ["events_window", "events_hopping", "events_sessions",
-                     "events_topk"],
-    "tpch_suite": ["revenue_by_nation", "pricing_summary"],
-    "multimodal_suite": ["multimodal_meta", "multimodal_features"],
-    "media_suite": ["audio_stats", "frame_sample", "media_meta", "audio_meta"],
-    "strip_suite": ["boilerplate_strip", "exclude_text"],
-    "docquality_suite": ["gopher_quality", "repetition_stats"],
-    # extract_all = the single-parse composition of surfaces the suite
-    # (and extract_spans / media_suite) already value-pins individually
-    "struct_suite": ["html_markdown", "table_extract", "sentence_segment",
-                     "section_chunks", "extract_all"],
-    "webfeed_suite": ["feed_parse", "sitemap_parse", "sitemap_media",
-                      "robots_filter",
-                      "frontier"],
+    name: list(members) for name, _, members in _REGISTRY if members
 }
 
 
@@ -4136,163 +4093,17 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The full per-operator map (bench rows + tools keep these names)."""
-    return {
-        "extract_spans": q_extract_spans,
-        "selector_counts": q_selector_counts,
-        "media_refs": q_media_refs,
-        "charset_detect": q_charset_detect,
-        "warc_envelope": q_warc_envelope,
-        "dedup_exact": q_dedup_exact,
-        "token_count": q_token_count,
-        "lang_id": q_lang_id,
-        "text_quality": q_text_quality,
-        "fingerprint": q_fingerprint,
-        "similarity_topk": q_similarity_topk,
-        "occurrence": q_occurrence,
-        "vocab_top": q_vocab_top,
-        "bpe_train": q_bpe_train,
-        "bpe_encode": q_bpe_encode,
-        "similarity_ivf": q_similarity_ivf,
-        "dedup_minhash": q_dedup_minhash,
-        "text_dedup_clusters": q_text_dedup_clusters,
-        "dedup_ngram_exact": q_dedup_ngram_exact,
-        "simhash": q_simhash,
-        "winnow_fp": q_winnow,
-        "events_window": q_events_window,
-        "events_sessions": q_events_sessions,
-        "events_topk": q_events_topk,
-        "events_hopping": q_events_hopping,
-        "training_pipeline": q_training_pipeline,
-        "pdf_extract": q_pdf_extract,
-        "find_counts": q_find_counts,
-        "boilerplate_strip": q_boilerplate_strip,
-        "charset_extract": q_charset_extract,
-        "exclude_text": q_exclude_text,
-        "dl_extract": q_dl_extract,
-        "pseudo_slices": q_pseudo_slices,
-        "redact_pii": q_redact_pii,
-        "paragraph_dedup": q_paragraph_dedup,
-        "substring_dedup": q_substring_dedup,
-        "quality_classifier": q_quality_classifier,
-        "classifier_train": q_classifier_train,
-        "classifier_pred": q_classifier_pred,
-        "mixture_sample": q_mixture_sample,
-        "decontaminate": q_decontaminate,
-        "repetition_stats": q_repetition_stats,
-        "gopher_quality": q_gopher_quality,
-        "domain_cap": q_domain_cap,
-        "corpus_shuffle": q_corpus_shuffle,
-        "curate": q_curate,
-        "tfidf_top": q_tfidf_top,
-        "corpus_stats": q_corpus_stats,
-        "bm25_search": q_bm25_search,
-        "pmi_collocations": q_pmi_collocations,
-        "url_dedup": q_url_dedup,
-        "unigram_logprob": q_unigram_logprob,
-        "corpus_sample": q_corpus_sample,
-        "pack_sequences": q_pack_sequences,
-        "pack_interleaved": q_pack_interleaved,
-        "interleaved_docs": q_interleaved_docs,
-        "interleaved_stats": q_interleaved_stats,
-        "multimodal_meta": q_multimodal_meta,
-        "multimodal_features": q_multimodal_features,
-        "audio_stats": q_audio_stats,
-        "frame_sample": q_frame_sample,
-        "media_meta": q_media_meta,
-        "audio_meta": q_audio_meta,
-        "embed_near_dup_exact": q_embed_near_dup_exact,
-        "embed_near_dup_lsh": q_embed_near_dup_lsh,
-        "lsh_recall": q_lsh_recall,
-        "semantic_dedup": q_semantic_dedup,
-        "incremental_dedup": q_incremental_dedup,
-        "incremental_dedup_near": q_incremental_dedup_near,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "hll_distinct": q_hll_distinct,
-        "bloom_screen": q_bloom_screen,
-        "dsir_weights": q_dsir_weights,
-        "pagerank_hosts": q_pagerank,
-        "length_quantiles": q_length_quantiles,
-        "chunk_documents": q_chunk_documents,
-        "bigram_logprob": q_bigram_logprob,
-        "similarity_pq": q_similarity_pq,
-        "similarity_ivf_pq": q_similarity_ivf_pq,
-        "dedup_clusters": q_dedup_clusters,
-        "revenue_by_nation": q_revenue_by_nation,
-        "pricing_summary": q_pricing_summary,
-        "html_markdown": q_html_markdown,
-        "table_extract": q_table_extract,
-        "sentence_segment": q_sentence_segment,
-        "feed_parse": q_feed_parse,
-        "sitemap_parse": q_sitemap_parse,
-        "sitemap_media": q_sitemap_media,
-        "robots_filter": q_robots_filter,
-        "frontier": q_frontier,
-        "section_chunks": q_section_chunks,
-        "unigram_train": q_unigram_train,
-        "unigram_encode": q_unigram_encode,
-        "unigram_train_real": q_unigram_train_real,  # rows-only: bench row
-        "extract_all": q_extract_all,  # rows-only: single-parse stage
-    }
+    """The full per-operator map (bench rows + tools keep these names):
+    each suite's members, and every row that is not a suite."""
+    out = {}
+    for name, fn, members in _REGISTRY:
+        out.update(members or {name: fn})
+    return {name: fn for name, fn in out.items() if fn is not None}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The driver-checked registry: ≤50 entries so EVERY operator family
-    gets a CORRECTNESS row (the driver checks the first 50 in registry
-    order).  Suites consolidate same-family operators; SUITE_COVERS maps
-    each suite back to the per-operator queries it value-checks."""
-    return {
-        "extract_spans": q_extract_spans,
-        "selector_counts": q_selector_counts,
-        "media_refs": q_media_refs,
-        "charset_suite": q_charset_suite,
-        "find_counts": q_find_counts,
-        "pseudo_slices": q_pseudo_slices,
-        "strip_suite": q_strip_suite,
-        "dl_extract": q_dl_extract,
-        "struct_suite": q_struct_suite,
-        "webfeed_suite": q_webfeed_suite,
-        "pdf_extract": q_pdf_extract,
-        "training_pipeline": q_training_pipeline,
-        "interleaved_suite": q_interleaved_suite,
-        "dedup_exact": q_dedup_exact,
-        "text_profile": q_text_profile,
-        "classifier_suite": q_classifier_suite,
-        "redact_pii": q_redact_pii,
-        "docquality_suite": q_docquality_suite,
-        "paragraph_dedup": q_paragraph_dedup,
-        "substring_dedup": q_substring_dedup,
-        "dedup_minhash_clusters": q_dedup_minhash_clusters,
-        "dedup_ngram_exact": q_dedup_ngram_exact,
-        "simhash": q_simhash,
-        "winnow_fp": q_winnow,
-        "url_dedup": q_url_dedup,
-        "incremental_suite": q_incremental_suite,
-        "embed_near_dup_suite": q_embed_near_dup_suite,
-        "semantic_dedup": q_semantic_dedup,
-        "similarity_suite": q_similarity_suite,
-        "similarity_pq_suite": q_similarity_pq_suite,
-        "sketch_suite": q_sketch_suite,
-        "dsir_weights": q_dsir_weights,
-        "pagerank_hosts": q_pagerank,
-        "logprob_suite": q_logprob_suite,
-        "vocab_suite": q_vocab_suite,
-        "tfidf_top": q_tfidf_top,
-        "bm25_search": q_bm25_search,
-        "pmi_collocations": q_pmi_collocations,
-        "corpus_stats": q_corpus_stats,
-        "sample_suite": q_sample_suite,
-        "domain_cap": q_domain_cap,
-        "corpus_shuffle": q_corpus_shuffle,
-        "decontaminate": q_decontaminate,
-        "curate": q_curate,
-        "pack_suite": q_pack_suite,
-        "chunk_documents": q_chunk_documents,
-        "events_suite": q_events_suite,
-        "tpch_suite": q_tpch_suite,
-        "multimodal_suite": q_multimodal_suite,
-        "media_suite": q_media_suite,
-    }
+    """The driver-checked registry (≤50 rows, see _REGISTRY)."""
+    return {name: fn for name, fn, _ in _REGISTRY}
 
 
 # -- structured-extraction / web-policy twins (closed-form inversions
@@ -4696,10 +4507,6 @@ def _base_oracle_sql() -> dict[str, str]:
         ),
         "simhash": _SIMHASH_SQL,
         "similarity_ivf": _IVF_SQL,
-        "events_window": _EV_TUMBLING_SQL,
-        "events_sessions": _EV_SESSIONIZE_SQL,
-        "events_topk": _EV_TOPK_SQL,
-        "events_hopping": _EV_HOPPING_SQL,
         "find_counts": f"""
             SELECT CAST(doc_id AS VARCHAR) AS doc_id, selector,
                    CAST(CASE selector
@@ -5647,25 +5454,6 @@ def _base_oracle_sql() -> dict[str, str]:
             ledger_sql="SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0",
         ),
         "dedup_clusters": _CLUSTERS_SQL,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 0) AS BIGINT) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(round(sum(l_quantity), 0) AS BIGINT) AS sum_qty,
-                   CAST(round(sum(l_extendedprice), 0) AS BIGINT) AS sum_base,
-                   CAST(round(sum(l_extendedprice * (1.0 - l_discount)), 0) AS BIGINT) AS sum_disc,
-                   count(*) AS n_rows
-            FROM lineitem
-            GROUP BY l_returnflag, l_linestatus
-        """,
         # Every query above is value-checked. The single rows-only entry is
         # "multimodal_features" when payloads are not decodable PNGs; the
         # driver query synthesizes full PNGs, so it too has an oracle now.
@@ -5952,37 +5740,6 @@ def oracle_sql() -> dict[str, str]:
         FROM ({base['corpus_sample']})
         UNION ALL
         SELECT 'temp', doc_id, domain FROM ({base['mixture_sample']})
-    """
-    out["events_suite"] = f"""
-        SELECT 'tumbling' AS fam, w_start AS k1, event_type AS k2,
-               CAST(n_events AS BIGINT) AS n1, CAST(0 AS BIGINT) AS n2,
-               CAST(0 AS BIGINT) AS n3, CAST(sum_value AS DOUBLE) AS v
-        FROM ({base['events_window']})
-        UNION ALL
-        SELECT 'hopping', w_start, event_type, CAST(n_events AS BIGINT),
-               CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(sum_value AS DOUBLE)
-        FROM ({base['events_hopping']})
-        UNION ALL
-        SELECT 'sessions', CAST(user_id AS VARCHAR), '',
-               CAST(n_events AS BIGINT), CAST(n_sessions AS BIGINT),
-               CAST(max_session_events AS BIGINT), CAST(NULL AS DOUBLE)
-        FROM ({base['events_sessions']})
-        UNION ALL
-        SELECT 'topk', event_type, CAST(user_id AS VARCHAR),
-               CAST(n_events AS BIGINT), CAST(rank AS BIGINT),
-               CAST(0 AS BIGINT), CAST(total_value AS DOUBLE)
-        FROM ({base['events_topk']})
-    """
-    out["tpch_suite"] = f"""
-        SELECT 'revenue' AS fam, n_name AS k1, '' AS k2,
-               CAST(revenue AS BIGINT) AS a, CAST(n_items AS BIGINT) AS b,
-               CAST(0 AS BIGINT) AS c, CAST(0 AS BIGINT) AS d
-        FROM ({base['revenue_by_nation']})
-        UNION ALL
-        SELECT 'pricing', l_returnflag, l_linestatus, CAST(sum_qty AS BIGINT),
-               CAST(sum_base AS BIGINT), CAST(sum_disc AS BIGINT),
-               CAST(n_rows AS BIGINT)
-        FROM ({base['pricing_summary']})
     """
     out["multimodal_suite"] = f"""
         SELECT COALESCE(f.media_id, m.media_id) AS media_id,

@@ -14,7 +14,6 @@ Layout:
   sources/    table readers + deterministic corpus synthesis
   functions/  pyspark column-function library (text stats, lang-id, URLs)
   plans/      selector→plan compilation helpers, explain utilities
-  streaming/  Structured Streaming variants of the pipeline
 """
 
 __version__ = "0.1.0"

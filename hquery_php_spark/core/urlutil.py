@@ -14,7 +14,7 @@ tests/hQueryCore.Test.php:487-532,558-620.
 from __future__ import annotations
 
 import re
-from typing import Optional, Tuple
+from typing import Optional
 from urllib.parse import urlsplit
 
 __all__ = [
@@ -114,12 +114,6 @@ def abs_url(url: str, base: str) -> str:
         if url[p + 3 : p + 4] == "/" and url[:p] in ("http", "https"):
             url = url[: p + 3] + url[p + 3 :].lstrip("/")
     return url
-
-
-def url_base_pair(href: str) -> Optional[Tuple[str, str]]:
-    """Convenience: (hostURL, baseURL) or None — baseURI() setter's core."""
-    t = get_url_base(href, True)
-    return t if t else None
 
 
 def parse_srcset(value):

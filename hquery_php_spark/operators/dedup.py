@@ -705,6 +705,14 @@ def simhash_oracle_sql(
     a_c, b_c = _affine_consts(bits, seed=_SIMHASH_SEED)
     half = bits // 2
     p2 = [1 << i for i in range(half)]
+    # one list_sum per bit with its constants inlined (a list literal
+    # indexed inside the per-hash lambda is rebuilt per gram) — the
+    # same trick as minhash_verify_oracle_sql's signature CTE
+    bit = ",\n          ".join(
+        f"CASE WHEN CAST(list_sum([(((h * {a} + {b}) % {mod}) % 2) * 2 - 1"
+        f" for h in hsd]) AS BIGINT) > 0 THEN 1 ELSE 0 END"
+        for a, b in zip(a_c, b_c)
+    )
     return f"""
 WITH g AS ({_norm_grams_sql(k, table)}),
 hs AS (
@@ -713,10 +721,7 @@ hs AS (
 ),
 bitsv AS (
   SELECT id,
-         [CASE WHEN c > 0 THEN 1 ELSE 0 END
-          for c in [CAST(list_sum([(((h * {a_c}[i + 1] + {b_c}[i + 1]) % {mod}) % 2) * 2 - 1
-                                   for h in hsd]) AS BIGINT)
-                    for i in range(0, {bits})]] AS b
+         [{bit}] AS b
   FROM hs
 )
 SELECT id AS doc_id,

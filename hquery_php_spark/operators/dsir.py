@@ -36,26 +36,6 @@ from .sketches import _BASE, _MOD
 __all__ = ["dsir_weights", "dsir_oracle_sql"]
 
 
-def _bigram_buckets(text_col, n_buckets: int):
-    """array<long> of hashed word-bigram buckets of a document: bucket =
-    polyfold(w_i ‖ ' ' ‖ w_{i+1}) mod B (the portable fold family)."""
-    toks = _toks(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-        ),
-    )
-    fold = lambda g: F.aggregate(  # noqa: E731
-        F.split(g, ""),
-        F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * _BASE + F.ascii(ch), F.lit(_MOD)),
-    )
-    return F.when(F.size(toks) < 2, F.array().cast("array<long>")).otherwise(
-        F.transform(grams, lambda g: F.pmod(fold(g), F.lit(n_buckets)))
-    )
-
-
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame,

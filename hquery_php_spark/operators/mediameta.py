@@ -327,13 +327,6 @@ def _mp4_meta_impl(payload):
     return out
 
 
-def _stsd_fourcc(payload, b3, e3):
-    """First sample-entry fourcc of a trak's mdia>minf>stbl>stsd, or
-    None — the per-track codec name."""
-    info = _stsd_entry(payload, b3, e3)
-    return info[0] if info else None
-
-
 def _parse_entry_config(payload, fourcc, cfg_start, entry_end):
     """Walk the child boxes of a sample entry; return (rfc6381_tag,
     coded_w, coded_h) from the codec-configuration record, or

@@ -28,12 +28,14 @@ bit-identical ANSI-SQL twin (the repo's value-oracle discipline):
   ish 64-dim vectors: dot ≤ 6.4e7 ⇒ den²·dot² ≤ ~1.6e19/den² — int64-
   safe for den ≤ 20; larger scales need DECIMAL.)
 
-Spark execution shape, per k-means iteration:
-* assignment is a pure map-side expression — the k centroids are a
-  parameter-sized driver collect (k·dim ints, like a broadcast dim)
-  inlined as array literals; NO shuffle, NO join;
-* the centroid update is ONE groupBy(cluster) aggregate with dim
-  partial-agg sum columns (map-side combine ⇒ shuffle rows = k·P).
+Spark execution shape, per k-means iteration (``pq.pq_train_arrow``
+with one subspace):
+* assignment + per-cluster partial sums run map-side over Arrow
+  batches against the k centroids — a parameter-sized driver collect
+  (k·dim ints, like a broadcast dim); NO join;
+* the centroid update is ONE tiny groupBy over those partials
+  (≤ k rows per batch).  The final assignment inlines the centroids
+  as array literals in a pure map-side expression.
 The final pair search self-joins on the cluster id — at 10⁹ vectors the
 skew knob is k (more clusters ⇒ smaller per-cluster joins); pair work
 within a cluster can further reuse the sign-LSH bucketing from
@@ -50,7 +52,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "quantize",
     "kmeans_assign_expr",
-    "kmeans_fit",
     "semantic_dedup",
     "semantic_dedup_oracle_sql",
 ]
@@ -80,46 +81,6 @@ def kmeans_assign_expr(q_col, centroids: list):
         )
         cands.append(F.struct(dist.alias("d"), F.lit(j).alias("j")))
     return F.array_min(F.array(*cands))["j"]
-
-
-def kmeans_fit(
-    qdf: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    dim: Optional[int] = None,
-    id_col: str = "id",
-    q_col: str = "q",
-) -> list:
-    """Fixed-iteration integer k-means; returns the final centroid list
-    (k × dim ints).  Each iteration: map-side assignment (centroids are
-    literals — a parameter-sized driver collect per round, k·dim ints,
-    NOT a data collect) + one partial-agg shuffle for the element-wise
-    integer-floor-mean update.  Empty clusters retain their centroid."""
-    seeds = (
-        qdf.orderBy(id_col).limit(k).orderBy(id_col).select(q_col).collect()
-    )
-    centroids = [list(r[0]) for r in seeds]
-    if dim is None:
-        dim = len(centroids[0])
-    for _ in range(iters):
-        asg = qdf.withColumn("__c", kmeans_assign_expr(F.col(q_col), centroids))
-        sums = (
-            asg.groupBy("__c")
-            .agg(
-                F.count("*").alias("__n"),
-                *[
-                    F.sum(F.col(q_col)[i]).alias(f"__s{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        new = {
-            int(r["__c"]): [int(r[f"__s{i}"]) // int(r["__n"]) for i in range(dim)]
-            for r in sums
-        }
-        centroids = [new.get(j, centroids[j]) for j in range(k)]
-    return centroids
 
 
 def semantic_dedup(

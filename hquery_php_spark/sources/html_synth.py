@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "BASE_URL",
     "synth_html_col",
-    "synth_html_py",
     "norm_text_sql",
     "expected_spans_sql",
 ]
@@ -74,18 +73,6 @@ def synth_html_col(doc_id: Column, text: Column, source: Column) -> Column:
         F.lit("/"),
         sid,
         F.lit(_POST_IMG),
-    )
-
-
-def synth_html_py(doc_id, text: str, source: str) -> str:
-    """Python twin of synth_html_col (for per-doc unit checks)."""
-    import re
-
-    sid = str(doc_id)
-    norm = re.sub(r"\s+", " ", text).strip()
-    return (
-        f"{_PRE_TITLE}Doc {sid}{_POST_TITLE}{norm}{_POST_TEXT}{sid}"
-        f"{_MID_A}{sid}{_POST_A}{source}/{sid}{_POST_IMG}"
     )
 
 

@@ -173,3 +173,58 @@ def test_bench_rows_resolve_in_all_queries():
     assert names, "bench_queries list not found in bench.py"
     missing = set(names) - set(E.all_queries())
     assert not missing, f"bench rows not in all_queries(): {sorted(missing)}"
+
+
+def test_package_modules_reached_by_jobs_or_driver():
+    """Every module of the package is imported, directly or through
+    other package modules, by a job in jobs/ or by the driver entry:
+    code only a test imports belongs in tests/ or tools/.  Imports are
+    read with ast — absolute, relative and function-local ones all
+    count — and importing a module also runs its parent packages."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = {}
+    for p in (root / "hquery_php_spark").rglob("*.py"):
+        parts = p.relative_to(root).with_suffix("").parts
+        files[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = p
+
+    def with_parents(name):
+        parts = name.split(".")
+        return {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+
+    def imports(path, module):
+        is_pkg = path.name == "__init__.py"
+        package = module.split(".") if is_pkg else module.split(".")[:-1]
+        out = set()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                if node.level:
+                    base = package[: len(package) - node.level + 1]
+                    base = ".".join(base + [node.module] * bool(node.module))
+                else:
+                    base = node.module
+                names = [base] + [f"{base}.{a.name}" for a in node.names]
+            else:
+                continue
+            for name in names:
+                out |= {m for m in with_parents(name) if m in files}
+        return out
+
+    todo = set()
+    for p in [root / "__spark_entry__.py", *sorted((root / "jobs").glob("*.py"))]:
+        todo |= imports(p, p.stem)
+    reached = set()
+    while todo:
+        m = todo.pop()
+        if m not in reached:
+            reached.add(m)
+            todo |= imports(files[m], m) - reached
+    unreached = sorted(set(files) - reached)
+    assert not unreached, (
+        f"package modules no job or driver row imports (move them to "
+        f"tests/ or tools/, or delete them): {unreached}"
+    )

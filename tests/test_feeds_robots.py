@@ -229,6 +229,14 @@ def test_feed_entries_df(spark):
         (2, "atom", 0, "E1"),
         (2, "atom", 1, "E2"),
     ]
+    # guid/id survive the Arrow path as entry_id; an entry without one
+    # still carries its link (the key a discovery ledger falls back to)
+    assert [(r["entry_id"], r["link"]) for r in rows] == [
+        ("g1", "https://ex.com/1"),
+        (None, "https://ex.com/2"),
+        ("i1", "https://ex.com/e1"),
+        (None, "https://ex.com/e2"),
+    ]
 
 
 def test_sitemap_entries_df(spark):

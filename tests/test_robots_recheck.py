@@ -1,5 +1,4 @@
-"""Governance recheck: corpus vs current robots rules, spark-submit;
-and the streaming feed-discovery leg (never-seen entries only)."""
+"""Governance recheck: corpus vs current robots rules, spark-submit."""
 
 import os
 import shutil
@@ -50,52 +49,3 @@ def test_robots_recheck_job(tmp_path):
     assert r.returncode == 0, r.stderr[-2000:]
     got = pd.read_parquet(denied)
     assert sorted(got["doc_id"]) == [2, 3]
-
-
-def test_streaming_feed_entries(tmp_path):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    from hquery_php_spark.streaming.pipeline import streaming_feed_entries
-
-    rss = (
-        '<rss version="2.0"><channel><title>F</title>'
-        "<item><title>Old</title><link>https://e/old</link>"
-        "<guid>g-old</guid></item>"
-        "<item><title>New</title><link>https://e/new</link>"
-        "<guid>g-new</guid></item>"
-        "<item><title>NoGuid</title><link>https://e/nog</link></item>"
-        "</channel></rss>"
-    )
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    pd.DataFrame({"doc_id": [1], "xml": [rss]}).to_parquet(
-        src / "batch0.parquet"
-    )
-    ledger = spark.createDataFrame(
-        [("g-old",)], "entry_key string"
-    )
-    feeds = (
-        spark.readStream.schema("doc_id long, xml string")
-        .parquet(str(src))
-    )
-    out = streaming_feed_entries(feeds, ledger)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("feed_disc")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM feed_disc").collect()
-    keys = sorted(r["entry_key"] for r in rows)
-    # g-old suppressed by the ledger; the guid-less entry keys by link
-    assert keys == ["g-new", "https://e/nog"]
-    titles = {r["entry_key"]: r["title"] for r in rows}
-    assert titles["g-new"] == "New"

@@ -322,52 +322,6 @@ def test_additive_schema_evolution(spark, tmp_path):
         tbl.append(bad, "b2", allow_evolution=True)
 
 
-def test_streaming_append_exactly_once(spark, tmp_path):
-    """foreachBatch replays an epoch after restart (at-least-once);
-    epoch-keyed idempotent commits make the table exactly-once."""
-    from hquery_php_spark.streaming import streaming_append_snaptable
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    base = _df(spark, range(6))
-    base.write.parquet(src)
-
-    stream = spark.readStream.schema(base.schema).parquet(src)
-    q = (
-        streaming_append_snaptable(stream, out, ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    tbl = SnapTable(out)
-    assert tbl.read(spark).count() == 6
-    epochs = tbl.committed_batches()
-    assert all(e.startswith("epoch-") for e in epochs)
-
-    # simulate the crash-replay: re-deliver an already-committed epoch
-    n_snaps = len(tbl.snapshots())
-    eid = int(sorted(epochs)[0].rsplit("-", 1)[1])
-    tbl.append(base, "epoch-%08d" % eid)  # the exact replay call
-    assert tbl.read(spark).count() == 6  # no duplicates
-    assert len(tbl.snapshots()) == n_snaps
-
-    # new data, restart from the same checkpoint: only the delta lands
-    _df(spark, range(6, 9)).write.mode("append").parquet(src)
-    q2 = (
-        streaming_append_snaptable(stream, out, ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got = sorted(r.id for r in tbl.read(spark).collect())
-    assert got == list(range(9))
-
-    # batch DataFrame is rejected
-    with pytest.raises(ValueError):
-        streaming_append_snaptable(base, out, ckpt)
-
-
 def test_fsck_detects_missing_and_mismatched_files(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq

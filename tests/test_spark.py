@@ -342,42 +342,6 @@ def test_ivf_partition_pruning(spark, tmp_path):
     assert pruned.count() < t.count()
 
 
-def test_streaming_span_metrics(spark, tmp_path):
-    """Windowed streaming metrics aggregate over the extraction stream."""
-    from hquery_php_spark.streaming import (
-        streaming_extract_spans,
-        streaming_span_metrics,
-    )
-
-    src = str(tmp_path / "m_in")
-    ckpt = str(tmp_path / "m_ckpt")
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    sch = "doc_id string, html string, base_url string"
-    spark.createDataFrame(
-        [("a", "<p>x</p><a href='/l'>L</a>", "https://s/"), ("b", "<p>y</p>", "https://s/")],
-        sch,
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(sch).parquet(src)
-    metrics = streaming_span_metrics(streaming_extract_spans(stream))
-    q = (
-        metrics.writeStream.format("memory")
-        .queryName("span_metrics_out")
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM span_metrics_out").collect()
-        assert sum(r.n_docs for r in got) == 2
-        assert sum(r.n_media for r in got) == 1
-    finally:
-        q.stop()
-
-
 def test_null_html_recorded_as_error(spark):
     """A null payload is a recorded per-row error, never literal 'None'
     text and never a stage failure (fault tolerance)."""

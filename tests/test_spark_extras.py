@@ -1,4 +1,4 @@
-"""Spark tests: multimodal plumbing, plan compilation, streaming wiring."""
+"""Spark tests: multimodal plumbing, plan compilation, operator wiring."""
 
 import pytest
 
@@ -196,162 +196,6 @@ def test_plan_facts_pushdown(spark, tmp_path):
     assert facts["wholestage_codegen"]
 
 
-def test_streaming_extract(spark, tmp_path):
-    from hquery_php_spark.streaming import streaming_extract_spans
-
-    src_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    rows = [
-        ("s1", "<html><body><p>hello stream</p><a href='/l'>L</a></body></html>",
-         "https://s.com/"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "html", "base_url"])
-    df.write.parquet(src_dir)
-
-    stream = spark.readStream.schema(df.schema).parquet(src_dir)
-    out = streaming_extract_spans(stream)
-    q = (
-        out.writeStream.format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", out_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    res = spark.read.parquet(out_dir).collect()
-    assert len(res) == 1
-    spans = res[0]["spans"]
-    assert [s["kind"] for s in spans] == ["text", "media"]
-    assert spans[1]["media_ref"] == "https://s.com/l"
-
-    # batch DataFrame is rejected
-    with pytest.raises(ValueError):
-        streaming_extract_spans(df)
-
-
-def test_streaming_dedup_exact(spark, tmp_path):
-    """First arrival of each content fingerprint passes, later copies
-    are suppressed ACROSS micro-batches and restarts (state persists in
-    the checkpointed state store)."""
-    from hquery_php_spark.streaming import streaming_dedup_exact
-
-    src_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    b1 = spark.createDataFrame(
-        [("a1", "hello world"), ("b1", "unique text"), ("a2", "Hello   WORLD")],
-        ["doc_id", "text"],
-    )
-    b1.write.parquet(src_dir)
-
-    def run():
-        stream = spark.readStream.schema(b1.schema).parquet(src_dir)
-        q = (
-            streaming_dedup_exact(stream)
-            .writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", out_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    got1 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-    # normalization folds case+whitespace: a1 and a2 share a fingerprint
-    assert got1 == {"a1", "b1"}
-
-    # second batch: another copy of a1's content plus a new doc —
-    # the restart must remember batch-1 fingerprints
-    spark.createDataFrame(
-        [("a3", "hello  world"), ("c1", "brand new content")],
-        ["doc_id", "text"],
-    ).write.mode("append").parquet(src_dir)
-    run()
-    got2 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-    assert got2 == {"a1", "b1", "c1"}
-
-    with pytest.raises(ValueError):
-        streaming_dedup_exact(b1)
-
-
-def test_streaming_incremental_dedup_vs_bucketed_ledger(spark, tmp_path):
-    """Streamed docs anti-join the at-rest fingerprint ledger (bucketed
-    table); ledger rows appended between micro-batches are honored by
-    the NEXT batch without a stream restart (stream-static semantics)."""
-    from hquery_php_spark.operators.incremental import (
-        ledger_fingerprints,
-        write_ledger_bucketed,
-    )
-    from hquery_php_spark.streaming import streaming_incremental_dedup
-
-    src_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    corpus = spark.createDataFrame(
-        [("h1", "historic doc one"), ("h2", "historic doc two")],
-        ["doc_id", "text"],
-    )
-    write_ledger_bucketed(
-        ledger_fingerprints(corpus), "stream_fp_ledger", n_buckets=4,
-        path=str(tmp_path / "ledger"),
-    )
-    try:
-        b1 = spark.createDataFrame(
-            [("n1", "fresh content"), ("d1", "Historic   DOC one")],
-            ["doc_id", "text"],
-        )
-        b1.write.parquet(src_dir)
-
-        def run():
-            stream = spark.readStream.schema(b1.schema).parquet(src_dir)
-            q = (
-                streaming_incremental_dedup(
-                    stream, spark.table("stream_fp_ledger")
-                )
-                .writeStream.format("parquet")
-                .option("checkpointLocation", ckpt)
-                .option("path", out_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        run()
-        got1 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-        assert got1 == {"n1"}  # d1 normalizes to the ledgered h1 fp
-
-        # append n1's fp to the ledger (the batch appender's commit),
-        # then stream a copy of n1 plus a new doc: the grown ledger must
-        # suppress the copy in the NEXT micro-batch, no restart needed
-        ledger_fingerprints(
-            spark.createDataFrame([("n1", "fresh content")], ["doc_id", "text"])
-        ).write.mode("append").insertInto("stream_fp_ledger")
-        spark.createDataFrame(
-            [("n2", "FRESH    content"), ("n3", "truly novel")],
-            ["doc_id", "text"],
-        ).write.mode("append").parquet(src_dir)
-        run()
-        got2 = {r.doc_id for r in spark.read.parquet(out_dir).collect()}
-        assert got2 == {"n1", "n3"}
-        with pytest.raises(ValueError):
-            streaming_incremental_dedup(b1, spark.table("stream_fp_ledger"))
-    finally:
-        spark.sql("DROP TABLE IF EXISTS stream_fp_ledger")
-
-
-def test_revenue_join_uses_broadcast(spark):
-    """The 25-row nation dim must hash-broadcast, not sort-merge."""
-    import __spark_entry__ as E
-
-    df = E.q_revenue_by_nation(spark, "/root/testdata/sf0.001")
-    facts = plan_facts(df)
-    assert facts["broadcast_joins"] >= 1, facts["plan"]
-
-
 def test_extract_scan_prunes_columns(spark):
     """Only the projected columns may reach the documents scan."""
     import __spark_entry__ as E
@@ -360,116 +204,6 @@ def test_extract_scan_prunes_columns(spark):
     facts = plan_facts(df)
     # documents has 5 columns; token_count needs doc_id + text
     assert 0 < facts["read_schema_cols"] <= 2, facts["plan"]
-
-
-def test_streaming_stateful_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionization: gap-closed sessions are
-    emitted; idle sessions flush on event-time timeout."""
-    import time as _time
-
-    import pandas as pd
-
-    from hquery_php_spark.streaming import streaming_sessionize
-
-    src_dir = str(tmp_path / "ev_in")
-    ckpt = str(tmp_path / "ev_ckpt")
-
-    base = pd.Timestamp("2026-01-01 10:00:00")
-    rows1 = pd.DataFrame(
-        {
-            "user_id": [1, 1, 2],
-            "ts": [base, base + pd.Timedelta(minutes=5), base],
-        }
-    )
-    import os
-
-    os.makedirs(src_dir, exist_ok=True)
-    spark.createDataFrame(rows1).coalesce(1).write.mode("append").parquet(src_dir)
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp").parquet(src_dir)
-    )
-    out = streaming_sessionize(stream, gap_minutes=30, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # batch 2: user 1 returns after a 2-hour gap -> closes the first
-        # session; its timestamp also advances the watermark past user 2's
-        # timeout -> user 2's idle session flushes.
-        rows2 = pd.DataFrame(
-            {"user_id": [1], "ts": [base + pd.Timedelta(hours=2)]}
-        )
-        spark.createDataFrame(rows2).coalesce(1).write.mode("append").parquet(src_dir)
-        q.processAllAvailable()
-        # one more empty-ish advance to let timeouts fire
-        rows3 = pd.DataFrame(
-            {"user_id": [3], "ts": [base + pd.Timedelta(hours=3)]}
-        )
-        spark.createDataFrame(rows3).coalesce(1).write.mode("append").parquet(src_dir)
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT user_id, n_events FROM sessions_out ORDER BY user_id"
-        ).collect()
-        by_user = {}
-        for r in got:
-            by_user.setdefault(r.user_id, []).append(r.n_events)
-        # user 1's first session (2 events) closed by the gap
-        assert 2 in by_user.get(1, []), got
-        # user 2's idle single-event session flushed by timeout
-        assert by_user.get(2) == [1], got
-    finally:
-        q.stop()
-
-
-def test_streaming_checkpoint_resume(spark, tmp_path):
-    """Exactly-once resume: stop the stream, add input, restart with the
-    same checkpoint — every doc appears exactly once in the sink."""
-    from hquery_php_spark.streaming import streaming_extract_spans
-
-    src_dir = str(tmp_path / "cin")
-    out_dir = str(tmp_path / "cout")
-    ckpt = str(tmp_path / "cckpt")
-    import os
-
-    os.makedirs(src_dir, exist_ok=True)
-    sch = "doc_id string, html string, base_url string"
-
-    def write_batch(ids):
-        rows = [(i, f"<p>doc {i}</p>", "https://x/") for i in ids]
-        spark.createDataFrame(rows, sch.split(", ")[0] and sch).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    def start():
-        src = spark.readStream.schema(sch).parquet(src_dir)
-        return (
-            streaming_extract_spans(src)
-            .writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", out_dir)
-            .start()
-        )
-
-    write_batch(["a", "b"])
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-
-    write_batch(["c", "d"])
-    q = start()  # resume from the same checkpoint
-    q.processAllAvailable()
-    q.stop()
-
-    got = sorted(
-        r.doc_id for r in spark.read.parquet(out_dir).select("doc_id").collect()
-    )
-    assert got == ["a", "b", "c", "d"], got
 
 
 def test_pdf_layout_roundtrip(spark):
@@ -603,56 +337,6 @@ def test_multimodal_resize_and_frame_sample(spark):
     assert frames[0].mime == "image/webp"
 
 
-def test_streaming_sessionize_late_event(spark, tmp_path):
-    """A late-but-within-watermark event joins the open session without
-    dragging session_end backwards (regression: last_us was overwritten
-    unconditionally, shrinking the session and mis-timing the flush)."""
-    import os
-
-    import pandas as pd
-
-    from hquery_php_spark.streaming import streaming_sessionize
-
-    src_dir = str(tmp_path / "late_in")
-    ckpt = str(tmp_path / "late_ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    base = pd.Timestamp("2026-01-01 10:00:00")
-
-    def push(ts_list):
-        pdf = pd.DataFrame({"user_id": [1] * len(ts_list), "ts": ts_list})
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src_dir)
-
-    push([base, base + pd.Timedelta(minutes=5)])
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src_dir)
-    out = streaming_sessionize(stream, gap_minutes=30, watermark="3 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("late_sessions")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # late event: 10 min BEFORE the session start, within the 3h watermark
-        push([base - pd.Timedelta(minutes=10)])
-        q.processAllAvailable()
-        # big gap closes the session
-        push([base + pd.Timedelta(hours=2)])
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT user_id, session_start, session_end, n_events "
-            "FROM late_sessions"
-        ).collect()
-        assert len(got) == 1, got
-        r = got[0]
-        assert r.n_events == 3, got
-        assert r.session_start == (base - pd.Timedelta(minutes=10)).to_pydatetime(), got
-        assert r.session_end == (base + pd.Timedelta(minutes=5)).to_pydatetime(), got
-    finally:
-        q.stop()
-
-
 def test_resolve_media_refs_join_strategy(spark):
     """The media metadata table is corpus-proportional, so the default
     must NOT force a broadcast (no ResolvedHint in the logical plan) —
@@ -680,6 +364,10 @@ def test_resolve_media_refs_join_strategy(spark):
     assert "isFinalPlan=true" in plan and "BroadcastHashJoin" in plan, plan
     forced = resolve_media_refs(spans, meta, key_expr=key, broadcast_meta=True)
     assert "ResolvedHint" in forced._jdf.queryExecution().analyzed().toString()
+    # the pinned hint plans a hash broadcast, not a sort-merge join
+    facts = plan_facts(forced)
+    assert facts["broadcast_joins"] >= 1, facts["plan"]
+    assert facts["sort_merge_joins"] == 0, facts["plan"]
 
 
 def test_curate_corpus_end_to_end(spark):
@@ -1488,72 +1176,6 @@ def test_ivf_pq_index_prunes_partitions_and_matches_oracle(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_distinct_hll_matches_batch(spark, tmp_path):
-    """A stream's final HLL estimate equals the BATCH operator's over
-    the union of all micro-batches — register-merge across batches is
-    lossless, and the register math is identical to sketches.hll_distinct
-    (lambda-architecture-safe)."""
-    from hquery_php_spark.operators.sketches import hll_distinct
-    from hquery_php_spark.streaming import streaming_distinct_hll
-
-    src_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    b1 = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta", "g0"),
-            (2, "beta epsilon zeta", "g0"),
-            (3, "one two three", "g1"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    b1.write.parquet(src_dir)
-
-    def run():
-        stream = spark.readStream.schema(b1.schema).parquet(src_dir)
-        q = (
-            streaming_distinct_hll(stream)
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", out_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run()
-    # second micro-batch adds overlap + new tokens; restart must merge
-    spark.createDataFrame(
-        [
-            (4, "gamma eta theta", "g0"),
-            (5, "three four five six", "g1"),
-        ],
-        "doc_id long, text string, source string",
-    ).write.mode("append").parquet(src_dir)
-    run()
-
-    # last emitted row per group = the final register state
-    import pandas as pd
-
-    got_pdf = spark.read.parquet(out_dir).toPandas()
-    final = {
-        g: grp.sort_values("n_tokens_seen").iloc[-1]["est"]
-        for g, grp in got_pdf.groupby("group")
-    }
-    batch = {
-        r.source: r.est
-        for r in hll_distinct(
-            spark.read.parquet(src_dir)
-        ).collect()
-    }
-    assert final == batch
-    # sanity: the tiny vocabularies sit in the linear-counting regime,
-    # estimates should be near truth (7 and 6 distinct tokens)
-    assert abs(final["g0"] - 7) < 1.5 and abs(final["g1"] - 6) < 1.5
-
-
 def test_dsir_selects_target_like_docs_and_lockstep(spark):
     """Documents drawn from the target vocabulary score positive, raw-
     only documents negative; values agree with the DuckDB twin."""
@@ -1839,64 +1461,3 @@ def test_minhash_lsh_hot_bucket_cap(spark):
     }
     hot_pairs = {(a, b) for a in range(50) for b in range(50) if a < b}
     assert uncapped - hot_pairs == capped_pairs
-
-
-def test_streaming_sessionize_gap_before_start_splits(spark, tmp_path):
-    """A late in-watermark event that precedes the open session's START
-    by more than the gap becomes its own session — the batch split
-    semantics — instead of being merged (regression: the old state
-    only gap-tested against last_ts, so 11:00 merged into a 12:00
-    session under a 30-minute gap)."""
-    import os
-
-    import pandas as pd
-
-    from hquery_php_spark.streaming import streaming_sessionize
-
-    src_dir = str(tmp_path / "gap_in")
-    ckpt = str(tmp_path / "gap_ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    base = pd.Timestamp("2026-01-01 12:00:00")
-
-    def push(ts_list):
-        pdf = pd.DataFrame({"user_id": [1] * len(ts_list), "ts": ts_list})
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src_dir)
-
-    push([base])                                  # open session at 12:00
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src_dir)
-    out = streaming_sessionize(stream, gap_minutes=30, watermark="3 hours")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("gap_sessions")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # late event a full hour BEFORE the open session's start: the
-        # 11:00→12:00 gap exceeds 30m, so it must close as its OWN
-        # session immediately (batch semantics), 12:00 stays open
-        push([base - pd.Timedelta(hours=1)])
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT session_start, session_end, n_events FROM gap_sessions"
-        ).collect()
-        assert len(got) == 1, got
-        assert got[0].session_start == (base - pd.Timedelta(hours=1)).to_pydatetime()
-        assert got[0].session_end == (base - pd.Timedelta(hours=1)).to_pydatetime()
-        assert got[0].n_events == 1
-        # and the 12:00 session is still open: a nearby event extends it,
-        # a later gap closes it with both events
-        push([base + pd.Timedelta(minutes=10), base + pd.Timedelta(hours=2)])
-        q.processAllAvailable()
-        got2 = spark.sql(
-            "SELECT session_start, session_end, n_events FROM gap_sessions "
-            "ORDER BY session_start"
-        ).collect()
-        assert len(got2) == 2, got2
-        assert got2[1].session_start == base.to_pydatetime()
-        assert got2[1].session_end == (base + pd.Timedelta(minutes=10)).to_pydatetime()
-        assert got2[1].n_events == 2
-    finally:
-        q.stop()

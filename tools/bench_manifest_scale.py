@@ -11,8 +11,11 @@ table handle (empty manifest cache):
 * ``plan_inflate_ms`` — the pre-summary behavior (inflate every shard,
   then prune per-file), what planning cost looked like when metadata
   I/O was O(table);
-* ``append_ms``       — one more append on the N-shard table (the O(1)
-  commit: must not grow with N);
+* ``append_ms_by_size`` — the O(1)-commit claim as a growth curve:
+  every build append is timed, and for a window of ``REPS`` consecutive
+  appends starting at each of N/8, N/4, N/2 and N-REPS shards the
+  median with its min–max band is reported (``append_growth`` = median
+  at the widest table / median at the narrowest; ~1 means no growth);
 * shards loaded vs total, and a correctness check that the lazy point
   read returns exactly the one row.
 
@@ -28,16 +31,20 @@ the data path; this times the metadata path once per change).
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+REPS = 8  # consecutive appends timed per table size
+
 
 def main() -> None:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 192
     per = int(sys.argv[2]) if len(sys.argv) > 2 else 200
+    assert n_batches >= 8 * REPS, f"n_batches must be at least {8 * REPS}"
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -56,7 +63,7 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="bench-mfscale-")
     shutil.rmtree(root)
     tbl = SnapTable(root)
-    t0 = time.perf_counter()
+    append_ms = []
     for b in range(n_batches):
         df = (
             spark.range(b * per, (b + 1) * per)
@@ -66,21 +73,22 @@ def main() -> None:
             )
             .coalesce(1)
         )
+        t0 = time.perf_counter()
         tbl.append(df, "b%05d" % b)
-    build_s = time.perf_counter() - t0
+        append_ms.append((time.perf_counter() - t0) * 1e3)
+    build_s = sum(append_ms) / 1e3
 
-    # one more append on the wide table: the O(1)-commit claim
-    extra = (
-        spark.range(n_batches * per, n_batches * per + per)
-        .select(
-            F.col("id").cast("long").alias("id"),
-            F.concat(F.lit("v"), F.col("id")).alias("v"),
-        )
-        .coalesce(1)
-    )
-    t0 = time.perf_counter()
-    tbl.append(extra, "b-extra")
-    append_ms = (time.perf_counter() - t0) * 1e3
+    # the O(1)-commit claim: append cost at growing table sizes
+    by_size = []
+    for start in (n_batches // 8, n_batches // 4, n_batches // 2,
+                  n_batches - REPS):
+        window = append_ms[start : start + REPS]
+        by_size.append({
+            "shards_before": start,
+            "median_ms": round(statistics.median(window), 1),
+            "min_ms": round(min(window), 1),
+            "max_ms": round(max(window), 1),
+        })
 
     key = (n_batches // 2) * per + 7
     cold = SnapTable(root)  # empty manifest cache — a fresh reader
@@ -103,9 +111,12 @@ def main() -> None:
             {
                 "metric": "snaptable_plan_scale",
                 "n_manifest_shards": plan["manifests_total"],
-                "rows": (n_batches + 1) * per,
+                "rows": n_batches * per,
                 "build_s": round(build_s, 2),
-                "append_on_wide_table_ms": round(append_ms, 1),
+                "append_ms_by_size": by_size,
+                "append_growth": round(
+                    by_size[-1]["median_ms"] / by_size[0]["median_ms"], 2
+                ),
                 "plan_lazy_ms": round(plan_lazy_ms, 2),
                 "plan_inflate_ms": round(plan_inflate_ms, 2),
                 "manifests_loaded": plan["manifests_loaded"],

@@ -14,7 +14,6 @@ QUERIES = [
     ("extract_spans", "scan → project(3 cols) → salted repartition → mapInPandas extract → posexplode"),
     ("token_count", "column pruning: only (doc_id, text) reach the scan"),
     ("dedup_exact", "map-side partial agg on the 16B fingerprint, one shuffle"),
-    ("revenue_by_nation", "two shuffle joins + explicit broadcast of the 25-row dim"),
     ("dedup_minhash", "hash-once signatures → banded-LSH bucket grouping (pairs generated expression-level from each bucket's sorted id array — half the classic self-join shuffle) → shuffle-semi-join-pruned verify (no forced broadcast: candidates are corpus-proportional; AQE broadcasts at runtime when small); persist_shingles=True so ONE shingle-build subtree feeds both join sides"),
     ("training_pipeline", "extract → quality filter → dedup in one plan"),
     ("similarity_ivf", "materialized IVF index: PartitionFilters on the bucket column prune non-candidate directories at planning time"),
