@@ -34,7 +34,7 @@ from hquery_php_spark.operators.pipeline import (
     extract_spans_df,
     salted_repartition,
 )
-from hquery_php_spark.operators.similarity import brute_force_topk, ivf_topk
+from hquery_php_spark.operators.similarity import brute_force_topk
 from hquery_php_spark.sources.html_synth import (
     BASE_URL,
     expected_main_text_sql as _main_text_sql,

@@ -18,4 +18,5 @@ Layout:
 
 __version__ = "0.1.0"
 
+from . import _workerinit  # noqa: F401  (guards zipimport in Spark workers)
 from .core import HDoc, HElement, Span, extract_spans  # noqa: F401

@@ -79,18 +79,14 @@ def brute_force_topk(
     return scored.orderBy(F.col("cos").desc(), F.col("id")).limit(k)
 
 
-def bucket_of(
-    vec_col: Column, n_planes: int = 12, portable: bool = True, band: int = 0
-) -> Column:
+def bucket_of(vec_col: Column, n_planes: int = 12, band: int = 0) -> Column:
     """Sign-LSH coarse bucket id (shares the hyperplane family with
     dedup.embedding_near_dup so tables can be co-bucketed).
 
     Hyperplane p's coefficient for dimension i is the deterministic
     pseudo-random value ((a_p·(i+1) + b_p) mod M) / M · 2 − 1 in [-1, 1)
     from the engine-neutral affine family, reproducible in ANSI SQL
-    (``portable_bucket_sql``).  ``portable=False`` takes it from Murmur3
-    ``hash(i, p)`` instead; only ``ivf_topk``'s default still asks for
-    that family (see there).  Single pass over the vector: one
+    (``portable_bucket_sql``).  Single pass over the vector: one
     ``aggregate`` carries all plane dot-products as an ``array<double>``
     accumulator.
 
@@ -99,24 +95,17 @@ def bucket_of(
     v = vec_col.cast("array<double>")
     planes = F.sequence(F.lit(0), F.lit(n_planes - 1))
     zeros = F.transform(planes, lambda p: F.lit(0.0))
-    if portable:
-        a_c, b_c = _affine_consts(n_planes, seed=_PLANE_SEED + 0x9E37 * band)
-        # long literals: a_p·(i+1) overflows INT under ANSI mode otherwise
-        ac = F.array(*[F.lit(a).cast("long") for a in a_c])
-        bc = F.array(*[F.lit(b).cast("long") for b in b_c])
+    a_c, b_c = _affine_consts(n_planes, seed=_PLANE_SEED + 0x9E37 * band)
+    # long literals: a_p·(i+1) overflows INT under ANSI mode otherwise
+    ac = F.array(*[F.lit(a).cast("long") for a in a_c])
+    bc = F.array(*[F.lit(b).cast("long") for b in b_c])
 
-        def coeff(i: Column, p: Column) -> Column:
-            m = F.pmod(
-                F.element_at(ac, p + 1) * (i.cast("long") + 1) + F.element_at(bc, p + 1),
-                F.lit(_POLY_MOD),
-            )
-            return m.cast("double") / F.lit(float(_POLY_MOD)) * 2 - 1
-
-    else:
-
-        def coeff(i: Column, p: Column) -> Column:
-            h = F.hash(i, p) if band == 0 else F.hash(i, p, F.lit(band))
-            return (F.pmod(h, F.lit(2000)) - F.lit(1000)).cast("double") / 1000.0
+    def coeff(i: Column, p: Column) -> Column:
+        m = F.pmod(
+            F.element_at(ac, p + 1) * (i.cast("long") + 1) + F.element_at(bc, p + 1),
+            F.lit(_POLY_MOD),
+        )
+        return m.cast("double") / F.lit(float(_POLY_MOD)) * 2 - 1
 
     dots = F.aggregate(
         F.sequence(F.lit(0), F.size(v) - 1),
@@ -160,32 +149,25 @@ def ivf_topk(
     id_col: str = "vec_id",
     n_planes: int = 8,
     hamming_radius: int = 1,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: scan only rows whose coarse bucket is within
     ``hamming_radius`` of the query's bucket.
 
     With the table pre-partitioned/bucketed by ``bucket_of``, the filter
     becomes partition pruning — the 100TB path scans a fraction
-    ≈ C(n_planes, ≤radius) / 2^n_planes of the data.
-
-    ``portable=True`` buckets with the affine plane family that
-    ``write_ivf_index`` and the SQL twin use.  The Murmur3 default stays
-    only because ``test_ivf_recall_vs_brute_force`` pins recall ≥ 0.6 on
-    one query, which that family reaches (0.9) and the affine one does
-    not (0.5); over 200 queries both average 0.52, and over 300 random
-    Gaussian plane sets the one query reaches 0.6 half the time.
+    ≈ C(n_planes, ≤radius) / 2^n_planes of the data.  Buckets come from
+    the affine plane family that ``write_ivf_index`` and the SQL twin use.
     """
     spark = df.sparkSession
     qv = _vec_lit(query_vec)
     qbucket = (
         spark.range(1)
-        .select(bucket_of(qv, n_planes, portable=portable).alias("b"))
+        .select(bucket_of(qv, n_planes).alias("b"))
         .collect()[0]["b"]
     )
     cands = hamming_ball(qbucket, n_planes, hamming_radius)
     scored = (
-        df.withColumn("__bucket", bucket_of(F.col(vec_col), n_planes, portable=portable))
+        df.withColumn("__bucket", bucket_of(F.col(vec_col), n_planes))
         .where(F.col("__bucket").isin(*cands))
         .select(
             F.col(id_col).alias("id"),

@@ -16,6 +16,10 @@ table handle (empty manifest cache):
   appends starting at each of N/8, N/4, N/2 and N-REPS shards the
   median with its min–max band is reported (``append_growth`` = median
   at the widest table / median at the narrowest; ~1 means no growth);
+* ``commit_ms_by_size`` — the same windows for the commit step alone
+  (``SnapTable._commit``: snapshot and manifest metadata), which the
+  Spark parquet write inside each append (100-200 ms) would otherwise
+  hide (``commit_growth`` as above);
 * shards loaded vs total, and a correctness check that the lazy point
   read returns exactly the one row.
 
@@ -63,7 +67,17 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="bench-mfscale-")
     shutil.rmtree(root)
     tbl = SnapTable(root)
-    append_ms = []
+    append_ms, commit_ms = [], []
+    commit = tbl._commit
+
+    def timed_commit(*a, **kw):
+        t = time.perf_counter()
+        try:
+            return commit(*a, **kw)
+        finally:
+            commit_ms[-1] += (time.perf_counter() - t) * 1e3
+
+    tbl._commit = timed_commit
     for b in range(n_batches):
         df = (
             spark.range(b * per, (b + 1) * per)
@@ -73,22 +87,27 @@ def main() -> None:
             )
             .coalesce(1)
         )
+        commit_ms.append(0.0)
         t0 = time.perf_counter()
         tbl.append(df, "b%05d" % b)
         append_ms.append((time.perf_counter() - t0) * 1e3)
     build_s = sum(append_ms) / 1e3
 
-    # the O(1)-commit claim: append cost at growing table sizes
-    by_size = []
-    for start in (n_batches // 8, n_batches // 4, n_batches // 2,
-                  n_batches - REPS):
-        window = append_ms[start : start + REPS]
-        by_size.append({
-            "shards_before": start,
-            "median_ms": round(statistics.median(window), 1),
-            "min_ms": round(min(window), 1),
-            "max_ms": round(max(window), 1),
-        })
+    # the O(1)-commit claim: append and commit cost at growing table sizes
+    def by_size(samples):
+        out = []
+        for start in (n_batches // 8, n_batches // 4, n_batches // 2,
+                      n_batches - REPS):
+            window = samples[start : start + REPS]
+            out.append({
+                "shards_before": start,
+                "median_ms": round(statistics.median(window), 2),
+                "min_ms": round(min(window), 2),
+                "max_ms": round(max(window), 2),
+            })
+        return out
+
+    append_by_size, commit_by_size = by_size(append_ms), by_size(commit_ms)
 
     key = (n_batches // 2) * per + 7
     cold = SnapTable(root)  # empty manifest cache — a fresh reader
@@ -113,9 +132,13 @@ def main() -> None:
                 "n_manifest_shards": plan["manifests_total"],
                 "rows": n_batches * per,
                 "build_s": round(build_s, 2),
-                "append_ms_by_size": by_size,
+                "append_ms_by_size": append_by_size,
                 "append_growth": round(
-                    by_size[-1]["median_ms"] / by_size[0]["median_ms"], 2
+                    append_by_size[-1]["median_ms"] / append_by_size[0]["median_ms"], 2
+                ),
+                "commit_ms_by_size": commit_by_size,
+                "commit_growth": round(
+                    commit_by_size[-1]["median_ms"] / commit_by_size[0]["median_ms"], 2
                 ),
                 "plan_lazy_ms": round(plan_lazy_ms, 2),
                 "plan_inflate_ms": round(plan_inflate_ms, 2),
