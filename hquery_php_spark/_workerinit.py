@@ -7,20 +7,16 @@ A Spark Python worker ends every task's set-up
 worker that has imported the engine holds about 16 of them over
 ``pyspark.zip``, the py4j zip and the spark-core jar: 100-250 ms per task
 before the UDF is even unpickled.  Spark reuses its workers, so once one
-task has imported this package, every later task in that worker skips
-the re-read.
+task has imported this package, the next task's set-up reads each
+archive through the guard and every task after it skips the re-read.
 
 The guard re-points an importer at the directory this process already
 read while the archive's (mtime, size, inode) stay as they were at that
-read; a changed or vanished archive gets the stock method.  Imported
-inside a Spark task, the package counts that task's own set-up as the
-last read of every archive on ``sys.path_importer_cache`` (the set-up
-re-read them all moments before); an archive rewritten between that
-set-up and this import is taken as read.
+read; a changed or vanished archive, or one the guard has not read yet,
+gets the stock method.
 """
 
 import os
-import sys
 import zipimport
 
 _stock = zipimport.zipimporter.invalidate_caches
@@ -45,14 +41,4 @@ def invalidate_caches(self):
     _read_at[self.archive] = stamp
 
 
-def _count_task_setup_reads():
-    tc = sys.modules.get("pyspark.taskcontext")
-    if tc is None or tc.TaskContext.get() is None:
-        return
-    for f in list(sys.path_importer_cache.values()):
-        if isinstance(f, zipimport.zipimporter):
-            _read_at.setdefault(f.archive, _stamp(f.archive))
-
-
 zipimport.zipimporter.invalidate_caches = invalidate_caches
-_count_task_setup_reads()

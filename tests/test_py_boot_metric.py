@@ -39,16 +39,32 @@ TASKS = 4
 def spark():
     from pyspark.sql import SparkSession
 
+    # a fresh context, so that the idle pool pass 2 draws from is exactly
+    # the TASKS workers pass 1 leaves (a session another module left
+    # running would bring its own)
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.stop()
     s = (SparkSession.builder.master("local[%d]" % TASKS).appName("py-boot-metric")
          .config("spark.ui.enabled", "true")
          .config("spark.ui.showConsoleProgress", "false")
          .getOrCreate())
     s.sparkContext.setLogLevel("ERROR")
+    if s.sparkContext.master != "local[%d]" % TASKS:
+        s.stop()
+        pytest.skip("got a %s session, not a fresh local[%d] one"
+                    % (s.sparkContext.master, TASKS))
     yield s
     s.stop()
 
 
 def test_task_body_is_run_and_pool_idle_is_init(spark):
+    def overlap(batches):
+        import time
+
+        time.sleep(0.3)
+        yield from batches
+
     def sleepy(batches):
         import time
 
@@ -58,8 +74,9 @@ def test_task_body_is_run_and_pool_idle_is_init(spark):
     df = spark.range(TASKS, numPartitions=TASKS)
     h = harvest.StatusHarvester(spark)
     mark = h.mark()
-    # workers started (or re-used) and left idle in the pool
-    df.mapInPandas(lambda it: it, "id long").write.format("noop").mode("overwrite").save()
+    # TASKS workers started and left idle in the pool: each task of pass 1
+    # holds its worker for a moment, so no worker serves two of them
+    df.mapInPandas(overlap, "id long").write.format("noop").mode("overwrite").save()
     time.sleep(PAUSE_S)
     df.mapInPandas(sleepy, "id long").write.format("noop").mode("overwrite").save()
     w = h.since(mark)

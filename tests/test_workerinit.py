@@ -1,8 +1,8 @@
 """The zipimport guard (``hquery_php_spark._workerinit``): an unchanged
 archive is not re-read by ``importlib.invalidate_caches()``, a rewritten
 one is, a deleted one behaves as under the stock method — and in a Spark
-worker, the task after the one that imported the package re-reads no
-zip directory during its own set-up."""
+worker, once a task's set-up has run through the guard, the next task
+re-reads no zip directory during its own set-up."""
 
 import importlib
 import os
@@ -88,14 +88,20 @@ def test_deleted_archive_behaves_as_stock(archive, reads):
     assert "wi_guard_a.py" in importer._files
 
 
-def test_next_task_setup_rereads_nothing(tmp_path):
-    """Spark reuses the worker: the second task's set-up (which ends in
-    ``importlib.invalidate_caches()``) must read no zip directory.  The
-    shipped ``--py-files`` zip makes sure the worker holds a zipimporter
-    wherever pyspark itself is installed."""
+def test_task_after_first_guarded_setup_rereads_nothing(tmp_path):
+    """Spark reuses the worker.  The task after the one that imported the
+    package runs the first guarded set-up, which reads each archive once;
+    the task after that must read no zip directory during its own set-up
+    (which ends in ``importlib.invalidate_caches()``).  The shipped
+    ``--py-files`` zip makes sure the worker holds a zipimporter wherever
+    pyspark itself is installed."""
     pytest.importorskip("pyspark")
     from pyspark.sql import SparkSession
 
+    # a session another module left running would hand out its own pool
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.stop()
     shipped = str(tmp_path / "wi_shipped.zip")
     _write_zip(shipped, {"wi_shipped_mod": "Z = 3\n"})
     spark = (
@@ -105,16 +111,28 @@ def test_next_task_setup_rereads_nothing(tmp_path):
         .getOrCreate()
     )
     try:
+        if spark.sparkContext.master != "local[1]":
+            pytest.skip("got a %s session, not a fresh local[1] one"
+                        % spark.sparkContext.master)
         spark.sparkContext.addPyFile(shipped)
 
         def first(batches):
             import os
-            import zipimport
 
             import pandas as pd
 
             import hquery_php_spark  # noqa: F401  (installs the guard)
             import wi_shipped_mod  # noqa: F401
+
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"pid": [os.getpid()]})
+
+        def second(batches):
+            import os
+            import zipimport
+
+            import pandas as pd
 
             for _ in batches:
                 pass
@@ -130,7 +148,7 @@ def test_next_task_setup_rereads_nothing(tmp_path):
             zipimport._wi_test_reads = seen
             yield pd.DataFrame({"pid": [os.getpid()]})
 
-        def second(batches):
+        def third(batches):
             import os
             import sys
             import zipimport
@@ -150,11 +168,12 @@ def test_next_task_setup_rereads_nothing(tmp_path):
 
         one = spark.range(1, numPartitions=1)
         (a,) = one.mapInPandas(first, "pid long").collect()
-        (b,) = one.mapInPandas(
-            second, "pid long, guarded boolean, reads long, n_zip long").collect()
+        (b,) = one.mapInPandas(second, "pid long").collect()
+        (c,) = one.mapInPandas(
+            third, "pid long, guarded boolean, reads long, n_zip long").collect()
     finally:
         spark.stop()
-    assert b.pid == a.pid, "the second task ran in another worker"
-    assert b.guarded
-    assert b.n_zip >= 1
-    assert b.reads == 0
+    assert a.pid == b.pid == c.pid, "the tasks ran in more than one worker"
+    assert c.guarded
+    assert c.n_zip >= 1
+    assert c.reads == 0

@@ -3,7 +3,7 @@
 
 Starts a local[4] session, imports the engine in every Python worker
 (the state every extraction job reaches after its first batch), then
-times ``--passes`` no-op 4-task ``mapInPandas`` passes over
+times ``PASSES`` no-op 4-task ``mapInPandas`` passes over
 ``spark.range``.  Each pass does no work in Python, so what it costs is
 the per-task overhead: launching the task, the worker's set-up
 (``pyspark.worker_util.setup_spark_files``), unpickling the function and
@@ -19,13 +19,12 @@ passes:
 
 Run from the repository root:
 
-    python tools/py_task_overhead.py [--passes 10]
+    python tools/py_task_overhead.py
 
 Reads the status store with ``perfbench/harvest.py`` (imported, not
 changed).  Run it alone on the machine: the figures are walls.
 """
 
-import argparse
 import os
 import statistics
 import sys
@@ -33,6 +32,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TASKS = 4
+PASSES = 10
 
 
 def _import_engine(batches):
@@ -49,10 +49,7 @@ def band(xs):
     return "%.3f [%.3f-%.3f]" % (statistics.median(xs), min(xs), max(xs))
 
 
-def main(argv=None) -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--passes", type=int, default=10)
-    args = ap.parse_args(argv)
+def main() -> int:
     sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
@@ -74,12 +71,12 @@ def main(argv=None) -> int:
         mark = h.mark()
         df.mapInPandas(_import_engine, "id long").write.format("noop").mode("overwrite").save()
         walls = []
-        for _ in range(args.passes):
+        for _ in range(PASSES):
             t = time.perf_counter()
             df.mapInPandas(_noop, "id long").write.format("noop").mode("overwrite").save()
             walls.append(time.perf_counter() - t)
         execs = sorted(h.since(mark).sql, key=lambda e: e["id"])[1:]
-        assert len(execs) == args.passes, len(execs)
+        assert len(execs) == PASSES, len(execs)
         init, run = [], []
         for ex in execs:
             one = Window(sql=[ex])
@@ -87,7 +84,7 @@ def main(argv=None) -> int:
             run.append(one.sql_metric("MapInPandas", "time to run Python workers") / TASKS)
     finally:
         spark.stop()
-    print("py_task_overhead: %d no-op passes of %d tasks, median [min-max]" % (args.passes, TASKS))
+    print("py_task_overhead: %d no-op passes of %d tasks, median [min-max]" % (PASSES, TASKS))
     print("  pass_wall_s        %s" % band(walls))
     print("  init_s per task    %s" % band(init))
     print("  run_s per task     %s" % band(run))
