@@ -558,10 +558,8 @@ def main() -> None:
 
     # Frontier skew row: a 1-host-=-20%-of-URLs frontier (the VERDICT-r4
     # scenario).  Politeness is per-host serial BY DESIGN, so the giant
-    # host's rank window + layout sort run single-task; the mitigation
-    # is max_urls_per_host (two-phase salted cap — crawl-delay bounds
-    # useful queue depth anyway), which bounds every window partition.
-    # Reported: mix / body-only / tail-only / capped-mix walls.
+    # host's rank window + layout sort run single-task.
+    # Reported: mix / body-only / tail-only walls.
     from hquery_php_spark.operators.frontier import frontier_df as _frontier_df
 
     NF = n_docs * 40  # ~2M URLs at sf0.1
@@ -587,11 +585,11 @@ def main() -> None:
     ftail = fcand.where(F.col("url").startswith("https://giant")).persist()
     fbody.count(), ftail.count()
 
-    def _fwall(df, **kw):
+    def _fwall(df):
         best = None
         for _ in range(2):
             t0 = time.perf_counter()
-            _frontier_df(df, n_host_buckets=int(cpus) * 2, **kw).count()
+            _frontier_df(df, n_host_buckets=int(cpus) * 2).count()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         return round(best, 4)
@@ -600,12 +598,10 @@ def main() -> None:
         "mix_wall": _fwall(fcand),
         "body_wall": _fwall(fbody),
         "tail_wall": _fwall(ftail),
-        "capped_mix_wall": _fwall(fcand, max_urls_per_host=100_000),
         "n_urls": NF,
         "giant_frac": 0.2,
         "note": "1 host = 20% of URLs; politeness serializes a giant "
-        "host by design — max_urls_per_host bounds its window/sort "
-        "partitions (fetch budget bounds useful depth anyway)",
+        "host by design",
     }
     for f in (fcand, fbody, ftail):
         f.unpersist()

@@ -42,11 +42,8 @@ single row is the only thing the driver ever collects (parameter-sized,
 same pattern as similarity_topk's query vector).  Lineage from the
 per-round ``replace`` chain is truncated with ``localCheckpoint`` every
 ``checkpoint_every`` rounds, the ``connected_components`` discipline.
-At a real 50k-merge vocabulary, batch rounds with ``bpe_train_batched``
-(top-M pairwise-disjoint pairs per round, M≈100, cutting driver
-round-trips and pair-count shuffles 100×); the value-checked driver row
-stays on the single-merge-per-round recurrence that the SQL twin
-replays exactly.
+The value-checked driver row runs the single-merge-per-round recurrence
+that the SQL twin replays exactly.
 
 Encoding is embarrassingly parallel either way: the expression path
 (``bpe_encode_tokens``) is a chain of K JVM-side ``replace`` calls —
@@ -79,7 +76,6 @@ __all__ = [
     "word_freqs",
     "word_freqs_sql",
     "bpe_train",
-    "bpe_train_batched",
     "bpe_encode_tokens",
     "bpe_encode_map",
     "bpe_suite_oracle_sql",
@@ -181,91 +177,6 @@ def bpe_train(
         w = w.withColumn("enc", F.replace("enc", F.lit(pat), F.lit(rep)))
         if (rank + 1) % checkpoint_every == 0:
             w = w.localCheckpoint()
-    return merges
-
-
-def bpe_train_batched(
-    words: DataFrame,
-    n_merges: int,
-    batch: int = 100,
-    word_col: str = "word",
-    freq_col: str = "freq",
-    checkpoint_every: int = 8,
-) -> List[Tuple[int, str, str, str, int]]:
-    """The 50k-merge SCALE path: take up to ``batch`` pairwise-DISJOINT
-    top pairs per round and apply them together, cutting driver
-    round-trips and pair-count shuffles ``batch``-fold (500 rounds for a
-    50k-merge vocabulary instead of 50k).
-
-    Disjointness rule: within a round, a pair is skipped if either of
-    its symbols was already consumed by a picked pair OR equals a token
-    a picked pair is about to create — with symbol-disjoint patterns the
-    batch's ``replace`` calls touch non-overlapping sentinel spans, so
-    they commute and the result is order-independent (deterministic on
-    any engine or cluster size).  ``batch=1`` reduces EXACTLY to
-    ``bpe_train`` (each round's top-1 is the global argmax) — pinned in
-    tests; larger batches trade the strict one-at-a-time recurrence for
-    round count, the standard large-scale BPE compromise, so the
-    value-checked driver row stays on ``bpe_train`` and this variant is
-    pytest-pinned (batch-1 equality, per-round disjointness, encode
-    round-trip)."""
-    w = words.select(
-        _wrap(F.col(word_col)).alias("enc"),
-        F.col(freq_col).cast("long").alias("freq"),
-    ).localCheckpoint()
-
-    pair_expr = F.expr(
-        "transform(sequence(1, size(syms) - 1), "
-        "i -> struct(syms[i - 1] AS a, syms[i] AS b))"
-    )
-    merges: List[Tuple[int, str, str, str, int]] = []
-    since_ckpt = 0
-    while len(merges) < n_merges:
-        cap = min(batch, n_merges - len(merges))
-        pairs = (
-            w.select(_symbols(F.col("enc")).alias("syms"), "freq")
-            .where(F.size("syms") > 1)
-            .select(F.explode(pair_expr).alias("p"), "freq")
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("cnt"))
-            # a disjoint top-cap needs more than cap candidates; 4x is a
-            # safe deterministic over-fetch (still parameter-sized)
-            .orderBy(F.desc("cnt"), "a", "b")
-            .limit(cap * 4)
-            .collect()
-        )
-        if not pairs:
-            break
-        used: set = set()
-        picked = []
-        for r in pairs:
-            a, b = r["a"], r["b"]
-            if len(picked) >= cap:
-                break
-            # a pair is skipped if it touches a symbol another picked
-            # pair consumes OR creates — including via its own merged
-            # token (a+b colliding with a picked source/created symbol
-            # would make the round's replaces order-dependent)
-            if a in used or b in used or (a + b) in used:
-                continue
-            picked.append((a, b, int(r["cnt"])))
-            used.update((a, b, a + b))
-        if not picked:
-            break
-        col = F.col("enc")
-        for a, b, cnt in picked:
-            merges.append((len(merges), a, b, a + b, cnt))
-            pat, rep = _merge_pat(a, b)
-            col = F.replace(col, F.lit(pat), F.lit(rep))
-        w = w.withColumn("enc", col)
-        # cadence counts MERGES, not rounds (a round nests up to
-        # ``batch`` replaces; a round-based count would accumulate
-        # batch × checkpoint_every chained calls and blow the codegen
-        # method-size limit at exactly the scale this variant targets)
-        since_ckpt += len(picked)
-        if since_ckpt >= checkpoint_every:
-            w = w.localCheckpoint()
-            since_ckpt = 0
     return merges
 
 

@@ -18,9 +18,8 @@ linear shuffle — the design scales to a 10^12-URL frontier:
 4. **priority** — deterministic score: source weight (seed > sitemap
    > feed > outlink) + sitemap priority when present; integer
    arithmetic so re-runs reproduce bit-for-bit.
-5. **rank + schedule** — per-host ``fetch_order`` window (with the
-   optional ``max_urls_per_host`` salted cap bounding every window
-   partition for giant hosts) and the crawl-delay schedule column.
+5. **rank + schedule** — per-host ``fetch_order`` window and the
+   crawl-delay schedule column.
 6. **politeness layout (FINAL step)** — ``repartition(host_bucket)``
    + ``sortWithinPartitions(host, priority desc)``: all URLs of a
    host land in one partition, ordered by fetch sequence, so a
@@ -62,29 +61,12 @@ def frontier_df(
     candidates: DataFrame,
     robots_rules: DataFrame | None = None,
     n_host_buckets: int = 256,
-    max_urls_per_host: int | None = None,
-    n_salts: int = 32,
 ) -> DataFrame:
     """``candidates``: (url, source_kind['seed'|'sitemap'|'feed'|
     'outlink'], priority_micro int — e.g. sitemap <priority> * 1e6,
     0 when unknown).  ``robots_rules``: output of
     ``robots.robots_rules_df`` (host, rules, crawl_delay) or None to
-    skip the gate.  Returns the politeness-partitioned frontier.
-
-    ``max_urls_per_host`` is the giant-host skew control: a host
-    holding 20% of a 10^10-URL frontier would otherwise serialize a
-    multi-billion-row sort through ONE rank-window task — and fetching
-    that queue is physically impossible anyway (crawl-delay x depth =
-    years), so ranking past the fetch budget is wasted work.  The cap
-    keeps the TOP of each host's queue by the same (priority desc,
-    url) order the frontier uses, via the skew-safe two-phase shape of
-    ``functions/text.per_domain_cap``: phase 1 ranks within (host,
-    salt-of-url) — no partition exceeds ~host_rows/n_salts — and keeps
-    ``cap`` per salt (a superset of the true top-cap); phase 2 ranks
-    the <= cap*n_salts survivors exactly.  After the cap, every
-    downstream window partition is bounded by the cap regardless of
-    input skew.  Size ``n_salts`` ~ host_rows/cap for the biggest
-    expected host."""
+    skip the gate.  Returns the politeness-partitioned frontier."""
     c = candidates.select(
         canonical_url(F.col("url")).alias("url"),
         F.col("source_kind"),
@@ -124,29 +106,10 @@ def frontier_df(
     # politeness layout as the FINAL step so the output really holds
     # the documented "partition = one politeness unit, stream in
     # order" property.
-    if max_urls_per_host is not None:
-        # salted pre-prune (phase 1): bounds every window partition to
-        # ~host_rows/n_salts; keeps a superset of each host's true head
-        cap = max_urls_per_host
-        b = F.pmod(F.xxhash64("url"), F.lit(n_salts))
-        w1 = Window.partitionBy("host", "__b").orderBy(
-            F.col("priority").desc(), "url"
-        )
-        best = (
-            best.withColumn("__b", b)
-            .withColumn("__r1", F.row_number().over(w1))
-            .where(F.col("__r1") <= cap)
-            .drop("__r1", "__b")
-        )
-    # phase 2 doubles as the fetch_order rank — same partition key and
-    # order, so the cap costs ONE extra (salted, bounded) window, not
-    # two
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(), "url")
     out = best.withColumn(
         "fetch_order", (F.row_number().over(w) - 1).cast("int")
     )
-    if max_urls_per_host is not None:
-        out = out.where(F.col("fetch_order") < max_urls_per_host)
     out = out.withColumn(
         "host_bucket",
         F.pmod(F.xxhash64("host"), F.lit(n_host_buckets)).cast("int"),

@@ -238,9 +238,9 @@ def batched_extract(
     committed batch ids.  Returns {"ran": k, "skipped": s, "total": B}.
 
     ``partition_spec`` (e.g. ``[("doc_id", "bucket", 64)]``) creates the
-    output as a hidden-partitioned snaptable: per-doc point lookups and
-    at-rest deletes (``delete_where``) then plan only the key's bucket
-    files instead of the whole table.
+    output as a hidden-partitioned snaptable: per-doc point lookups
+    (``read(eq=...)``) then plan only the key's bucket files instead of
+    the whole table.
 
     ``input_format="warc"``: ``input_path`` names WARC archives (a glob
     or directory); ``warc_slice_bytes`` > 0 range-splits each archive

@@ -33,17 +33,22 @@ one small file read, not a log replay).  Readers pass the file list
 straight to the parquet scan, so predicate pushdown / column pruning
 behave exactly as a plain parquet read.
 
-This is deliberately a small, testable subset of the Iceberg spec —
-appends with additive schema evolution, the maintenance actions
-(compaction, snapshot expiry, orphan GC), manifest-stats file skipping,
-**hidden partitioning** (identity / bucket[N] / truncate[W] transforms;
-partition values live in the manifest, never in the read schema),
-batch **overwrite** (``replace_batch``), **copy-on-write row-level
-delete** (``delete_where`` rewrites only the files that contain
-matches) and **merge-on-read equality delete** (``delete_keys`` commits
-the key set as an Iceberg-v2-style equality-delete file in O(|keys|);
-``read()`` anti-joins it against strictly-older data files and
-``compact()`` materializes it back into a clean layout).  When a real Iceberg catalog is configured,
+This is deliberately a small, testable subset of the Iceberg spec,
+cut to the three commit kinds the jobs make:
+
+* ``append`` (operation "append") with additive schema evolution —
+  every extraction batch and pipeline phase;
+* ``delete_keys`` (operation "delete-mor"), a **merge-on-read equality
+  delete**: the key set is committed as an Iceberg-v2-style
+  equality-delete file in O(|keys|), and ``read()`` anti-joins it
+  against strictly-older data files — the takedown job;
+* ``compact`` (operation "compact"), a full rewrite that also
+  materializes pending deletes back into a clean layout.
+
+Around them sit snapshot expiry, orphan GC, fsck, manifest-stats file
+skipping and **hidden partitioning** (identity / bucket[N] /
+truncate[W] transforms; partition values live in the manifest, never
+in the read schema).  When a real Iceberg catalog is configured,
 ``reader.read_documents`` already scans catalog tables and jobs should
 prefer it.  The point here is the commit/resume *protocol* and its
 tests.
@@ -111,8 +116,8 @@ class SnapTable:
     # stats + partition values + data sequence numbers of one commit's
     # worth of files.  ``_commit`` is the one writer of that metadata:
     # an append writes ONE new manifest for its own files and a light
-    # snapshot re-pointing at the parent's untouched manifests, so
-    # commit I/O is O(batch), never O(table).  The in-memory view after
+    # snapshot re-pointing at the parent's manifests, so commit I/O is
+    # O(batch), never O(table).  The in-memory view after
     # ``current_snapshot()`` is the full inflated dict — the driver
     # holds O(files) entries, exactly like the InMemoryFileIndex a plain
     # ``spark.read.parquet`` builds.
@@ -339,12 +344,11 @@ class SnapTable:
                     },
                 },
                 # an append rewrites nothing: the parent's rewrite
-                # markers stop here (layout, sort order and pending
-                # equality deletes carry forward — the deletes apply
-                # only to files with a smaller data sequence, so this
-                # batch is unaffected by them)
+                # marker stops here (layout and pending equality
+                # deletes carry forward — the deletes apply only to
+                # files with a smaller data sequence, so this batch is
+                # unaffected by them)
                 "compaction_of": None,
-                "delete_of": None,
             }
             if snap is None:
                 fields["layout"] = "batch"
@@ -441,7 +445,7 @@ class SnapTable:
         added: List[str] = (),
         stats: Optional[dict] = None,
         parts: Optional[dict] = None,
-        dropped: Set[str] = frozenset(),
+        replace: bool = False,
     ) -> Optional[dict]:
         """One CAS attempt of the snapshot after ``parent`` — the only
         writer of commit metadata.
@@ -449,14 +453,13 @@ class SnapTable:
         ``parent`` is the current snapshot (raw or inflated; None creates
         the table).  The new snapshot carries the parent's light keys,
         then ``fields`` — what the operation sets; a field given as None
-        is removed.  Its manifest list re-points, by reference, every
-        parent manifest that holds no ``dropped`` file: an append drops
-        nothing, so it loads no parent manifest and commit I/O is
-        O(batch) at any table size.  The ``added`` files (with their
-        footer ``stats`` and partition values ``parts``) and the
-        survivors of touched manifests land in ONE new manifest;
-        survivors keep their data sequence, added files get the new
-        snapshot's (Iceberg v2: equality deletes apply only to
+        is removed.  Its manifest list re-points every parent manifest by
+        reference (append, delete_keys), or none of them when
+        ``replace`` (compact rewrites every file).  Either way no parent
+        manifest is loaded, so commit I/O is O(batch) at any table size.
+        The ``added`` files (with their footer ``stats`` and partition
+        values ``parts``) land in ONE new manifest at the new snapshot's
+        data sequence (Iceberg v2: equality deletes apply only to
         strictly-older files).  Manifests are never mutated after a
         snapshot references them, and their summaries are carried
         verbatim, so scan planning can skip whole shards without
@@ -469,37 +472,18 @@ class SnapTable:
         seq = parent["snapshot_id"] + 1 if parent else 1
         refs: List[str] = []
         sums: Dict[str, dict] = {}
-        parent_sums = parent.get("manifest_summaries", {}) if parent else {}
-        files: List[str] = []
-        fstats: Dict[str, dict] = {}
-        fparts: Dict[str, dict] = {}
-        fseq: Dict[str, int] = {}
-        for ref in parent["manifests"] if parent else ():
-            old = self._load_manifest(ref) if dropped else None
-            if old is None or dropped.isdisjoint(old["files"]):
-                refs.append(ref)
-                if ref in parent_sums:
-                    sums[ref] = parent_sums[ref]
-                continue
-            for f in old["files"]:
-                if f not in dropped:
-                    files.append(f)
-                    fseq[f] = old["file_seq"][f]
-            fstats.update(old["file_stats"])
-            fparts.update(old.get("file_partitions", {}))
-        files.extend(added)
-        fseq.update(dict.fromkeys(added, seq))
-        fstats.update(stats or {})
-        fparts.update(parts or {})
-        if files:
+        if parent and not replace:
+            refs = list(parent["manifests"])
+            parent_sums = parent.get("manifest_summaries", {})
+            sums = {r: parent_sums[r] for r in refs if r in parent_sums}
+        if added:
             m = {
-                "files": files,
-                "file_stats": _keep_keys(fstats, files),
-                "file_seq": fseq,
+                "files": list(added),
+                "file_stats": stats or {},
+                "file_seq": dict.fromkeys(added, seq),
             }
-            mparts = _keep_keys(fparts, files)
-            if mparts:
-                m["file_partitions"] = mparts
+            if parts:
+                m["file_partitions"] = parts
             ref = "mf-%08d-%s.json" % (seq, uuid.uuid4().hex)
             with open(os.path.join(self.snap_dir, ref), "w") as f:
                 json.dump(m, f)
@@ -543,82 +527,7 @@ class SnapTable:
             os.unlink(tmp)
 
     # ------------------------------------------------------------------
-    # row-changing commits: batch overwrite + copy-on-write delete
-
-    def replace_batch(
-        self, df: DataFrame, batch_id: str, lineage: Optional[dict] = None
-    ) -> dict:
-        """Overwrite a committed batch with recomputed data (Iceberg's
-        overwrite snapshot): stage ``df`` as the batch's new files, then
-        commit a snapshot where the old batch's files are dropped.  The
-        re-curation story at 10^12 docs — one bad shard is recomputed
-        and swapped without touching the rest of the table; older
-        snapshots still see the old data until ``expire_snapshots``.
-
-        Requires the uncompacted layout (compaction erases per-batch
-        file attribution) and an exactly-matching schema (no evolution
-        through a replace).  The replacement files get a NEW data
-        sequence, so pending equality deletes do not apply to them —
-        recomputed data is new data, exactly Iceberg's overwrite
-        semantics.
-        """
-        snap = self.current_snapshot()
-        if snap is None or batch_id not in snap["batch_ids"]:
-            raise ValueError(
-                "batch %r is not committed in %s" % (batch_id, self.path)
-            )
-        if snap.get("layout", "batch") != "batch":
-            raise ValueError(
-                "table %s was compacted or row-deleted; per-batch files are "
-                "no longer attributable — replace_batch needs the original "
-                "batch layout" % self.path
-            )
-        have = _schema_key(json.loads(df.schema.json()))
-        if _schema_key(json.loads(snap["schema"])) != have:
-            raise ValueError(
-                "schema mismatch vs table %s on replace_batch" % self.path
-            )
-        spec = self._effective_spec(snap, df)
-        t0 = time.time()
-        # same b-<batch_id>-<uuid> naming as append: fsck's per-batch row
-        # attribution keeps working across the swap
-        stage_rel = os.path.join(
-            "data", "b-%s-%s" % (batch_id, uuid.uuid4().hex)
-        )
-        files, n_rows, stats, parts = self._stage(df, stage_rel, spec)
-        while True:
-            snap = self.current_snapshot()
-            if (
-                snap is None
-                or batch_id not in snap["batch_ids"]
-                or snap.get("layout", "batch") != "batch"
-                or _schema_key(json.loads(snap["schema"])) != have
-            ):
-                raise ValueError(
-                    "table %s changed under replace_batch(%r); re-run"
-                    % (self.path, batch_id)
-                )
-            old = {f for f in snap["files"] if _batch_of(f) == batch_id}
-            lin = {
-                **snap["lineage"],
-                batch_id: {
-                    **(lineage or {}),
-                    "n_rows": n_rows,
-                    "n_files": len(files),
-                    "wall_s": round(time.time() - t0, 3),
-                    "replaced_in": snap["snapshot_id"] + 1,
-                },
-            }
-            new = self._commit(
-                snap,
-                {"operation": "overwrite", "lineage": lin},
-                added=files,
-                stats=stats,
-                parts=parts,
-                dropped=old,
-            )
-            if new is not None:
-                return self._inflate(new)
+    # merge-on-read delete
 
     def delete_keys(
         self,
@@ -634,7 +543,7 @@ class SnapTable:
         O(table).  This is the takedown/decontamination story at 10^12
         rows: removing a million doc_ids from a 100 TB table costs one
         small parquet write plus one snapshot JSON; the next ``compact()``
-        materializes the deletes back into a clean copy-on-write layout.
+        materializes the deletes back into a clean layout.
 
         Semantics (exactly Iceberg's): a delete committed at snapshot S
         applies to data files whose own commit sequence is < S — rows
@@ -642,25 +551,25 @@ class SnapTable:
         data and survive.  NULL keys are rejected (equality on NULL is
         not definable across engines); keys are deduplicated before
         staging.  ``delete_id`` makes the commit idempotent for resumable
-        jobs (a second call with the same id is a no-op).
+        jobs: a second call with the same id is a no-op, also after a
+        ``compact()`` has materialized the first (the snapshot carries
+        materialized ids forward in ``materialized_delete_ids``), so a
+        replay never re-deletes rows appended since.
 
         Read cost until compaction: one anti-join per delete commit
         against its key set — small vs the scan (AQE broadcasts the key
         side when it fits; a corpus-proportional key set should go
-        through copy-on-write ``delete_where`` or ``compact()`` soon
-        after).  ``row_count()`` is undefined while deletes are pending
-        (it raises); ``read_incremental`` over a range containing this
-        commit raises, as for every non-append operation.
+        through ``compact()`` soon after).  ``row_count()`` is undefined
+        while deletes are pending (it raises); ``read_incremental`` over
+        a range containing this commit raises, as for every non-append
+        operation.
         """
         from pyspark.sql import functions as F
 
         snap = self.current_snapshot()
         if snap is None:
             raise ValueError("table %s has no snapshots" % self.path)
-        if delete_id is not None and any(
-            d.get("delete_id") == delete_id
-            for d in snap.get("equality_deletes", [])
-        ):
+        if _has_delete(snap, delete_id):
             return snap  # resumed job replaying a committed delete
         key_cols = list(key_cols or keys_df.columns)
         table_fields = {
@@ -701,10 +610,7 @@ class SnapTable:
             cur = self.current_snapshot()
             if cur is None:
                 raise ValueError("table %s vanished under delete_keys" % self.path)
-            if delete_id is not None and any(
-                d.get("delete_id") == delete_id
-                for d in cur.get("equality_deletes", [])
-            ):
+            if _has_delete(cur, delete_id):
                 return cur  # lost the race to our own replay
             entry = {
                 "files": files,
@@ -733,130 +639,6 @@ class SnapTable:
         snap = self._raw_current()
         return list(snap.get("equality_deletes", [])) if snap else []
 
-    def delete_where(
-        self,
-        spark: SparkSession,
-        predicate: str,
-        prune: Optional[tuple] = None,
-    ) -> Optional[dict]:
-        """Copy-on-write row-level delete (Iceberg CoW DELETE): rows
-        where the SQL ``predicate`` is TRUE are removed; only files that
-        actually CONTAIN matches are rewritten, every other file is
-        carried into the new snapshot untouched.  NULL/false predicate
-        rows are kept (SQL DELETE semantics).
-
-        ``prune=(col, lo, hi)`` optionally pre-filters candidate files
-        by footer stats so the match scan itself skips files that
-        provably cannot match (the decontaminate-at-rest fast path).
-
-        Returns the delete report dict, or None when a concurrent
-        commit invalidated the plan (re-run to retry).  Flips the table
-        to total-row fsck reconciliation: the survivors of rewritten
-        files live outside their batch dirs afterwards.
-        """
-        from pyspark.sql import functions as F
-
-        snap = self.current_snapshot()
-        report = {"rows_deleted": 0, "files_rewritten": 0, "files_scanned": 0}
-        if snap is None or not snap["files"]:
-            return report
-        if snap.get("equality_deletes"):
-            # the rewrite would give survivor files a NEW data sequence,
-            # lifting them above every pending equality delete and
-            # silently resurrecting deleted rows — materialize first
-            raise ValueError(
-                "table %s has pending equality deletes; run compact() to "
-                "materialize them before a copy-on-write delete" % self.path
-            )
-        cand = snap["files"]
-        stats = snap.get("file_stats", {})
-        if prune is not None:
-            col, lo, hi = prune
-            cand = [
-                f
-                for f in cand
-                if not _prunable(stats.get(f, {}).get(col), lo, hi)
-            ]
-        report["files_scanned"] = len(cand)
-        if not cand:
-            return report
-        schema = _schema_from_json(snap["schema"])
-        paths = [os.path.join(self.path, f) for f in cand]
-        # one distributed scan finds the files containing matches —
-        # collect() is bounded by the FILE count, never the row count
-        hits = (
-            spark.read.schema(schema)
-            .parquet(*paths)
-            .where(F.expr(predicate))
-            .groupBy(F.input_file_name().alias("_f"))
-            .count()
-            .collect()
-        )
-        hit_rows = {_uri_to_rel(r["_f"], self.path): r["count"] for r in hits}
-        if not hit_rows:
-            return report
-        hit_files = sorted(hit_rows)
-        spec = snap.get("partition_spec") or []
-        survivors = (
-            spark.read.schema(schema)
-            .parquet(*[os.path.join(self.path, f) for f in hit_files])
-            # keep rows where the predicate is FALSE OR NULL — plain
-            # ~predicate would silently delete the NULL rows too
-            .where(~F.coalesce(F.expr(predicate), F.lit(False)))
-        )
-        stage_rel = os.path.join("data", "delete-%s" % uuid.uuid4().hex)
-        files, n_rows, new_stats, parts = self._stage(survivors, stage_rel, spec)
-        rows_deleted = sum(hit_rows.values())
-        old_rows = sum(
-            _footer_rows(os.path.join(self.path, f)) for f in hit_files
-        )
-        if n_rows != old_rows - rows_deleted:
-            raise RuntimeError(
-                "delete rewrite row mismatch in %s: %d survivors != %d - %d"
-                % (self.path, n_rows, old_rows, rows_deleted)
-            )
-        cur = self.current_snapshot()
-        if cur["snapshot_id"] != snap["snapshot_id"]:
-            return None  # plan is stale vs a concurrent commit — re-run
-        # lineage correction: attribute deleted rows to their batches
-        # while the layout still allows it, else record one negative
-        # correction entry — row_count() stays exact either way
-        lin = {k: dict(v) for k, v in cur.get("lineage", {}).items()}
-        unattributed = 0
-        for f, n in hit_rows.items():
-            b = _batch_of(f)
-            if b is not None and b in lin and cur.get("layout", "batch") == "batch":
-                lin[b]["n_rows"] = lin[b].get("n_rows", 0) - n
-            else:
-                unattributed += n
-        if unattributed:
-            lin["__delete_snap%08d__" % (cur["snapshot_id"] + 1)] = {
-                "n_rows": -unattributed,
-                "n_files": 0,
-                "predicate": predicate,
-            }
-        new = self._commit(
-            cur,
-            {
-                "operation": "delete",
-                "lineage": lin,
-                # survivors live outside their batch dirs now: per-batch
-                # fsck attribution is over for this table
-                "layout": "compacted",
-                "delete_of": cur["snapshot_id"],
-            },
-            added=files,
-            stats=new_stats,
-            parts=parts,
-            dropped=set(hit_files),
-        )
-        if new is None:
-            return None  # lost the CAS to a concurrent commit — re-run
-        report["rows_deleted"] = rows_deleted
-        report["files_rewritten"] = len(hit_files)
-        report["snapshot"] = self._inflate(new)
-        return report
-
     # ------------------------------------------------------------------
     # maintenance: compaction + expiry (the small-file problem)
 
@@ -865,7 +647,6 @@ class SnapTable:
         spark: SparkSession,
         target_file_bytes: int = 128 << 20,
         min_files: int = 2,
-        sort_by: Optional[list] = None,
     ) -> Optional[dict]:
         """Rewrite the current file set into ~target-sized files.
 
@@ -877,20 +658,6 @@ class SnapTable:
         Older snapshots still reference the original files (time travel
         keeps working) until ``expire_snapshots`` reclaims them.
         Returns the new snapshot, or None when there was nothing to do.
-
-        ``sort_by=[cols]`` makes it a SORTED rewrite (Iceberg's
-        rewrite-with-sort-order): rows are range-clustered on the sort
-        key, so each output file's footer min/max become near-disjoint
-        ranges and ``read(between=...)`` / ``eq=`` prune to O(1) files
-        instead of scanning every file whose batch happened to span the
-        key space — the difference between a point lookup touching one
-        file and touching all of a 10^12-row table.  Costs one range
-        shuffle (vs the unsorted path's shuffle-free coalesce).  The
-        sort order is recorded in the snapshot and STICKY: later
-        ``compact()`` calls re-cluster with it unless overridden, so
-        maintenance keeps the layout the table declared.  On a
-        partitioned table the sort applies within partition values
-        (files stay partition-pure).
         """
         snap = self.current_snapshot()
         if snap is None or not snap["files"]:
@@ -901,22 +668,14 @@ class SnapTable:
         pending = bool(snap.get("equality_deletes"))
         if len(snap["files"]) < min_files and not pending:
             return None
-        explicit_sort = sort_by is not None
-        sort_by = list(sort_by) if sort_by else snap.get("sort_order")
         total = sum(
             os.path.getsize(os.path.join(self.path, f)) for f in snap["files"]
         )
         n_out = max(1, -(-total // target_file_bytes))  # ceil
-        if n_out >= len(snap["files"]) and not explicit_sort and not pending:
+        if n_out >= len(snap["files"]) and not pending:
             return None  # already at-or-below target granularity
         spec = snap.get("partition_spec") or []
         df = self.read(spark)
-        if sort_by:
-            missing = [c for c in sort_by if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    "sort_by columns %s not in table %s" % (missing, self.path)
-                )
         if spec:
             # re-cluster on the recomputed transform columns so the
             # rewrite preserves partition pruning (one shuffle — the
@@ -924,21 +683,10 @@ class SnapTable:
             dtypes = dict(df.dtypes)
             for p in spec:
                 df = df.withColumn(p["name"], _transform_col(p, dtypes))
-            df = df.repartition(int(n_out), *[p["name"] for p in spec])
-            if sort_by:
-                df = df.sortWithinPartitions(
-                    *([p["name"] for p in spec] + sort_by)
-                )
-            writer = df.write.mode("error").partitionBy(
-                *[p["name"] for p in spec]
-            )
-        elif sort_by:
-            # range shuffle: output file k holds the k-th key range, so
-            # footer [min, max] are disjoint across files
             writer = (
-                df.repartitionByRange(int(n_out), *sort_by)
-                .sortWithinPartitions(*sort_by)
+                df.repartition(int(n_out), *[p["name"] for p in spec])
                 .write.mode("error")
+                .partitionBy(*[p["name"] for p in spec])
             )
         else:
             writer = df.coalesce(int(n_out)).write.mode("error")  # no shuffle
@@ -948,7 +696,7 @@ class SnapTable:
         files = self._staged_files(stage_abs)
         stats = _file_stats(self.path, files)
         parts = {f: _parse_partition_values(f, spec) for f in files} if spec else None
-        cur = self.current_snapshot()
+        cur = self._raw_current()
         if cur["snapshot_id"] != snap["snapshot_id"]:
             return None  # concurrent commit — drop this rewrite, retry later
         fields = {
@@ -975,11 +723,17 @@ class SnapTable:
                     "applied_deletes": len(cur["equality_deletes"]),
                 }
             fields["lineage"] = lin
-        if sort_by:
-            fields["sort_order"] = sort_by  # sticky table sort order
+            # the ids stay committed: a replayed delete_keys(delete_id=)
+            # must stay a no-op once its pending entry is gone
+            ids = [
+                d["delete_id"] for d in cur["equality_deletes"] if "delete_id" in d
+            ]
+            if ids:
+                fields["materialized_delete_ids"] = (
+                    cur.get("materialized_delete_ids", []) + ids
+                )
         new = self._commit(
-            cur, fields, added=files, stats=stats, parts=parts,
-            dropped=set(cur["files"]),
+            cur, fields, added=files, stats=stats, parts=parts, replace=True
         )
         # a lost CAS means a concurrent commit: drop this rewrite
         return None if new is None else self._inflate(new)
@@ -1285,7 +1039,10 @@ class SnapTable:
         data and never touches the Spark session; any file lacking the
         needed metadata is kept (pruning only drops provable
         non-matches).  ``plan_scan`` is the lazy two-level equivalent
-        that avoids inflating the whole manifest list."""
+        that avoids inflating the whole manifest list, and the one reads
+        use; this eager form stays as its reference
+        (``tests/test_snaptable_plan.py``) and as the baseline
+        ``tools/bench_manifest_scale.py`` times it against."""
         spec = snap.get("partition_spec") or []
         want, ranges, residual = _scan_predicates(
             spec, between, partition_where, eq
@@ -1372,39 +1129,6 @@ class SnapTable:
             "files_kept": len(kept),
         }
 
-    def plan_stats(
-        self,
-        between: Optional[tuple] = None,
-        partition_where: Optional[dict] = None,
-        eq: Optional[tuple] = None,
-        snapshot_id: Optional[int] = None,
-    ) -> dict:
-        """Evidence hook: the planning counters for a read predicate —
-        how many manifest shards the plan loaded vs skipped and how many
-        files survived pruning — without running any scan."""
-        plan = self.plan_scan(
-            snapshot_id=snapshot_id,
-            between=between,
-            partition_where=partition_where,
-            eq=eq,
-        )
-        if plan is None:
-            return {
-                "manifests_total": 0,
-                "manifests_loaded": 0,
-                "files_total": 0,
-                "files_kept": 0,
-            }
-        return {
-            k: plan[k]
-            for k in (
-                "manifests_total",
-                "manifests_loaded",
-                "files_total",
-                "files_kept",
-            )
-        }
-
     def pruned_file_count(
         self,
         between: Optional[tuple] = None,
@@ -1423,26 +1147,40 @@ class SnapTable:
     # ------------------------------------------------------------------
     # incremental (changelog) reads
 
-    def _incremental_files(
-        self, after_snapshot_id: int, to_snapshot_id: Optional[int]
-    ) -> tuple:
-        """(added files, to-snapshot) for the append range
-        ``(after, to]`` — the shared planner behind
-        ``read_incremental``/``incremental_batches``.
+    def read_incremental(
+        self,
+        spark: SparkSession,
+        after_snapshot_id: int,
+        to_snapshot_id: Optional[int] = None,
+    ) -> DataFrame:
+        """Rows ADDED after snapshot ``after_snapshot_id`` up to
+        ``to_snapshot_id`` (default: current) — Iceberg's incremental
+        append scan.  ``after_snapshot_id=0`` means "since table
+        creation".
 
-        Pure-append is proven the way Iceberg proves it: walk the
-        snapshot chain and require every link's recorded ``operation``
-        to be "append".  An endpoint-only file-set comparison is NOT
-        sound — a batch appended and then partially deleted inside the
-        range leaves the endpoints consistent while rows-added is
-        ill-defined — so every intermediate manifest must still exist
-        (expired intermediates fail loudly rather than guess).
+        Defined ONLY over a pure-append range: if any snapshot in the
+        range deleted or compacted rows, "rows added" is not
+        representable as a file set and this raises ``ValueError`` (the
+        caller falls back to a full ``read()``), exactly Iceberg's
+        contract.  Pure-append is proven the way Iceberg proves it: walk
+        the snapshot chain and require every link's recorded
+        ``operation`` to be "append".  An endpoint-only file-set
+        comparison is NOT sound — a batch appended and then deleted
+        inside the range leaves the endpoints consistent while
+        rows-added is ill-defined — so every snapshot in the range must
+        still exist (an expired one raises "no snapshot" rather than
+        guessing).
 
-        Metadata I/O is O(delta): an append never drops a manifest ref,
-        so the added files are exactly the files of the manifest refs
-        present in ``to`` but not in ``after`` — only those delta shards
-        are loaded.  (A consumer of a 10^12-row table pays metadata
-        proportional to what it consumes, not to the table.)"""
+        This is the consume-only-what-is-new primitive at 10^12 rows:
+        each downstream run processes the delta — shuffle and scan cost
+        ∝ new data, never ∝ corpus.  Metadata I/O is O(delta) too: an
+        append never drops a manifest ref, so the added files are
+        exactly the files of the manifest refs present in ``to`` but not
+        in ``after``, and only those delta shards are loaded.  Reads
+        with the TO-snapshot schema, so files appended before an
+        additive evolution later in the range surface NULL for the new
+        columns, same as a full read.  Always returns a DataFrame (empty
+        with the table schema when nothing was added)."""
         if to_snapshot_id is None:
             to_raw = self._raw_current()
         else:
@@ -1480,78 +1218,18 @@ class SnapTable:
                        to_raw["snapshot_id"])
                 )
         prior_refs = set(after_raw["manifests"]) if after_raw else set()
-        added: List[str] = []
-        stats: Dict[str, dict] = {}
-        parts: Dict[str, dict] = {}
-        for ref in to_raw["manifests"]:
-            if ref in prior_refs:
-                continue
-            m = self._load_manifest(ref)
-            added.extend(m["files"])
-            stats.update(m.get("file_stats", {}))
-            parts.update(m.get("file_partitions", {}))
-        view = {**to_raw, "files": added, "file_stats": stats}
-        if parts:
-            view["file_partitions"] = parts
-        return added, view
-
-    def read_incremental(
-        self,
-        spark: SparkSession,
-        after_snapshot_id: int,
-        to_snapshot_id: Optional[int] = None,
-        between: Optional[tuple] = None,
-        partition_where: Optional[dict] = None,
-        eq: Optional[tuple] = None,
-    ) -> DataFrame:
-        """Rows ADDED after snapshot ``after_snapshot_id`` up to
-        ``to_snapshot_id`` (default: current) — Iceberg's incremental
-        append scan.  ``after_snapshot_id=0`` means "since table
-        creation".
-
-        Defined ONLY over a pure-append range: if any snapshot in the
-        range overwrote, deleted, or compacted rows, "rows added" is not
-        representable as a file set and this raises ``ValueError`` (the
-        caller falls back to a full ``read()``), exactly Iceberg's
-        contract.  The proof walks the chain's per-snapshot
-        ``operation`` records (see ``_incremental_files``), so every
-        snapshot in the range must still exist — an expired snapshot
-        raises "no snapshot" rather than guessing.
-
-        This is the consume-only-what-is-new primitive at 10^12 rows:
-        each downstream run processes the delta — shuffle and scan cost
-        ∝ new data, never ∝ corpus.  Supports the same manifest pruning
-        (``between`` / ``partition_where`` / ``eq``) as ``read()``, and
-        reads with the TO-snapshot schema, so files appended before an
-        additive evolution later in the range surface NULL for the new
-        columns, same as a full read.  Always returns a DataFrame (empty
-        with the table schema when nothing was added)."""
-        added, to = self._incremental_files(after_snapshot_id, to_snapshot_id)
-        view = {**to, "files": added}
-        files, residual = self._plan_files(view, between, partition_where, eq)
-        schema = _schema_from_json(to["schema"])
+        files = [
+            f
+            for ref in to_raw["manifests"]
+            if ref not in prior_refs
+            for f in self._load_manifest(ref)["files"]
+        ]
+        schema = _schema_from_json(to_raw["schema"])
         if not files:
-            df = spark.createDataFrame([], schema=schema)
-        else:
-            df = spark.read.schema(schema).parquet(
-                *[os.path.join(self.path, f) for f in files]
-            )
-        return _apply_residual(df, residual)
-
-    def incremental_batches(
-        self, after_snapshot_id: int, to_snapshot_id: Optional[int] = None
-    ) -> Set[str]:
-        """Batch ids committed in the append range ``(after, to]`` —
-        manifest-only (no scan); same pure-append validation as
-        ``read_incremental``.  Per-batch row counts for the delta come
-        from ``lineage()`` on these ids."""
-        _, to = self._incremental_files(after_snapshot_id, to_snapshot_id)
-        if after_snapshot_id == 0:
-            prior: Set[str] = set()
-        else:
-            # batch ids live in the snapshot JSON itself — no inflation
-            prior = set(self._raw_snapshot(after_snapshot_id)["batch_ids"])
-        return set(to["batch_ids"]) - prior
+            return spark.createDataFrame([], schema=schema)
+        return spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
 
 
 def _norm_spec(spec: Optional[list]) -> list:
@@ -1666,23 +1344,26 @@ def _parse_partition_values(rel: str, spec: list) -> Dict[str, Optional[str]]:
     return out
 
 
+def _has_delete(snap: dict, delete_id: Optional[str]) -> bool:
+    """True when ``snap`` already holds the delete ``delete_id``:
+    pending, or materialized by an earlier ``compact()``."""
+    return delete_id is not None and (
+        delete_id in snap.get("materialized_delete_ids", ())
+        or any(
+            d.get("delete_id") == delete_id
+            for d in snap.get("equality_deletes", ())
+        )
+    )
+
+
 def _batch_of(rel: str) -> Optional[str]:
     """batch_id a data file belongs to, from its staging-dir path
     component ``b-<batch_id>-<uuid32>`` (partitioned layouts nest hive
-    dirs below it); None for compaction/delete rewrites."""
+    dirs below it); None for compaction rewrites."""
     for comp in rel.split(os.sep):
         if comp.startswith("b-") and len(comp) > 35:
             return comp[2:-33]
     return None
-
-
-def _uri_to_rel(uri: str, root: str) -> str:
-    """Map ``input_file_name()`` output (a file: URI) back to the
-    table-relative path the manifest uses."""
-    from urllib.parse import unquote, urlparse
-
-    p = unquote(urlparse(uri).path) if "://" in uri else uri
-    return os.path.relpath(p, os.path.abspath(root))
 
 
 def _footer_rows(path: str) -> int:
@@ -1702,13 +1383,6 @@ def _apply_residual(df: DataFrame, residual: list) -> DataFrame:
         else:  # "between"
             df = df.where(F.col(args[0]).between(F.lit(args[1]), F.lit(args[2])))
     return df
-
-
-def _keep_keys(d: dict, keys) -> dict:
-    """Subset of ``d`` at ``keys`` — prunes manifest per-file maps to the
-    files actually listed, so dropped files don't bloat snapshots."""
-    ks = set(keys)
-    return {k: v for k, v in d.items() if k in ks}
 
 
 def _all_nullable(t):

@@ -100,19 +100,19 @@ def apply_takedown(spark, output, keys_raw, key_col, takedown_id,
         new = tbl.delete_keys(
             keys, [key_col], delete_id=takedown_id
         )
-        pend = tbl.pending_deletes()
-        mine = [d for d in pend if d.get("delete_id") == takedown_id]
-        if new["snapshot_id"] == snap["snapshot_id"] and not mine:
-            print("table %s: nothing to delete (empty key set)" % name)
-        elif new["snapshot_id"] == snap["snapshot_id"]:
-            print("table %s: takedown %r already committed, skipping"
-                  % (name, takedown_id))
-        else:
+        mine = [d for d in tbl.pending_deletes()
+                if d.get("delete_id") == takedown_id]
+        if new["snapshot_id"] != snap["snapshot_id"]:
             print(
                 "table %s: delete committed (snapshot %d, %d keys, "
                 "0 data files rewritten)"
                 % (name, new["snapshot_id"], mine[0]["n_keys"])
             )
+        elif mine or takedown_id in new.get("materialized_delete_ids", ()):
+            print("table %s: takedown %r already committed, skipping"
+                  % (name, takedown_id))
+        else:
+            print("table %s: nothing to delete (empty key set)" % name)
         if materialize and tbl.pending_deletes():
             tbl.compact(spark)
             print(

@@ -217,35 +217,3 @@ def test_train_exhaustion_stops_early(spark):
     df = spark.createDataFrame([("1", "a b c a b")], ["doc_id", "text"])
     # every word is one symbol — no pairs at all
     assert bpe_train(word_freqs(df), 5) == []
-
-
-def test_batched_trainer_scale_path(spark):
-    """batch=1 reduces EXACTLY to the sequential trainer; larger batches
-    pick pairwise-disjoint pairs per round and their encode still
-    round-trips the corpus text."""
-    from hquery_php_spark.operators.bpe import bpe_train_batched
-
-    df = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(TEXTS)], ["doc_id", "text"]
-    )
-    wf = word_freqs(df)
-    assert bpe_train_batched(wf, 6, batch=1) == bpe_train(wf, 6)
-
-    merges = bpe_train_batched(wf, 8, batch=4)
-    assert len(merges) == 8
-    assert [m[0] for m in merges] == list(range(8))
-    # per-round disjointness: symbols consumed or created in one round
-    # never reappear inside that round (rounds are 4 merges long here)
-    for start in range(0, 8, 4):
-        used: set = set()
-        for _, a, b, merged, _ in merges[start:start + 4]:
-            assert a not in used and b not in used, merges
-            used.update((a, b, merged))
-    # encode round-trip: joining tokens reproduces the normalized text
-    out = df.select(
-        "doc_id",
-        F.array_join(bpe_encode_tokens(F.col("text"), merges), "").alias("j"),
-    ).collect()
-    for r in out:
-        t = TEXTS[int(r["doc_id"])]
-        assert r["j"] == "".join(" ".join(t.lower().split()).split(" "))

@@ -285,43 +285,6 @@ def test_politeness_layout_holds_at_output(spark):
     assert sum(per_part) == 6  # every host exactly one contiguous run
 
 
-def test_max_urls_per_host_keeps_queue_head(spark):
-    """The giant-host cap keeps exactly the TOP-priority head of each
-    host's queue (two-phase salted rank == plain global top-cap), and
-    fetch_order stays dense 0..cap-1."""
-    from hquery_php_spark.operators.frontier import frontier_df
-
-    rows = []
-    # giant host: 200 urls, priorities varied via source_kind mix
-    for i in range(200):
-        kind = ["seed", "sitemap", "feed", "outlink"][i % 4]
-        rows.append((f"https://giant.com/p{i:04d}", kind, 0))
-    # small host untouched by the cap
-    for i in range(5):
-        rows.append((f"https://small.com/s{i}", "outlink", 0))
-    c = spark.createDataFrame(
-        rows, "url string, source_kind string, priority_micro long"
-    )
-    out = frontier_df(c, n_host_buckets=4, max_urls_per_host=10,
-                      n_salts=8).collect()
-    giant = sorted(
-        (r["fetch_order"], r["url"], r["source_kind"])
-        for r in out if r["host"] == "giant.com"
-    )
-    assert len(giant) == 10
-    assert [g[0] for g in giant] == list(range(10))
-    # survivors are the global head by (priority desc, url): all seeds
-    # (50 > 10 available? no — 50 seeds exist, cap=10 → 10 seeds)
-    assert all(g[2] == "seed" for g in giant)
-    # the 10 lexicographically-first seed urls specifically
-    seed_urls = sorted(
-        f"https://giant.com/p{i:04d}" for i in range(200) if i % 4 == 0
-    )[:10]
-    assert [g[1] for g in giant] == seed_urls
-    small = [r for r in out if r["host"] == "small.com"]
-    assert len(small) == 5  # below the cap: untouched
-
-
 def test_anchor_term_topk(spark):
     from hquery_php_spark.operators.graph import anchor_term_topk
 

@@ -543,7 +543,8 @@ def test_takedown_job_mor_delete_and_materialize(tmp_path):
     """spark-submit takedown over a committed pipeline: one merge-on-read
     equality-delete commit per phase table (no data file rewritten), a
     re-submit with the same --takedown-id is a no-op, and --materialize
-    compacts the deletes away restoring exact manifest counts."""
+    compacts the deletes away restoring exact manifest counts; a
+    re-submit after that is a no-op as well."""
     import json
 
     n = 60
@@ -644,3 +645,15 @@ def test_takedown_job_mor_delete_and_materialize(tmp_path):
         got = {x.doc_id for x in _read_tbl(t)}
         assert not (got & set(gone)), name
         assert t.row_count() == len(got), name
+
+    # re-submit after materialization: the compacted tables still hold
+    # tk-1 as committed, so nothing is re-deleted or re-compacted
+    snaps_before = {n_: t.current_snapshot()["snapshot_id"] for n_, t in tables.items()}
+    r4 = subprocess.run(
+        tdcmd(["--materialize"]), cwd=REPO, capture_output=True, timeout=600
+    )
+    assert r4.returncode == 0, r4.stderr[-3000:]
+    assert r4.stdout.count(b"already committed, skipping") == 3, r4.stdout[-2000:]
+    assert b"materialized ->" not in r4.stdout, r4.stdout[-2000:]
+    for n_, t in tables.items():
+        assert t.current_snapshot()["snapshot_id"] == snaps_before[n_]

@@ -599,146 +599,79 @@ def test_partitioned_compact_preserves_pruning_and_fsck(spark, tmp_path):
     assert tbl.read(spark).count() == 120 and tbl.fsck()["ok"]
 
 
-# ----------------------------------------------------------------------
-# replace_batch (overwrite) + delete_where (copy-on-write delete)
-
-
-def test_replace_batch_swaps_data_and_lineage(spark, tmp_path):
-    tbl = SnapTable(str(tmp_path / "t"))
-    tbl.append(_df(spark, range(10)), "b0")
-    tbl.append(_df(spark, range(10, 20)), "b1")
-    snap = tbl.replace_batch(_df(spark, range(100, 103)), "b0")
-    assert snap["batch_ids"] == ["b0", "b1"]
-    got = sorted(r.id for r in tbl.read(spark).collect())
-    assert got == [10, 11, 12, 13, 14, 15, 16, 17, 18, 19, 100, 101, 102]
-    assert tbl.lineage()["b0"]["n_rows"] == 3 and tbl.row_count() == 13
-    assert tbl.fsck()["ok"]  # per-batch attribution survives the swap
-    # time travel still sees the old data until expiry
-    old = tbl.read(spark, snapshot_id=2)
-    assert old.count() == 20
-    tbl.expire_snapshots(keep_last=1)
-    assert tbl.read(spark).count() == 13 and tbl.fsck()["ok"]
-
-
-def test_replace_batch_guards(spark, tmp_path):
-    tbl = SnapTable(str(tmp_path / "t"))
-    tbl.append(_df(spark, range(6)), "b0")
-    with pytest.raises(ValueError, match="not committed"):
-        tbl.replace_batch(_df(spark, range(3)), "nope")
-    with pytest.raises(ValueError, match="schema mismatch"):
-        tbl.replace_batch(
-            spark.createDataFrame([(1.5, "x")], "id double, v string"), "b0"
-        )
-    tbl.append(_df(spark, range(6, 9)), "b1")
-    tbl.compact(spark, target_file_bytes=1 << 30)
-    with pytest.raises(ValueError, match="compacted"):
-        tbl.replace_batch(_df(spark, range(3)), "b0")
-
-
-def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
-    tbl = SnapTable(str(tmp_path / "t"))
-    tbl.append(_df(spark, range(100)), "b0")
-    tbl.append(_df(spark, range(100, 200)), "b1")
-    n_files = len(tbl.current_snapshot()["files"])
-    r = tbl.delete_where(spark, "id >= 150", prune=("id", 150, 10**9))
-    assert r["rows_deleted"] == 50
-    # stats pruning kept b0's files out of the match scan entirely
-    assert r["files_scanned"] < n_files
-    assert 0 < r["files_rewritten"] <= r["files_scanned"]
-    got = tbl.read(spark)
-    assert got.count() == 150 and got.agg({"id": "max"}).collect()[0][0] == 149
-    assert tbl.row_count() == 150  # lineage stayed exact through the delete
-    assert tbl.lineage()["b1"]["n_rows"] == 50
-    assert tbl.fsck()["ok"]
-    # delete with no matches is a no-op (no rewrite, no new snapshot)
-    sid = tbl.current_snapshot()["snapshot_id"]
-    r2 = tbl.delete_where(spark, "id > 1000")
-    assert r2["rows_deleted"] == 0 and tbl.current_snapshot()["snapshot_id"] == sid
-
-
-def test_delete_where_null_predicate_rows_survive(spark, tmp_path):
-    tbl = SnapTable(str(tmp_path / "t"))
-    df = spark.createDataFrame(
-        [(1, "x"), (2, None), (3, "drop"), (4, "drop")], "id int, v string"
-    )
-    tbl.append(df, "b0")
-    r = tbl.delete_where(spark, "v = 'drop'")
-    assert r["rows_deleted"] == 2
-    # SQL DELETE semantics: NULL-predicate rows are KEPT, not deleted
-    assert sorted(x.id for x in tbl.read(spark).collect()) == [1, 2]
-    assert tbl.row_count() == 2 and tbl.fsck()["ok"]
-
-
-def test_delete_where_on_partitioned_table(spark, tmp_path):
-    tbl = SnapTable(str(tmp_path / "t"), partition_spec=[("host", "identity")])
-    tbl.append(_docs(spark, 60), "b0")
-    r = tbl.delete_where(spark, "host = 'b.com'")
-    assert r["rows_deleted"] == 20
-    assert tbl.read(spark).count() == 40 == tbl.row_count()
-    # partition pruning still works over the rewritten file set
-    kept, total = tbl.pruned_file_count(partition_where={"p_host": "a.com"})
-    assert kept < total
-    assert tbl.read(spark, partition_where={"p_host": "b.com"}).count() == 0
-    assert tbl.fsck()["ok"]
-
-
 def test_randomized_partitioned_soak_with_deletes(spark, tmp_path):
-    """Model-based soak over the FULL op set — append / replay /
-    replace_batch / delete_where / compact / expire — on a partitioned
-    table: read() must equal the model after every step, row_count()
-    must stay manifest-exact through deletes, partition pruning must
-    stay correct over rewritten file sets, fsck always green."""
+    """Model-based soak over the operations jobs make — append / replay /
+    delete_keys (with delete-id replays) / compact / expire — on a
+    partitioned table.  After every step read() equals the model,
+    partition pruning stays exact over rewritten file sets and fsck is
+    green; row_count() is manifest-exact whenever no delete is pending
+    and raises while one is."""
     import random
 
     rng = random.Random(0x5EED7)
     tbl = SnapTable(str(tmp_path / "t"), partition_spec=[("id", "truncate", 10)])
-    model = {}  # batch_id -> set of ids
+    model = {}  # batch_id -> ids appended by it
+    live = set()  # ids visible to read()
+    deletes = {}  # delete_id -> ids it removed when first committed
     next_lo = 0
     n_batches = 0
-    for step in range(26):
+    replays_after_compact = 0
+    for step in range(30):
         op = rng.choice(
-            ["append", "append", "replay", "replace", "delete", "compact", "expire"]
+            ["append", "append", "reappend", "replay", "delete", "redelete",
+             "compact", "expire"]
         )
-        if op == "append" or not model:
+        if op in ("append", "reappend") or not model:
             bid = "b%03d" % n_batches
             n_batches += 1
-            n = rng.randint(1, 12)
-            ids = set(range(next_lo, next_lo + n))
-            next_lo += n
+            ids = set(range(next_lo, next_lo + rng.randint(1, 12)))
+            next_lo += len(ids)
+            gone = set().union(*model.values()) - live
+            if op == "reappend" and gone:
+                # a re-crawled copy of a deleted id is new data: it
+                # survives every delete committed before it
+                ids |= set(rng.sample(sorted(gone), min(3, len(gone))))
             tbl.append(_df(spark, sorted(ids)), bid)
             model[bid] = ids
+            live |= ids
         elif op == "replay":
             bid = rng.choice(sorted(model))
             tbl.append(_df(spark, sorted(model[bid])), bid)
-        elif op == "replace":
-            bid = rng.choice(sorted(model))
-            ids = set(range(next_lo, next_lo + rng.randint(1, 6)))
-            layout = tbl.current_snapshot().get("layout", "batch")
-            if layout == "batch":
-                tbl.replace_batch(_df(spark, sorted(ids)), bid)
-                next_lo += len(ids)
-                model[bid] = ids
-            else:  # compacted/deleted tables must refuse the overwrite
-                with pytest.raises(ValueError):
-                    tbl.replace_batch(_df(spark, sorted(ids)), bid)
-        elif op == "delete":
-            lo = rng.randint(0, max(next_lo - 1, 0))
-            hi = lo + rng.randint(0, 15)
-            want_del = sum(lo <= i <= hi for ids in model.values() for i in ids)
-            r = tbl.delete_where(
-                spark, "id between %d and %d" % (lo, hi), prune=("id", lo, hi)
+        elif op == "delete" or (op == "redelete" and not deletes):
+            did = "d%03d" % len(deletes)
+            keys = set(rng.sample(range(next_lo), min(4, next_lo)))
+            tbl.delete_keys(
+                spark.createDataFrame([(i,) for i in sorted(keys)], "id int"),
+                delete_id=did,
             )
-            assert r is not None and r["rows_deleted"] == want_del, (step, r)
-            model = {b: {i for i in ids if not lo <= i <= hi}
-                     for b, ids in model.items()}
+            deletes[did] = keys
+            live -= keys
+        elif op == "redelete":
+            # a resubmitted takedown: a no-op whether its delete is still
+            # pending or compact() has materialized it
+            did = rng.choice(sorted(deletes))
+            pending = {d.get("delete_id") for d in tbl.pending_deletes()}
+            replays_after_compact += did not in pending
+            sid = tbl.current_snapshot()["snapshot_id"]
+            tbl.delete_keys(
+                spark.createDataFrame(
+                    [(i,) for i in sorted(deletes[did])], "id int"
+                ),
+                delete_id=did,
+            )
+            assert tbl.current_snapshot()["snapshot_id"] == sid, (step, did)
         elif op == "compact":
             tbl.compact(spark, target_file_bytes=1 << 30)
         elif op == "expire":
             tbl.expire_snapshots(keep_last=1)
-        want = sorted(i for ids in model.values() for i in ids)
+        want = sorted(live)
         got = sorted(r.id for r in tbl.read(spark).collect())
         assert got == want, (step, op)
-        assert tbl.row_count() == len(want), (step, op)
+        if tbl.pending_deletes():
+            with pytest.raises(ValueError, match="pending equality-delete"):
+                tbl.row_count()
+        else:
+            assert tbl.row_count() == len(want), (step, op)
         assert tbl.committed_batches() == set(model)
         if want:  # partition pruning stays exact over rewrites
             v = rng.choice(want) // 10 * 10
@@ -752,6 +685,8 @@ def test_randomized_partitioned_soak_with_deletes(spark, tmp_path):
             assert got_p == in_part, (step, op, v)
         f = tbl.fsck()
         assert f["ok"], (step, op, f)
+    # the seed exercises the replay of a delete compact() materialized
+    assert replays_after_compact >= 1
 
 
 # ----------------------------------------------------------------------
@@ -761,18 +696,16 @@ def test_randomized_partitioned_soak_with_deletes(spark, tmp_path):
 def test_read_incremental_append_range(spark, tmp_path):
     """(after, to] over pure appends returns exactly the added rows;
     after=0 is the whole table; after==to is empty with the table
-    schema; batch ids come from the manifest alone."""
+    schema."""
     tbl = SnapTable(str(tmp_path / "t"))
     tbl.append(_df(spark, range(5)), "b0")          # snapshot 1
     tbl.append(_df(spark, range(5, 8)), "b1")       # snapshot 2
     tbl.append(_df(spark, range(8, 12)), "b2")      # snapshot 3
     got = tbl.read_incremental(spark, 1).orderBy("id").collect()
     assert [r.id for r in got] == list(range(5, 12))
-    assert tbl.incremental_batches(1) == {"b1", "b2"}
     # bounded upper endpoint
     got = tbl.read_incremental(spark, 1, to_snapshot_id=2).collect()
     assert sorted(r.id for r in got) == [5, 6, 7]
-    assert tbl.incremental_batches(1, 2) == {"b1"}
     # whole table / empty delta
     assert tbl.read_incremental(spark, 0).count() == 12
     empty = tbl.read_incremental(spark, 3)
@@ -784,21 +717,21 @@ def test_read_incremental_append_range(spark, tmp_path):
 
 
 def test_read_incremental_rejects_nonappend_range(spark, tmp_path):
-    """Any overwrite/delete/compact inside the range makes rows-added
+    """Any delete or compact inside the range makes rows-added
     undefined -> ValueError — including a batch appended and then
-    partially deleted WITHIN the range (endpoint file sets alone look
+    deleted from WITHIN the range (endpoint file sets alone look
     consistent there; the chain walk catches it).  A later pure-append
     range is fine again; an expired snapshot in the range fails
     loudly."""
     tbl = SnapTable(str(tmp_path / "t"))
     tbl.append(_df(spark, range(5)), "b0")           # 1
     tbl.append(_df(spark, range(5, 8)), "b1")        # 2
-    tbl.delete_where(spark, "id = 6")                # 3 (rewrite)
+    tbl.delete_keys(spark.createDataFrame([(6,)], "id int"))  # 3
     with pytest.raises(ValueError, match="non-append"):
         tbl.read_incremental(spark, 2)
     tbl.append(_df(spark, range(8, 10)), "b2")       # 4
     with pytest.raises(ValueError, match="non-append"):
-        tbl.incremental_batches(1, 4)
+        tbl.read_incremental(spark, 1, 4)
     # range strictly after the delete is append-only again
     got = tbl.read_incremental(spark, 3, 4).collect()
     assert sorted(r.id for r in got) == [8, 9]
@@ -815,9 +748,12 @@ def test_read_incremental_rejects_nonappend_range(spark, tmp_path):
 
 
 def test_read_incremental_pruning_and_evolution(spark, tmp_path):
-    """The delta scan honors the same manifest pruning as read(), and
-    reads with the TO-snapshot schema (pre-evolution files in the delta
+    """The delta scan lists only the files appended in the range — the
+    manifest delta prunes every older file before the scan — and reads
+    with the TO-snapshot schema (pre-evolution files in the delta
     surface NULL for later-added columns)."""
+    from urllib.parse import unquote, urlparse
+
     tbl = SnapTable(
         str(tmp_path / "t"), partition_spec=[("id", "bucket", 4)]
     )
@@ -828,114 +764,27 @@ def test_read_incremental_pruning_and_evolution(spark, tmp_path):
         "id int, v string, extra int",
     )
     tbl.append(ev, "b2", allow_evolution=True)       # 3
-    # eq= point lookup inside the delta plans a strict file subset
-    import zlib
-
-    added, to = tbl._incremental_files(1, None)
-    view = {**to, "files": added}
-    kept, _ = tbl._plan_files(view, None, None, ("id", 9))
-    in_bucket = [
-        f
-        for f in added
-        if to["file_partitions"][f]["p_id_b4"] == str(zlib.crc32(b"9") % 4)
-    ]
-    assert 0 < len(kept) <= len(in_bucket) < len(added)
-    got = tbl.read_incremental(spark, 1, eq=("id", 9)).collect()
-    assert [r.id for r in got] == [9]
+    old = set(tbl._snapshot_at(1)["files"])
+    delta = set(tbl.current_snapshot()["files"]) - old
+    rows_df = tbl.read_incremental(spark, 1)
+    scanned = {
+        os.path.relpath(unquote(urlparse(f).path), tbl.path)
+        for f in rows_df.inputFiles()
+    }
+    assert scanned == delta and not scanned & old
     # evolution: b1 files (pre-evolution) are in the delta and read NULL
-    rows = tbl.read_incremental(spark, 1).orderBy("id").collect()
+    rows = rows_df.orderBy("id").collect()
     assert [r.id for r in rows] == list(range(8, 20))
     assert all(r.extra is None for r in rows if r.id < 16)
     assert all(r.extra == r.id * 10 for r in rows if r.id >= 16)
-    # between= footer-stats pruning applies to the delta too
-    got = tbl.read_incremental(spark, 1, between=("id", 17, 18)).collect()
-    assert sorted(r.id for r in got) == [17, 18]
-
-
-def test_sorted_compaction_tightens_stats_pruning(spark, tmp_path):
-    """compact(sort_by=) range-clusters the rewrite: point/range reads
-    prune to O(1) files where the unsorted batch layout kept every file
-    (each batch spanned the whole key space).  The sort order is sticky
-    across later appends and reused by argument-less maintenance
-    compaction."""
-    import random
-
-    rng = random.Random(7)
-    tbl = SnapTable(str(tmp_path / "t"))
-    ids = list(range(4000))
-    rng.shuffle(ids)
-    for b in range(8):  # every batch spans ~the full key range
-        tbl.append(_df(spark, ids[b::8]), "b%d" % b)
-    kept0, total0 = tbl.pruned_file_count(between=("id", 100, 120))
-    assert kept0 == total0  # unsorted: no file is provably disjoint
-    total_bytes = sum(
-        os.path.getsize(os.path.join(tbl.path, f))
-        for f in tbl.current_snapshot()["files"]
-    )
-    snap = tbl.compact(
-        spark, target_file_bytes=total_bytes // 4, sort_by=["id"]
-    )
-    assert snap is not None and snap["sort_order"] == ["id"]
-    kept1, total1 = tbl.pruned_file_count(between=("id", 100, 120))
-    assert total1 >= 4 and kept1 <= 2, (kept1, total1)
-    got = tbl.read(spark, between=("id", 100, 120)).collect()
-    assert sorted(r.id for r in got) == list(range(100, 121))
-    assert tbl.read(spark).count() == 4000
-    assert tbl.fsck()["ok"]
-    # sticky: an append carries the sort order; maintenance compact()
-    # (no sort_by) re-clusters with it
-    more = list(range(4000, 8000))
-    rng.shuffle(more)
-    for b in range(4):
-        tbl.append(_df(spark, more[b::4]), "c%d" % b)
-    assert tbl.current_snapshot()["sort_order"] == ["id"]
-    snap = tbl.compact(spark, target_file_bytes=total_bytes // 2)
-    assert snap is not None and snap["sort_order"] == ["id"]
-    kept2, total2 = tbl.pruned_file_count(between=("id", 6000, 6050))
-    assert kept2 <= 2 < total2, (kept2, total2)
-    assert tbl.read(spark).count() == 8000
-
-
-def test_sorted_compaction_on_partitioned_table(spark, tmp_path):
-    """On a partitioned table the sorted rewrite stays partition-pure
-    (pruning by partition value still exact) and sorts within values."""
-    tbl = SnapTable(str(tmp_path / "t"), partition_spec=[("id", "bucket", 2)])
-    import random
-
-    rng = random.Random(3)
-    ids = list(range(1000))
-    rng.shuffle(ids)
-    for b in range(4):
-        tbl.append(_df(spark, ids[b::4]), "b%d" % b)
-    with pytest.raises(ValueError, match="sort_by"):
-        tbl.compact(spark, sort_by=["nope"])
-    total_bytes = sum(
-        os.path.getsize(os.path.join(tbl.path, f))
-        for f in tbl.current_snapshot()["files"]
-    )
-    snap = tbl.compact(
-        spark, target_file_bytes=total_bytes // 2, sort_by=["id"]
-    )
-    assert snap is not None
-    # partition pruning still exact after the sorted rewrite
-    import zlib
-
-    want = {i for i in range(1000) if zlib.crc32(str(i).encode()) % 2 == 1}
-    got = {
-        r.id
-        for r in tbl.read(spark, partition_where={"p_id_b2": 1}).collect()
-    }
-    assert got == want
-    assert tbl.read(spark).count() == 1000
-    assert tbl.fsck()["ok"]
 
 
 def test_sharded_manifests_commit_cost_is_per_batch(spark, tmp_path):
     """Iceberg snapshot/manifest split: each append writes exactly ONE
     new manifest file and re-points the parent's untouched ones, so the
     snapshot JSON carries no file lists (commit I/O ∝ batch, not table);
-    rewrites re-manifest only what changed; expiry and orphan GC reclaim
-    dead/unreferenced manifests."""
+    a delete writes no manifest and a compaction replaces the list with
+    one; expiry and orphan GC reclaim dead/unreferenced manifests."""
     tbl = SnapTable(str(tmp_path / "t"))
     for k in range(4):
         tbl.append(_df(spark, range(k * 5, k * 5 + 5)), "b%d" % k)
@@ -954,14 +803,14 @@ def test_sharded_manifests_commit_cost_is_per_batch(spark, tmp_path):
     assert len(snap["files"]) >= 4 and tbl.read(spark).count() == 20
     assert set(snap["file_stats"]) == set(snap["files"])
 
-    # partial rewrite: only the touched batch re-manifests
-    before = set(json.load(open(os.path.join(tbl.snap_dir, "snap-%08d.json" % 4)))["manifests"])
-    r = tbl.delete_where(spark, "id = 7", prune=("id", 7, 7))
-    assert r["rows_deleted"] == 1
-    after_raw = json.load(open(os.path.join(tbl.snap_dir, "snap-%08d.json" % 5)))
-    kept_refs = [m for m in after_raw["manifests"] if m in before]
-    assert len(kept_refs) >= 1  # untouched appends' manifests survive
-    assert len(set(after_raw["manifests"]) - before) == 1  # one rewrite manifest
+    # a merge-on-read delete re-points every manifest and writes none;
+    # compaction replaces the whole list with its one rewrite manifest
+    before = _raw(tbl, 4)["manifests"]
+    tbl.delete_keys(spark.createDataFrame([(7,)], "id int"))
+    assert _raw(tbl, 5)["manifests"] == before
+    tbl.compact(spark)
+    (rewritten,) = _raw(tbl, 6)["manifests"]
+    assert rewritten not in before
     assert tbl.read(spark).count() == 19
     assert tbl.fsck()["ok"]
 
@@ -970,8 +819,7 @@ def test_sharded_manifests_commit_cost_is_per_batch(spark, tmp_path):
         f for f in os.listdir(tbl.snap_dir) if f.startswith("mf-")
     }
     tbl.expire_snapshots(keep_last=1)
-    live = set(json.load(open(os.path.join(tbl.snap_dir, "snap-%08d.json" % 5)))["manifests"])
-    assert all_mfs() == live
+    assert all_mfs() == {rewritten}
     assert tbl.read(spark).count() == 19
 
     # lost-CAS manifest (written, never referenced) is orphan-GC'd
@@ -1010,10 +858,10 @@ def _new_manifests(tbl, sid):
 
 
 def test_commit_kinds_write_pinned_snapshot_and_manifest_keys(spark, tmp_path):
-    """Every commit kind writes the same manifest-sharded format: a
-    light snapshot JSON (no per-file maps) with exactly these keys, and
-    at most one new manifest with exactly these keys.  Survivors of a
-    touched manifest keep their data sequence."""
+    """Every commit kind — append, delete_keys ("delete-mor") and
+    compact — writes the same manifest-sharded format: a light snapshot
+    JSON (no per-file maps) with exactly these keys, and at most one new
+    manifest with exactly these keys."""
     tbl = SnapTable(str(tmp_path / "t"), partition_spec=[("id", "bucket", 4)])
     wide = "id int, v string, score double"
 
@@ -1023,24 +871,19 @@ def test_commit_kinds_write_pinned_snapshot_and_manifest_keys(spark, tmp_path):
         "b1",
         allow_evolution=True,
     )
-    tbl.replace_batch(  # 3
-        spark.createDataFrame([(i, "r", 2.0) for i in range(100, 104)], wide),
-        "b0",
+    tbl.delete_keys(  # 3
+        spark.createDataFrame([(12,)], "id int"), delete_id="d1"
     )
-    tbl.delete_keys(spark.createDataFrame([(12,)], "id int"))  # 4
-    tbl.compact(spark, min_files=1, sort_by=["id"])  # 5
-    tbl.delete_where(spark, "id = 101")  # 6
-    tbl.append(  # 7
+    tbl.compact(spark, min_files=1)  # 4
+    tbl.append(  # 5
         spark.createDataFrame([(i, "z", 3.0) for i in range(30, 34)], wide), "b2"
     )
     want = {
         1: ("append", _SNAP_KEYS, 1),
         2: ("append", _SNAP_KEYS, 1),
-        3: ("overwrite", _SNAP_KEYS, 1),
-        4: ("delete-mor", _SNAP_KEYS | {"equality_deletes"}, 0),
-        5: ("compact", _SNAP_KEYS | {"compaction_of", "sort_order"}, 1),
-        6: ("delete", _SNAP_KEYS | {"compaction_of", "sort_order", "delete_of"}, 1),
-        7: ("append", _SNAP_KEYS | {"sort_order"}, 1),
+        3: ("delete-mor", _SNAP_KEYS | {"equality_deletes"}, 0),
+        4: ("compact", _SNAP_KEYS | {"compaction_of", "materialized_delete_ids"}, 1),
+        5: ("append", _SNAP_KEYS | {"materialized_delete_ids"}, 1),
     }
     for sid, (op, keys, n_new) in want.items():
         raw = _raw(tbl, sid)
@@ -1052,18 +895,19 @@ def test_commit_kinds_write_pinned_snapshot_and_manifest_keys(spark, tmp_path):
         for m in new:
             assert set(m) == _MANIFEST_KEYS, (sid, sorted(m))
             assert set(m["file_seq"]) == set(m["files"]) == set(m["file_partitions"])
+            assert set(m["file_seq"].values()) == {sid}
     # appends and delete_keys re-point every parent manifest verbatim
-    for sid in (2, 4, 7):
+    for sid in (2, 3, 5):
         prev = _raw(tbl, sid - 1)
         assert _raw(tbl, sid)["manifests"][: len(prev["manifests"])] == prev["manifests"]
         assert all(
             _raw(tbl, sid)["manifest_summaries"][r] == prev["manifest_summaries"][r]
             for r in prev["manifests"]
         )
-    # the delete rewrote one compacted file: the survivors keep seq 5
-    (m6,) = _new_manifests(tbl, 6)
-    assert sorted(set(m6["file_seq"].values())) == [5, 6]
-    assert tbl.read(spark).count() == 4 + 10 - 1 - 1 + 4
+    # compact keeps no parent manifest: its list is its one rewrite
+    assert len(_raw(tbl, 4)["manifests"]) == 1
+    assert _raw(tbl, 5)["materialized_delete_ids"] == ["d1"]
+    assert tbl.read(spark).count() == 10 + 10 - 1 + 4
     assert tbl.fsck()["ok"]
 
 

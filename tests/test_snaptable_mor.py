@@ -5,9 +5,10 @@ equality-delete parquet file in O(|keys|) — no data file is rewritten —
 ``read()`` anti-joins it against strictly-older data files, and
 ``compact()`` materializes the deletes back into a clean layout.  These
 tests pin the sequence-number semantics (re-appended keys survive),
-lineage exactness through materialization, maintenance integration
-(expire / orphan GC / fsck), and the guards (row_count, CoW delete,
-incremental reads) that keep the pending-delete state honest.
+lineage exactness through materialization, delete-id idempotence across
+``compact()``, maintenance integration (expire / orphan GC / fsck), and
+the guards (row_count, incremental reads) that keep the pending-delete
+state honest.
 """
 
 import os
@@ -117,6 +118,30 @@ def test_delete_id_idempotent_for_resumable_jobs(spark, tmp_path):
     assert tbl.read(spark).count() == 4
 
 
+def test_delete_id_replay_after_compact_is_noop(spark, tmp_path):
+    """A takedown re-submitted after ``--materialize``: compact() has
+    folded the delete in and cleared the pending entry, yet the replay
+    must still commit nothing — a re-crawled copy of a deleted key
+    appended since is new data and survives, and the table keeps exact
+    counts."""
+    tbl = SnapTable(str(tmp_path / "t"))
+    tbl.append(_df(spark, range(6)), "b0")
+    tbl.delete_keys(_keys(spark, [3]), delete_id="tk-1")
+    tbl.compact(spark)
+    tbl.append(_df(spark, [3]), "b1")  # re-crawled id 3
+    sid = tbl.current_snapshot()["snapshot_id"]
+    snap = tbl.delete_keys(_keys(spark, [3]), delete_id="tk-1")
+    assert snap["snapshot_id"] == sid == tbl.current_snapshot()["snapshot_id"]
+    assert tbl.pending_deletes() == []
+    assert sorted(r.id for r in tbl.read(spark).collect()) == list(range(6))
+    assert tbl.row_count() == 6
+    # the id survives expiry of every snapshot that held it pending
+    tbl.expire_snapshots(keep_last=1)
+    tbl.delete_keys(_keys(spark, [3]), delete_id="tk-1")
+    assert tbl.current_snapshot()["snapshot_id"] == sid
+    assert tbl.read(spark).count() == 6
+
+
 def test_empty_key_set_commits_nothing(spark, tmp_path):
     tbl = SnapTable(str(tmp_path / "t"))
     s0 = tbl.append(_df(spark, range(4)), "b0")
@@ -160,13 +185,10 @@ def test_point_read_on_deleted_key_is_empty(spark, tmp_path):
     assert kept < total  # bucket pruning still active under the merge
 
 
-def test_guards_cow_delete_and_incremental(spark, tmp_path):
+def test_guards_incremental_over_pending_delete(spark, tmp_path):
     tbl = SnapTable(str(tmp_path / "t"))
     s0 = tbl.append(_df(spark, range(6)), "b0")
     tbl.delete_keys(_keys(spark, [2]))
-    # CoW rewrite would re-sequence survivors above the pending delete
-    with pytest.raises(ValueError, match="pending equality deletes"):
-        tbl.delete_where(spark, "id = 4")
     # delete-mor is a non-append operation: incremental over it raises
     with pytest.raises(ValueError, match="non-append"):
         tbl.read_incremental(spark, s0["snapshot_id"])

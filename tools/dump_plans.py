@@ -56,7 +56,7 @@ QUERIES = [
     ("html_markdown", "Markdown render: synth projection -> salted repartition -> ONE mapInPandas engine walk, zero shuffle beyond the spread"),
     ("sentence_segment", "portable sentence split: pure expression tree (regexp mark + split + fold), zero shuffle, WholeStageCodegen end to end"),
     ("robots_filter", "policy gate: rules mapInPandas ∝ hosts -> ONE shuffle join on host (no forced broadcast; AQE picks it when the rule table is small) -> map-side filter/aggregate longest-match fold — no per-URL Python, no explode of the rule array"),
-    ("frontier", "frontier assembly: expression canonicalization -> ONE (url) partial-agg dedup shuffle -> per-host rank window (bounded by the host's URL count; max_urls_per_host salted cap available for giant hosts) -> FINAL politeness Exchange on hash(host)%B with within-partition (host, priority) sort — the output layout contract"),
+    ("frontier", "frontier assembly: expression canonicalization -> ONE (url) partial-agg dedup shuffle -> per-host rank window (bounded by the host's URL count) -> FINAL politeness Exchange on hash(host)%B with within-partition (host, priority) sort — the output layout contract"),
     ("section_chunks", "outline + chunking: mapInPandas section walk -> per-doc collect_list (one shuffle) -> greedy cut recurrence as an aggregate-fold EXPRESSION over the section array -> explode back; no iterative jobs, no window"),
 ]
 
