@@ -77,7 +77,7 @@ def apply_takedown(spark, output, keys_raw, key_col, takedown_id,
 
     from pyspark.sql import functions as F
 
-    from hquery_php_spark.sources.snaptable import SnapTable
+    from hquery_php_spark.sources.snaptable import SnapTable, _has_delete
 
     root = output.rstrip("/")
     for name in ("spans", "curated", "packs"):
@@ -100,15 +100,15 @@ def apply_takedown(spark, output, keys_raw, key_col, takedown_id,
         new = tbl.delete_keys(
             keys, [key_col], delete_id=takedown_id
         )
-        mine = [d for d in tbl.pending_deletes()
-                if d.get("delete_id") == takedown_id]
         if new["snapshot_id"] != snap["snapshot_id"]:
+            n_keys = next(d["n_keys"] for d in tbl.pending_deletes()
+                          if d.get("delete_id") == takedown_id)
             print(
                 "table %s: delete committed (snapshot %d, %d keys, "
                 "0 data files rewritten)"
-                % (name, new["snapshot_id"], mine[0]["n_keys"])
+                % (name, new["snapshot_id"], n_keys)
             )
-        elif mine or takedown_id in new.get("materialized_delete_ids", ()):
+        elif _has_delete(new, takedown_id):
             print("table %s: takedown %r already committed, skipping"
                   % (name, takedown_id))
         else:

@@ -172,10 +172,12 @@ def main():
             halves = F.pmod(F.col("doc_id"), F.lit(2))
             tbl.append(d.where(halves == 0), "day0")  # snapshot 1: corpus
             tbl.append(d.where(halves == 1), "day1")  # snapshot 2: the drop
-            added, to = tbl._incremental_files(1, None)
+            old = set(tbl._snapshot_at(1)["files"])
+            allf = tbl.current_snapshot()["files"]
+            added = [f for f in allf if f not in old]
             out.append(
                 "_(delta planning: %d of %d files scanned for the "
-                "increment)_\n" % (len(added), len(to["files"]))
+                "increment)_\n" % (len(added), len(allf))
             )
             df = tbl.read_incremental(spark, 1)
         elif name == "snaptable_mor_delete_read":
